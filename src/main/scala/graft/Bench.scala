@@ -1,35 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // coalesce post-shuffle partitions by SIZE, not to the core
-      // count: at bench scale most shuffles carry a few MB, and 32
-      // near-empty reduce tasks per stage are pure scheduler overhead
-      // (the ~0.2 s/query orchestration floor). Scan-side parallelism
-      // is untouched — CPU-dense narrow stages still fan out by input
-      // splits. On a cluster the same settings coalesce to the
-      // advisory size, which is the behavior you want there too.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "16m"))
-      // test tables are one small parquet file each; default 128 MB
-      // splits would scan them single-threaded. On a cluster the
-      // input is many files and this knob is irrelevant.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "128k")
-      // same surface the library ships: functions + optimizer rules
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // functions come from the injected extensions (same registry table)
+    val spark = Sessions.local(Sessions.cpus)
     // untimed warmup: JVM/codegen/scheduler spin-up should not be
     // attributed to whichever query happens to run first. Every query
     // shape runs once at the smallest available SF (same schemas →
@@ -99,21 +72,32 @@ object Bench {
     def execute(df: org.apache.spark.sql.DataFrame): Unit =
       if (fullEval) df.queryExecution.toRdd.count() else df.count()
     val samples = scala.collection.mutable.Map.empty[String, Double]
-    for (_ <- 1 to passes) {
+    // a query that throws in any pass is listed under "failed" and
+    // gets no timing: a broken query must not read as a fast one
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    for (pass <- 1 to passes) {
       selected.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { execute(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // queries persist intermediates (LSH signatures etc.); drop them
-        // so later timings don't pay earlier queries' memory pressure
-        spark.catalog.clearCache()
-        samples.updateWith(name) {
-          case Some(prev) => Some(math.min(prev, dt))
-          case None       => Some(dt)
+        try {
+          val t0 = System.nanoTime()
+          execute(fn(spark, sfDir))
+          val dt = (System.nanoTime() - t0) / 1e9
+          samples.updateWith(name) {
+            case Some(prev) => Some(math.min(prev, dt))
+            case None       => Some(dt)
+          }
+        } catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] pass $pass: $name failed: $e")
+        } finally {
+          // queries persist intermediates (LSH signatures etc.); drop
+          // them so later timings don't pay earlier queries' memory
+          // pressure
+          spark.catalog.clearCache()
         }
       }
     }
-    val results = selected.keys.map(n => n -> samples(n)).toMap
+    val results = samples.toMap -- failed
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // calibration-NORMALIZED per-query values (value / calibration):
@@ -128,12 +112,12 @@ object Bench {
           .mkString("{", ",", "}")
       else "{}"
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"queries":$qs,"queries_norm":$qsNorm,"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"failed":$failedJson,"queries":$qs,"queries_norm":$qsNorm,"sf":"$sfDir"}"""
     println(fullJson)
     // the per-query dict above can exceed the driver's tail capture —
     // repeat the headline number LAST in a short line so the round's
     // total always survives truncation
-    println(s"""{"metric":"total_only","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"n_queries":${results.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_only","value":$total,"unit":"sec","calibration_s":$calibration,"passes":$passes,"failed":$failedJson,"n_queries":${results.size},"sf":"$sfDir"}""")
     // persist the COMPLETE timing map to a file: the driver's stdout
     // tail truncates past ~50 per-query lines, and cross-round
     // common-line audits need every declared query's number, not a

@@ -1,34 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // older testdata generations carry TIMESTAMP(NANOS); this reads
-      // them as epoch-nano Long (Tables.events normalizes either
-      // generation to that contract).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based post-shuffle coalescing (see Bench.scala): fewer
-      // near-empty reduce tasks at small SFs, same plans otherwise
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      // full extensions (functions + RewriteJaccard/RewriteCosine):
-      // every oracled query runs with the optimizer rules active, so a
-      // rewrite-induced divergence fails the hash gate, not just specs
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // no imperative register(): the extensions already injected every
-    // function from the same GraftFunctions.all table
+    val spark = Sessions.local(Sessions.cpus)
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_b runs (and dumps oracles
     // for) just those queries. The driver never sets it — its full-run

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.words
-import graft.plans.TextHashFunctions
+import graft.plans.{GraftFunctions, TextHashFunctions}
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (hash-groupBy), word-shingle Jaccard, MinHash+LSH, SimHash.
@@ -93,18 +93,15 @@ object Dedup {
         transform(sequence(lit(0), size(ws) - n),
           i => concat_ws(" ", slice(ws, i + lit(1), lit(n))))))
 
-  /** Session-aware [[shinglesOfWords]]: array_distinct over the
-    * native one-pass n-gram expression (graft.plans.WordNgrams,
-    * element-identical to the composed transform — spec'd) when
-    * registered, the interpreted per-window lambda otherwise.
-    * array_distinct keeps first-occurrence order in both forms, so
-    * the shingle LIST (not just set) is identical.
+  /** [[shinglesOfWords]] as array_distinct over the native one-pass
+    * n-gram expression (graft.plans.WordNgrams, element-identical to
+    * the composed transform — spec'd). array_distinct keeps
+    * first-occurrence order in both forms, so the shingle LIST (not
+    * just set) is identical.
     */
   def shinglesOfWordsFor(df: DataFrame)(ws: Column, n: Int): Column =
-    if (graft.plans.TextHashFunctions.isRegistered(df.sparkSession))
-      array_distinct(call_function(
-        graft.plans.TextHashFunctions.WordNgramsName, ws, lit(n)))
-    else shinglesOfWords(ws, n)
+    array_distinct(GraftFunctions.call(df)(TextHashFunctions.WordNgramsName,
+      ws, lit(n)))
 
   /** [[shingles]] with the native fast path — see
     * [[shinglesOfWordsFor]].
@@ -121,41 +118,24 @@ object Dedup {
   // ---------------------------------------------------------------
 
   /** Non-overlapping word segments of `segWords` words each (the
-    * last segment keeps the remainder), with their 0-based position.
-    * This is the "paragraph" granularity of CCNet-style dedup
-    * (Wenzek et al. 2020 dedup lines; the test corpus has no line
-    * structure, so fixed word windows stand in for lines — a caller
-    * with real paragraphs passes `split(text, "\n")` instead).
-    * Null text yields null (ANSI size semantics) or an empty list
-    * (legacy size(null) = -1) — either way, zero occurrences. The
-    * size guard matters: unguarded, legacy -1 would make
-    * sequence(0, …) count DOWNWARD and fabricate phantom ""
-    * segments, exactly the hazard [[shingles]] guards against.
-    */
-  def segments(text: Column, segWords: Int): Column = {
-    require(segWords > 0, s"segment width must be positive: $segWords")
-    val ws = words(text)
-    when(size(ws) < 1, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), ceil(size(ws) / lit(segWords.toDouble)).cast("int") - 1),
-        i => concat_ws(" ", slice(ws, i * segWords + lit(1), lit(segWords)))))
-  }
-
-  /** Session-aware [[segments]]: the native one-pass expression
-    * (graft.plans.WordSegments, element-identical — spec-pinned) when
-    * the session registers graft's functions, the composed strided
-    * lambda otherwise. The composed form pays an interpreted
-    * slice+concat_ws per window position; on the segment-explode
-    * paths (boilerplate removal, the segment-dedup family) that
-    * interpretation is most of the scan cost (round-17, guide §4:
-    * prefer codegen expressions in the hot path).
+    * last segment keeps the remainder). This is the "paragraph"
+    * granularity of CCNet-style dedup (Wenzek et al. 2020 dedup
+    * lines; the test corpus has no line structure, so fixed word
+    * windows stand in for lines). Null text yields null: zero
+    * occurrences.
+    *
+    * One native pass (graft.plans.WordSegments, element-identical to
+    * the composed strided slice+concat_ws — spec-pinned). The
+    * composed form pays an interpreted slice+concat_ws per window
+    * position; on the segment-explode paths (boilerplate removal, the
+    * segment-dedup family) that interpretation is most of the scan
+    * cost (round-17, guide §4: prefer codegen expressions in the hot
+    * path).
     */
   def segmentsFor(df: DataFrame)(text: Column, segWords: Int): Column = {
     require(segWords > 0, s"segment width must be positive: $segWords")
-    if (graft.plans.TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(graft.plans.TextHashFunctions.WordSegmentsName,
-        words(text), lit(segWords))
-    else segments(text, segWords)
+    GraftFunctions.call(df)(TextHashFunctions.WordSegmentsName,
+      words(text), lit(segWords))
   }
 
   /** Corpus-wide first-occurrence segment dedup — remove every
@@ -488,7 +468,7 @@ object Dedup {
     */
   private def windowOccurrences(df: DataFrame, idCol: String,
       textCol: String, w: Int): DataFrame =
-    // window strings via the (session-aware) one-pass n-gram
+    // window strings via the native one-pass n-gram
     // expression, md5 AFTER the explode as a codegen'd projection —
     // the old form evaluated slice+concat+md5 interpreted per window
     // position inside a transform lambda
@@ -554,19 +534,6 @@ object Dedup {
   // MinHash + LSH
   // ---------------------------------------------------------------
 
-  /** k-permutation MinHash signature over a shingle set: element i is
-    * min over shingles of xxhash64(i, xxhash64(shingle)) — the
-    * classic min-of-independent-hashes estimator (Broder '97).
-    * Shingle STRINGS hash once; the k permutations re-hash the
-    * resulting 8-byte longs (constant-time) instead of re-walking
-    * each string k times — 16× less string hashing in the hot path.
-    */
-  def minhashSignature(shingleSet: Column, k: Int): Column = {
-    val baseHashes = transform(shingleSet, s => xxhash64(s))
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(baseHashes, h => xxhash64(i, h))))
-  }
-
   /** LSH band hashes: signature split into `bands` rows of
     * k/bands values, each hashed to a bucket id.
     */
@@ -578,21 +545,6 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => hash(slice(signature, b * r + lit(1), lit(r)), b))
   }
-
-  /** md5-hex MinHash signature: element i is the LEXICOGRAPHIC min
-    * over shingles of md5(i || '|' || shingle). Same estimator as
-    * [[minhashSignature]] under a different hash family — chosen
-    * because md5 is byte-identical across engines (DuckDB has no
-    * xxhash64), so the WHOLE pipeline — signatures, banding, bucket
-    * join, verification — replays under the cross-engine oracle
-    * gate. The xxhash64 variant stays the scale default: 8-byte
-    * values instead of 32-char strings, and each shingle string
-    * hashed once instead of k times.
-    */
-  def minhashSignatureMd5(shingleSet: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingleSet,
-        s => md5(concat(i.cast("string"), lit("|"), s)))))
 
   /** Band buckets for the md5 signature mode: md5 of the
     * '|'-joined band slice (a hex string both engines agree on).
@@ -676,21 +628,18 @@ object Dedup {
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, k: Int = 16, hashMode: String = "xx"): DataFrame = {
     requireHashMode(hashMode)
-    val sigExpr =
-      if (hashMode == "md5")
-        // oracle-parity mode: md5 exists in every engine. Fused native
-        // loop when registered (bit-identical, spec-pinned), composed
-        // transform/array_min otherwise.
-        if (TextHashFunctions.isRegistered(df.sparkSession))
-          call_function(TextHashFunctions.Md5MinHashName,
-            words(col("text")), lit(n), lit(k))
-        else minhashSignatureMd5(shingles(col("text"), n), k)
-      else if (TextHashFunctions.isRegistered(df.sparkSession))
-        // native fused loop (graft.plans.ShingleMinHash): bit-identical
-        // to the composed form, ~10x less per-row overhead
-        call_function(TextHashFunctions.MinHashName,
-          words(col("text")), lit(n), lit(k))
-      else minhashSignature(shingles(col("text"), n), k)
+    // k-permutation MinHash over the n-word shingle set, as one native
+    // fused loop (graft.plans.ShingleMinHash; bit-identical to the
+    // composed transform/array_min form, spec-pinned; ~10x less per-row
+    // overhead). "xx": element i is the min over shingles of
+    // xxhash64(i, xxhash64(shingle)) (Broder '97). "md5": element i is
+    // the LEXICOGRAPHIC min of md5(i || '|' || shingle) — md5 is
+    // byte-identical across engines (DuckDB has no xxhash64), so the
+    // whole pipeline replays under the cross-engine oracle gate.
+    val sigExpr = GraftFunctions.call(df)(
+      if (hashMode == "md5") TextHashFunctions.Md5MinHashName
+      else TextHashFunctions.MinHashName,
+      words(col("text")), lit(n), lit(k))
     df.select(col(idCol).as("id"), col(textCol).as("text"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .filter(size(words(col("text"))) >= n)
@@ -792,7 +741,6 @@ object Dedup {
     // Sorted once per DOC so the per-PAIR intersection can run as a
     // zero-allocation linear merge (see SortedIntersectSize) instead
     // of a hash-set build per candidate pair.
-    val native = graft.plans.TextHashFunctions.isRegistered(df.sparkSession)
     val grams = base.select(col("id"),
         array_sort(shinglesFor(base)(col("text"), n)).as("g"))
       .withColumn("ng", size(col("g")))
@@ -805,11 +753,8 @@ object Dedup {
       .join(grams.select(col("id").as("id_b"), col("g").as("__gb"),
         col("ng").as("__nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        (if (native) call_function(
-            graft.plans.TextHashFunctions.SortedIntersectSizeName,
-            col("__ga"), col("__gb"))
-          else size(array_intersect(col("__ga"), col("__gb"))))
-          .as("__inter"),
+        GraftFunctions.call(df)(TextHashFunctions.SortedIntersectSizeName,
+          col("__ga"), col("__gb")).as("__inter"),
         col("__na"), col("__nb"))
       .filter(col("__inter") * 10000L >= least(col("__na"), col("__nb")) * thr10k)
       .select(
@@ -823,64 +768,6 @@ object Dedup {
   // ---------------------------------------------------------------
   // SimHash
   // ---------------------------------------------------------------
-
-  /** 64-bit SimHash as four 16-bit band values (array<long>, bands
-    * low→high). Keeping quarters separate doubles as the LSH
-    * banding: docs within Hamming distance ≤3 share ≥1 identical
-    * band (pigeonhole). Majority vote per bit over xxhash64(token)
-    * (Charikar '02), built from array exprs — no UDF. Shift amounts
-    * are lambda-bound columns, so this goes through call_function to
-    * reach the Catalyst ShiftRight/ShiftLeft that accept them.
-    */
-  def simhashBands(text: Column): Column =
-    simhashBandsFromHashes(transform(words(text), w => xxhash64(w)))
-
-  /** Bands from pre-computed token hashes — callers materialize the
-    * hash array as a column first so tokens hash ONCE, not once per
-    * bit (64× difference in the hot path).
-    */
-  def simhashBandsFromHashes(hs: Column): Column = {
-    // denominator = countable (non-null) hashes, matching the numerator
-    // filter below; zero countable tokens → null fingerprint (a vacuous
-    // majority vote would stamp every empty doc with the same all-ones
-    // bands and make them mutual Hamming-0 "duplicates")
-    val valid = filter(hs, h => h.isNotNull)
-    val total = size(valid)
-    val bands = transform(sequence(lit(0), lit(3)), band =>
-      aggregate(sequence(lit(0), lit(15)), lit(0L), (acc, j) => {
-        val bitIdx = (band * 16 + j).cast("int")
-        val ones = size(filter(valid, h =>
-          call_function("shiftright", h, bitIdx)
-            .bitwiseAND(lit(1L)) === lit(1L)))
-        val bit = when(ones * 2 >= total, lit(1L)).otherwise(lit(0L))
-        acc + bit * call_function("shiftleft", lit(1L), j)
-      }))
-    when(total === 0, lit(null)).otherwise(bands)
-  }
-
-  /** md5-mode SimHash bands (the cross-engine-oracle variant, like
-    * [[minhashSignatureMd5]]): token band value b = md5 hex chars
-    * [4b+1, 4b+4] parsed base-16 (16 bits), majority vote per bit.
-    * Identical in DuckDB as CAST(concat('0x', substring(md5(w),
-    * b*4+1, 4)) AS INTEGER). Null tokens skipped; zero countable
-    * tokens → null fingerprint (same contract as the xx path).
-    */
-  def simhashBandsMd5FromWords(ws: Column): Column = {
-    val hs = filter(transform(ws, w => md5(w)), h => h.isNotNull)
-    val total = size(hs)
-    val bands = transform(sequence(lit(0), lit(3)), band =>
-      aggregate(sequence(lit(0), lit(15)), lit(0L), (acc, j) => {
-        val ones = size(filter(hs, h => {
-          val bandVal = conv(h.substr(band * lit(4) + lit(1), lit(4)), 16, 10)
-            .cast("long")
-          call_function("shiftright", bandVal, j.cast("int"))
-            .bitwiseAND(lit(1L)) === lit(1L)
-        }))
-        val bit = when(ones * 2 >= total, lit(1L)).otherwise(lit(0L))
-        acc + bit * call_function("shiftleft", lit(1L), j)
-      }))
-    when(total === 0, lit(null)).otherwise(bands)
-  }
 
   /** Hamming distance between two simhash band arrays. */
   def hammingDistance(a: Column, b: Column): Column =
@@ -903,26 +790,27 @@ object Dedup {
       hashMode: String = "xx"): graft.Managed = {
     require(hashMode == "xx" || hashMode == "md5",
       s"unknown simhash hashMode '$hashMode' (xx | md5)")
-    // tokens hashed once, fingerprint persisted (feeds both join
-    // sides + verification); repartition for row-proportional CPU
-    val bandsExpr =
-      if (hashMode == "md5")
-        if (TextHashFunctions.isRegistered(df.sparkSession))
-          call_function(TextHashFunctions.Md5SimHashName, words(col("text")))
-        else simhashBandsMd5FromWords(words(col("text")))
-      else if (TextHashFunctions.isRegistered(df.sparkSession))
-        call_function(TextHashFunctions.SimHashName, words(col("text")))
-      else simhashBands(col("text"))
+    // 64-bit SimHash as four 16-bit band values (bands low→high), one
+    // native pass per doc (bit-identical to the composed majority-vote
+    // form, spec-pinned). Separate quarters double as the LSH banding:
+    // docs within Hamming distance ≤3 share ≥1 identical band
+    // (pigeonhole). "xx" votes per bit over xxhash64(token)
+    // (Charikar '02); "md5", the cross-engine-oracle variant, over
+    // md5 hex chars [4b+1, 4b+4] of each token. Zero countable tokens
+    // → null fingerprint. The fingerprint is persisted (feeds both
+    // join sides + verification); repartition for row-proportional CPU
+    val bandsExpr = GraftFunctions.call(df)(
+      if (hashMode == "md5") TextHashFunctions.Md5SimHashName
+      else TextHashFunctions.SimHashName,
+      words(col("text")))
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      // null text has no fingerprint: the composed path would fold it
-      // to bands [0,0,0,0] (making all null docs mutual "duplicates")
-      // while the native expression yields NULL — filtering keeps the
-      // two paths identical and the semantics sane
+      // null text has no fingerprint and no content to match on, so
+      // it is never a candidate: a semantic filter, not a path guard
       .filter(col("text").isNotNull)
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col("id"), bandsExpr.as("sh"))
-      // empty-token docs have a null fingerprint (both paths) — they
-      // carry no content to match on
+      // empty-token docs have a null fingerprint — they carry no
+      // content to match on
       .filter(col("sh").isNotNull)
       .persist()
     val buckets = base.select(col("id"),

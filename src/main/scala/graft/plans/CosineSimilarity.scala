@@ -1,11 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: cosine similarity of two double
@@ -299,8 +300,7 @@ object GraftFunctions {
         BpeEncodeWords(e(0), e(1)))))
 
   /** Register graft's native expressions in a session (idempotent).
-    * Callers (Verify/Bench/tests) invoke this once; library code
-    * picks the native path up automatically when present.
+    * Library code never needs this: [[call]] registers on first use.
     */
   def register(spark: SparkSession): Unit =
     all.foreach { case (name, _, builder) =>
@@ -311,4 +311,16 @@ object GraftFunctions {
   def isRegistered(spark: SparkSession): Boolean =
     spark.sessionState.functionRegistry
       .functionExists(FunctionIdentifier(CosineName))
+
+  /** The one way library code invokes a native expression: registers
+    * the [[all]] table into `df`'s session when it is missing (a
+    * [[GraftExtensions]] session already carries it), then resolves
+    * `name` there. The session comes from the frame, not from
+    * `SparkSession.active`, because plans are also built on pool
+    * threads that have no active session.
+    */
+  def call(df: DataFrame)(name: String, args: Column*): Column = {
+    if (!isRegistered(df.sparkSession)) register(df.sparkSession)
+    call_function(name, args: _*)
+  }
 }

@@ -226,7 +226,7 @@ case class QuantizeVec(child: Expression) extends QuantVecInput {
 }
 
 /** Micro-nat token-entropy sum — the native form of the composed
-  * [[graft.textanalysis.TextAnalysis.entropyNats]] fold: sort the
+  * entropyNats fold (the spec-side Composed form): sort the
   * token array (Spark array_sort ordering — binary string compare,
   * nulls last), then per run of equal tokens accumulate
   * `run · round(ln(n/run)·10⁶)` as an exact long. The composed form

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,7 +79,7 @@ object TextHashUtil {
   /** md5-mode MinHash signature: for each permutation p, the
     * LEXICOGRAPHIC min over word n-grams of md5hex(p + "|" + gram) —
     * byte-identical to the composed transform/md5/array_min form in
-    * Dedup.minhashSignatureMd5 (asserted by spec). Unsigned
+    * Composed.minhashSignatureMd5 (asserted by spec). Unsigned
     * digest-byte order IS hex-string order, so candidates compare as
     * raw 16-byte digests and only the k winners pay hex encoding.
     * Fewer than n words → zero grams → k nulls, matching
@@ -165,7 +164,7 @@ object TextHashUtil {
     * [4b+1, 4b+4] parsed as a 16-bit int (= md5 digest bytes 2b,
     * 2b+1 big-endian), majority vote per bit within each band —
     * byte-identical to the composed conv/substring form in
-    * Dedup.simhashBandsMd5FromWords AND to DuckDB's
+    * Composed.simhashBandsMd5FromWords AND to DuckDB's
     * CAST(concat('0x', substring(md5(w), b*4+1, 4)) AS INTEGER),
     * which is what puts the SimHash family under the cross-engine
     * oracle gate. Null tokens are skipped (and excluded from the
@@ -214,7 +213,7 @@ object TextHashUtil {
 
   /** 64-bit SimHash as four 16-bit bands in one pass: per-token
     * xxhash64, majority vote per bit — identical to the composed
-    * Dedup.simhashBands (same hash, same ones*2 >= total rule).
+    * Composed.simhashBands (same hash, same ones*2 >= total rule).
     */
   def simHashBands(words: ArrayData): ArrayData = {
     val nWords = words.numElements()
@@ -286,7 +285,7 @@ object VectorHashUtil {
 
   /** SRP-LSH bucket id in one pass: bit p of the bucket = sign of
     * <v, plane_p> where plane_p[j] = (xxhash64(p, j) mod 1000)/1000
-    * - 0.5 — identical to Similarity.srpBucket's composed form
+    * - 0.5 — identical to the spec-side Composed.srpBucket
     * (xxhash64(p: int, j: int) = hashInt(j, hashInt(p, 42)), pmod).
     */
   def srpBucket(v: ArrayData, nPlanes: Int): Long = {
@@ -360,7 +359,7 @@ object Md5VectorHashUtil {
   }
 
   /** Johnson–Lindenstrauss projection onto `outDim` md5 hyperplanes —
-    * [[srpBucketMd5]] WITHOUT the sign quantization: component p is
+    * the md5 SRP bucket WITHOUT the sign quantization: component p is
     * the index-ordered dot <v, plane_p> itself, so the projected
     * doubles (not just their signs) are bit-identical to the composed
     * fold and to a sequential list_reduce in the oracle engine. One
@@ -477,7 +476,7 @@ object NgramUtil {
   /** Strided (non-overlapping) word segments, byte-identical to the
     * composed `when(size(ws) < 1, array()).otherwise(transform(
     * sequence(0, ceil(size/w) - 1), i -> concat_ws(" ", slice(ws,
-    * i*w + 1, w))))` form (Dedup.segments): ceil(sz/w) windows of w
+    * i*w + 1, w))))` form (Composed.segments): ceil(sz/w) windows of w
     * adjacent elements (the last one shorter when w does not divide
     * sz) joined by a single space, null elements skipped by the join
     * (concat_ws semantics), empty array → empty array. Same
@@ -646,11 +645,4 @@ object TextHashFunctions {
     case other => throw new IllegalArgumentException(
       s"expected integer literal, got $other")
   }
-
-  /** Delegates to the single registration table. */
-  def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
-
-  def isRegistered(spark: SparkSession): Boolean =
-    spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(MinHashName))
 }

@@ -151,8 +151,8 @@ object NbClassifier {
   }
 
   /** Row-local decision score in integer micro-nats over a pre-split
-    * token array — the serving form ([[scoreCol]] wraps it with the
-    * native fused expression when registered). Bit-equal to the
+    * token array — the serving form, and the composed twin of
+    * [[scoreCol]]'s native fused expression. Bit-equal to the
     * relational replay by the shared-expression construction.
     */
   def decision6Local(model: NbModel)(ws: Column): Column =

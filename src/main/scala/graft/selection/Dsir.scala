@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.words
+import graft.plans.{GraftFunctions, TextHashFunctions}
 import graft.textanalysis.TextAnalysis.ngrams
 
 /** DSIR-style data selection: importance resampling over hashed
@@ -58,20 +59,17 @@ object Dsir {
       lit(buckets.toLong))
 
   /** The per-gram bucket-id ARRAY of a token array — the train-side
-    * gram walk every counting trainer explodes. Native fused
-    * expression when the session registers graft's functions (one md5
-    * per gram off the token bytes, inside WholeStageCodegen — the
-    * [[graft.plans.DsirBuckets]] / DsirScore6 pattern, round-17),
-    * composed per-gram transform otherwise. Element-identical by the
-    * DsirBucketsSpec parity pin; training only COUNTS the elements,
-    * so the counts (and the models built from them) are unchanged —
-    * the full-retrain oracle replays unchanged.
+    * gram walk every counting trainer explodes — as the native fused
+    * expression (one md5 per gram off the token bytes, inside
+    * WholeStageCodegen — the [[graft.plans.DsirBuckets]] / DsirScore6
+    * pattern, round-17). Element-identical to the composed per-gram
+    * `transform(featureGrams(ws), bucketOf)` by the DsirBucketsSpec
+    * parity pin; training only COUNTS the elements, so the counts
+    * (and the models built from them) are unchanged — the
+    * full-retrain oracle replays unchanged.
     */
   def bucketsFor(df: DataFrame)(ws: Column, buckets: Int): Column =
-    if (graft.plans.TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(graft.plans.TextHashFunctions.DsirBucketsName,
-        ws, lit(buckets))
-    else transform(featureGrams(ws), g => bucketOf(g, buckets))
+    GraftFunctions.call(df)(TextHashFunctions.DsirBucketsName, ws, lit(buckets))
 
   /** Per-bucket feature counts of a corpus — at most `buckets` rows.
     * Missing buckets are absent (the trainer zero-fills).
@@ -340,18 +338,14 @@ object Dsir {
       acc + element_at(arr, bucketOf(g, model.buckets).cast("int") + 1))
   }
 
-  /** [[score6Local]] through the native fused expression when the
-    * session has graft's functions registered (one md5 per gram
-    * straight off the token bytes, inside WholeStageCodegen) —
+  /** [[score6Local]] through the native fused expression (one md5 per
+    * gram straight off the token bytes, inside WholeStageCodegen) —
     * bit-equal to the composed fold by the DsirScore6 contract
-    * (spec-pinned, and re-proven by the hash gate every round since
-    * Verify/Bench sessions register the functions).
+    * (spec-pinned, and re-proven by the hash gate every round).
     */
   def score6For(df: DataFrame, model: DsirModel)(ws: Column): Column =
-    if (graft.plans.TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(graft.plans.TextHashFunctions.DsirScore6Name,
-        ws, typedlit(model.ratios6))
-    else score6Local(model)(ws)
+    GraftFunctions.call(df)(TextHashFunctions.DsirScore6Name, ws,
+      typedlit(model.ratios6))
 
   /** Deterministic Gumbel key in integer micro-nats: g = −ln(−ln(u))
     * with u = (h + 0.5) / 2^60 derived from md5(id) — u ∈ (0,1)

@@ -28,22 +28,12 @@ object Similarity {
 
   private def asDouble(v: Column): Column = v.cast("array<double>")
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Session-aware cosine: uses the native fused-loop Catalyst
-    * expression (graft.plans.CosineSimilarity) when registered —
-    * bit-identical results, one array walk instead of four.
+  /** Cosine similarity as the native fused-loop Catalyst expression
+    * (graft.plans.CosineSimilarity): one array walk instead of the
+    * composed dot/norm form's four, bit-identical (CosineSimilaritySpec).
     */
   private def cosineFor(df: DataFrame)(a: Column, b: Column): Column =
-    if (GraftFunctions.isRegistered(df.sparkSession))
-      call_function(GraftFunctions.CosineName, asDouble(a), asDouble(b))
-    else cosine(a, b)
+    GraftFunctions.call(df)(GraftFunctions.CosineName, asDouble(a), asDouble(b))
 
   /** Exact top-k by cosine against one stored vector (query joined in
     * as a broadcast single-row frame). Scores rounded to 4 places
@@ -278,61 +268,43 @@ object Similarity {
     * (id, score) pairs.
     */
   def quantizeEmbeddings(embeddings: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    if (TextHashFunctions.isRegistered(embeddings.sparkSession)) {
-      // native one-pass build (QuantExprs — no asDouble copy, no
-      // interpreted transform per element); whole-stage codegen
-      // dedupes the shared struct via subexpression elimination
-      val q = call_function(TextHashFunctions.QuantizeVecName, col(vecCol))
-      embeddings.select(col(idCol), q.getField("scale").as("scale"),
-        q.getField("qvec").as("qvec"))
-    } else
-      embeddings.select(col(idCol), quantScale(col(vecCol)).as("scale"),
-        quantizeVec(col(vecCol)).as("qvec"))
+      vecCol: String = "embedding"): DataFrame = {
+    // native one-pass build (QuantExprs — no asDouble copy, no
+    // interpreted transform per element); whole-stage codegen
+    // dedupes the shared struct via subexpression elimination.
+    // QuantSpec pins parity with quantScale/quantizeVec.
+    val q = GraftFunctions.call(embeddings)(TextHashFunctions.QuantizeVecName,
+      col(vecCol))
+    embeddings.select(col(idCol), q.getField("scale").as("scale"),
+      q.getField("qvec").as("qvec"))
+  }
 
   /** The per-vector quantization-quality readout of the compressed
-    * store: (scale, |q|₁, max q, min q, non-zero count) — native
-    * one-pass when the session carries the graft expressions,
-    * composed higher-order functions otherwise (QuantSpec pins
-    * element parity; the oracled q_embed_quantize row hash-gates the
-    * readout end-to-end).
+    * store: (scale, |q|₁, max q, min q, non-zero count) in one native
+    * pass (QuantSpec pins element parity with the composed
+    * higher-order form; the oracled q_embed_quantize row hash-gates
+    * the readout end-to-end).
     */
   def quantStatsReadout(embeddings: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    if (TextHashFunctions.isRegistered(embeddings.sparkSession)) {
-      val st = call_function(TextHashFunctions.QuantStatsName, col(vecCol))
-      embeddings.select(col(idCol),
-        round(st.getField("scale"), 9).as("scale"),
-        st.getField("q_l1").as("q_l1"),
-        st.getField("q_max").as("q_max"),
-        st.getField("q_min").as("q_min"),
-        st.getField("n_nonzero").as("n_nonzero"))
-    } else
-      quantizeEmbeddings(embeddings, idCol, vecCol)
-        .select(col(idCol),
-          round(col("scale"), 9).as("scale"),
-          aggregate(col("qvec"), lit(0L), (a, x) => a + abs(x)).as("q_l1"),
-          array_max(col("qvec")).as("q_max"),
-          array_min(col("qvec")).as("q_min"),
-          size(filter(col("qvec"), x => x =!= 0)).as("n_nonzero"))
+      vecCol: String = "embedding"): DataFrame = {
+    val st = GraftFunctions.call(embeddings)(TextHashFunctions.QuantStatsName,
+      col(vecCol))
+    embeddings.select(col(idCol),
+      round(st.getField("scale"), 9).as("scale"),
+      st.getField("q_l1").as("q_l1"),
+      st.getField("q_max").as("q_max"),
+      st.getField("q_min").as("q_min"),
+      st.getField("n_nonzero").as("n_nonzero"))
+  }
 
   /** EXACT integer dot product of two quantized vectors (≤ 127²·dim
     * fits a long for any dim under 5.7e14) — the reason quantized
     * scoring is fully cross-engine-reproducible: no float sum order
-    * to diverge.
-    */
-  def qdot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x * y).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-
-  /** Session-aware [[qdot]]: the native primitive loop when the graft
-    * expressions are registered (QuantSpec pins parity), the composed
-    * zip_with/aggregate fold otherwise.
+    * to diverge. One native primitive loop (QuantSpec pins parity
+    * with the composed zip_with/aggregate fold).
     */
   def qdotFor(df: DataFrame)(a: Column, b: Column): Column =
-    if (TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(TextHashFunctions.QdotName, a, b)
-    else qdot(a, b)
+    GraftFunctions.call(df)(TextHashFunctions.QdotName, a, b)
 
   /** Top-k over the COMPRESSED store: score = scaleₐ·scale_b·(qₐ·q_b),
     * the dequantized dot product — integer-exact inside, two IEEE
@@ -353,23 +325,14 @@ object Similarity {
       .limit(k)
   }
 
-  /** Deterministic hyperplane component: xxhash64(plane, dim) mapped
-    * to [-0.5, 0.5). Fixed given (plane, dim) — no RNG state.
-    */
-  private def planeComponent(plane: Column, dim: Column): Column =
-    (pmod(xxhash64(plane, dim), lit(1000)).cast("double") / 1000.0) - 0.5
-
-  /** Session-aware SRP bucket: native one-pass expression when
-    * registered (bit-identical; see TextHashSpec), composed otherwise.
+  /** Sign-random-projection bucket id: bit p = sign of <v, plane_p>,
+    * plane component (p, j) = xxhash64(p, j) mapped to [-0.5, 0.5) —
+    * fixed given (p, j), no RNG state. One native pass (bit-identical
+    * to the composed form; see TextHashSpec).
     */
   def srpBucketFor(df: DataFrame)(v: Column, nPlanes: Int): Column =
-    if (TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(TextHashFunctions.SrpBucketName, asDouble(v), lit(nPlanes))
-    else srpBucket(v, nPlanes)
-
-  /** Sign-random-projection bucket id: bit p = sign of <v, plane_p>. */
-  def srpBucket(v: Column, nPlanes: Int): Column =
-    srpBucketWith(planeComponent)(v, nPlanes)
+    GraftFunctions.call(df)(TextHashFunctions.SrpBucketName, asDouble(v),
+      lit(nPlanes))
 
   /** md5-plane SRP bucket — the cross-engine-oracle variant: plane
     * component (p, j) = (int(md5hex("p|j")[1..8], 16) % 1000)/1000
@@ -377,61 +340,25 @@ object Similarity {
     * order on every path (composed, native, oracle list_reduce), so
     * the float sum — and therefore the sign — is bit-identical.
     */
-  def srpBucketMd5(v: Column, nPlanes: Int): Column =
-    srpBucketWith(planeComponentMd5)(v, nPlanes)
-
-  private def srpBucketWith(comp: (Column, Column) => Column)(
-      v: Column, nPlanes: Int): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(nPlanes - 1)), p => {
-        val d = aggregate(
-          zip_with(asDouble(v), sequence(lit(0), size(v) - 1),
-            (x, j) => x * comp(p, j)),
-          lit(0.0), (acc, x) => acc + x)
-        when(d >= 0, call_function("shiftleft", lit(1L), p)).otherwise(lit(0L))
-      }),
-      lit(0L), (acc, b) => acc + b)
-
-  private def planeComponentMd5(plane: Column, dim: Column): Column =
-    ((conv(md5(concat(plane.cast("string"), lit("|"), dim.cast("string")))
-        .substr(lit(1), lit(8)), 16, 10).cast("long") % 1000)
-      .cast("double") / 1000.0) - 0.5
-
-  /** Session-aware md5 SRP bucket (see srpBucketFor). */
   def srpBucketMd5For(df: DataFrame)(v: Column, nPlanes: Int): Column =
-    if (TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(TextHashFunctions.Md5SrpBucketName, asDouble(v), lit(nPlanes))
-    else srpBucketMd5(v, nPlanes)
+    GraftFunctions.call(df)(TextHashFunctions.Md5SrpBucketName, asDouble(v),
+      lit(nPlanes))
 
-  /** Composed JL projection: component p = the index-ordered dot
-    * <v, plane_p> over the SAME md5 hyperplane family as
-    * [[srpBucketMd5]] (Achlioptas-style deterministic projection
-    * matrix — no RNG state, reproducible in any engine with md5).
+  /** JL projection: component p = the index-ordered dot <v, plane_p>
+    * over the SAME md5 hyperplane family as [[srpBucketMd5For]]
+    * (Achlioptas-style deterministic projection matrix — no RNG
+    * state, reproducible in any engine with md5).
     * Johnson–Lindenstrauss: pairwise angles are approximately
     * preserved at outDim ≪ dim, so a 100 TB ANN scan can rank 8
     * doubles instead of 64 floats — ~8× less scan volume per
     * candidate, with recall measured (not assumed) by
-    * [[projectedRecall]].
-    */
-  def jlProjectMd5(v: Column, outDim: Int): Column =
-    // the outer transform runs over a literal sequence, so a null
-    // vector must be peeled explicitly to keep the native
-    // expression's null-in/null-out contract (not an array of nulls)
-    when(v.isNotNull,
-      transform(sequence(lit(0), lit(outDim - 1)), p =>
-        aggregate(zip_with(asDouble(v), sequence(lit(0), size(v) - 1),
-          (x, j) => x * planeComponentMd5(p, j)),
-          lit(0.0), (acc, x) => acc + x)))
-
-  /** Session-aware JL projection: the native one-pass expression
-    * (graft.plans.JlProjectMd5 — the composed form is an interpreted
-    * lambda per (plane, element), the WordNgrams-class hazard) when
-    * registered, composed otherwise; bit parity spec'd.
+    * [[projectedRecall]]. One native pass (graft.plans.JlProjectMd5 —
+    * the composed form is an interpreted lambda per (plane, element),
+    * the WordNgrams-class hazard); bit parity spec'd.
     */
   def jlProjectFor(df: DataFrame)(v: Column, outDim: Int): Column =
-    if (TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(TextHashFunctions.JlProjectName, asDouble(v), lit(outDim))
-    else jlProjectMd5(v, outDim)
+    GraftFunctions.call(df)(TextHashFunctions.JlProjectName, asDouble(v),
+      lit(outDim))
 
   /** Projected-component readout: one row per (vec_id, plane index,
     * 6-rounded component) — the exploded form every engine can
@@ -586,7 +513,7 @@ object Similarity {
     */
   /** Per-centroid scores for a vector column: higher-order transform
     * runs interpreted, so each per-cell score uses the native
-    * fused-loop cosine when registered — one tight pass per cell
+    * fused-loop cosine — one tight pass per cell
     * instead of nested interpreted lambdas. Shared by build and query
     * so assignment and probing can never disagree on rounding or
     * tie-break.
@@ -1793,19 +1720,13 @@ object Similarity {
       rot: Seq[Seq[Double]], queryIds: Seq[Long], k: Int,
       dims: Seq[Int]): DataFrame = {
     require(dims.nonEmpty, "rotated truncation needs at least one prefix")
-    // rotated projection: native fused mat-vec when the session
-    // registers graft's functions (one primitive pass; the composed
-    // form pays d interpreted zip_with+aggregate lambdas — each
-    // materializing a zipped array — per embedding row, the dominant
-    // scan cost of the truncation-recall family), element-identical
-    // composed fold otherwise (spec-pinned, round-17)
+    // rotated projection as the native fused mat-vec: one primitive
+    // pass, where the composed form pays d interpreted
+    // zip_with+aggregate lambdas — each materializing a zipped array —
+    // per embedding row (element parity spec-pinned, round-17)
     def projCol(vc: Column, d: Int): Column =
-      if (graft.plans.TextHashFunctions.isRegistered(embeddings.sparkSession))
-        call_function(graft.plans.TextHashFunctions.MatVecName, vc,
-          typedlit((0 until d).map(r => rot(r).toVector).toVector))
-      else array((0 until d).map(r =>
-        aggregate(zip_with(vc, typedlit(rot(r).toVector),
-          (x, y) => x * y), lit(0.0), (acc, x) => acc + x)): _*)
+      GraftFunctions.call(embeddings)(TextHashFunctions.MatVecName, vc,
+        typedlit((0 until d).map(r => rot(r).toVector).toVector))
     def projQ(qv: Seq[Double], d: Int): Vector[Double] =
       (0 until d).map { r =>
         var s = 0.0; var i = 0

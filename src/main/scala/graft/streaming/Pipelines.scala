@@ -1221,23 +1221,7 @@ object Pipelines {
           minDocs)
       }
       .start()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          index.unpersist(false)
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    if (!q.isActive) {
-      index.unpersist(false)
-      spark.streams.removeListener(listener)
-    }
+    releaseOnTermination(q)(index.unpersist(false))
     q
   }
 
@@ -1556,27 +1540,29 @@ object Pipelines {
       .start()
     // the cached corpus-scale index must not outlive its stream
     // (unlike the lm/dsir/nb sinks, whose models are driver-side
-    // literals): release it when THIS query terminates, then retire
-    // the listener. The isActive re-check closes the window where
-    // the query died before the listener registered.
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          index.unpersist(false)
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    if (!q.isActive) {
-      index.unpersist(false)
-      spark.streams.removeListener(listener)
-    }
+    // literals)
+    releaseOnTermination(q)(index.unpersist(false))
     q
+  }
+
+  /** Run `release` once `q` terminates, then retire the listener:
+    * a cache scoped to one stream must not outlive it. The isActive
+    * re-check closes the window where the query died before the
+    * listener registered (a double release is harmless).
+    */
+  private def releaseOnTermination(
+      q: org.apache.spark.sql.streaming.StreamingQuery)(
+      release: => Unit): Unit = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val streams = q.sparkSession.streams
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == q.id) { release; streams.removeListener(this) }
+    }
+    streams.addListener(listener)
+    if (!q.isActive) { release; streams.removeListener(listener) }
   }
 
   /** The idempotent batch core of the streaming COMMUNITY-ASSIGNMENT
@@ -1637,26 +1623,8 @@ object Pipelines {
         processCommunityAssignBatch(batch, labels, edgesOf, outDir, batchId)
       }
       .start()
-    // the cached labels table must not outlive its stream (the
-    // memorizationGateSink lifecycle; isActive re-check closes the
-    // died-before-listener window)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          labels.unpersist(false)
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    if (!q.isActive) {
-      labels.unpersist(false)
-      spark.streams.removeListener(listener)
-    }
+    // the cached labels table must not outlive its stream
+    releaseOnTermination(q)(labels.unpersist(false))
     q
   }
 
@@ -1722,26 +1690,8 @@ object Pipelines {
           batchId, maxDist)
       }
       .start()
-    // the cached index must not outlive its stream (the
-    // memorizationGateSink lifecycle; isActive re-check closes the
-    // died-before-listener window)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          index.unpersist(false)
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    if (!q.isActive) {
-      index.unpersist(false)
-      spark.streams.removeListener(listener)
-    }
+    // the cached index must not outlive its stream
+    releaseOnTermination(q)(index.unpersist(false))
     q
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.{words, stopwordCount, wordCount}
+import graft.plans.{GraftFunctions, TextHashFunctions}
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * token counting, readability/quality statistics, and document
@@ -141,27 +142,14 @@ object TextAnalysis {
   // Fingerprinting
   // ---------------------------------------------------------------
 
-  val FpMod = 1000000007L
-
   /** Karp-Rabin rolling polynomial hash of the whole document —
     * content-defined 64-bit-safe fingerprint, reproducible in any
-    * engine with integer folds (no md5 dependence). Composed form:
-    * three interpreted lambdas per character.
-    */
-  def rollingHash(text: Column): Column =
-    aggregate(
-      transform(filter(split(text, ""), c => c =!= ""),
-        c => ascii(c).cast("long")),
-      lit(0L), (acc, x) => pmod(acc * 31 + x, lit(FpMod)))
-
-  /** Session-aware rolling hash: the native one-pass expression
-    * (graft.plans.RollingHash, bit-identical — spec'd) when
-    * registered, the composed fold otherwise.
+    * engine with integer folds (no md5 dependence). One native pass
+    * (graft.plans.RollingHash, bit-identical to the composed
+    * three-lambdas-per-character fold — spec'd).
     */
   def rollingHashFor(df: DataFrame)(text: Column): Column =
-    if (graft.plans.TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(graft.plans.TextHashFunctions.RollingHashName, text)
-    else rollingHash(text)
+    GraftFunctions.call(df)(TextHashFunctions.RollingHashName, text)
 
   /** Bottom-k sketch of word-bigram hashes (winnowing-style document
     * signature): the k smallest xxhash64 values of the shingle set.
@@ -191,18 +179,14 @@ object TextAnalysis {
       .otherwise(transform(sequence(lit(0), size(ws) - n),
         i => concat_ws(" ", slice(ws, i + lit(1), lit(n)))))
 
-  /** Session-aware [[ngrams]]: the native one-pass expression
-    * (graft.plans.WordNgrams, element-identical — spec'd) when
-    * registered, the composed per-window lambda otherwise. The
+  /** [[ngrams]] as the native one-pass expression
+    * (graft.plans.WordNgrams, element-identical — spec'd). The
     * composed form evaluates an interpreted slice+concat per window
     * position; on gram-explode-heavy paths (the memorization family)
     * that interpretation IS the scan cost.
     */
   def ngramsFor(df: DataFrame)(ws: Column, n: Int): Column =
-    if (graft.plans.TextHashFunctions.isRegistered(df.sparkSession))
-      call_function(graft.plans.TextHashFunctions.WordNgramsName, ws,
-        lit(n))
-    else ngrams(ws, n)
+    GraftFunctions.call(df)(TextHashFunctions.WordNgramsName, ws, lit(n))
 
   /** Highest multiplicity in a SORTED string array: one fold tracking
     * the current run length (equal neighbors) and the best run seen.
@@ -300,6 +284,23 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
+  /** Row-local token entropy in nats, rounded to 4 — the micro-nat
+    * fold [[tokenEntropy]] wraps; shared with the streaming serving
+    * gates ([[graft.curation.Serving]]) so the two can never drift.
+    * One native pass (graft.plans.TokenEntropy6 — the composed
+    * aggregate is an interpreted per-element struct rebuild over
+    * array_sort; the round-10 honest bench measured q_token_entropy
+    * 33× its count-mode time on exactly that projection). The
+    * ÷(n·10⁶) + round(4) readout matches the composed form, so
+    * empty-array and ANSI behavior cannot drift. QuantSpec pins bit
+    * parity.
+    */
+  def entropyNatsFor(df: DataFrame)(ws: Column): Column = {
+    val n = size(ws).cast("long")
+    round(GraftFunctions.call(df)(TextHashFunctions.TokenEntropy6Name, ws) /
+      (n * lit(1e6)), 4)
+  }
+
   /** Per-document Shannon entropy of the TOKEN distribution, in nats
     * — the "templated garbage" detector: natural prose at these doc
     * lengths sits well above 2 nats, while boilerplate stampings,
@@ -320,44 +321,6 @@ object TextAnalysis {
     * `threshold` nats (short docs are structurally low-entropy; the
     * floor keeps them out, like [[repetitionStats]]'s).
     */
-  /** Row-local token entropy in nats, rounded to 4 — the micro-nat
-    * fold [[tokenEntropy]] wraps; shared with the streaming serving
-    * gates ([[graft.curation.Serving]]) so the two can never drift.
-    */
-  def entropyNats(ws: Column): Column = {
-    val n = size(ws).cast("long")
-    def term(c: Column): Column =
-      c * round(log(n.cast("double") / c) * 1e6).cast("long")
-    val st0 = struct(lit(null).cast("string").as("prev"),
-      lit(0L).as("run"), lit(0L).as("acc"))
-    val ent6 = aggregate(array_sort(ws), st0,
-      (st, w) => when(st.getField("prev") <=> w,
-          struct(w.as("prev"), (st.getField("run") + 1L).as("run"),
-            st.getField("acc").as("acc")))
-        .otherwise(struct(w.as("prev"), lit(1L).as("run"),
-          (st.getField("acc") + when(st.getField("run") > 0,
-            term(st.getField("run"))).otherwise(lit(0L))).as("acc"))),
-      st => when(st.getField("run") > 0,
-        st.getField("acc") + term(st.getField("run"))).otherwise(lit(0L)))
-    round(ent6 / (n * lit(1e6)), 4)
-  }
-
-  /** Session-aware [[entropyNats]]: the native one-pass micro-nat
-    * fold (graft.plans.TokenEntropy6 — the composed aggregate is an
-    * interpreted per-element struct rebuild over array_sort; the
-    * round-10 honest bench measured q_token_entropy 33× its
-    * count-mode time on exactly that projection) when the session
-    * carries the graft expressions, composed otherwise. The ÷(n·10⁶)
-    * + round(4) readout is shared, so empty-array and ANSI behavior
-    * cannot drift. EntropySpec pins bit parity.
-    */
-  def entropyNatsFor(df: DataFrame)(ws: Column): Column =
-    if (graft.plans.TextHashFunctions.isRegistered(df.sparkSession)) {
-      val n = size(ws).cast("long")
-      round(call_function(graft.plans.TextHashFunctions.TokenEntropy6Name,
-        ws) / (n * lit(1e6)), 4)
-    } else entropyNats(ws)
-
   def tokenEntropy(documents: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 2.0,
       minWords: Int = 20): DataFrame = {
@@ -374,8 +337,8 @@ object TextAnalysis {
 
   /** Per-document zlib compressibility — deflated size over raw
     * UTF-8 size via the native [[graft.plans.DeflateRatio]]
-    * expression (registration required; there is no composed
-    * fallback for a byte-level codec). LZ77 sees long-range repeats
+    * expression (there is no composed form of a byte-level codec).
+    * LZ77 sees long-range repeats
     * that BOTH [[tokenEntropy]] (order-blind) and
     * [[repetitionStats]] (bounded n-gram windows) miss, so a low
     * ratio flags stamped/templated filler whose sentences
@@ -389,13 +352,10 @@ object TextAnalysis {
   def compressionRatio(documents: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.35,
       minChars: Int = 200): DataFrame = {
-    require(graft.plans.TextHashFunctions.isRegistered(documents.sparkSession),
-      "compressionRatio needs graft's native functions registered " +
-        "(GraftFunctions.register or the GraftExtensions session extension)")
     documents
       .select(col(idCol),
         length(col(textCol)).cast("long").as("n_chars"),
-        round(call_function(graft.plans.TextHashFunctions.DeflateRatioName,
+        round(GraftFunctions.call(documents)(TextHashFunctions.DeflateRatioName,
           col(textCol)), 4).as("deflate_ratio"))
       .withColumn("compressible",
         col("n_chars") >= minChars && col("deflate_ratio") < threshold)
@@ -1410,9 +1370,9 @@ object TextAnalysis {
     * (id, 0, "").
     *
     * Scale shape (100 TB): the merge table is a bounded driver-side
-    * literal (≤64 pairs — the PQ-codebook contract), baked into a
-    * chain of literal replaces inside ONE whole-stage-codegen
-    * projection: fully narrow, zero exchanges, tokenization runs at
+    * literal (≤64 pairs — the PQ-codebook contract) that the native
+    * [[graft.plans.BpeEncodeWords]] expression applies per word in
+    * one pass: fully narrow, zero exchanges, tokenization runs at
     * parquet-scan speed and inherits the input partitioning.
     */
   def bpeEncode(documents: DataFrame, merges: Seq[(String, String)],
@@ -1422,27 +1382,14 @@ object TextAnalysis {
     require(merges.forall { case (a, b) =>
       a.nonEmpty && b.nonEmpty && !(a + b).exists("<>".contains(_)) },
       "merge symbols must be non-empty and delimiter-free")
-    def encoded(w: Column): Column =
-      concat(lit("<"), array_join(split(w, ""), "><"), lit("><_>"))
-    def applyMerges(s: Column): Column =
-      merges.foldLeft(s) { case (c, (a, b)) =>
-        replace(c, lit(s"<$a><$b>"), lit(s"<$a$b>"))
-      }
-    def tokensOf(w: Column): Column = {
-      val t = replace(applyMerges(encoded(w)), lit("><"), lit(" "))
-      t.substr(lit(2), length(t) - 2)
-    }
-    // native one-pass tokenization when the session carries the graft
-    // expressions: the composed form runs the whole replace chain
-    // INSIDE a transform lambda — interpreted per word (round-10
-    // honest bench: 2.9× count-mode on exactly this projection).
-    // QuantSpec pins word-for-word parity; null/empty contracts ride
-    // the shared outer shape below either way.
+    // native one-pass tokenization: the composed form runs the whole
+    // replace chain INSIDE a transform lambda — interpreted per word
+    // (round-10 honest bench: 2.9× count-mode on exactly this
+    // projection). QuantSpec pins word-for-word parity with that
+    // chain; null/empty contracts ride the outer shape below.
     def tokenStream(ws: Column): Column =
-      if (graft.plans.TextHashFunctions.isRegistered(documents.sparkSession))
-        array_join(call_function(graft.plans.TextHashFunctions.BpeEncodeName,
-          ws, typedlit(merges.flatMap(m => Seq(m._1, m._2)).toVector)), " ")
-      else array_join(transform(ws, w => tokensOf(w)), " ")
+      array_join(GraftFunctions.call(documents)(TextHashFunctions.BpeEncodeName,
+        ws, typedlit(merges.flatMap(m => Seq(m._1, m._2)).toVector)), " ")
     documents
       .select(col(idCol).as("doc_id"),
         filter(words(col(textCol)), w =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one SparkEntry query.
   * Usage: runMain graft.tools.Explain <queryName> [sfDir]
   */
@@ -18,7 +16,7 @@ object Explain {
     val fn = graft.SparkEntry.queries.getOrElse(name, {
       System.err.println(s"unknown query: $name"); usage()
     })
-    val spark = DevSession.local(8)
+    val spark = graft.Sessions.local(8)
     val df = fn(spark, sfDir)
     println("=== FORMATTED PLAN: " + name + " ===")
     df.explain("formatted")

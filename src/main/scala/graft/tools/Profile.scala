@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler: times labelled sub-pipelines of the heavy bench
   * queries so optimization targets stages, not guesses.
   * Usage: runMain graft.tools.Profile <sfDir>
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = DevSession.local(32)
+    val spark = graft.Sessions.local(32)
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

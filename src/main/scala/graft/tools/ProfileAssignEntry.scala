@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time SparkEntry's q_communities_probe exactly as Bench
   * does (same session knobs), printing per-pass times and the final
   * executed plan — for diagnosing Bench-vs-ProfileAssign divergence.
@@ -10,20 +8,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileAssignEntry {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/graft_sfx")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "128k")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val fn = graft.SparkEntry.queries("q_communities_probe")
     (1 to 4).foreach { i =>

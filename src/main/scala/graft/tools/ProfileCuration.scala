@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage decomposition of the curation capstone at bench scale —
@@ -9,20 +8,7 @@ import org.apache.spark.sql.functions._
 object ProfileCuration {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "128k")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.Tables
     import graft.textanalysis.TextAnalysis
     import graft.functions.TextFunctions.words

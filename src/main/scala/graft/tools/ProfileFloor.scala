@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Orchestration-floor decomposition: for a few representative
   * queries, split wall time into plan construction, analysis+
   * optimization, physical planning, and execution — so floor work
@@ -11,20 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileFloor {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "128k")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_health", "q_point_lookup", "q_text_stats",
         "q_simhash_neardup", "q_search_bm25", "q_segment_dedup")

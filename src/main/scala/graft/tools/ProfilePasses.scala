@@ -12,8 +12,7 @@ object ProfilePasses {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val passes = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = DevSession.local(32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32)
     // job accounting: count + summed wall time of jobs, snapshotted
     // between phases so construct-time Spark work separates from
     // driver-side (analysis/planning) time

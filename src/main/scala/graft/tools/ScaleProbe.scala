@@ -2,8 +2,7 @@ package graft.tools
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cpus = args.headOption.getOrElse("32").toInt
-    val spark = DevSession.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus)
     // warm
     spark.range(10000000L).selectExpr("sum(id)").collect()
     def once(n: Long): Double = {

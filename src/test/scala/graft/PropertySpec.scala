@@ -617,7 +617,7 @@ class PropertySpec extends SparkSpec {
         Dsir.score6For(df, m)(ws).as("native"),
         Dsir.score6Local(m)(ws).as("composed"))
       .as[(Long, Long, Long)].collect()
-    assert(graft.plans.TextHashFunctions.isRegistered(spark))
+    assert(graft.plans.GraftFunctions.isRegistered(spark))
     both.foreach { case (id, n, c) =>
       val want = refScore(corpus(id.toInt)._2)
       assert(n === want, s"native doc $id")

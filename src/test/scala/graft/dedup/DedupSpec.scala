@@ -245,13 +245,13 @@ class DedupSpec extends SparkSpec {
 
   test("minhash signature of identical text is identical") {
     val sigs = df.filter($"doc_id".isin(1L, 4L))
-      .select(Dedup.minhashSignature(Dedup.shingles($"text", 2), 16))
+      .select(graft.Composed.minhashSignature(Dedup.shingles($"text", 2), 16))
       .collect().map(_.getSeq[Long](0))
     assert(sigs(0) === sigs(1))
   }
 
   test("simhash: identical text → distance 0; near-dup close; unrelated far") {
-    val sh = df.select($"doc_id", Dedup.simhashBands($"text").as("sh"))
+    val sh = df.select($"doc_id", graft.Composed.simhashBands($"text").as("sh"))
     def bands(id: Long) = sh.filter($"doc_id" === id).head.getSeq[Long](1)
     def ham(a: Seq[Long], b: Seq[Long]) =
       a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
@@ -544,7 +544,7 @@ class DedupSpec extends SparkSpec {
 
   test("native WordSegments ≡ composed segments, element for element") {
     import spark.implicits._
-    assert(graft.plans.TextHashFunctions.isRegistered(spark))
+    assert(graft.plans.GraftFunctions.isRegistered(spark))
     val edge = Seq(
       (1L, Some("a b c d e f")),       // exact multiple of 3
       (2L, Some("a b c d")),           // remainder segment
@@ -559,7 +559,7 @@ class DedupSpec extends SparkSpec {
         graft.plans.TextHashFunctions.WordSegmentsName,
         graft.functions.TextFunctions.words(col("text")), lit(w))
       val rows = edge.select(col("doc_id"), native.as("n"),
-          Dedup.segments(col("text"), w).as("c")).collect()
+          graft.Composed.segments(col("text"), w).as("c")).collect()
       rows.foreach { r =>
         val n = if (r.isNullAt(1)) null else r.getSeq[String](1)
         val c = if (r.isNullAt(2)) null else r.getSeq[String](2)

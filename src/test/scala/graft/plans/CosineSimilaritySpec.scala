@@ -17,7 +17,7 @@ class CosineSimilaritySpec extends SparkSpec {
     val q = emb.filter($"vec_id" === 0).select($"embedding".as("q_emb"))
     val both = emb.crossJoin(broadcast(q)).select(
       $"vec_id",
-      Similarity.cosine($"embedding", $"q_emb").as("composed"),
+      graft.Composed.cosine($"embedding", $"q_emb").as("composed"),
       call_function(GraftFunctions.CosineName,
         $"embedding".cast("array<double>"), $"q_emb".cast("array<double>"))
         .as("native"))
@@ -73,7 +73,7 @@ class CosineSimilaritySpec extends SparkSpec {
         (Array(1.0, 1.0), Array(1.0, 2.0))   // control: defined
       ).toDF("a", "b").select(
         call_function(GraftFunctions.CosineName, $"a", $"b").as("native"),
-        Similarity.cosine($"a", $"b").as("composed")).collect()
+        graft.Composed.cosine($"a", $"b").as("composed")).collect()
       assert(rows(0).isNullAt(0) && rows(0).isNullAt(1))
       assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
       assert(rows(2).isNullAt(0) && rows(2).isNullAt(1))
@@ -88,7 +88,7 @@ class CosineSimilaritySpec extends SparkSpec {
       }
       assert(eNative.getMessage.contains("DIVIDE_BY_ZERO"), eNative.getMessage)
       val eComposed = intercept[Exception] {
-        zero.select(Similarity.cosine($"a", $"b")).collect()
+        zero.select(graft.Composed.cosine($"a", $"b")).collect()
       }
       assert(eComposed.getMessage.contains("DIVIDE_BY_ZERO"), eComposed.getMessage)
     } finally spark.conf.set("spark.sql.ansi.enabled", prior)

@@ -114,7 +114,7 @@ class GraftExtensionsSpec extends AnyFunSuite
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
     val df = emb.crossJoin(broadcast(q)).select(
-      graft.similarity.Similarity.cosine(col("embedding"), col("q_emb")).as("c"))
+      graft.Composed.cosine(col("embedding"), col("q_emb")).as("c"))
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("cosinesimilarity"), opt)
     // rewritten values are bit-equal to the independently re-derived
@@ -123,7 +123,7 @@ class GraftExtensionsSpec extends AnyFunSuite
       aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
         (x, y) => x * y), lit(0.0), (acc, x) => acc + x) + lit(0.0)
     val both = emb.crossJoin(broadcast(q)).select(
-      graft.similarity.Similarity.cosine(col("embedding"), col("q_emb")).as("rw"),
+      graft.Composed.cosine(col("embedding"), col("q_emb")).as("rw"),
       (dotPlus(col("embedding"), col("q_emb")) /
         (sqrt(dotPlus(col("embedding"), col("embedding"))) *
          sqrt(dotPlus(col("q_emb"), col("q_emb"))))).as("manual"))
@@ -158,7 +158,7 @@ class GraftExtensionsSpec extends AnyFunSuite
     val withNull = base.select(
       expr("array(1.0d, cast(null as double))").as("a"),
       expr("array(1.0d, 2.0d)").as("b"))
-    def cos = graft.similarity.Similarity.cosine(col("a"), col("b"))
+    def cos = graft.Composed.cosine(col("a"), col("b"))
     assert(mismatch.select(cos.as("c")).head.isNullAt(0))
     assert(withNull.select(cos.as("c")).head.isNullAt(0))
   }

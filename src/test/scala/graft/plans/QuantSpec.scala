@@ -97,7 +97,7 @@ class QuantSpec extends SparkSpec {
       .zipWithIndex.map { case ((a, b), i) => (i, a, b) }
       .toDF("id", "a", "b")
     val rows = pairs.select(col("id"),
-      Similarity.qdot(col("a"), col("b")).as("c"),
+      graft.Composed.qdot(col("a"), col("b")).as("c"),
       call_function(TextHashFunctions.QdotName, col("a"), col("b")).as("n"))
       .collect()
     rows.foreach { r =>
@@ -108,7 +108,7 @@ class QuantSpec extends SparkSpec {
     // null ARRAY input → null on both paths
     val nullRow = Seq((Option.empty[Seq[Int]], Option(Seq(1, 2))))
       .toDF("a", "b")
-      .select(Similarity.qdot(col("a"), col("b")).as("c"),
+      .select(graft.Composed.qdot(col("a"), col("b")).as("c"),
         call_function(TextHashFunctions.QdotName, col("a"), col("b")).as("n"))
       .head()
     assert(nullRow.isNullAt(0) && nullRow.isNullAt(1))
@@ -134,7 +134,7 @@ class QuantSpec extends SparkSpec {
         (Seq(Option.empty[String])))
         .toDF("ws"))
     val rows = docs.select(
-      TextAnalysis.entropyNats(col("ws")).as("c"),
+      graft.Composed.entropyNats(col("ws")).as("c"),
       TextAnalysis.entropyNatsFor(docs)(col("ws")).as("n"))
       .collect()
     rows.foreach { r =>
@@ -148,7 +148,7 @@ class QuantSpec extends SparkSpec {
     // n = 0: the shared ÷(n·10⁶) readout throws ANSI divide-by-zero
     // on BOTH paths — same contract, pinned
     val empty = Seq(Seq[String]()).toDF("ws")
-    Seq(TextAnalysis.entropyNats(col("ws")),
+    Seq(graft.Composed.entropyNats(col("ws")),
         TextAnalysis.entropyNatsFor(empty)(col("ws"))).foreach { e =>
       val thrown = intercept[Exception] { empty.select(e).collect() }
       assert(thrown.getMessage.contains("DIVIDE_BY_ZERO"),

@@ -12,7 +12,7 @@ class TextHashSpec extends SparkSpec {
 
   test("native minhash ≡ composed minhash bitwise") {
     val both = docs.select(
-      Dedup.minhashSignature(Dedup.shingles($"text", 3), 16).as("composed"),
+      graft.Composed.minhashSignature(Dedup.shingles($"text", 3), 16).as("composed"),
       call_function(TextHashFunctions.MinHashName,
         words($"text"), lit(3), lit(16)).as("native"))
       .collect()
@@ -23,7 +23,7 @@ class TextHashSpec extends SparkSpec {
 
   test("native md5 minhash ≡ composed md5 minhash bytewise") {
     val both = docs.select(
-      Dedup.minhashSignatureMd5(Dedup.shingles($"text", 3), 16).as("composed"),
+      graft.Composed.minhashSignatureMd5(Dedup.shingles($"text", 3), 16).as("composed"),
       call_function(TextHashFunctions.Md5MinHashName,
         words($"text"), lit(3), lit(16)).as("native"))
       .collect()
@@ -33,7 +33,7 @@ class TextHashSpec extends SparkSpec {
     // sub-n-word docs: composed array_min(empty) = null per slot —
     // the native loop must agree, not fabricate a sentinel
     val tiny = Seq((1L, "two words")).toDF("id", "text").select(
-      Dedup.minhashSignatureMd5(Dedup.shingles($"text", 3), 16).as("composed"),
+      graft.Composed.minhashSignatureMd5(Dedup.shingles($"text", 3), 16).as("composed"),
       call_function(TextHashFunctions.Md5MinHashName,
         words($"text"), lit(3), lit(16)).as("native")).head
     assert(tiny.getSeq[String](0) === Seq.fill(16)(null))
@@ -42,7 +42,7 @@ class TextHashSpec extends SparkSpec {
 
   test("native md5 simhash ≡ composed md5 simhash bitwise") {
     val both = docs.select(
-      Dedup.simhashBandsMd5FromWords(words($"text")).as("composed"),
+      graft.Composed.simhashBandsMd5FromWords(words($"text")).as("composed"),
       call_function(TextHashFunctions.Md5SimHashName, words($"text")).as("native"))
       .collect()
     both.foreach { r =>
@@ -59,7 +59,7 @@ class TextHashSpec extends SparkSpec {
 
   test("native simhash ≡ composed simhash bitwise") {
     val both = docs.select(
-      Dedup.simhashBands($"text").as("composed"),
+      graft.Composed.simhashBands($"text").as("composed"),
       call_function(TextHashFunctions.SimHashName, words($"text")).as("native"))
       .collect()
     both.foreach { r =>
@@ -116,7 +116,7 @@ class TextHashSpec extends SparkSpec {
     // the composed hash array mirrors what the native loop skips
     val hashes = transform($"ws", w => when(w.isNotNull, xxhash64(w)))
     val rows = df.select($"id",
-      Dedup.simhashBandsFromHashes(hashes).as("composed"),
+      graft.Composed.simhashBandsFromHashes(hashes).as("composed"),
       call_function(TextHashFunctions.SimHashName, $"ws").as("native"))
       .collect().sortBy(_.getLong(0))
     assert(rows(0).isNullAt(1) && rows(0).isNullAt(2))
@@ -170,7 +170,7 @@ class TextHashSpec extends SparkSpec {
 
   test("native rolling hash ≡ composed rolling hash bitwise") {
     val real = docs.select(
-      graft.textanalysis.TextAnalysis.rollingHash($"text").as("composed"),
+      graft.Composed.rollingHash($"text").as("composed"),
       call_function(TextHashFunctions.RollingHashName, $"text").as("native"))
       .collect()
     real.foreach(r => assert(r.getLong(0) === r.getLong(1)))
@@ -178,7 +178,7 @@ class TextHashSpec extends SparkSpec {
     val edge = Seq("", "héllo wörld — ünïcode ø", "日本語のテキスト", "a" * 5000)
       .toDF("text")
       .select(
-        graft.textanalysis.TextAnalysis.rollingHash($"text").as("composed"),
+        graft.Composed.rollingHash($"text").as("composed"),
         call_function(TextHashFunctions.RollingHashName, $"text").as("native"))
       .collect()
     edge.foreach(r => assert(r.getLong(0) === r.getLong(1), r.toString))
@@ -190,14 +190,14 @@ class TextHashSpec extends SparkSpec {
     val native = df.select(call_function(TextHashFunctions.MinHashName,
       words($"text"), lit(3), lit(16))).head.getSeq[Long](0)
     val composed = df.select(
-      Dedup.minhashSignature(Dedup.shingles($"text", 3), 16)).head.getSeq[Long](0)
+      graft.Composed.minhashSignature(Dedup.shingles($"text", 3), 16)).head.getSeq[Long](0)
     assert(native === composed)
   }
 
   test("native SRP bucket ≡ composed SRP bucket") {
     val emb = Tables.embeddings(spark, sfDir).limit(100)
     val both = emb.select(
-      graft.similarity.Similarity.srpBucket($"embedding", 8).as("composed"),
+      graft.Composed.srpBucket($"embedding", 8).as("composed"),
       call_function(TextHashFunctions.SrpBucketName,
         $"embedding".cast("array<double>"), lit(8)).as("native"))
       .collect()
@@ -207,7 +207,7 @@ class TextHashSpec extends SparkSpec {
   test("native md5 SRP bucket ≡ composed md5 SRP bucket") {
     val emb = Tables.embeddings(spark, sfDir).limit(100)
     val both = emb.select(
-      graft.similarity.Similarity.srpBucketMd5($"embedding", 8).as("composed"),
+      graft.Composed.srpBucketMd5($"embedding", 8).as("composed"),
       call_function(TextHashFunctions.Md5SrpBucketName,
         $"embedding".cast("array<double>"), lit(8)).as("native"))
       .collect()
@@ -217,7 +217,7 @@ class TextHashSpec extends SparkSpec {
   test("native JL projection ≡ composed JL projection, bit for bit") {
     val emb = Tables.embeddings(spark, sfDir).limit(100)
     val both = emb.select(
-      graft.similarity.Similarity.jlProjectMd5($"embedding", 8).as("composed"),
+      graft.Composed.jlProjectMd5($"embedding", 8).as("composed"),
       call_function(TextHashFunctions.JlProjectName,
         $"embedding".cast("array<double>"), lit(8)).as("native"))
       .collect()
@@ -245,7 +245,7 @@ class TextHashSpec extends SparkSpec {
     }
     // null vector → null projection on both paths
     val nulls = Seq((1L, null: Array[Double])).toDF("id", "v")
-      .select(graft.similarity.Similarity.jlProjectMd5($"v", 4).as("c"),
+      .select(graft.Composed.jlProjectMd5($"v", 4).as("c"),
         call_function(TextHashFunctions.JlProjectName,
           $"v".cast("array<double>"), lit(4)).as("n"))
       .head()

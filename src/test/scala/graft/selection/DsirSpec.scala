@@ -142,13 +142,13 @@ class DsirSpec extends SparkSpec {
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getLong(1),
         if (r.isNullAt(2)) null else r.getLong(2)))
-    assert(graft.plans.TextHashFunctions.isRegistered(spark))
+    assert(graft.plans.GraftFunctions.isRegistered(spark))
     got.foreach { case (id, n, c) => assert(n == c, s"doc $id: $n != $c") }
     assert(got.find(_._1 == 103L).get._2 == null)
   }
 
   test("native DsirBuckets ≡ composed featureGrams→bucketOf, element for element") {
-    assert(graft.plans.TextHashFunctions.isRegistered(spark))
+    assert(graft.plans.GraftFunctions.isRegistered(spark))
     val edge = Seq(
       (100L, Some("the cat sat on the mat")),
       (101L, Some("")),

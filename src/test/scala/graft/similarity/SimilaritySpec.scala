@@ -73,11 +73,11 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("SRP buckets are deterministic and bounded") {
-    val b1 = emb.select(Similarity.srpBucket($"embedding", 4).as("b"))
+    val b1 = emb.select(graft.Composed.srpBucket($"embedding", 4).as("b"))
       .agg(min("b"), max("b")).head
     assert(b1.getLong(0) >= 0L && b1.getLong(1) <= 15L)
-    val a = emb.select(Similarity.srpBucket($"embedding", 4)).collect().map(_.getLong(0))
-    val b = emb.select(Similarity.srpBucket($"embedding", 4)).collect().map(_.getLong(0))
+    val a = emb.select(graft.Composed.srpBucket($"embedding", 4)).collect().map(_.getLong(0))
+    val b = emb.select(graft.Composed.srpBucket($"embedding", 4)).collect().map(_.getLong(0))
     assert(a.toSeq === b.toSeq)
   }
 
@@ -1259,7 +1259,7 @@ class SimilaritySpec extends SparkSpec {
   test("native MatVecProject ≡ composed zip_with/aggregate projection, " +
       "element for element") {
     import spark.implicits._
-    assert(graft.plans.TextHashFunctions.isRegistered(spark))
+    assert(graft.plans.GraftFunctions.isRegistered(spark))
     val rot = Seq(Seq(0.5, -1.25, 2.0), Seq(1e300, 1e300, -3.5),
       Seq(0.1, 0.2, 0.3))
     val edge = Seq(
@@ -1547,8 +1547,8 @@ class SimilaritySpec extends SparkSpec {
     assert(pairs.count() === 20L)
   }
 
-  test("probeCellsCol ≡ probeCells on random vectors, with the " +
-      "native cosine both available and absent") {
+  test("probeCellsCol ≡ probeCells on random vectors, on the shared " +
+      "session and on a bare one that registers on demand") {
     val dim = emb.select($"embedding".cast("array<double>"))
       .head().getSeq[Double](0).length
     val cents = Similarity.seedCentroids(emb, 8)
@@ -1560,14 +1560,14 @@ class SimilaritySpec extends SparkSpec {
       (0 until 40).map(_ => Seq.fill(dim)(rnd.nextDouble() * 2 - 1)) ++
         cents.map(c => c.map(_ * 3.0)) ++
         cents.map(c => c.map(_ * -1.0))
-    // the in-plan path computes its cosine through cosineFor(df):
-    // the native registered expression on the shared session, the
-    // Column fallback on a fresh session with no graft registry —
-    // BOTH must select the same cells as the driver loop's
-    // sequential-dot + BigDecimal HALF_UP probeCells
+    // the in-plan path computes its cosine through cosineFor(df),
+    // which registers graft's native functions into the frame's
+    // session on first use: a fresh session with no graft registry
+    // comes out of probeCellsCol registered, and BOTH sessions must
+    // select the same cells as the driver loop's sequential-dot +
+    // BigDecimal HALF_UP probeCells
     val bare = spark.newSession()
     assert(!graft.plans.GraftFunctions.isRegistered(bare))
-    assert(graft.plans.GraftFunctions.isRegistered(spark))
     for (sess <- Seq(spark, bare)) {
       val frame = sess.createDataFrame(
           vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) })
@@ -1581,9 +1581,10 @@ class SimilaritySpec extends SparkSpec {
         vecs.zipWithIndex.foreach { case (v, i) =>
           assert(inPlan(i.toLong) ===
             Similarity.probeCells(cents, v, nProbe),
-            s"nProbe=$nProbe native=${sess eq spark} vec=$i")
+            s"nProbe=$nProbe shared=${sess eq spark} vec=$i")
         }
       }
+      assert(graft.plans.GraftFunctions.isRegistered(sess))
     }
   }
 

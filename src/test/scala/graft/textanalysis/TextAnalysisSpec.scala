@@ -119,12 +119,12 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("rolling hash: deterministic, order-sensitive, bounded") {
     val df = Seq((1L, "abc"), (2L, "acb"), (3L, "abc")).toDF("doc_id", "text")
-    val h = df.select(TextAnalysis.rollingHash($"text")).collect().map(_.getLong(0))
+    val h = df.select(graft.Composed.rollingHash($"text")).collect().map(_.getLong(0))
     assert(h(0) === h(2))
     assert(h(0) !== h(1)) // order matters — not a bag hash
-    assert(h.forall(v => v >= 0 && v < TextAnalysis.FpMod))
+    assert(h.forall(v => v >= 0 && v < graft.Composed.FpMod))
     // matches the direct fold
-    val expected = "abc".foldLeft(0L)((acc, c) => (acc * 31 + c.toLong) % TextAnalysis.FpMod)
+    val expected = "abc".foldLeft(0L)((acc, c) => (acc * 31 + c.toLong) % graft.Composed.FpMod)
     assert(h(0) === expected)
   }
 
