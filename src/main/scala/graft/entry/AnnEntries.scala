@@ -262,7 +262,7 @@ private[graft] trait AnnEntries extends EntryInfra {
         s.read.parquet(builtIvfIndex(s, d)), seedCents16(s, d),
         multiQueryFrame(s, d), 10, nProbe = 2)),
     // ...and for the int8 store: the query side quantizes IN-PLAN
-    // through the store's own quantScale/quantizeVec rule
+    // through the store's own native quantization
     "q_knn_quantized_multi_qt" -> ((s, d) =>
       Similarity.quantizedMultiTopKFromIndexQT(
         s.read.parquet(builtQuantizedIvfIndex(s, d)), seedCents16(s, d),

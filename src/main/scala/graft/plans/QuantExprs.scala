@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
-/** Native int8 quantization kernels — the fused forms of
-  * [[graft.similarity.Similarity]]'s composed quantScale /
-  * quantizeVec / qdot / readout-stats expressions.
+/** Native int8 quantization kernels — the fused forms of the
+  * composed quantScale / quantizeVec / qdot / readout-stats
+  * expressions (the spec-side `graft.Composed` parity oracles).
   *
   * Why native: the composed forms are built from higher-order array
   * functions (transform / aggregate / zip_with / filter), which Spark

@@ -229,50 +229,28 @@ object Similarity {
   // Int8 quantization (the compressed embedding store)
   // ---------------------------------------------------------------
 
-  /** Per-vector symmetric int8 scale: max|x| / 127. 0.0 — which
-    * [[quantizeVec]] maps to an all-zero vector — for the degenerate
-    * inputs: all-zero, empty, or any non-finite entry (NaN/±Inf
-    * poison the max; without the guard, round(NaN/Inf).cast(int)
-    * would THROW under Spark 4's default ANSI mode and kill the whole
-    * job for one bad row). Pure IEEE max + divide over the stored
-    * floats — no libm, so for FINITE inputs the value is bit-identical
-    * in any engine. The DuckDB oracles cover exactly that finite
-    * contract; the non-finite degrade branch is Spark-side behavior
-    * pinned by spec, not by the oracle (whose SQL omits the guard).
-    */
-  def quantScale(v: Column): Column = {
-    val m = coalesce(array_max(transform(asDouble(v), x => abs(x))), lit(0.0))
-    // NaN compares greater than everything in Spark's ordering, so a
-    // single NaN entry surfaces as m = NaN; |x| ≥ 0 rules out -Inf
-    when(isnan(m) || m === Double.PositiveInfinity, lit(0.0))
-      .otherwise(m / lit(127.0))
-  }
-
-  /** Symmetric int8 quantization: q_i = round(x_i / scale) ∈
-    * [-127, 127] (round half away from zero — Spark and DuckDB
-    * agree). For finite inputs |x_i| ≤ max|x| bounds |x_i/scale| to
-    * 127 + a few ulp, which rounding can never carry past 127, so no
-    * clamp is needed; non-finite vectors take the scale-0 zero branch.
-    */
-  def quantizeVec(v: Column): Column = {
-    val vd = asDouble(v)
-    val s = quantScale(v)
-    when(s === 0.0, transform(vd, _ => lit(0)))
-      .otherwise(transform(vd, x => round(x / s, 0).cast("int")))
-  }
-
   /** The compressed store: (id, scale, qvec) — int8-valued entries at
     * 4× less scan volume than float32, the serving form of a 100 TB
     * embedding corpus. NARROW (a projection): quantization streams at
     * parquet-scan speed, and downstream scoring shuffles nothing but
     * (id, score) pairs.
+    *
+    * The rule (symmetric int8): scale = max|x| / 127 and q_i =
+    * round(x_i / scale) ∈ [-127, 127], rounding half away from zero
+    * (Spark and DuckDB agree). Pure IEEE max + divide over the stored
+    * floats, so for finite inputs the values are bit-identical in any
+    * engine, and |x_i| ≤ max|x| keeps every q_i within 127. All-zero,
+    * empty and non-finite vectors get scale 0.0 and all-zero entries
+    * (round(NaN/Inf).cast(int) would throw under ANSI mode and kill
+    * the job for one bad row); that branch is pinned by spec, not by
+    * the DuckDB oracle.
     */
   def quantizeEmbeddings(embeddings: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     // native one-pass build (QuantExprs — no asDouble copy, no
     // interpreted transform per element); whole-stage codegen
     // dedupes the shared struct via subexpression elimination.
-    // QuantSpec pins parity with quantScale/quantizeVec.
+    // QuantSpec pins parity with the composed quantScale/quantizeVec.
     val q = GraftFunctions.call(embeddings)(TextHashFunctions.QuantizeVecName,
       col(vecCol))
     embeddings.select(col(idCol), q.getField("scale").as("scale"),
@@ -1289,13 +1267,15 @@ object Similarity {
   private[graft] def quantizedAssignedForWrite(embeddings: DataFrame,
       cents: Seq[Seq[Double]]): DataFrame = {
     val centLit = typedlit(cents)
+    val q = GraftFunctions.call(embeddings)(TextHashFunctions.QuantizeVecName,
+      col("embedding"))
     embeddings
       .withColumn("__scores",
         cellScoresFor(embeddings, centLit)(col("embedding")))
       .withColumn("cell", cellOf(col("__scores")))
       .filter(col("cell").isNotNull)
-      .select(col("vec_id"), quantScale(col("embedding")).as("scale"),
-        quantizeVec(col("embedding")).as("qvec"), col("cell"))
+      .select(col("vec_id"), q.getField("scale").as("scale"),
+        q.getField("qvec").as("qvec"), col("cell"))
       .repartition(col("cell"))
   }
 
@@ -1326,7 +1306,7 @@ object Similarity {
   }
 
   /** Driver-side symmetric int8 quantization of one query vector —
-    * the same rule as [[quantizeVec]] bit-for-bit (max|x|/127, round
+    * the same rule as [[quantizeEmbeddings]] bit-for-bit (max|x|/127, round
     * half up; degenerate → scale 0 and zeros), for probing a
     * compressed index with a literal query.
     */
@@ -2013,19 +1993,20 @@ object Similarity {
 
   /** Query-table batched serving for the COMPRESSED (int8) store —
     * the large-Q twin of [[quantizedMultiTopKFromIndex]]. The query
-    * side quantizes IN-PLAN through the same [[quantScale]]/
-    * [[quantizeVec]] rule the store itself uses (bit-identical to
-    * the driver-side [[quantizeQuery]]), so the dequantized integer
-    * dot is the single-serve score exactly.
+    * side quantizes IN-PLAN through the native quantization the store
+    * itself uses (bit-identical to the driver-side [[quantizeQuery]]),
+    * so the dequantized integer dot is the single-serve score exactly.
     */
   def quantizedMultiTopKFromIndexQT(index: DataFrame,
       cents: Seq[Seq[Double]], queries: DataFrame, k: Int,
       nProbe: Int): DataFrame = {
     val sv = guardedServable(queries, nProbe,
       size(col("q_emb")).cast("long") * 4L + 24L)
+    val q = GraftFunctions.call(sv)(TextHashFunctions.QuantizeVecName,
+      col("q_emb"))
     multiServeQueryTable(index, probePairs(sv, cents, nProbe),
-      sv.select(col("query_id"), quantScale(col("q_emb")).as("q_scale"),
-        quantizeVec(col("q_emb")).as("q_qvec")),
+      sv.select(col("query_id"), q.getField("scale").as("q_scale"),
+        q.getField("qvec").as("q_qvec")),
       round(col("scale") * col("q_scale") *
         qdotFor(index)(col("qvec"), col("q_qvec")), 6),
       "q_sim", k)

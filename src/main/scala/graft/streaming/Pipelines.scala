@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import graft.cdc.Cdc
 import graft.quality.RuleBasedScorer
@@ -56,53 +58,148 @@ object Pipelines {
   /** Stage 2 (event-processor): keyed upsert into the "search index"
     * table — last write per doc wins, ordered by (version, ts_ms)
     * (reference services/event/app/main.py:71-77: ES doc id = record
-    * id). Pure function over (current index, new batch) so the same
-    * merge serves foreachBatch and batch backfills.
+    * id). Pure function over (current index, new batch): the one merge
+    * that [[startIndexSink]] and batch backfills both run.
     */
   def upsertByKey(index: DataFrame, batch: DataFrame, key: String,
+      versionCols: Seq[String]): DataFrame =
+    latestPerKey(index.unionByName(batch), key, versionCols)
+
+  /** [[upsertByKey]]'s winner rule over the union of both sides. */
+  private def latestPerKey(rows: DataFrame, key: String,
       versionCols: Seq[String]): DataFrame = {
-    val all = index.unionByName(batch)
     // final tiebreak = content hash: rows tied on every version column
     // must still pick a DETERMINISTIC winner or replays diverge. The
-    // hash input is the JSON of the full row with nulls kept — raw
+    // hash input is the JSON of the logical row with nulls kept — raw
     // xxhash64 over columns SKIPS null children, so rows differing
-    // only in which column is null would hash identically
+    // only in which column is null would hash identically. The
+    // physical bucket column stays out of it, so the sink and a batch
+    // replay (which has none) pick the same winner
     val contentHash = xxhash64(to_json(
-      struct(all.columns.sorted.toIndexedSeq.map(col): _*),
+      struct(rows.columns.filterNot(_ == bucketCol).sorted.toIndexedSeq
+        .map(col): _*),
       Map("ignoreNullFields" -> "false")))
+    // the bucket is a function of the key, so (bucket, key) groups the
+    // rows exactly as the key alone does, and input hash-partitioned
+    // by bucket needs no further exchange
+    val groups = rows.columns.filter(_ == bucketCol).toSeq :+ key
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key))
+      .partitionBy(groups.map(col): _*)
       .orderBy(versionCols.map(c => col(c).desc) :+ contentHash.asc: _*)
-    all.withColumn("__rn", row_number().over(w))
+    rows.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
 
   /** Bucket assignment for the keyed index layout: which
-    * `__bucket=N` partition a key's row lives in. Must stay fixed for
-    * an index's lifetime (like any hash-partitioned store — changing
-    * `nBuckets` means rebuilding the index).
+    * `__bucket=N` partition a key's row lives in. Fixed for an index's
+    * lifetime: [[startIndexSink]] pins `nBuckets` at the first batch
+    * (changing it means rebuilding the index).
     */
   def indexBucket(key: Column, nBuckets: Int): Column =
     pmod(xxhash64(key), lit(nBuckets.toLong)).cast("int")
 
+  private val bucketCol = "__bucket"
+  private val layoutFile = "_index.json"
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** What an index pins in `<indexDir>/_index.json`: the row schema
+    * including the bucket column (all nullable, no field metadata),
+    * the key column and the bucket count.
+    */
+  private final case class IndexLayout(schema: StructType, key: String,
+      nBuckets: Int) {
+    override def toString: String =
+      s"key $key, $nBuckets buckets, ${schema.simpleString}"
+  }
+
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def readLayout(fs: FileSystem, indexDir: String)
+      : Option[IndexLayout] = {
+    val p = new Path(indexDir, layoutFile)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val n = try json.readTree(in) finally in.close()
+      Some(IndexLayout(
+        DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
+        n.get("key").asText, n.get("nBuckets").asInt))
+    }
+  }
+
+  /** Written to a tmp file and renamed: readers see all of it or none. */
+  private def writeLayout(fs: FileSystem, indexDir: String,
+      l: IndexLayout): Unit = {
+    val n = json.createObjectNode().put("key", l.key).put("nBuckets", l.nBuckets)
+    n.set[com.fasterxml.jackson.databind.JsonNode]("schema",
+      json.readTree(l.schema.json))
+    val tmp = new Path(indexDir, layoutFile + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(json.writeValueAsBytes(n)) finally out.close()
+    if (!fs.rename(tmp, new Path(indexDir, layoutFile)))
+      throw new java.io.IOException(s"index sink: writing $layoutFile failed")
+  }
+
+  private def pinnedLayout(spark: SparkSession, indexDir: String): IndexLayout =
+    readLayout(fsOf(spark, indexDir), indexDir).getOrElse(
+      throw new IllegalArgumentException(
+        s"$indexDir has no $layoutFile: not an index written by startIndexSink"))
+
+  private def allNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => StructField(f.name, allNullable(f.dataType))))
+    case a: ArrayType => ArrayType(allNullable(a.elementType))
+    case m: MapType => MapType(allNullable(m.keyType), allNullable(m.valueType))
+    case other => other
+  }
+
+  /** The rows of some bucket directories, read with the pinned schema
+    * (no inference job); a bucket with no directory holds no rows.
+    */
+  private def readBuckets(spark: SparkSession, indexDir: String,
+      schema: StructType, buckets: Seq[Int]): DataFrame = {
+    val fs = fsOf(spark, indexDir)
+    val dirs = buckets.map(b => new Path(indexDir, s"$bucketCol=$b"))
+      .filter(fs.exists).map(_.toString)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).option("basePath", indexDir)
+      .parquet(dirs: _*)
+  }
+
   /** Read an index written by [[startIndexSink]] without the physical
-    * bucket column.
+    * bucket column, with the schema its `_index.json` pins (building
+    * the frame runs no job).
     */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir).drop("__bucket")
+    spark.read.schema(pinnedLayout(spark, indexDir).schema)
+      .parquet(indexDir).drop(bucketCol)
 
-  /** Point lookup against the bucketed index: the foldable bucket
-    * predicate becomes a PartitionFilter, so the scan touches ONE
-    * bucket directory out of `nBuckets` — this pruning is the reason
-    * the index is bucketed at all.
+  /** Point lookup against the bucketed index. The probe (a constant)
+    * is cast to the key's pinned type, so an Int literal finds a Long
+    * key, and its bucket under the pinned `nBuckets` is computed on
+    * the driver: the scan lists and reads that ONE bucket directory
+    * (none if it does not exist) — the reason the index is bucketed at
+    * all. The bucket predicate stays in the plan as a PartitionFilter.
+    * `keyCol` must be the key the index is bucketed on.
     */
   def indexPointLookup(spark: SparkSession, indexDir: String, keyCol: String,
-      value: Column, nBuckets: Int = defaultIndexBuckets): DataFrame =
-    spark.read.parquet(indexDir)
-      .filter(col("__bucket") === indexBucket(value, nBuckets) &&
-        col(keyCol) === value)
-      .drop("__bucket")
+      value: Column): DataFrame = {
+    val layout = pinnedLayout(spark, indexDir)
+    require(keyCol == layout.key,
+      s"$indexDir is bucketed on ${layout.key}, not $keyCol")
+    val probe = value.cast(layout.schema(keyCol).dataType)
+    // the probe's bucket, evaluated on the driver: analysis only, no job
+    val bucket = spark.emptyDataFrame.select(indexBucket(probe, layout.nBuckets))
+      .queryExecution.analyzed.expressions.head
+      .asInstanceOf[org.apache.spark.sql.catalyst.expressions.Alias].child
+    require(bucket.foldable, s"the probe must be a constant, got $value")
+    val b = bucket.eval().asInstanceOf[Int]
+    readBuckets(spark, indexDir, layout.schema, Seq(b))
+      .filter(col(bucketCol) === b && col(keyCol) === probe)
+      .drop(bucketCol)
+  }
 
   val defaultIndexBuckets = 32
 
@@ -115,6 +212,22 @@ object Pipelines {
     * scale the sink target is a Delta/Iceberg table and this merge is
     * its MERGE INTO; bucketed parquet-rewrite keeps the local harness
     * dependency-free while exercising the same dirty-partition shape.
+    *
+    * Pinned layout: the first batch writes `<indexDir>/_index.json`
+    * (tmp file + rename, before any bucket exists; Spark's listing
+    * skips `_` files) holding the schema with `__bucket`, nullability
+    * dropped, the key column and `nBuckets`. Every later batch — after
+    * a restart too — must match it, or it throws before touching a
+    * bucket: a different `nBuckets` would spread one key over two
+    * buckets. [[readIndex]], [[indexPointLookup]] and the sink's own
+    * read of the dirty buckets use that schema instead of inferring
+    * one.
+    *
+    * Per batch: one job collects each partition's distinct buckets
+    * (and fills the batch cache); the dirty buckets' rows and the batch
+    * then go through ONE exchange, hash-partitioned by bucket into
+    * min(dirty, defaultParallelism) partitions, so the buckets are
+    * merged and written in parallel, one file each.
     *
     * Crash safety, per bucket: at every instant `dst/__bucket=N` or
     * `bak/__bucket=N` holds that bucket's complete pre- or post-merge
@@ -131,22 +244,36 @@ object Pipelines {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(indexDir)
-        val bakRoot = new org.apache.hadoop.fs.Path(indexDir + "__bak")
-        val tmp = new org.apache.hadoop.fs.Path(indexDir + "__tmp")
+        val fs = fsOf(spark, indexDir)
+        val dst = new Path(indexDir)
+        val bakRoot = new Path(indexDir + "__bak")
+        val tmp = new Path(indexDir + "__tmp")
         // Hadoop rename/delete signal failure by RETURNING false;
         // treat that as fatal so the micro-batch fails loudly and the
         // checkpoint retries, instead of silently losing the index
         def must(ok: Boolean, what: String): Unit =
           if (!ok) throw new java.io.IOException(s"index sink: $what failed")
+        val withBucket = batch
+          .withColumn(bucketCol, indexBucket(col("doc_id"), nBuckets))
+        val layout = IndexLayout(
+          allNullable(withBucket.schema).asInstanceOf[StructType], "doc_id",
+          nBuckets)
+        readLayout(fs, indexDir) match {
+          case None =>
+            fs.mkdirs(dst)
+            writeLayout(fs, indexDir, layout)
+          case Some(pinned) if pinned != layout =>
+            throw new IllegalStateException(s"index sink: $indexDir is " +
+              s"pinned to ($pinned) but this batch has ($layout); " +
+              "changing the layout means rebuilding the index")
+          case _ =>
+        }
         // recovery: promote any backed-up bucket whose live dir is
         // missing (crash between the two renames below), drop the
         // rest as stale, and clear a half-written tmp
         if (fs.exists(bakRoot)) {
           fs.listStatus(bakRoot).foreach { st =>
-            val live = new org.apache.hadoop.fs.Path(dst, st.getPath.getName)
+            val live = new Path(dst, st.getPath.getName)
             if (!fs.exists(live)) {
               fs.mkdirs(dst)
               must(fs.rename(st.getPath, live), s"restore ${st.getPath.getName}")
@@ -155,33 +282,26 @@ object Pipelines {
           fs.delete(bakRoot, true)
         }
         fs.delete(tmp, true)
-        val withBucket = batch
-          .withColumn("__bucket", indexBucket(col("doc_id"), nBuckets))
-          .persist()
+        withBucket.persist()
         try {
-          val dirty = withBucket.select("__bucket").distinct()
-            .collect().map(_.getInt(0)).sorted // ≤ nBuckets ints — driver-safe
+          // ≤ nBuckets ints per partition — driver-safe
+          val dirty = withBucket.select(bucketCol).rdd
+            .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+            .collect().flatten.distinct.sorted
           if (dirty.nonEmpty) {
-            val existingDirs = dirty
-              .map(b => new org.apache.hadoop.fs.Path(dst, s"__bucket=$b"))
-              .filter(fs.exists(_))
-              .map(_.toString)
-            val existing =
-              if (existingDirs.nonEmpty)
-                spark.read.option("basePath", dst.toString)
-                  .parquet(existingDirs.toIndexedSeq: _*)
-              else spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                withBucket.schema)
-            val merged = upsertByKey(existing, withBucket, "doc_id",
-              Seq("version", "ts_ms"))
-            merged.write.mode("overwrite").partitionBy("__bucket")
+            // an explicit partition count: AQE never coalesces it
+            val rows = readBuckets(spark, indexDir, layout.schema, dirty)
+              .unionByName(withBucket)
+              .repartition(math.min(dirty.length,
+                spark.sparkContext.defaultParallelism), col(bucketCol))
+            latestPerKey(rows, "doc_id", Seq("version", "ts_ms"))
+              .write.mode("overwrite").partitionBy(bucketCol)
               .parquet(tmp.toString)
             dirty.foreach { b =>
-              val name = s"__bucket=$b"
-              val t = new org.apache.hadoop.fs.Path(tmp, name)
-              val d = new org.apache.hadoop.fs.Path(dst, name)
-              val k = new org.apache.hadoop.fs.Path(bakRoot, name)
+              val name = s"$bucketCol=$b"
+              val t = new Path(tmp, name)
+              val d = new Path(dst, name)
+              val k = new Path(bakRoot, name)
               if (fs.exists(t)) {
                 fs.mkdirs(dst)
                 fs.mkdirs(bakRoot)

@@ -16,7 +16,7 @@ object Explain {
     val fn = graft.SparkEntry.queries.getOrElse(name, {
       System.err.println(s"unknown query: $name"); usage()
     })
-    val spark = graft.Sessions.local(8)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val df = fn(spark, sfDir)
     println("=== FORMATTED PLAN: " + name + " ===")
     df.explain("formatted")

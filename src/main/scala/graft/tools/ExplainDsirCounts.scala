@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object ExplainDsirCounts {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.Sessions.local(8)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val docs = graft.Tables.documents(spark, sfDir)
     println("=== FORMATTED PLAN: dsir bucketCounts (train hot path) ===")
     graft.selection.Dsir.bucketCounts(docs, 1024).explain("formatted")

@@ -9,7 +9,7 @@ object ExplainExecuted {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("query name required"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.count()
     println(s"=== EXECUTED PLAN: $name @ $sfDir ===")

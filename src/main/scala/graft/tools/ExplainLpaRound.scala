@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object ExplainLpaRound {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.Sessions.local(8)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val orders = graft.Tables.orders(spark, sfDir)
     val g = orders.select((col("o_orderkey") - col("o_orderkey") % 4).as("g"))
     val e = g.select(col("g").as("u"), (col("g") + 1).as("v"))

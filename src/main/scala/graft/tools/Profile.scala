@@ -7,7 +7,7 @@ package graft.tools
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

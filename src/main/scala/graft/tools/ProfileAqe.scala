@@ -23,7 +23,7 @@ object ProfileAqe {
       .map(_.split(",").toSeq)
       .getOrElse(Seq("q_components", "q_components_star", "q_pagerank",
         "q_dedup_incremental", "q_curation_pipeline", "q_bpe_merges"))
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
 
     def run(n: String): Double = {
       val t0 = System.nanoTime()

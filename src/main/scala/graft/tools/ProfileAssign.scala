@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object ProfileAssign {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/graft_sfx")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.graph.Communities
 
     def minOf3(label: String)(f: => Long): Unit = {

@@ -13,7 +13,7 @@ object ProfileBpe {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(512)
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     // the sf0.1 text exhausts at ~107 learnable merges; `synth:N`
     // builds an N-word corpus of hex-structured words (rich pair

@@ -13,7 +13,7 @@ object ProfileDsir {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val buckets = args.lift(1).map(_.toInt).getOrElse(1024)
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.selection.Dsir
 
     def time[T](label: String)(f: => T): T = {

@@ -11,7 +11,7 @@ package graft.tools
 object ProfileGraphAqe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val names = Seq("q_pagerank", "q_communities", "q_kcore", "q_components")
     names.foreach { n =>
       try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()

@@ -13,7 +13,7 @@ object ProfileGraphRounds {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_communities")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     // warm codegen on the smallest SF so the profiled run isn't
     // dominated by first-plan compilation
     graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()

@@ -16,7 +16,7 @@ object ProfileIncremental {
     // replica batch would otherwise scale WITH the corpus and its
     // K² twin-pair volume measures duplication, not scale)
     val firstCopyOnly = args.lift(1).contains("firstCopy")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.dedup.Dedup
 
     def time[T](label: String)(f: => T): T = {

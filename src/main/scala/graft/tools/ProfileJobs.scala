@@ -12,7 +12,7 @@ object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_neardup_catalog_retained")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     try graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
     catch { case _: Throwable => () }
     spark.catalog.clearCache()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object ProfileMediaOrganic {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/graft_sfx_media")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.{Tables}
     import graft.dedup.Dedup
     import graft.multimodal.Multimodal

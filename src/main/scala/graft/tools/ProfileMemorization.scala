@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 object ProfileMemorization {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.textanalysis.TextAnalysis
     val docs = graft.Tables.documents(spark, sfDir)
 

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object ProfileMultiServe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.Tables
     import graft.similarity.Similarity
 

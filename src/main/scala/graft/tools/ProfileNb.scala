@@ -11,7 +11,7 @@ object ProfileNb {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val replicaDir = args.lift(1).getOrElse("/tmp/graft_sfx")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.quality.NbClassifier
     spark.range(1000000L).selectExpr("sum(id)").collect()
 

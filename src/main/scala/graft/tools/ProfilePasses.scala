@@ -12,7 +12,7 @@ object ProfilePasses {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val passes = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     // job accounting: count + summed wall time of jobs, snapshotted
     // between phases so construct-time Spark work separates from
     // driver-side (analysis/planning) time

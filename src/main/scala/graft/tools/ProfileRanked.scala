@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 object ProfileRanked {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.Tables
 
     def time[T](name: String)(f: => T): T = {

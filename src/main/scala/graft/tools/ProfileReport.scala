@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 object ProfileReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
     import graft.Tables

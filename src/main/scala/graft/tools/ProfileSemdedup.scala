@@ -10,7 +10,7 @@ object ProfileSemdedup {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val cells = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import org.apache.spark.sql.functions.col
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")

@@ -18,7 +18,7 @@ object ProfileServing {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val replicaDir = args.lift(1).getOrElse("/tmp/graft_sfx")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.Tables
     import graft.ops.SearchOps
     import graft.similarity.Similarity

@@ -3,7 +3,7 @@ package graft.tools
 object ProfileStar {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

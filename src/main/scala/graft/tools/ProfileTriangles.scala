@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 object ProfileTriangles {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -9,7 +9,7 @@ object ProfileTwice {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("query name required"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
     spark.catalog.clearCache()
     (1 to 3).foreach { i =>

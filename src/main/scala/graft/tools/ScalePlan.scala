@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object ScalePlan {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sfx")
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     val orders = spark.read.parquet(s"$dir/orders.parquet")
     val e = orders.select(col("o_orderkey").as("src"),
         (col("o_orderkey") - col("o_orderkey") % 4).as("dst"))

@@ -1,7 +1,7 @@
 package graft.tools
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = args.headOption.getOrElse("32").toInt
+    val cpus = args.headOption.map(_.toInt).getOrElse(graft.Sessions.cpus)
     val spark = graft.Sessions.local(cpus)
     // warm
     spark.range(10000000L).selectExpr("sum(id)").collect()

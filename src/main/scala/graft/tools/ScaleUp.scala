@@ -24,7 +24,7 @@ object ScaleUp {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sfx")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
 
     def replicate(name: String, idCols: Seq[String]): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")

@@ -38,7 +38,7 @@ object ScaleUpMedia {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_media")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = graft.Sessions.local(32)
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     import graft.dedup.Dedup
     import graft.multimodal.Multimodal
     val n1 = spark.read.parquet(s"$src/documents.parquet").count()

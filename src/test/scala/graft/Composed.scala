@@ -183,4 +183,25 @@ object Composed {
         st.getField("acc") + term(st.getField("run"))).otherwise(lit(0L)))
     round(ent6 / (n * lit(1e6)), 4)
   }
+
+  /** Per-vector symmetric int8 scale: max|x| / 127, 0.0 for all-zero,
+    * empty or non-finite vectors.
+    */
+  def quantScale(v: Column): Column = {
+    val m = coalesce(array_max(transform(asDouble(v), x => abs(x))), lit(0.0))
+    // NaN compares greater than everything in Spark's ordering, so a
+    // single NaN entry surfaces as m = NaN; |x| ≥ 0 rules out -Inf
+    when(isnan(m) || m === Double.PositiveInfinity, lit(0.0))
+      .otherwise(m / lit(127.0))
+  }
+
+  /** Symmetric int8 quantization: round(x_i / scale), all zeros when
+    * the scale is 0.
+    */
+  def quantizeVec(v: Column): Column = {
+    val vd = asDouble(v)
+    val s = quantScale(v)
+    when(s === 0.0, transform(vd, _ => lit(0)))
+      .otherwise(transform(vd, x => round(x / s, 0).cast("int")))
+  }
 }

@@ -42,8 +42,8 @@ class QuantSpec extends SparkSpec {
     .select(col("id"), col("v").cast("array<float>").as("v"))
 
   private def composedStats(vd: org.apache.spark.sql.Column) = {
-    val scale = Similarity.quantScale(vd)
-    val qvec = Similarity.quantizeVec(vd)
+    val scale = graft.Composed.quantScale(vd)
+    val qvec = graft.Composed.quantizeVec(vd)
     struct(scale.as("scale"),
       aggregate(qvec, lit(0L), (a, x) => a + abs(x)).as("q_l1"),
       array_max(qvec).as("q_max"),
@@ -73,8 +73,8 @@ class QuantSpec extends SparkSpec {
 
   test("native quantize vec ≡ composed (scale + every entry)") {
     val rows = df.select(col("id"),
-      Similarity.quantScale(col("v")).as("cs"),
-      Similarity.quantizeVec(col("v")).as("cq"),
+      graft.Composed.quantScale(col("v")).as("cs"),
+      graft.Composed.quantizeVec(col("v")).as("cq"),
       call_function(TextHashFunctions.QuantizeVecName, col("v")).as("n"))
       .collect()
     rows.foreach { r =>
@@ -205,8 +205,8 @@ class QuantSpec extends SparkSpec {
 
   test("quantizeEmbeddings native path ≡ composed projection") {
     val composed = df.select(col("id").as("vec_id"),
-      Similarity.quantScale(col("v")).as("scale"),
-      Similarity.quantizeVec(col("v")).as("qvec"))
+      graft.Composed.quantScale(col("v")).as("scale"),
+      graft.Composed.quantizeVec(col("v")).as("qvec"))
     val native = Similarity.quantizeEmbeddings(df, "id", "v")
       .withColumnRenamed("id", "vec_id")
     val c = composed.orderBy("vec_id").collect()

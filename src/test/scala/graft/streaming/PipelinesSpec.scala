@@ -2,8 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import graft.{SparkSpec, Tables}
 import graft.cdc.Cdc
 
@@ -314,6 +319,178 @@ class PipelinesSpec extends SparkSpec {
     val physical = lookup.queryExecution.executedPlan.toString
     assert(physical.contains("PartitionFilters") &&
       physical.contains("__bucket"))
+  }
+
+  /** A sink on a (doc_id, version, ts_ms, quality_score) projection of
+    * the CDC stream, fed the first `preload` envelope rows.
+    */
+  private def preloadedSink(dir: String, preload: Int)(
+      implicit sqlCtx: org.apache.spark.sql.SQLContext)
+      : (MemoryStream[(String, String)], StreamingQuery) = {
+    val mem = MemoryStream[(String, String)]
+    val enriched = Pipelines.qualityEnrich(mem.toDF().toDF("key", "value"))
+      .select($"doc_id", $"version", $"ts_ms", $"quality_score")
+    val q = Pipelines.startIndexSink(enriched, s"$dir/index", s"$dir/ckpt")
+    mem.addData(envelopeRows.take(preload))
+    q.processAllAvailable()
+    (mem, q)
+  }
+
+  /** Jobs started, and the task count of each stage that ran, while
+    * `body` runs.
+    */
+  private final class JobLog extends SparkListener {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stageTasks.add(e.stageInfo.numTasks)
+  }
+
+  private def logJobs[T](body: => T): (T, JobLog) = {
+    val sc = spark.sparkContext
+    GraftListenerBus.drain(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      val r = body
+      GraftListenerBus.drain(sc)
+      (r, log)
+    } finally sc.removeSparkListener(log)
+  }
+
+  private def bucketOf(key: Column): Int =
+    spark.range(1).select(Pipelines.indexBucket(key, 32)).head.getInt(0)
+
+  /** Survivors of the CDC op filter (deletes and snapshot reads,
+    * doc_id % 20 ∈ {0,1}, never reach the index) past the preload.
+    */
+  private def survivors(from: Int): Seq[(String, String)] =
+    envelopeRows.drop(from).filter(_._1.toLong % 20 > 1)
+
+  test("index point lookup: one job, one bucket directory listed; " +
+      "building readIndex runs no job") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-pinned").toString
+    val (_, q) = preloadedSink(dir, 200)
+    q.stop()
+    val (_, readLog) = logJobs(Pipelines.readIndex(spark, s"$dir/index"))
+    assert(readLog.jobs.get === 0) // the schema is pinned, not inferred
+    val ids = Pipelines.readIndex(spark, s"$dir/index")
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+    val id = ids.head
+    val (rows, lookupLog) = logJobs(Pipelines.indexPointLookup(spark,
+      s"$dir/index", "doc_id", lit(id)).collect())
+    assert(rows.map(_.getAs[Long]("doc_id")).toSeq === Seq(id))
+    assert(lookupLog.jobs.get === 1)
+    val lookup = Pipelines.indexPointLookup(spark, s"$dir/index", "doc_id",
+      lit(id))
+    val roots = lookup.queryExecution.executedPlan.collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten
+    assert(roots.map(_.getName) === Seq(s"__bucket=${bucketOf(lit(id))}"))
+  }
+
+  test("index point lookup casts the probe to the key type: an Int " +
+      "literal finds its Long key") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-probe-int").toString
+    val (_, q) = preloadedSink(dir, 200)
+    q.stop()
+    // xxhash64 of an Int and of a Long differ: the probe must be cast
+    // to the key's type before it picks a bucket
+    val id = Pipelines.readIndex(spark, s"$dir/index")
+      .select("doc_id").collect().map(_.getLong(0))
+      .find(i => bucketOf(lit(i.toInt)) != bucketOf(lit(i))).get
+    val hit = Pipelines.indexPointLookup(spark, s"$dir/index", "doc_id",
+      lit(id.toInt)).collect()
+    assert(hit.map(_.getAs[Long]("doc_id")).toSeq === Seq(id))
+  }
+
+  test("index sink batch: at most 3 jobs, its write stage one task per " +
+      "dirty bucket up to the default parallelism") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-jobs").toString
+    val (mem, q) = preloadedSink(dir, 200)
+    val parallelism = spark.sparkContext.defaultParallelism
+    val rest = survivors(200)
+    // three documents in three distinct buckets, then many buckets
+    val three = rest.groupBy(r => bucketOf(lit(r._1.toLong))).values
+      .map(_.head).take(3).toSeq
+    for (batch <- Seq(three, rest.filterNot(three.contains).take(40))) {
+      val dirty = batch.map(r => bucketOf(lit(r._1.toLong))).distinct.size
+      assert(dirty > 1)
+      val (_, log) = logJobs { mem.addData(batch); q.processAllAvailable() }
+      assert(log.jobs.get <= 3, s"$dirty dirty buckets")
+      assert(log.stageTasks.toArray.last === math.min(dirty, parallelism),
+        s"$dirty dirty buckets")
+    }
+    q.stop()
+    val index = Pipelines.readIndex(spark, s"$dir/index")
+    assert(index.groupBy("doc_id").count().filter($"count" > 1).count() === 0)
+  }
+
+  test("index sink refuses a batch whose nBuckets or schema differs " +
+      "from the pinned layout, leaving the index byte-identical") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-mismatch").toString
+    val (_, q) = preloadedSink(dir, 100)
+    q.stop()
+    val root = new java.io.File(s"$dir/index")
+    assert(new java.io.File(root, "_index.json").isFile)
+    def snapshot(): Map[String, Seq[Byte]] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(root).map(f => root.toPath.relativize(f.toPath).toString ->
+        Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    val before = snapshot()
+    val rows = survivors(100).take(10)
+    // another bucket count on restart
+    val mem2 = MemoryStream[(String, String)]
+    val q2 = Pipelines.startIndexSink(
+      Pipelines.qualityEnrich(mem2.toDF().toDF("key", "value"))
+        .select($"doc_id", $"version", $"ts_ms", $"quality_score"),
+      s"$dir/index", s"$dir/ckpt2", nBuckets = 16)
+    mem2.addData(rows)
+    val e2 = intercept[StreamingQueryException](q2.processAllAvailable())
+    q2.stop()
+    assert(e2.getMessage.contains("32 buckets") && e2.getMessage.contains("16 buckets"))
+    assert(snapshot() === before)
+    // another schema (a column dropped)
+    val mem3 = MemoryStream[(String, String)]
+    val q3 = Pipelines.startIndexSink(
+      Pipelines.qualityEnrich(mem3.toDF().toDF("key", "value"))
+        .select($"doc_id", $"version", $"ts_ms"),
+      s"$dir/index", s"$dir/ckpt3")
+    mem3.addData(rows)
+    val e3 = intercept[StreamingQueryException](q3.processAllAvailable())
+    q3.stop()
+    assert(e3.getMessage.contains("pinned"))
+    assert(snapshot() === before)
+  }
+
+  test("index sink breaks (version, ts_ms) ties as the batch upsertByKey " +
+      "replay does") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-tie").toString
+    val mem = MemoryStream[(Long, Int, Long, String)]
+    val q = Pipelines.startIndexSink(
+      mem.toDF().toDF("doc_id", "version", "ts_ms", "payload"),
+      s"$dir/index", s"$dir/ckpt")
+    // tied on every version column: only the content hash picks one
+    val tied = Seq((7L, 1, 100L, "a"), (7L, 1, 100L, "b"))
+    mem.addData(tied)
+    q.processAllAvailable(); q.stop()
+    val df = tied.toDF("doc_id", "version", "ts_ms", "payload")
+    val replay = Pipelines.upsertByKey(df.limit(0), df, "doc_id",
+      Seq("version", "ts_ms"))
+    assert(Pipelines.readIndex(spark, s"$dir/index").collect().toSeq ===
+      replay.collect().toSeq)
+    // a probe whose bucket has no directory reads nothing and finds nothing
+    val other = (0L until 64L).find(k => bucketOf(lit(k)) != bucketOf(lit(7L))).get
+    assert(Pipelines.indexPointLookup(spark, s"$dir/index", "doc_id",
+      lit(other)).count() === 0)
   }
 
   test("windowed counts honor event-time tumbling windows") {
