@@ -115,8 +115,6 @@ object TextFunctions {
 
   def wordCount(c: Column): Column = size(words(c))
 
-  def distinctWordCount(c: Column): Column = size(array_distinct(words(c)))
-
   def stopwordCount(c: Column, stopwords: Seq[String]): Column =
     size(filter(words(c), w => w.isin(stopwords.map(lit): _*)))
 

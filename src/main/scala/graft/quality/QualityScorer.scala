@@ -67,9 +67,6 @@ object RuleBasedScorer extends QualityScorer {
   /** language_quality: function-word (stopword) density, 10 points
     * per percent, capped — a crude but deterministic fluency proxy.
     */
-  def languageQuality(text: Column): Column =
-    languageQualityFromTokens(words(text))
-
   def languageQualityFromTokens(ws: Column): Column =
     least(lit(100), floor(
       size(filter(ws, w => w.isin(Stopwords.map(lit): _*))) * 1000 / size(ws)))

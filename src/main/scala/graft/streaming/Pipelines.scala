@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
+import graft.Frames.freeLocalCheckpoint
 import graft.cdc.Cdc
 import graft.quality.RuleBasedScorer
 
@@ -31,6 +33,10 @@ import graft.quality.RuleBasedScorer
   *  - The upsert sink dedups each micro-batch by key before merging
   *    (ST7 last-write-wins by version, then ts) — idempotent under
   *    replay, which is what makes checkpoint recovery exactly-once.
+  *
+  * Every `*Sink` here attaches through [[startSink]], which states the
+  * exactly-once contract they share once; their batch cores write
+  * through [[writeBatchPartition]].
   */
 object Pipelines {
 
@@ -238,85 +244,80 @@ object Pipelines {
     */
   def startIndexSink(enriched: DataFrame, indexDir: String,
       checkpointDir: String, nBuckets: Int = defaultIndexBuckets)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    enriched.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fs = fsOf(spark, indexDir)
-        val dst = new Path(indexDir)
-        val bakRoot = new Path(indexDir + "__bak")
-        val tmp = new Path(indexDir + "__tmp")
-        // Hadoop rename/delete signal failure by RETURNING false;
-        // treat that as fatal so the micro-batch fails loudly and the
-        // checkpoint retries, instead of silently losing the index
-        def must(ok: Boolean, what: String): Unit =
-          if (!ok) throw new java.io.IOException(s"index sink: $what failed")
-        val withBucket = batch
-          .withColumn(bucketCol, indexBucket(col("doc_id"), nBuckets))
-        val layout = IndexLayout(
-          allNullable(withBucket.schema).asInstanceOf[StructType], "doc_id",
-          nBuckets)
-        readLayout(fs, indexDir) match {
-          case None =>
+      : StreamingQuery =
+    startSink(enriched, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val fs = fsOf(spark, indexDir)
+      val dst = new Path(indexDir)
+      val bakRoot = new Path(indexDir + "__bak")
+      val tmp = new Path(indexDir + "__tmp")
+      // Hadoop rename/delete signal failure by RETURNING false;
+      // treat that as fatal so the micro-batch fails loudly and the
+      // checkpoint retries, instead of silently losing the index
+      def must(ok: Boolean, what: String): Unit =
+        if (!ok) throw new java.io.IOException(s"index sink: $what failed")
+      val withBucket = batch
+        .withColumn(bucketCol, indexBucket(col("doc_id"), nBuckets))
+      val layout = IndexLayout(
+        allNullable(withBucket.schema).asInstanceOf[StructType], "doc_id",
+        nBuckets)
+      readLayout(fs, indexDir) match {
+        case None =>
+          fs.mkdirs(dst)
+          writeLayout(fs, indexDir, layout)
+        case Some(pinned) if pinned != layout =>
+          throw new IllegalStateException(s"index sink: $indexDir is " +
+            s"pinned to ($pinned) but this batch has ($layout); " +
+            "changing the layout means rebuilding the index")
+        case _ =>
+      }
+      // recovery: promote any backed-up bucket whose live dir is
+      // missing (crash between the two renames below), drop the
+      // rest as stale, and clear a half-written tmp
+      if (fs.exists(bakRoot)) {
+        fs.listStatus(bakRoot).foreach { st =>
+          val live = new Path(dst, st.getPath.getName)
+          if (!fs.exists(live)) {
             fs.mkdirs(dst)
-            writeLayout(fs, indexDir, layout)
-          case Some(pinned) if pinned != layout =>
-            throw new IllegalStateException(s"index sink: $indexDir is " +
-              s"pinned to ($pinned) but this batch has ($layout); " +
-              "changing the layout means rebuilding the index")
-          case _ =>
+            must(fs.rename(st.getPath, live), s"restore ${st.getPath.getName}")
+          } else fs.delete(st.getPath, true)
         }
-        // recovery: promote any backed-up bucket whose live dir is
-        // missing (crash between the two renames below), drop the
-        // rest as stale, and clear a half-written tmp
-        if (fs.exists(bakRoot)) {
-          fs.listStatus(bakRoot).foreach { st =>
-            val live = new Path(dst, st.getPath.getName)
-            if (!fs.exists(live)) {
+        fs.delete(bakRoot, true)
+      }
+      fs.delete(tmp, true)
+      withBucket.persist()
+      try {
+        // ≤ nBuckets ints per partition — driver-safe
+        val dirty = withBucket.select(bucketCol).rdd
+          .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+          .collect().flatten.distinct.sorted
+        if (dirty.nonEmpty) {
+          // an explicit partition count: AQE never coalesces it
+          val rows = readBuckets(spark, indexDir, layout.schema, dirty)
+            .unionByName(withBucket)
+            .repartition(math.min(dirty.length,
+              spark.sparkContext.defaultParallelism), col(bucketCol))
+          latestPerKey(rows, "doc_id", Seq("version", "ts_ms"))
+            .write.mode("overwrite").partitionBy(bucketCol)
+            .parquet(tmp.toString)
+          dirty.foreach { b =>
+            val name = s"$bucketCol=$b"
+            val t = new Path(tmp, name)
+            val d = new Path(dst, name)
+            val k = new Path(bakRoot, name)
+            if (fs.exists(t)) {
               fs.mkdirs(dst)
-              must(fs.rename(st.getPath, live), s"restore ${st.getPath.getName}")
-            } else fs.delete(st.getPath, true)
+              fs.mkdirs(bakRoot)
+              if (fs.exists(d)) must(fs.rename(d, k), s"rotate $name")
+              must(fs.rename(t, d), s"install $name")
+              fs.delete(k, true)
+            }
           }
           fs.delete(bakRoot, true)
+          fs.delete(tmp, true)
         }
-        fs.delete(tmp, true)
-        withBucket.persist()
-        try {
-          // ≤ nBuckets ints per partition — driver-safe
-          val dirty = withBucket.select(bucketCol).rdd
-            .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
-            .collect().flatten.distinct.sorted
-          if (dirty.nonEmpty) {
-            // an explicit partition count: AQE never coalesces it
-            val rows = readBuckets(spark, indexDir, layout.schema, dirty)
-              .unionByName(withBucket)
-              .repartition(math.min(dirty.length,
-                spark.sparkContext.defaultParallelism), col(bucketCol))
-            latestPerKey(rows, "doc_id", Seq("version", "ts_ms"))
-              .write.mode("overwrite").partitionBy(bucketCol)
-              .parquet(tmp.toString)
-            dirty.foreach { b =>
-              val name = s"$bucketCol=$b"
-              val t = new Path(tmp, name)
-              val d = new Path(dst, name)
-              val k = new Path(bakRoot, name)
-              if (fs.exists(t)) {
-                fs.mkdirs(dst)
-                fs.mkdirs(bakRoot)
-                if (fs.exists(d)) must(fs.rename(d, k), s"rotate $name")
-                must(fs.rename(t, d), s"install $name")
-                fs.delete(k, true)
-              }
-            }
-            fs.delete(bakRoot, true)
-            fs.delete(tmp, true)
-          }
-        } finally withBucket.unpersist()
-        ()
-      }
-      .start()
+      } finally withBucket.unpersist()
+    }
 
   /** J2: enrichment lookup — the stream joins the static blob/content
     * table by s3_key (reference data-quality/app/main.py:99-116
@@ -495,24 +496,15 @@ object Pipelines {
     * append to the index, which IS the deduped corpus (id, text,
     * sig, batch_id) — readable by any downstream job.
     *
-    * Idempotent under checkpoint replay: survivors write via DYNAMIC
-    * partition overwrite on batch_id, so a re-run of batch N
-    * rewrites exactly its own partition (self-matches are id-
-    * excluded in the probe, so a replayed survivor survives again
-    * and overwrites itself — never duplicates, never self-drops).
-    * This is the same per-unit-overwrite recovery design as the
-    * keyed index sink's per-bucket rotation.
+    * Replay: self-matches are id-excluded in the probe, so a replayed
+    * survivor survives again and overwrites itself — never
+    * duplicates, never self-drops.
     *
     * Scale: the index pays signatures once per DOC ever admitted;
     * each batch signs only itself and probes by band bucket (the
     * batch side is the small side of the join). The 100 TB corpus
     * never re-shingles and never shuffles its text.
     */
-  // shared with the iterative graph operators, which have the same
-  // per-round accumulation problem
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    graft.Frames.freeLocalCheckpoint(df)
-
   def processNearDupBatch(batch: DataFrame, indexDir: String,
       batchId: Long, n: Int = 3, k: Int = 16, bands: Int = 4,
       threshold: Double = 0.5, maxBucketSize: Int = 100,
@@ -531,41 +523,23 @@ object Pipelines {
         n, k, hashMode) // empty bootstrap with the right schema
     val survivors = Dedup.dedupIncrement(batch, index, "doc_id", "text",
       n, k, bands, threshold, maxBucketSize, hashMode)
-    // materialized BEFORE the write: the write plan must not read
-    // indexDir — this checkpoint is the batch's ONLY action over the
-    // survivors frame (releasing dedupIncrement's one-shot caches)
+    // writeBatchOutput's checkpoint is the batch's ONLY action over
+    // the survivors frame (releasing dedupIncrement's one-shot caches)
     // and makes the signature rows index-independent before the
-    // index itself is overwritten below
-    val sigs = Dedup.minhashSignatures(survivors, "doc_id", "text", n, k, hashMode)
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true)
-    try {
-      // an empty first batch must not create a parquet dir with no
-      // footers (unreadable schema); an empty overwrite of an
-      // EXISTING index is a harmless no-op
-      if (!sigs.isEmpty || fs.exists(indexPath))
-        sigs.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(indexDir)
-    } finally freeLocalCheckpoint(sigs)
+    // index itself is overwritten
+    writeBatchOutput(
+      Dedup.minhashSignatures(survivors, "doc_id", "text", n, k, hashMode),
+      indexDir, batchId)
   }
 
   /** The streaming entry: docs (doc_id, text) → near-dup-deduped
-    * corpus at `indexDir`, exactly-once via checkpoint + the
-    * idempotent batch core above.
+    * corpus at `indexDir` through the batch core above.
     */
   def nearDupIndexingSink(docs: DataFrame, indexDir: String,
-      checkpointDir: String, hashMode: String = "xx")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processNearDupBatch(batch, indexDir, batchId, hashMode = hashMode)
-      }
-      .start()
+      checkpointDir: String, hashMode: String = "xx"): StreamingQuery =
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processNearDupBatch(batch, indexDir, batchId, hashMode = hashMode)
+    }
 
   /** Beyond-reference extension: STREAMING segment-level dedup — the
     * online form of [[graft.dedup.Dedup.segmentDedup]] (CCNet
@@ -576,11 +550,9 @@ object Pipelines {
     * the cross-batch "seen" state IS a parquet table of 16-byte
     * digests, not driver memory.
     *
-    * Idempotent under checkpoint replay: both writes are DYNAMIC
-    * partition overwrites on batch_id, and the probe EXCLUDES the
-    * current batch's own index partition — a replayed batch N never
-    * collides with its own earlier digest write, recomputes the
-    * identical winners, and overwrites exactly its own partitions.
+    * Replay: the probe EXCLUDES the current batch's own index
+    * partition — a replayed batch N never collides with its own
+    * earlier digest write and recomputes the identical winners.
     *
     * Scale: per batch, one digest aggregation over the batch (small
     * side) + one anti-join against the index digests (16 bytes/row,
@@ -618,26 +590,82 @@ object Pipelines {
     } finally freeLocalCheckpoint(kept)
   }
 
-  /** Guarded dynamic-overwrite append of one batch partition. Skips
-    * only when there is nothing to write AND the directory does not
-    * exist yet: an empty overwrite of an existing dir is a harmless
-    * no-op, but an empty CREATE would leave a footerless parquet dir
-    * with an unreadable schema. The FileSystem is derived from the
-    * TARGET dir itself — a sink's index and output may live on
-    * different schemes (hdfs:// index, s3a:// corpus), so reusing one
-    * dir's fs for the other's existence check would throw Wrong FS.
+  /** Attach a micro-batch sink: the one place every stream in this
+    * file starts. The exactly-once contract all of them share:
+    *
+    *  - Spark's checkpoint at `checkpointDir` re-delivers a batch whose
+    *    commit was lost under the SAME batch id;
+    *  - `core` is idempotent by batch id: its writes go through
+    *    [[writeBatchPartition]], which dynamic-overwrites exactly the
+    *    batch's own `batch_id=N` partitions, so a replay replaces what
+    *    the first attempt wrote instead of duplicating it (the index
+    *    sink and the trending state reach the same property by bucket
+    *    rotation and by state versions);
+    *  - a batch refuses to write while a retention fold holds its target
+    *    dir ([[requireNoFoldInProgress]]).
+    *
+    * `release` runs once the query terminates: a cache scoped to one
+    * stream must not outlive it. The isActive re-check closes the
+    * window where the query died before the listener registered (a
+    * double release is harmless).
+    */
+  private def startSink(stream: DataFrame, checkpointDir: String,
+      release: () => Unit = () => ())(core: (DataFrame, Long) => Unit)
+      : StreamingQuery = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val q = stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode("append")
+      .foreachBatch(core)
+      .start()
+    val streams = q.sparkSession.streams
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == q.id) { release(); streams.removeListener(this) }
+    }
+    streams.addListener(listener)
+    if (!q.isActive) { release(); streams.removeListener(listener) }
+    q
+  }
+
+  /** The exactly-once write of one micro-batch's output (see
+    * [[startSink]]): refuse while a retention fold holds `dir`, stamp
+    * `batch_id`, and dynamic-overwrite the batch's own partitions under
+    * the optional `leading` partition columns. Skips only when there is
+    * nothing to write AND the directory does not exist yet: an empty
+    * overwrite of an existing dir is a harmless no-op, but an empty
+    * CREATE would leave a footerless parquet dir with an unreadable
+    * schema (so `nonEmpty = false` means "write only if the dir
+    * exists"). The FileSystem is derived from the TARGET dir itself —
+    * a sink's index and output may live on different schemes (hdfs://
+    * index, s3a:// corpus), so reusing one dir's fs for the other's
+    * existence check would throw Wrong FS.
     */
   private def writeBatchPartition(df: DataFrame, dir: String,
-      batchId: Long, nonEmpty: Boolean): Unit = {
+      batchId: Long, nonEmpty: Boolean, leading: String*): Unit = {
     requireNoFoldInProgress(df.sparkSession, dir)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    if (nonEmpty || fs.exists(path))
+    if (nonEmpty || fsOf(df.sparkSession, dir).exists(new Path(dir)))
       df.withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id")
+        .write.partitionBy(leading :+ "batch_id": _*)
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(dir)
+  }
+
+  /** [[writeBatchPartition]] of a batch core's one output frame: checked
+    * against a fold before anything is computed, materialized ONCE (the
+    * emptiness probe and the write share it, and the write plan never
+    * reads `dir`), then freed. Jobs: the checkpoint, the probe, the
+    * write.
+    */
+  private def writeBatchOutput(df: DataFrame, dir: String,
+      batchId: Long): Unit = {
+    requireNoFoldInProgress(df.sparkSession, dir)
+    val cp = df.localCheckpoint(true)
+    try writeBatchPartition(cp, dir, batchId, !cp.isEmpty)
+    finally freeLocalCheckpoint(cp)
   }
 
   /** BOUNDED-HISTORY retention for the batch-stamped CATALOG/OUTPUT
@@ -795,7 +823,7 @@ object Pipelines {
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(dir)
       clearFoldMarker(fs, root)
-    } finally graft.Frames.freeLocalCheckpoint(folded)
+    } finally freeLocalCheckpoint(folded)
   }
 
   /** SNAPSHOT read of a numeric batch-stamped catalog table — the
@@ -922,19 +950,14 @@ object Pipelines {
   }
 
   /** The streaming entry: docs (doc_id, text) → segment-deduped
-    * corpus at `outDir` + digest index at `indexDir`, exactly-once
-    * via checkpoint + the idempotent batch core above.
+    * corpus at `outDir` + digest index at `indexDir` through the
+    * batch core above.
     */
   def segmentDedupSink(docs: DataFrame, indexDir: String, outDir: String,
-      checkpointDir: String, segWords: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSegmentDedupBatch(batch, indexDir, outDir, batchId, segWords)
-      }
-      .start()
+      checkpointDir: String, segWords: Int = 3): StreamingQuery =
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processSegmentDedupBatch(batch, indexDir, outDir, batchId, segWords)
+    }
 
   /** Beyond-reference extension: STREAMING decayed counters — the
     * online form of [[graft.ops.StatsOps.trendingByType]]: each
@@ -1016,19 +1039,14 @@ object Pipelines {
   }
 
   /** The streaming entry: events → versioned trending state at
-    * `stateDir`, exactly-once via checkpoint + the versioned batch
-    * core above.
+    * `stateDir` through the versioned batch core above.
     */
   def trendingSink(events: DataFrame, stateDir: String,
       checkpointDir: String, halfLifeUs: Long = 86400000000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processTrendingBatch(batch, stateDir, batchId, halfLifeUs)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(events, checkpointDir) { (batch, batchId) =>
+      processTrendingBatch(batch, stateDir, batchId, halfLifeUs)
+    }
 
   /** Serving readout of the newest persisted trending state — same
     * shape as the batch [[graft.ops.StatsOps.trendingByType]].
@@ -1054,10 +1072,8 @@ object Pipelines {
     * The bigram model is a FROZEN parquet artifact (trained once on a
     * reference corpus via `lmTrain` + `writeLmModel`); each
     * micro-batch scores against it and documents at or above the nll
-    * threshold are dropped. Survivors append to `outDir` with their
-    * scores, partitioned by batch_id with DYNAMIC partition overwrite
-    * — a checkpoint replay of batch N rewrites exactly its own
-    * partition (same recovery design as the near-dup index sink).
+    * threshold are dropped. Survivors land in the batch's own
+    * partition of `outDir` with their scores ([[writeBatchOutput]]).
     *
     * Scale: the model is loaded ONCE per stream by [[lmGateSink]]
     * (never re-trained or re-listed per batch — the modelDir overload
@@ -1074,27 +1090,11 @@ object Pipelines {
   def processLmGateBatch(batch: DataFrame,
       model: graft.textanalysis.TextAnalysis.LmModel,
       outDir: String, batchId: Long, nllThreshold: Double = 10.0): Unit = {
-    import graft.textanalysis.TextAnalysis
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = TextAnalysis
+    val keep = graft.textanalysis.TextAnalysis
       .lmScoreWith(model, batch, nllThreshold)
       .filter(!col("unusual"))
       .select(col("doc_id"), col("lm_nll"))
-    val survivors = batch.join(keep, "doc_id")
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true) // score once: isEmpty probe + write share it
-    try {
-      // an empty FIRST batch must not create a footerless parquet dir;
-      // an empty overwrite of an existing output is a harmless no-op
-      if (!survivors.isEmpty || fs.exists(outPath))
-        survivors.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally freeLocalCheckpoint(survivors)
+    writeBatchOutput(batch.join(keep, "doc_id"), outDir, batchId)
   }
 
   /** STREAMING DATA SELECTION: each micro-batch scores against a
@@ -1104,48 +1104,27 @@ object Pipelines {
     * distribution selection applied AT INGEST instead of as a batch
     * pass. The gate is row-local ([[graft.curation.Serving.dsirLogwLocal]]:
     * one literal table, zero state, zero stream-side shuffle), so the
-    * sink shape is exactly [[processLmGateBatch]]'s idempotent
-    * dynamic-partition overwrite — a checkpoint replay of batch N
-    * rewrites its own partition only.
+    * sink shape is exactly [[processLmGateBatch]]'s.
     */
   def processDsirGateBatch(batch: DataFrame,
       model: graft.selection.Dsir.DsirModel, outDir: String,
-      batchId: Long, minLogw: Double): Unit = {
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val survivors = batch
+      batchId: Long, minLogw: Double): Unit =
+    writeBatchOutput(batch
       .withColumn("dsir_logw", graft.curation.Serving.dsirLogwLocal(model)(
         graft.functions.TextFunctions.words(col("text"))))
-      .filter(col("dsir_logw") >= minLogw)
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true) // score once: isEmpty probe + write share it
-    try {
-      if (!survivors.isEmpty || fs.exists(outPath))
-        survivors.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally freeLocalCheckpoint(survivors)
-  }
+      .filter(col("dsir_logw") >= minLogw), outDir, batchId)
 
   /** The streaming entry for DSIR selection: model read ONCE per
     * stream from the written artifact, then row-local gating per
     * micro-batch (the [[lmGateSink]] lifecycle).
     */
   def dsirGateSink(docs: DataFrame, modelDir: String, outDir: String,
-      checkpointDir: String, minLogw: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String, minLogw: Double): StreamingQuery = {
     val model = graft.selection.Dsir
       .readDsirModel(docs.sparkSession, modelDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processDsirGateBatch(batch, model, outDir, batchId, minLogw)
-      }
-      .start()
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processDsirGateBatch(batch, model, outDir, batchId, minLogw)
+    }
   }
 
   /** STREAMING LEARNED-QUALITY GATE: each micro-batch scores against
@@ -1154,49 +1133,29 @@ object Pipelines {
     * the docs whose decision score clears `threshold6` micro-nats
     * (0 = the MAP rule) — the learned gate applied AT INGEST. Row
     * local like the DSIR gate (weight literal + bias, zero state,
-    * zero stream-side shuffle); same idempotent dynamic-partition
-    * overwrite.
+    * zero stream-side shuffle).
     */
   def processNbGateBatch(batch: DataFrame,
       model: graft.quality.NbClassifier.NbModel, outDir: String,
-      batchId: Long, threshold6: Long): Unit = {
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val survivors = batch
+      batchId: Long, threshold6: Long): Unit =
+    writeBatchOutput(batch
       .withColumn("__d6",
         graft.quality.NbClassifier.decision6Local(model)(
           graft.functions.TextFunctions.words(col("text"))))
       .filter(col("__d6") > threshold6)
-      .drop("__d6")
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true) // score once: isEmpty probe + write share it
-    try {
-      if (!survivors.isEmpty || fs.exists(outPath))
-        survivors.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally freeLocalCheckpoint(survivors)
-  }
+      .drop("__d6"), outDir, batchId)
 
   /** The streaming entry for the learned quality gate: classifier
     * read ONCE per stream from the written artifact, then row-local
     * gating per micro-batch (the [[dsirGateSink]] lifecycle).
     */
   def nbGateSink(docs: DataFrame, modelDir: String, outDir: String,
-      checkpointDir: String, threshold6: Long = 0L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String, threshold6: Long = 0L): StreamingQuery = {
     val model = graft.quality.NbClassifier
       .readNbModel(docs.sparkSession, modelDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processNbGateBatch(batch, model, outDir, batchId, threshold6)
-      }
-      .start()
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processNbGateBatch(batch, model, outDir, batchId, threshold6)
+    }
   }
 
   /** Idempotent batch core of [[admissionSink]] — ONE admission
@@ -1207,35 +1166,18 @@ object Pipelines {
     * fused gate scores all three frozen artifacts off a single
     * `__ws` attribute and lands survivors (with their scores — the
     * audit trail of WHY each doc was admitted) in the batch's own
-    * dynamic-overwrite partition. Same replay story as every gate
-    * sink: scores are deterministic against frozen literals, so a
-    * checkpoint replay rewrites identical rows into its own
-    * partition only.
+    * partition. Scores are deterministic against frozen literals, so
+    * a replay rewrites identical rows.
     */
   def processAdmissionBatch(batch: DataFrame,
       lm: graft.curation.Serving.LmLiteral,
       nb: graft.quality.NbClassifier.NbModel,
       dsir: graft.selection.Dsir.DsirModel,
       outDir: String, batchId: Long, nllThreshold: Double = 10.0,
-      nbThreshold6: Long = 0L, minLogw: Double = 0.0): Unit = {
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val survivors = graft.curation.Serving.admit(
+      nbThreshold6: Long = 0L, minLogw: Double = 0.0): Unit =
+    writeBatchOutput(graft.curation.Serving.admit(
         graft.curation.Serving.admissionScores(batch, lm, nb, dsir),
-        nllThreshold, nbThreshold6, minLogw)
-      .toDF()
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true) // score once: isEmpty probe + write share it
-    try {
-      if (!survivors.isEmpty || fs.exists(outPath))
-        survivors.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally freeLocalCheckpoint(survivors)
-  }
+        nllThreshold, nbThreshold6, minLogw).toDF(), outDir, batchId)
 
   /** [[processAdmissionBatch]] plus the JOIN-SHAPED fourth gate —
     * the memorization/duplication check a real ingest admission
@@ -1262,9 +1204,6 @@ object Pipelines {
       minLogw: Double = 0.0, maxDupFrac: Double = 0.5,
       n: Int = 5, minDocs: Long = 1L): Unit = {
     import graft.curation.Serving
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ws = col("__ws")
     val scored = batch
       .select(col("doc_id"), col("text"),
@@ -1291,22 +1230,13 @@ object Pipelines {
           when(col("n_grams") > 0,
             expr("(dup_grams * 20000 + n_grams) div (2 * n_grams)") /
               lit(10000.0)).as("dup_frac"))
-      val survivors = scored.drop("__ws")
+      writeBatchOutput(scored.drop("__ws")
         .join(per, Seq("doc_id"), "left")
         .filter(col("lm_nll") < nllThreshold &&
           col("nb_d6") > nbThreshold6 &&
           col("dsir_logw") >= minLogw &&
-          (col("dup_frac").isNull || col("dup_frac") <= maxDupFrac))
-        .withColumn("batch_id", lit(batchId))
-        .localCheckpoint(true)
-      try {
-        if (!survivors.isEmpty || fs.exists(outPath))
-          survivors.write
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(outDir)
-      } finally freeLocalCheckpoint(survivors)
+          (col("dup_frac").isNull || col("dup_frac") <= maxDupFrac)),
+        outDir, batchId)
     } finally freeLocalCheckpoint(scored)
   }
 
@@ -1322,8 +1252,7 @@ object Pipelines {
       outDir: String, checkpointDir: String,
       nllThreshold: Double = 10.0, nbThreshold6: Long = 0L,
       minLogw: Double = 0.0, maxDupFrac: Double = 0.5,
-      n: Int = 5, minDocs: Long = 1L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      n: Int = 5, minDocs: Long = 1L): StreamingQuery = {
     val spark = docs.sparkSession
     val lm = graft.curation.Serving.collectLmLiteral(
       graft.textanalysis.TextAnalysis.readLmModel(spark, lmModelDir))
@@ -1332,17 +1261,12 @@ object Pipelines {
     val index = graft.textanalysis.TextAnalysis
       .readMemorizationIndexMerged(spark, gramIndexDir)
       .persist()
-    val q = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    startSink(docs, checkpointDir, () => index.unpersist(false)) {
+      (batch, batchId) =>
         processFullAdmissionBatch(batch, lm, nb, dsir, index, outDir,
           batchId, nllThreshold, nbThreshold6, minLogw, maxDupFrac, n,
           minDocs)
-      }
-      .start()
-    releaseOnTermination(q)(index.unpersist(false))
-    q
+    }
   }
 
   /** The FUSED ingest-admission stream: every micro-batch clears the
@@ -1358,21 +1282,16 @@ object Pipelines {
   def admissionSink(docs: DataFrame, lmModelDir: String,
       nbModelDir: String, dsirModelDir: String, outDir: String,
       checkpointDir: String, nllThreshold: Double = 10.0,
-      nbThreshold6: Long = 0L, minLogw: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      nbThreshold6: Long = 0L, minLogw: Double = 0.0): StreamingQuery = {
     val spark = docs.sparkSession
     val lm = graft.curation.Serving.collectLmLiteral(
       graft.textanalysis.TextAnalysis.readLmModel(spark, lmModelDir))
     val nb = graft.quality.NbClassifier.readNbModel(spark, nbModelDir)
     val dsir = graft.selection.Dsir.readDsirModel(spark, dsirModelDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processAdmissionBatch(batch, lm, nb, dsir, outDir, batchId,
-          nllThreshold, nbThreshold6, minLogw)
-      }
-      .start()
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processAdmissionBatch(batch, lm, nb, dsir, outDir, batchId,
+        nllThreshold, nbThreshold6, minLogw)
+    }
   }
 
   /** The idempotent batch core of the streaming MEMORIZATION gate:
@@ -1386,9 +1305,6 @@ object Pipelines {
   def processMemorizationGateBatch(batch: DataFrame, index: DataFrame,
       outDir: String, batchId: Long, maxDupFrac: Double,
       n: Int = 5): Unit = {
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val scores = graft.textanalysis.TextAnalysis
       .memorizationProbe(batch, index, n)
       .select(col("doc_id"), col("dup_frac"))
@@ -1397,19 +1313,9 @@ object Pipelines {
     // passes through untouched, the same every-row-passes contract as
     // the row-local NB/DSIR gate batches; duplicate-id rows each keep
     // their own row (the probe emits one score per distinct id)
-    val survivors = batch.join(scores, Seq("doc_id"), "left")
+    writeBatchOutput(batch.join(scores, Seq("doc_id"), "left")
       .filter(col("dup_frac").isNull || col("dup_frac") <= maxDupFrac)
-      .drop("dup_frac")
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true)
-    try {
-      if (!survivors.isEmpty || fs.exists(outPath))
-        survivors.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally freeLocalCheckpoint(survivors)
+      .drop("dup_frac"), outDir, batchId)
   }
 
   /** Idempotent batch core of [[bm25DeleteSink]]: each micro-batch
@@ -1445,15 +1351,13 @@ object Pipelines {
 
   /** STREAMING ERASURE for the text index: a stream of doc ids
     * (retention sweeps, deletion requests) continuously tombstones a
-    * written BM25 index — exactly-once via checkpoint + the
-    * idempotent core above. Searches can run mid-stream; each sees
-    * the erasures committed so far. `keyPrefix` names THIS delete
-    * stream; see [[processBm25DeleteBatch]] for why distinct jobs
-    * need distinct prefixes.
+    * written BM25 index through the core above. Searches can run
+    * mid-stream; each sees the erasures committed so far. `keyPrefix`
+    * names THIS delete stream; see [[processBm25DeleteBatch]] for why
+    * distinct jobs need distinct prefixes.
     */
   def bm25DeleteSink(ids: DataFrame, indexDir: String,
-      checkpointDir: String, keyPrefix: String = "stream")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String, keyPrefix: String = "stream"): StreamingQuery = {
     require(keyPrefix.nonEmpty, "keyPrefix must be non-empty")
     // register the prefix AT SINK START, not first non-empty batch: a
     // manual deleteFromBm25Index with a sink-shaped key ("stream-3")
@@ -1463,25 +1367,20 @@ object Pipelines {
     // processBm25DeleteBatch callers — idempotent marker create)
     graft.ops.SearchOps.registerDeleteStreamPrefix(
       ids.sparkSession, indexDir, keyPrefix)
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBm25DeleteBatch(batch, indexDir, batchId, keyPrefix)
-      }
-      .start()
+    startSink(ids, checkpointDir) { (batch, batchId) =>
+      processBm25DeleteBatch(batch, indexDir, batchId, keyPrefix)
+    }
   }
 
   /** The IVF twin: a stream of vec ids tombstones a written IVF (or
-    * quantized-IVF) index. Same exactly-once story — the tombstone
-    * write dynamic-overwrites its own `batch_id=<keyPrefix>-N`
-    * partition — and the same stream-identity rule: a fresh
+    * quantized-IVF) index; the tombstone write owns its
+    * `batch_id=<keyPrefix>-N` partition, with the same stream-identity
+    * rule: a fresh
     * checkpoint restarts batch ids at 0, so reusing a prefix
     * resurrects the earlier stream's erasures.
     */
   def ivfDeleteSink(ids: DataFrame, indexDir: String,
-      checkpointDir: String, keyPrefix: String = "stream")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String, keyPrefix: String = "stream"): StreamingQuery = {
     require(keyPrefix.nonEmpty, "keyPrefix must be non-empty")
     // register AT SINK START (the bm25DeleteSink rationale): manual
     // deleteFromIvfIndex keys shaped "<keyPrefix>-N" must fail loudly
@@ -1489,15 +1388,11 @@ object Pipelines {
     // non-empty batch
     graft.similarity.Similarity.registerIvfDeleteStreamPrefix(
       ids.sparkSession, indexDir, keyPrefix)
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.similarity.Similarity.deleteFromIvfIndexSink(
-            batch.select(col("vec_id")), indexDir, s"$keyPrefix-$batchId")
-      }
-      .start()
+    startSink(ids, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        graft.similarity.Similarity.deleteFromIvfIndexSink(
+          batch.select(col("vec_id")), indexDir, s"$keyPrefix-$batchId")
+    }
   }
 
   /** Idempotent batch core of [[memorizationIndexSink]]: each
@@ -1554,8 +1449,8 @@ object Pipelines {
   /** STREAMING ERASURE for the gram index — the right-to-be-forgotten
     * sink the mergeable family was missing (BM25 and IVF got theirs
     * in round 12): a stream of deletion requests continuously
-    * tombstones a written memorization index, exactly-once via
-    * checkpoint + the idempotent core above. The mergeable-negative-
+    * tombstones a written memorization index through the core above.
+    * The mergeable-negative-
     * counts design makes this the easy case — each batch appends its
     * own (g, −nd) partition; nothing is read, merged, or rewritten,
     * and [[graft.textanalysis.TextAnalysis.readMemorizationIndexMerged]]
@@ -1570,7 +1465,7 @@ object Pipelines {
     */
   def memorizationDeleteSink(docs: DataFrame, indexDir: String,
       checkpointDir: String, n: Int = 5, keyPrefix: String = "stream")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(keyPrefix.nonEmpty, "keyPrefix must be non-empty")
     // erasing from a nonexistent index is a misconfiguration, not a
     // no-op — fail at stream start (the memorizationIndexSink rule)
@@ -1580,24 +1475,18 @@ object Pipelines {
       s"no gram index at $indexDir — nothing to erase from")
     graft.textanalysis.TextAnalysis.registerMemStreamPrefix(
       docs.sparkSession, indexDir, keyPrefix, "_delete_streams")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processMemorizationDeleteBatch(batch, indexDir, batchId, n,
-          keyPrefix)
-      }
-      .start()
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processMemorizationDeleteBatch(batch, indexDir, batchId, n, keyPrefix)
+    }
   }
 
   /** STREAMING INGESTION for the memorization gram index — the
     * maintained family an LLM-data pipeline updates most often (every
     * new corpus batch changes what counts as memorized), now fed
     * continuously: docs (doc_id, text) append their n-gram counts to
-    * a WRITTEN index exactly-once via checkpoint + the idempotent
-    * core above. The mergeable-counts design makes this the easy
-    * sink: appends are append-only partitions (no read-modify-write,
-    * the base is never read), and
+    * a WRITTEN index through the core above. The mergeable-counts
+    * design makes this the easy sink: appends are append-only
+    * partitions (no read-modify-write, the base is never read), and
     * [[graft.textanalysis.TextAnalysis.readMemorizationIndexMerged]]
     * consolidates at serve time — stream-built ≡ retrain-on-union by
     * additivity (q_memorization_probe_streamed shares the full-train
@@ -1607,7 +1496,7 @@ object Pipelines {
     */
   def memorizationIndexSink(docs: DataFrame, indexDir: String,
       checkpointDir: String, n: Int = 5, keyPrefix: String = "stream")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(keyPrefix.nonEmpty, "keyPrefix must be non-empty")
     // the sink APPENDS to a written index: a stream-only directory
     // would leave the consolidating reader with nothing but hidden
@@ -1624,14 +1513,9 @@ object Pipelines {
     // "<keyPrefix>-N" fail loudly instead of being overwritten later
     graft.textanalysis.TextAnalysis.registerMemStreamPrefix(
       docs.sparkSession, indexDir, keyPrefix, "_ingest_streams")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processMemorizationIngestBatch(batch, indexDir, batchId, n,
-          keyPrefix)
-      }
-      .start()
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processMemorizationIngestBatch(batch, indexDir, batchId, n, keyPrefix)
+    }
   }
 
   /** Streaming memorization admission gate: the index is read ONCE
@@ -1645,44 +1529,18 @@ object Pipelines {
     */
   def memorizationGateSink(docs: DataFrame, indexDir: String,
       outDir: String, checkpointDir: String, maxDupFrac: Double = 0.5,
-      n: Int = 5): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
+      n: Int = 5): StreamingQuery = {
     val index = graft.textanalysis.TextAnalysis
-      .readMemorizationIndex(spark, indexDir)
+      .readMemorizationIndex(docs.sparkSession, indexDir)
       .persist()
-    val q = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processMemorizationGateBatch(batch, index, outDir, batchId,
-          maxDupFrac, n)
-      }
-      .start()
     // the cached corpus-scale index must not outlive its stream
     // (unlike the lm/dsir/nb sinks, whose models are driver-side
     // literals)
-    releaseOnTermination(q)(index.unpersist(false))
-    q
-  }
-
-  /** Run `release` once `q` terminates, then retire the listener:
-    * a cache scoped to one stream must not outlive it. The isActive
-    * re-check closes the window where the query died before the
-    * listener registered (a double release is harmless).
-    */
-  private def releaseOnTermination(
-      q: org.apache.spark.sql.streaming.StreamingQuery)(
-      release: => Unit): Unit = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    val streams = q.sparkSession.streams
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) { release; streams.removeListener(this) }
+    startSink(docs, checkpointDir, () => index.unpersist(false)) {
+      (batch, batchId) =>
+        processMemorizationGateBatch(batch, index, outDir, batchId,
+          maxDupFrac, n)
     }
-    streams.addListener(listener)
-    if (!q.isActive) { release; streams.removeListener(listener) }
   }
 
   /** The idempotent batch core of the streaming COMMUNITY-ASSIGNMENT
@@ -1698,24 +1556,12 @@ object Pipelines {
   def processCommunityAssignBatch(batch: DataFrame, labels: DataFrame,
       edgesOf: DataFrame => DataFrame, outDir: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val assigned = graft.graph.Communities.assignToCommunities(
       batch.select(col("doc_id").as("node")), edgesOf(batch), "s", "t",
       labels)
       .select(col("node").as("doc_id"), col("community"))
-    val out = batch.join(assigned, Seq("doc_id"), "left")
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true)
-    try {
-      if (!out.isEmpty || fs.exists(outPath))
-        out.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally freeLocalCheckpoint(out)
+    writeBatchOutput(batch.join(assigned, Seq("doc_id"), "left"), outDir,
+      batchId)
   }
 
   /** Streaming ingest-time community assignment: the frozen LPA
@@ -1730,22 +1576,14 @@ object Pipelines {
     */
   def communityAssignSink(docs: DataFrame, labelsDir: String,
       edgesOf: DataFrame => DataFrame, outDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
+      checkpointDir: String): StreamingQuery = {
     val labels = graft.graph.Communities
-      .readCommunityLabels(spark, labelsDir)
+      .readCommunityLabels(docs.sparkSession, labelsDir)
       .persist()
-    val q = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    startSink(docs, checkpointDir, () => labels.unpersist(false)) {
+      (batch, batchId) =>
         processCommunityAssignBatch(batch, labels, edgesOf, outDir, batchId)
-      }
-      .start()
-    // the cached labels table must not outlive its stream
-    releaseOnTermination(q)(labels.unpersist(false))
-    q
+    }
   }
 
   /** The idempotent batch core of the streaming MEDIA-DEDUP admission
@@ -1763,25 +1601,13 @@ object Pipelines {
   def processMediaDedupBatch(batch: DataFrame, index: DataFrame,
       fingerprintsOf: DataFrame => DataFrame, outDir: String,
       batchId: Long, maxDist: Int): Unit = {
-    val spark = batch.sparkSession
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fps = fingerprintsOf(batch.filter(col("doc_id").isNotNull))
       .toDF("doc_id", "fp")
     val dups = graft.dedup.Dedup
       .hammingProbe(fps, index, "doc_id", "fp", maxDist)
       .select(col("probe_id").as("doc_id")).distinct()
-    val survivors = batch.join(dups, Seq("doc_id"), "left_anti")
-      .withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true)
-    try {
-      if (!survivors.isEmpty || fs.exists(outPath))
-        survivors.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally freeLocalCheckpoint(survivors)
+    writeBatchOutput(batch.join(dups, Seq("doc_id"), "left_anti"), outDir,
+      batchId)
   }
 
   /** Streaming ingest-time media near-dup gate: the frozen
@@ -1796,32 +1622,22 @@ object Pipelines {
   def mediaDedupSink(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, maxDist: Int = 1,
       fingerprintsOf: DataFrame => DataFrame =
-        graft.multimodal.Multimodal.videoHashes)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    val index = graft.dedup.Dedup.readFingerprintIndex(spark, indexDir)
+        graft.multimodal.Multimodal.videoHashes): StreamingQuery = {
+    val index = graft.dedup.Dedup
+      .readFingerprintIndex(docs.sparkSession, indexDir)
       .select(col("id").as("doc_id"), col("fp"))
       .persist()
-    val q = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    startSink(docs, checkpointDir, () => index.unpersist(false)) {
+      (batch, batchId) =>
         processMediaDedupBatch(batch, index, fingerprintsOf, outDir,
           batchId, maxDist)
-      }
-      .start()
-    // the cached index must not outlive its stream
-    releaseOnTermination(q)(index.unpersist(false))
-    q
+    }
   }
 
   /** Idempotent batch core of [[bm25IndexSink]]: each micro-batch's
     * postings land partitioned by (bucket, batch_id) and its corpus
     * scalars as one (n_docs, sum_dl) ledger row partitioned by
-    * (batch_id) — both DYNAMIC partition overwrites, so a
-    * checkpoint-replayed batch recomputes identical rows and
-    * overwrites exactly its own partitions (the segmentDedupSink
-    * idempotence story applied to the inverted file). Serving
+    * (batch_id); a replayed batch recomputes identical rows. Serving
     * (`SearchOps.searchBm25FromIndex`) sums the ledger — exact longs,
     * so stream-built ≡ batch-built ≡ one-shot rebuild bit-for-bit —
     * and prunes postings on the FIRST partition level (bucket), so
@@ -1833,119 +1649,83 @@ object Pipelines {
     if (batch.isEmpty) return
     val base = graft.ops.SearchOps.bm25Base(batch).localCheckpoint(true)
     try {
-      graft.ops.SearchOps.bm25Postings(base)
-        .withColumn("batch_id", lit(batchId))
-        .write.partitionBy("bucket", "batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(indexDir + "/postings")
-      graft.ops.SearchOps.bm25StatsRow(base)
-        .withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(indexDir + "/stats")
+      writeBatchPartition(graft.ops.SearchOps.bm25Postings(base),
+        indexDir + "/postings", batchId, nonEmpty = true, "bucket")
+      writeBatchPartition(graft.ops.SearchOps.bm25StatsRow(base),
+        indexDir + "/stats", batchId, nonEmpty = true)
       // keep the delete sidecar in step with the streamed docs (the
       // appendToBm25Index rule): without a doclens row, a later
       // deleteFromBm25Index of a stream-ingested doc would tombstone
       // its postings but MISS it in the negative scalar correction —
       // served n_docs/avgdl silently diverge from rebuild-on-remaining
-      // (caught by IndexLifecycleSpec's interleaved sequence)
-      val spark = batch.sparkSession
-      val dlDir = new org.apache.hadoop.fs.Path(indexDir + "/doclens")
-      if (dlDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(dlDir))
-        graft.ops.SearchOps.bm25Doclens(base)
-          .withColumn("batch_id", lit(batchId))
-          .write.partitionBy("dbucket", "batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(indexDir + "/doclens")
+      // (caught by IndexLifecycleSpec's interleaved sequence). Only an
+      // index that already keeps the sidecar gets one
+      writeBatchPartition(graft.ops.SearchOps.bm25Doclens(base),
+        indexDir + "/doclens", batchId, nonEmpty = false, "dbucket")
     } finally freeLocalCheckpoint(base)
   }
 
   /** The streaming entry: docs (doc_id, text) continuously ingest
-    * into a servable BM25 inverted file at `indexDir`, exactly-once
-    * via checkpoint + the idempotent batch core above. The streaming
+    * into a servable BM25 inverted file at `indexDir` through the batch
+    * core above. The streaming
     * counterpart of `SearchOps.appendToBm25Index` — a search can run
     * mid-stream against whatever has been committed.
     */
   def bm25IndexSink(docs: DataFrame, indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBm25IngestBatch(batch, indexDir, batchId)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processBm25IngestBatch(batch, indexDir, batchId)
+    }
 
   /** Idempotent batch core of [[ivfIndexSink]]: the micro-batch
     * assigns against the FROZEN build centroids (so stream-built ≡
     * batch rebuild exactly — the appendToIvfIndex claim) and lands
-    * partitioned by (cell, batch_id) under dynamic overwrite: a
-    * replayed batch recomputes identical rows and overwrites its own
-    * partitions. Probes prune on the first level (cell) across all
+    * partitioned by (cell, batch_id); a replayed batch recomputes
+    * identical rows. Probes prune on the first level (cell) across all
     * batches. Empty batches are a no-op.
     */
   def processIvfIngestBatch(batch: DataFrame, cents: Seq[Seq[Double]],
       indexDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    graft.similarity.Similarity.ivfAssignedForWrite(batch, cents)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(indexDir)
+    writeBatchPartition(
+      graft.similarity.Similarity.ivfAssignedForWrite(batch, cents),
+      indexDir, batchId, nonEmpty = true, "cell")
   }
 
   /** The streaming entry: vectors (vec_id, embedding, …) continuously
     * ingest into a servable cell-partitioned IVF index at `indexDir`
-    * against frozen centroids, exactly-once via checkpoint + the
-    * idempotent batch core above — the streaming counterpart of
+    * against frozen centroids through the batch core above — the
+    * streaming counterpart of
     * `Similarity.appendToIvfIndex`.
     */
   def ivfIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
-      indexDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processIvfIngestBatch(batch, cents, indexDir, batchId)
-      }
-      .start()
+      indexDir: String, checkpointDir: String): StreamingQuery =
+    startSink(vectors, checkpointDir) { (batch, batchId) =>
+      processIvfIngestBatch(batch, cents, indexDir, batchId)
+    }
 
   /** STREAMING batched serving (round 15 — the online form of the
     * high-QPS window): each micro-batch of queries
     * (query_id, embedding) serves through the QUERY-TABLE batched
     * plan against the WRITTEN float IVF index — one broadcast-probe
     * scan per trigger regardless of the batch's Q — and the k rows
-    * per query land batch-stamped in `outDir`. Idempotent under
-    * checkpoint replay: a re-run of batch N dynamic-overwrites
-    * exactly its own `batch_id=N` partition with the identical
-    * ranking (the serve reads only the frozen index and the batch).
+    * per query land batch-stamped in `outDir`. A replay of batch N
+    * rewrites the identical ranking (the serve reads only the frozen
+    * index and the batch).
     * Duplicate ids WITHIN one micro-batch fail loudly (the
     * query-table guard); across micro-batches the same id re-serves
     * — later answers live in later partitions, the catalog contract.
     */
   def knnServingSink(queries: DataFrame, cents: Seq[Seq[Double]],
       indexPath: String, outDir: String, checkpointDir: String,
-      k: Int = 10, nProbe: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processKnnServeBatch(batch, cents, indexPath, outDir, batchId,
-          k, nProbe)
-      }
-      .start()
+      k: Int = 10, nProbe: Int = 2): StreamingQuery =
+    startSink(queries, checkpointDir) { (batch, batchId) =>
+      processKnnServeBatch(batch, cents, indexPath, outDir, batchId,
+        k, nProbe)
+    }
 
   /** Idempotent batch core of [[knnServingSink]]: the query-table
-    * serve over the written index, (batch_id) dynamic overwrite —
-    * same recovery design as every sink here. Empty micro-batches
-    * write nothing (and never create an unreadable empty dir).
+    * serve over the written index. Empty micro-batches write nothing.
     */
   def processKnnServeBatch(batch: DataFrame, cents: Seq[Seq[Double]],
       indexPath: String, outDir: String, batchId: Long, k: Int,
@@ -1956,61 +1736,31 @@ object Pipelines {
     // reads the index schema): a mid-fold catalog refuses the whole
     // trigger, not just the write
     requireNoFoldInProgress(spark, outDir)
-    writeServedBatch(graft.similarity.Similarity.ivfMultiTopKFromIndexQT(
+    writeBatchOutput(graft.similarity.Similarity.ivfMultiTopKFromIndexQT(
       spark.read.parquet(indexPath), cents, batch, k, nProbe),
       outDir, batchId)
   }
 
-  /** The serve sinks' shared batch tail: stamp, checkpoint the
-    * bounded k×Q result once (so the empty-result guard below never
-    * re-runs the serve, and the write plan never reads outDir), and
-    * dynamic-overwrite exactly this batch's partition. An
-    * all-degenerate batch serves no rows: creating a footerless
-    * parquet dir on the FIRST batch would poison every later read
-    * (writeBatchPartition's contract).
-    */
-  private def writeServedBatch(result: DataFrame, outDir: String,
-      batchId: Long): Unit = {
-    val spark = result.sparkSession
-    requireNoFoldInProgress(spark, outDir)
-    val served = result.withColumn("batch_id", lit(batchId))
-      .localCheckpoint(true)
-    try {
-      val out = new org.apache.hadoop.fs.Path(outDir)
-      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!served.isEmpty || fs.exists(out))
-        served.write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-    } finally graft.Frames.freeLocalCheckpoint(served)
-  }
-
   /** STREAMING batched serving for the HOT tier (round-16 verdict
     * #3): [[knnServingSink]]'s exact design — query-table plan per
-    * micro-batch, batch-stamped catalog, replay-idempotent dynamic
-    * overwrite — over the COMPRESSED (int8) store, the tier the
-    * latency/recall book says a deployment actually serves hot
+    * micro-batch, batch-stamped catalog — over the COMPRESSED (int8)
+    * store, the tier the latency/recall book says a deployment actually
+    * serves hot
     * (≈float recall at 4× less store I/O). The layout-agnostic
     * [[graft.similarity.Similarity.readIvfIndex]] reader serves the
     * MAINTAINED store (tombstone anti-join) through the same plan.
     */
   def quantizedServingSink(queries: DataFrame, cents: Seq[Seq[Double]],
       indexPath: String, outDir: String, checkpointDir: String,
-      k: Int = 10, nProbe: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processQuantizedServeBatch(batch, cents, indexPath, outDir,
-          batchId, k, nProbe)
-      }
-      .start()
+      k: Int = 10, nProbe: Int = 2): StreamingQuery =
+    startSink(queries, checkpointDir) { (batch, batchId) =>
+      processQuantizedServeBatch(batch, cents, indexPath, outDir,
+        batchId, k, nProbe)
+    }
 
   /** Idempotent batch core of [[quantizedServingSink]]: the int8
     * query-table serve (in-plan query quantization, tombstone-aware
-    * reader) over the written index, (batch_id) dynamic overwrite.
+    * reader) over the written index.
     */
   def processQuantizedServeBatch(batch: DataFrame,
       cents: Seq[Seq[Double]], indexPath: String, outDir: String,
@@ -2018,7 +1768,7 @@ object Pipelines {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     requireNoFoldInProgress(spark, outDir)
-    writeServedBatch(
+    writeBatchOutput(
       graft.similarity.Similarity.quantizedMultiTopKFromIndexQT(
         graft.similarity.Similarity.readIvfIndex(spark, indexPath),
         cents, batch, k, nProbe),
@@ -2035,16 +1785,11 @@ object Pipelines {
       cents: Seq[Seq[Double]],
       cb: graft.similarity.Similarity.PqCodebook, indexPath: String,
       embeddingsPath: String, outDir: String, checkpointDir: String,
-      k: Int = 10, nProbe: Int = 2, shortlist: Int = 40)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processPqRefinedServeBatch(batch, cents, cb, indexPath,
-          embeddingsPath, outDir, batchId, k, nProbe, shortlist)
-      }
-      .start()
+      k: Int = 10, nProbe: Int = 2, shortlist: Int = 40): StreamingQuery =
+    startSink(queries, checkpointDir) { (batch, batchId) =>
+      processPqRefinedServeBatch(batch, cents, cb, indexPath,
+        embeddingsPath, outDir, batchId, k, nProbe, shortlist)
+    }
 
   /** Idempotent batch core of [[pqRefinedServingSink]]. */
   def processPqRefinedServeBatch(batch: DataFrame,
@@ -2055,7 +1800,7 @@ object Pipelines {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     requireNoFoldInProgress(spark, outDir)
-    writeServedBatch(
+    writeBatchOutput(
       graft.similarity.Similarity.pqMultiTopKRefinedQT(
         spark.read.parquet(indexPath),
         spark.read.parquet(embeddingsPath), cents, cb, batch, k,
@@ -2066,7 +1811,7 @@ object Pipelines {
   /** Idempotent batch core of [[quantizedIvfIndexSink]] — the int8
     * twin of [[processIvfIngestBatch]]: frozen-centroid assignment
     * from the TRUE float vectors, per-row symmetric quantization of
-    * the stored entries, (cell, batch_id) dynamic overwrite. Same
+    * the stored entries, (cell, batch_id) partitions. Same
     * exactness argument as the batch append: assignment and
     * quantization are both per-row and index-independent, so
     * stream-built ≡ rebuild entry for entry.
@@ -2074,47 +1819,36 @@ object Pipelines {
   def processQuantizedIvfIngestBatch(batch: DataFrame,
       cents: Seq[Seq[Double]], indexDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    graft.similarity.Similarity.quantizedAssignedForWrite(batch, cents)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(indexDir)
+    writeBatchPartition(
+      graft.similarity.Similarity.quantizedAssignedForWrite(batch, cents),
+      indexDir, batchId, nonEmpty = true, "cell")
   }
 
   /** Idempotent batch core of [[pqIndexSink]] — the IVF-PQ member:
     * frozen coarse assignment + frozen-codebook encoding per
-    * micro-batch, (cell, batch_id) dynamic overwrite.
+    * micro-batch, (cell, batch_id) partitions.
     */
   def processPqIngestBatch(batch: DataFrame, cents: Seq[Seq[Double]],
       cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    graft.similarity.Similarity.pqAssignedForWrite(batch, cents, cb)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(indexDir)
+    writeBatchPartition(
+      graft.similarity.Similarity.pqAssignedForWrite(batch, cents, cb),
+      indexDir, batchId, nonEmpty = true, "cell")
   }
 
   /** Streaming ingestion into the IVF-PQ index — the composed
     * 100 TB serving shape (directory pruning over 8-byte codes) fed
-    * continuously; exactly-once via checkpoint + the idempotent core
-    * above, stream-built ≡ rebuild by the same frozen-literals
+    * continuously through the core above; stream-built ≡ rebuild by
+    * the same frozen-literals
     * argument as the batch append.
     */
   def pqIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
       cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processPqIngestBatch(batch, cents, cb, indexDir, batchId)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(vectors, checkpointDir) { (batch, batchId) =>
+      processPqIngestBatch(batch, cents, cb, indexDir, batchId)
+    }
 
   /** Idempotent batch core of [[residualPqIndexSink]]: the same
     * frozen (cents, codebook) pair as the batch append — assignment
@@ -2126,68 +1860,49 @@ object Pipelines {
       cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    graft.similarity.Similarity.residualPqAssignedForWrite(batch, cents, cb)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(indexDir)
+    writeBatchPartition(
+      graft.similarity.Similarity.residualPqAssignedForWrite(batch, cents, cb),
+      indexDir, batchId, nonEmpty = true, "cell")
   }
 
   /** Streaming ingestion into the RESIDUAL-encoded IVF-PQ index —
-    * same layout, same exactly-once argument as [[pqIndexSink]].
+    * same layout, same rebuild argument as [[pqIndexSink]].
     */
   def residualPqIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
       cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processResidualPqIngestBatch(batch, cents, cb, indexDir, batchId)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(vectors, checkpointDir) { (batch, batchId) =>
+      processResidualPqIngestBatch(batch, cents, cb, indexDir, batchId)
+    }
 
   /** Streaming ingestion into the COMPRESSED ANN index — the int8
     * twin of [[ivfIndexSink]], closing the family asymmetry: at
     * 100 TB the compressed index is the one a deployment actually
     * serves, so it is the one continuous ingestion must feed.
-    * Exactly-once via checkpoint + the idempotent core above; probes
-    * run mid-stream against whatever is committed, and the numeric
+    * Probes run mid-stream against whatever is committed, and the numeric
     * batch clock makes the result as-of-readable like the float
     * sink's.
     */
   def quantizedIvfIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
-      indexDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processQuantizedIvfIngestBatch(batch, cents, indexDir, batchId)
-      }
-      .start()
+      indexDir: String, checkpointDir: String): StreamingQuery =
+    startSink(vectors, checkpointDir) { (batch, batchId) =>
+      processQuantizedIvfIngestBatch(batch, cents, indexDir, batchId)
+    }
 
   /** The streaming entry: docs (doc_id, text, …) → LM-quality-gated
-    * corpus at `outDir`, exactly-once via checkpoint + the idempotent
-    * batch core above.
+    * corpus at `outDir` through the batch core above.
     */
   def lmGateSink(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String, nllThreshold: Double = 10.0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     // read the frozen artifact ONCE per stream, not once per
     // micro-batch: the model never changes, so re-listing its files
     // and footers on the hot path would be pure per-batch latency
     val model = graft.textanalysis.TextAnalysis
       .readLmModel(docs.sparkSession, modelDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processLmGateBatch(batch, model, outDir, batchId, nllThreshold)
-      }
-      .start()
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processLmGateBatch(batch, model, outDir, batchId, nllThreshold)
+    }
   }
 
   /** Beyond-reference extension: STREAMING CURATION — the online form
@@ -2207,11 +1922,10 @@ object Pipelines {
     * ascending-id arrival this IS the one-shot min-id result, the
     * parity the spec pins.
     *
-    * Exactly-once: output, digest index, and telemetry all write
-    * batch-id partitions with dynamic overwrite; the index probe
-    * excludes the batch's own partition, so a checkpoint replay
-    * neither self-drops nor duplicates (the segment-dedup sink's
-    * recovery design).
+    * Replay: output, digest index, and telemetry are all batch
+    * partitions, and the index probe excludes the batch's own
+    * partition, so a replay neither self-drops nor duplicates (the
+    * segment-dedup sink's design).
     */
   def processCurationBatch(batch: DataFrame, benchmark: DataFrame,
       model: graft.textanalysis.TextAnalysis.LmModel, indexDir: String,
@@ -2287,26 +2001,21 @@ object Pipelines {
 
   /** The streaming entry: docs (doc_id, text, source) → curated
     * corpus at `outDir` + digest index at `indexDir` + per-batch gate
-    * telemetry at `telemetryDir`, exactly-once via checkpoint + the
-    * idempotent batch core above. The frozen LM loads ONCE per stream
+    * telemetry at `telemetryDir` through the batch core above. The
+    * frozen LM loads ONCE per stream
     * (lmGateSink's rule); the benchmark frame is fixed for the
     * stream's lifetime.
     */
   def curationSink(docs: DataFrame, benchmark: DataFrame, modelDir: String,
       indexDir: String, outDir: String, telemetryDir: String,
       checkpointDir: String, nllThreshold: Double = 10.0,
-      contaminationThreshold: Double = 0.4)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      contaminationThreshold: Double = 0.4): StreamingQuery = {
     val model = graft.textanalysis.TextAnalysis
       .readLmModel(docs.sparkSession, modelDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCurationBatch(batch, benchmark, model, indexDir, outDir,
-          telemetryDir, batchId, nllThreshold, contaminationThreshold)
-      }
-      .start()
+    startSink(docs, checkpointDir) { (batch, batchId) =>
+      processCurationBatch(batch, benchmark, model, indexDir, outDir,
+        telemetryDir, batchId, nllThreshold, contaminationThreshold)
+    }
   }
 
   /** Beyond-reference extension: stream-stream inner join — each

@@ -31,4 +31,42 @@ class OnePathSpec extends AnyFunSuite {
     assert(filesMentioning("SparkSession.builder") ===
       Seq("graft/Sessions.scala"))
   }
+
+  // the streaming layer: one sink scaffold, one batch-partition writer
+  private lazy val pipelines =
+    Files.readString(root.resolve("graft/streaming/Pipelines.scala"))
+
+  private def count(text: String, token: String): Int =
+    java.util.regex.Pattern.quote(token).r.findAllMatchIn(text).size
+
+  /** The source of one member of Pipelines: from its `def` line to the
+    * next member or doc comment at the object's indentation.
+    */
+  private def member(name: String): String = {
+    val start = pipelines.indexOf(s"def $name(")
+    assert(start >= 0, s"no def $name in Pipelines.scala")
+    val next = "\n  (?:private |/\\*\\*|def |val |@)".r
+      .findFirstMatchIn(pipelines.substring(start)).map(_.start)
+      .getOrElse(pipelines.length - start)
+    pipelines.substring(start, start + next)
+  }
+
+  test("Pipelines.scala starts every stream in one scaffold") {
+    assert(count(pipelines, ".writeStream") === 1)
+    assert(count(member("startSink"), ".writeStream") === 1)
+  }
+
+  test("Pipelines.scala dynamic-overwrites in the batch writer and the " +
+      "retention fold only") {
+    assert(count(pipelines, "partitionOverwriteMode") === 2)
+    assert(count(member("writeBatchPartition"), "partitionOverwriteMode") === 1)
+    assert(count(member("compactBatchOutputKeeping"),
+      "partitionOverwriteMode") === 1)
+  }
+
+  test("StreamingQueryListener appears only inside the sink scaffold") {
+    val inScaffold = count(member("startSink"), "StreamingQueryListener")
+    assert(inScaffold > 0)
+    assert(count(pipelines, "StreamingQueryListener") === inScaffold)
+  }
 }

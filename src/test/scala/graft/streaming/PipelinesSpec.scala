@@ -58,7 +58,7 @@ class PipelinesSpec extends SparkSpec {
     // the reference's flagship lifecycle (SURVEY §3.1): document event →
     // quality enrichment → searchable index → GET /search
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-e2e").toString
+    val dir = tempDir("graft-e2e")
     val mem = MemoryStream[(String, String)]
     val enriched = Pipelines.qualityEnrich(mem.toDF().toDF("key", "value"))
     val q = Pipelines.startIndexSink(enriched, s"$dir/index", s"$dir/ckpt")
@@ -214,7 +214,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("streaming index sink merges micro-batches into the index table") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-index").toString
+    val dir = tempDir("graft-index")
     val mem = MemoryStream[(String, String)]
     val streamDf = mem.toDF().toDF("key", "value")
     val enriched = Pipelines.qualityEnrich(streamDf)
@@ -235,7 +235,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("index sink rewrites only the buckets a micro-batch touches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-dirty").toString
+    val dir = tempDir("graft-dirty")
     val mem = MemoryStream[(String, String)]
     val enriched = Pipelines.qualityEnrich(mem.toDF().toDF("key", "value"))
       .select($"doc_id", $"version", $"ts_ms", $"quality_score")
@@ -271,7 +271,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("index sink heals a crash caught between the rotation renames") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-heal").toString
+    val dir = tempDir("graft-heal")
     val mem = MemoryStream[(String, String)]
     val enriched = Pipelines.qualityEnrich(mem.toDF().toDF("key", "value"))
       .select($"doc_id", $"version", $"ts_ms", $"quality_score")
@@ -302,7 +302,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("bucketed index point lookup prunes to one bucket partition") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-probe").toString
+    val dir = tempDir("graft-probe")
     val mem = MemoryStream[(String, String)]
     val enriched = Pipelines.qualityEnrich(mem.toDF().toDF("key", "value"))
       .select($"doc_id", $"version", $"ts_ms", $"quality_score")
@@ -371,7 +371,7 @@ class PipelinesSpec extends SparkSpec {
   test("index point lookup: one job, one bucket directory listed; " +
       "building readIndex runs no job") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-pinned").toString
+    val dir = tempDir("graft-pinned")
     val (_, q) = preloadedSink(dir, 200)
     q.stop()
     val (_, readLog) = logJobs(Pipelines.readIndex(spark, s"$dir/index"))
@@ -394,7 +394,7 @@ class PipelinesSpec extends SparkSpec {
   test("index point lookup casts the probe to the key type: an Int " +
       "literal finds its Long key") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-probe-int").toString
+    val dir = tempDir("graft-probe-int")
     val (_, q) = preloadedSink(dir, 200)
     q.stop()
     // xxhash64 of an Int and of a Long differ: the probe must be cast
@@ -410,7 +410,7 @@ class PipelinesSpec extends SparkSpec {
   test("index sink batch: at most 3 jobs, its write stage one task per " +
       "dirty bucket up to the default parallelism") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-jobs").toString
+    val dir = tempDir("graft-jobs")
     val (mem, q) = preloadedSink(dir, 200)
     val parallelism = spark.sparkContext.defaultParallelism
     val rest = survivors(200)
@@ -433,7 +433,7 @@ class PipelinesSpec extends SparkSpec {
   test("index sink refuses a batch whose nBuckets or schema differs " +
       "from the pinned layout, leaving the index byte-identical") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-mismatch").toString
+    val dir = tempDir("graft-mismatch")
     val (_, q) = preloadedSink(dir, 100)
     q.stop()
     val root = new java.io.File(s"$dir/index")
@@ -473,7 +473,7 @@ class PipelinesSpec extends SparkSpec {
   test("index sink breaks (version, ts_ms) ties as the batch upsertByKey " +
       "replay does") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-tie").toString
+    val dir = tempDir("graft-tie")
     val mem = MemoryStream[(Long, Int, Long, String)]
     val q = Pipelines.startIndexSink(
       mem.toDF().toDF("doc_id", "version", "ts_ms", "payload"),
@@ -530,8 +530,7 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("streaming near-dup index: cross-batch dedup, replay-idempotent") {
-    val indexDir = java.nio.file.Files
-      .createTempDirectory("graft_neardup_idx").toString + "/idx"
+    val indexDir = tempDir("graft_neardup_idx") + "/idx"
     def ids() = spark.read.parquet(indexDir)
       .select("id").collect().map(_.getLong(0)).toSet
     val fox = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -558,12 +557,12 @@ class PipelinesSpec extends SparkSpec {
 
   test("streaming near-dup sink end-to-end over MemoryStream micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_neardup_e2e")
-    val indexDir = base.toString + "/idx"
+    val base = tempDir("graft_neardup_e2e")
+    val indexDir = base + "/idx"
     val fox = "the quick brown fox jumps over the lazy dog near the river bank"
     val mem = MemoryStream[(Long, String)]
     val q = Pipelines.nearDupIndexingSink(
-      mem.toDS().toDF("doc_id", "text"), indexDir, base.toString + "/ckpt")
+      mem.toDS().toDF("doc_id", "text"), indexDir, base + "/ckpt")
     try {
       mem.addData(Seq((1L, fox)))
       q.processAllAvailable()
@@ -578,8 +577,7 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("streaming segment dedup: cross-batch first occurrence, replay-idempotent") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_segdedup").toString
+    val base = tempDir("graft_segdedup")
     val indexDir = base + "/idx"; val outDir = base + "/out"
     def docs() = spark.read.parquet(outDir)
       .select("doc_id", "text").collect()
@@ -607,8 +605,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("compactBatchOutputKeeping on the near-dup signature catalog: " +
       "later batches still dedup against the folded history") {
-    val indexDir = java.nio.file.Files
-      .createTempDirectory("graft_ndret").toString + "/idx"
+    val indexDir = tempDir("graft_ndret") + "/idx"
     Pipelines.processNearDupBatch(
       Seq((1L, "the quick brown fox jumps over the lazy dog today"))
         .toDF("doc_id", "text"), indexDir, 0L)
@@ -651,8 +648,7 @@ class PipelinesSpec extends SparkSpec {
   test("compactBatchOutputKeeping: catalog retention folds all but the " +
       "kept batches, full contents invariant, kept batch addressable, " +
       "folded names gone, replay semantics intact") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_segret_spec").toString
+    val base = tempDir("graft_segret_spec")
     val indexDir = base + "/idx"; val outDir = base + "/out"
     (0L to 2L).foreach { b =>
       Pipelines.processSegmentDedupBatch(
@@ -709,8 +705,7 @@ class PipelinesSpec extends SparkSpec {
     assert(Pipelines.readBatchOutputAsOf(spark, outDir, 2L)
       .drop("batch_id").collect().map(_.toSeq).toSet === outBefore)
     // a non-batch-stamped table is rejected loudly
-    val plain = java.nio.file.Files
-      .createTempDirectory("graft_asof_plain").toString + "/t"
+    val plain = tempDir("graft_asof_plain") + "/t"
     Seq((1L, "x")).toDF("doc_id", "text").write.parquet(plain)
     intercept[IllegalArgumentException] {
       Pipelines.readBatchOutputAsOf(spark, plain, 1L)
@@ -719,8 +714,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("streaming segment dedup sink ≡ one-shot batch dedup (id order)") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_segdedup_e2e").toString
+    val base = tempDir("graft_segdedup_e2e")
     val rows = Seq((1L, "a b c d e f"), (2L, "a b c n o p"))
     val mem = MemoryStream[(Long, String)]
     val q = Pipelines.segmentDedupSink(mem.toDS().toDF("doc_id", "text"),
@@ -747,8 +741,7 @@ class PipelinesSpec extends SparkSpec {
   test("streaming curation ≡ one-shot curate on ascending arrival; telemetry persists") {
     import graft.textanalysis.TextAnalysis
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_curation_stream").toString
+    val base = tempDir("graft_curation_stream")
     val benchmark = Seq((900L, "alpha beta gamma delta", "bench"))
       .toDF("doc_id", "text", "source")
     // one offender per gate, one duplicate pair, one clean survivor
@@ -804,8 +797,7 @@ class PipelinesSpec extends SparkSpec {
   test("streaming trending state: versioned merge tracks the batch op, replay-safe") {
     import graft.ops.StatsOps
     val h = 3600000000L // 1 h half-life, micros
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_trending").toString + "/state"
+    val stateDir = tempDir("graft_trending") + "/state"
     def ev(rows: Seq[(Long, Long, String, Double)]) =
       rows.map { case (id, tus, tp, v) => (id, tus * 1000L, 1L, tp, v) }
         .toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -833,14 +825,12 @@ class PipelinesSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     assert(s1r === s1)
     // reading before any batch committed: empty result, not a crash
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_trending_empty").toString + "/state"
+    val fresh = tempDir("graft_trending_empty") + "/state"
     assert(Pipelines.readTrendingScores(spark, fresh).count() === 0L)
     // a FRESH checkpoint over an old state dir must fail fast: batch 0
     // finds no version below it but versions above — silently ignoring
     // and then purging the old run's state would be unrecoverable
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_trending_stale").toString + "/state"
+    val dir2 = tempDir("graft_trending_stale") + "/state"
     Pipelines.processTrendingBatch(b0, dir2, 99L, h) // dead run's state
     val e = intercept[IllegalStateException] {
       Pipelines.processTrendingBatch(b1, dir2, 0L, h) // fresh checkpoint
@@ -849,8 +839,7 @@ class PipelinesSpec extends SparkSpec {
     // mid-stream, versions ABOVE the live batch are a dead
     // incarnation's leftovers: purged on the next live write so they
     // never shadow the live chain in newest-version reads
-    val dir3 = java.nio.file.Files
-      .createTempDirectory("graft_trending_dead").toString + "/state"
+    val dir3 = tempDir("graft_trending_dead") + "/state"
     Pipelines.processTrendingBatch(b0, dir3, 0L, h)  // live v=0
     Pipelines.processTrendingBatch(b0, dir3, 99L, h) // dead run's v=99
     Pipelines.processTrendingBatch(b1, dir3, 1L, h)  // live continues
@@ -858,6 +847,29 @@ class PipelinesSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     // v=99 is gone; the readout is the live chain b0 ⊕ b1
     assert(revived === s1)
+  }
+
+  test("trendingSink over micro-batches ≡ direct processTrendingBatch calls") {
+    implicit val sqlCtx = spark.sqlContext
+    val h = 3600000000L // 1 h half-life, micros
+    val b0 = Seq((1L, 0L, 1L, "view", 8.0), (2L, h * 1000L, 1L, "view", 8.0))
+    val b1 = Seq((3L, 2 * h * 1000L, 1L, "view", 8.0),
+      (4L, 2 * h * 1000L, 1L, "click", 2.0))
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+    val base = tempDir("graft_trending_sink")
+    val mem = MemoryStream[(Long, Long, Long, String, Double)]
+    val q = Pipelines.trendingSink(mem.toDF().toDF(cols: _*),
+      base + "/state", base + "/ckpt", h)
+    try {
+      mem.addData(b0); q.processAllAvailable()
+      mem.addData(b1); q.processAllAvailable()
+    } finally q.stop()
+    Pipelines.processTrendingBatch(b0.toDF(cols: _*), base + "/direct", 0L, h)
+    Pipelines.processTrendingBatch(b1.toDF(cols: _*), base + "/direct", 1L, h)
+    def scores(dir: String) =
+      Pipelines.readTrendingScores(spark, dir).collect().toSeq
+    assert(scores(base + "/state") === scores(base + "/direct"))
+    assert(scores(base + "/state").map(_.getString(0)) === Seq("click", "view"))
   }
 
   test("view-stats state is constant-size in visitor count (HLL blob)") {
@@ -880,7 +892,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("batch cores release their localCheckpoint storage blocks") {
     import graft.textanalysis.TextAnalysis
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lmfree").toString
+    val tmp = tempDir("graft_lmfree")
     TextAnalysis.writeLmModel(
       TextAnalysis.lmTrain(Seq((1L, "a b")).toDF("doc_id", "text")),
       s"$tmp/model")
@@ -897,7 +909,7 @@ class PipelinesSpec extends SparkSpec {
   test("streaming BM25 index ingest ≡ one-shot rebuild; replay-idempotent") {
     import graft.ops.SearchOps
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25sink").toString
+    val tmp = tempDir("graft_bm25sink")
     val docs = Seq((1L, "a b a"), (2L, "b c"), (3L, "a c c d"),
       (4L, "d d b")).toDF("doc_id", "text")
     val mem = MemoryStream[(Long, String)]
@@ -907,7 +919,7 @@ class PipelinesSpec extends SparkSpec {
     q.processAllAvailable()
     mem.addData(Seq((3L, "a c c d"), (4L, "d d b")))
     q.processAllAvailable(); q.stop()
-    val full = java.nio.file.Files.createTempDirectory("graft_bm25full").toString
+    val full = tempDir("graft_bm25full")
     SearchOps.writeBm25Index(docs, full)
     def served(dir: String) = SearchOps.searchBm25FromIndex(spark, dir,
       Seq("a", "d"), 10).collect().toSeq
@@ -930,7 +942,7 @@ class PipelinesSpec extends SparkSpec {
       "the remaining docs; crash-replay a no-op") {
     import graft.ops.SearchOps
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25del").toString
+    val tmp = tempDir("graft_bm25del")
     val docs = Seq((1L, "a b a"), (2L, "b c"), (3L, "a c c d"),
       (4L, "d d b")).toDF("doc_id", "text")
     SearchOps.writeBm25Index(docs, s"$tmp/idx")
@@ -941,7 +953,7 @@ class PipelinesSpec extends SparkSpec {
     q.processAllAvailable()
     mem.addData(4L)
     q.processAllAvailable(); q.stop()
-    val reb = java.nio.file.Files.createTempDirectory("graft_bm25rb").toString
+    val reb = tempDir("graft_bm25rb")
     SearchOps.writeBm25Index(
       docs.filter(org.apache.spark.sql.functions.col("doc_id").isin(1L, 3L)),
       reb)
@@ -957,7 +969,7 @@ class PipelinesSpec extends SparkSpec {
     // stream's tombstones — doc 2 stays erased, doc 1 goes too
     Pipelines.processBm25DeleteBatch(Seq(1L).toDF("doc_id"),
       s"$tmp/idx", 0L, keyPrefix = "sweep2")
-    val reb13 = java.nio.file.Files.createTempDirectory("graft_bm25rb2").toString
+    val reb13 = tempDir("graft_bm25rb2")
     SearchOps.writeBm25Index(
       docs.filter(org.apache.spark.sql.functions.col("doc_id") === 3L), reb13)
     assert(served(s"$tmp/idx") === served(reb13))
@@ -973,7 +985,7 @@ class PipelinesSpec extends SparkSpec {
     val delIds = emb.collect().map(_.getLong(0)).sorted.take(5)
     mem2.addData(delIds.toSeq)
     q2.processAllAvailable(); q2.stop()
-    val rebIvf = java.nio.file.Files.createTempDirectory("graft_ivfrb").toString
+    val rebIvf = tempDir("graft_ivfrb")
     Similarity.writeIvfIndex(
       emb.filter(!org.apache.spark.sql.functions.col("vec_id")
         .isin(delIds.map(Long.box).toSeq: _*)), cents, rebIvf)
@@ -1003,7 +1015,7 @@ class PipelinesSpec extends SparkSpec {
     import graft.quality.NbClassifier
     import graft.selection.Dsir
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_admit").toString
+    val tmp = tempDir("graft_admit")
     val docs = Tables.documents(spark, sfDir).limit(120)
       .select("doc_id", "text", "lang", "n_chars").cache()
     val train = docs.filter(col("doc_id") % 4 =!= 0)
@@ -1058,7 +1070,7 @@ class PipelinesSpec extends SparkSpec {
       "rejected in both maintenance directions") {
     import graft.textanalysis.TextAnalysis
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_memdel_sink").toString
+    val tmp = tempDir("graft_memdel_sink")
     val docs = Seq(
       (1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
       (3L, "x y z w v u t s"), (4L, "p q r s t u v w"),
@@ -1083,7 +1095,7 @@ class PipelinesSpec extends SparkSpec {
     def served(dir: String) = TextAnalysis
       .readMemorizationIndexMerged(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSet
-    val reb = Files.createTempDirectory("graft_memdel_reb").toString
+    val reb = tempDir("graft_memdel_reb")
     TextAnalysis.writeMemorizationIndex(
       TextAnalysis.memorizationIndex(
         docs.filter(col("doc_id").isin(1L, 3L, 4L)), 3), reb)
@@ -1127,7 +1139,7 @@ class PipelinesSpec extends SparkSpec {
     import graft.quality.NbClassifier
     import graft.selection.Dsir
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_admitf").toString
+    val tmp = tempDir("graft_admitf")
     val docs = Tables.documents(spark, sfDir).limit(120)
       .select("doc_id", "text", "lang", "n_chars").cache()
     val train = docs.filter(col("doc_id") % 4 =!= 0)
@@ -1205,7 +1217,7 @@ class PipelinesSpec extends SparkSpec {
     import graft.ops.SearchOps
     import graft.similarity.Similarity
     import graft.textanalysis.TextAnalysis
-    val tmp = Files.createTempDirectory("graft_cmp_guard").toString
+    val tmp = tempDir("graft_cmp_guard")
     // IVF: compactIvfIndex overwrites the ROOT path — without the
     // re-registration the _delete_streams marker vanishes and a
     // manual sink-shaped key passes the guard again
@@ -1260,7 +1272,7 @@ class PipelinesSpec extends SparkSpec {
     import graft.ops.SearchOps
     import graft.similarity.Similarity
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_guard").toString
+    val tmp = tempDir("graft_guard")
     val docs = Seq((1L, "a b"), (2L, "b c")).toDF("doc_id", "text")
     SearchOps.writeBm25Index(docs, s"$tmp/idx")
     val mem = MemoryStream[Long]
@@ -1309,7 +1321,7 @@ class PipelinesSpec extends SparkSpec {
   test("streaming IVF index ingest ≡ one-shot rebuild; replay-idempotent") {
     import graft.similarity.Similarity
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfsink").toString
+    val tmp = tempDir("graft_ivfsink")
     val emb = Tables.embeddings(spark, sfDir).limit(60)
       .select("vec_id", "embedding").cache()
     val cents = Similarity.seedCentroids(emb, 4)
@@ -1324,7 +1336,7 @@ class PipelinesSpec extends SparkSpec {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val full = java.nio.file.Files.createTempDirectory("graft_ivffull").toString
+    val full = tempDir("graft_ivffull")
     Similarity.writeIvfIndex(emb, cents, full)
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("cell").cast("long")).collect()
@@ -1371,7 +1383,7 @@ class PipelinesSpec extends SparkSpec {
         q2.processAllAvailable()
       }
     } finally q2.stop()
-    val qFull = java.nio.file.Files.createTempDirectory("graft_qivffull").toString
+    val qFull = tempDir("graft_qivffull")
     Similarity.writeQuantizedIvfIndex(emb, cents, qFull)
     def qEntries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("scale"), col("qvec"), col("cell").cast("long"))
@@ -1390,7 +1402,7 @@ class PipelinesSpec extends SparkSpec {
       "a no-op on consolidated counts") {
     import graft.textanalysis.TextAnalysis
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_memsink").toString
+    val tmp = tempDir("graft_memsink")
     val all = Seq(
       (1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w v u"),
       (4L, "a b c d e f"), (5L, "x y z w v q"), (6L, "m n o p q r"))
@@ -1439,7 +1451,7 @@ class PipelinesSpec extends SparkSpec {
   test("streaming LM gate filters against the frozen model; replay-idempotent") {
     import graft.textanalysis.TextAnalysis
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lmgate").toString
+    val tmp = tempDir("graft_lmgate")
     // model: "a b" is the common transition (nll ln 1.75 ≈ 0.56),
     // "c d" rarer (ln 2.5 ≈ 0.92), unseen grams ln 4 ≈ 1.39
     val ref = Seq((1L, "a b"), (2L, "a b"), (3L, "a b"), (4L, "c d"))
@@ -1473,7 +1485,7 @@ class PipelinesSpec extends SparkSpec {
   test("streaming DSIR gate ≡ batch score-and-filter; replay-idempotent") {
     import graft.selection.Dsir
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dsirgate").toString
+    val tmp = tempDir("graft_dsirgate")
     val pool = Seq(
       (1L, "the cat sat on the mat", "en"),
       (2L, "the dog ran to the park", "en"),
@@ -1519,7 +1531,7 @@ class PipelinesSpec extends SparkSpec {
       "replay-idempotent; gram-less docs pass") {
     import graft.textanalysis.TextAnalysis
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memgate").toString
+    val tmp = tempDir("graft_memgate")
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six"))
@@ -1564,7 +1576,7 @@ class PipelinesSpec extends SparkSpec {
       "graph-absent docs carry their own id") {
     import graft.graph.Communities
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lpaprobe").toString
+    val tmp = tempDir("graft_lpaprobe")
     // frozen world: triangle {1,2,3} → community 1; the pair {10,11}
     // 2-CYCLES under synchronous LPA (the bipartite oscillation —
     // exactly why rounds are fixed) and lands as two singleton
@@ -1613,8 +1625,7 @@ class PipelinesSpec extends SparkSpec {
     import graft.dedup.Dedup
     import graft.multimodal.Multimodal
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_mediagate").toString
+    val tmp = tempDir("graft_mediagate")
     // frozen world: video fingerprints of docs 0..199 (real
     // render→AVI→demux path); pool 200..319 — 19 of them collide
     // with the index within Hamming 1 (deterministic render rule)
@@ -1656,7 +1667,7 @@ class PipelinesSpec extends SparkSpec {
   test("streaming NB quality gate ≡ batch nbGate; replay-idempotent") {
     import graft.quality.NbClassifier
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nbgate").toString
+    val tmp = tempDir("graft_nbgate")
     val pool = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again", true),
       (2L, "a long winded sentence keeps going with many many words", true),
@@ -1696,7 +1707,7 @@ class PipelinesSpec extends SparkSpec {
     import graft.similarity.Similarity
     val emb = Tables.embeddings(spark, sfDir)
     val cents = Similarity.seedCentroids(emb, 8)
-    val base = Files.createTempDirectory("graft_knnsink").toString
+    val base = tempDir("graft_knnsink")
     Similarity.writeIvfIndex(emb, cents, base + "/idx")
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Seq[Double])]
@@ -1735,7 +1746,7 @@ class PipelinesSpec extends SparkSpec {
   test("catalog single-maintainer contract: a KEPT micro-batch's " +
       "checkpoint replay AFTER retention lands exactly as before " +
       "(fold-then-replay ordering, quiesced sink)") {
-    val base = Files.createTempDirectory("graft_foldreplay").toString
+    val base = tempDir("graft_foldreplay")
     val idx = base + "/idx"; val out = base + "/out"
     val batches = Seq(
       0L -> Seq((1L, "a b c d e f"), (2L, "x y z p q r")),
@@ -1764,7 +1775,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("compactBatchOutputKeeping: keep must be the newest window, " +
       "and as-of refuses exactly the prefixes the fold destroyed") {
-    val dir = Files.createTempDirectory("graft_foldwm").toString + "/t"
+    val dir = tempDir("graft_foldwm") + "/t"
     (0L to 3L).foreach { b =>
       Seq((b * 10, s"row$b")).toDF("id", "text")
         .withColumn("batch_id", lit(b))
@@ -1799,7 +1810,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("compactBatchOutputKeeping refuses non-canonical numeric " +
       "partition names (keep membership vs fold filter disagreement)") {
-    val dir = Files.createTempDirectory("graft_noncanon").toString + "/t"
+    val dir = tempDir("graft_noncanon") + "/t"
     Seq(2L, 3L).foreach { b =>
       Seq((b, s"row$b")).toDF("id", "text")
         .withColumn("batch_id", lit(b))
@@ -1826,7 +1837,7 @@ class PipelinesSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val base = Files.createTempDirectory("graft_srvsinks").toString
+    val base = tempDir("graft_srvsinks")
     Similarity.writeQuantizedIvfIndex(emb, cents, base + "/qidx")
     Similarity.writePqIndex(emb, cents, cb, base + "/pidx")
     emb.write.parquet(base + "/emb")
@@ -1882,7 +1893,7 @@ class PipelinesSpec extends SparkSpec {
 
   test("fold-in-progress marker: a mid-fold sink write or as-of read " +
       "fails loudly; a completed fold clears the marker") {
-    val base = Files.createTempDirectory("graft_foldmark").toString
+    val base = tempDir("graft_foldmark")
     val idx = base + "/idx"; val out = base + "/out"
     Seq(0L, 1L, 2L).foreach { b =>
       Pipelines.processSegmentDedupBatch(
@@ -1911,6 +1922,34 @@ class PipelinesSpec extends SparkSpec {
         Seq(Seq(1.0, 0.0)), idx, out, 3L, 5, 1)
     }
     assert(e3.getMessage.contains("fold is in progress"))
+    // so do the gate cores, row-local (LM, NB) and index-joining
+    // (memorization, community) alike: nothing lands mid-fold
+    def midFold(dir: String)(write: String => Unit): Unit = {
+      fs.create(new org.apache.hadoop.fs.Path(dir,
+        "_graft_fold_inprogress"), true).close()
+      val e = intercept[IllegalArgumentException](write(dir))
+      assert(e.getMessage.contains("fold is in progress"), dir)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "batch_id=0")))
+    }
+    val docs = Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text")
+    midFold(base + "/lm") { d =>
+      Pipelines.processLmGateBatch(docs,
+        graft.textanalysis.TextAnalysis.lmTrain(docs), d, 0L)
+    }
+    midFold(base + "/nb") { d =>
+      Pipelines.processNbGateBatch(docs, graft.quality.NbClassifier.nbTrain(
+        docs, col("doc_id") === 1L, 32), d, 0L, 0L)
+    }
+    midFold(base + "/mem") { d =>
+      Pipelines.processMemorizationGateBatch(docs,
+        graft.textanalysis.TextAnalysis.memorizationIndex(docs, 2), d, 0L,
+        maxDupFrac = 0.5, n = 2)
+    }
+    midFold(base + "/lpa") { d =>
+      Pipelines.processCommunityAssignBatch(docs,
+        Seq((1L, 1L), (2L, 1L)).toDF("node", "community"),
+        b => b.select(col("doc_id").as("s"), col("doc_id").as("t")), d, 0L)
+    }
     fs.delete(new org.apache.hadoop.fs.Path(out,
       "_graft_fold_inprogress"), false)
     // a REAL fold brackets its destructive window and clears the
