@@ -1,21 +1,39 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
+  /** Where queries timed at `sfDir` warm up: its `sf0.001` sibling, or
+    * `sfDir` itself if no smaller sibling exists.
+    */
+  def warmDir(sfDir: String): String = {
+    val parent = new java.io.File(sfDir).getParentFile
+    val sibling = Option(parent).map(p => new java.io.File(p, "sf0.001"))
+    sibling.filter(f => f.exists && f.getPath != new java.io.File(sfDir).getPath)
+      .map(_.getPath).getOrElse(sfDir)
+  }
+
+  /** Untimed warmup: JVM/codegen/scheduler spin-up should not be
+    * attributed to whichever query happens to run first. Every query
+    * shape runs once at [[warmDir]] (same schemas → identical generated
+    * code → janino cache hits), so the timed passes measure data-path
+    * throughput, not dozens of cold plan compilations. Returns how many
+    * queries threw; warmup failures are counted, never silent.
+    */
+  def warmUp(spark: SparkSession,
+      queries: Iterable[(SparkSession, String) => DataFrame], sfDir: String): Int = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val dir = warmDir(sfDir)
+    queries.count { fn =>
+      try { fn(spark, dir).count(); false }
+      catch { case _: Throwable => true }
+      finally spark.catalog.clearCache()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.cpus)
-    // untimed warmup: JVM/codegen/scheduler spin-up should not be
-    // attributed to whichever query happens to run first. Every query
-    // shape runs once at the smallest available SF (same schemas →
-    // identical generated code → janino cache hits), so the timed pass
-    // below measures data-path throughput, not dozens of cold plan
-    // compilations. Falls back to the bench dir itself if no smaller
-    // sibling exists; warmup failures are counted, never silent.
-    val warmDir = {
-      val parent = new java.io.File(sfDir).getParentFile
-      val sibling = Option(parent).map(p => new java.io.File(p, "sf0.001"))
-      sibling.filter(f => f.exists && f.getPath != new java.io.File(sfDir).getPath)
-        .map(_.getPath).getOrElse(sfDir)
-    }
     // dev-loop filter (mirrors Verify's): SPARK_GRAFT_BENCH_ONLY=q_a,q_b
     // times just those queries. The driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -41,15 +59,9 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     }
     try {
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      var warmFailures = 0
-      selected.foreach { case (_, fn) =>
-        try { fn(spark, warmDir).count() }
-        catch { case _: Throwable => warmFailures += 1 }
-        spark.catalog.clearCache()
-      }
+      val warmFailures = warmUp(spark, selected.values, sfDir)
       if (warmFailures > 0)
-        System.err.println(s"[bench] warmup: $warmFailures/${selected.size} queries failed against $warmDir")
+        System.err.println(s"[bench] warmup: $warmFailures/${selected.size} queries failed against ${warmDir(sfDir)}")
     } catch { case _: Throwable => () }
     // min of N interleaved passes per query: a single sample can't be
     // separated from sandbox GC/scheduling spikes (the round-2 driver
@@ -69,7 +81,7 @@ object Bench {
     // remains comparable; the full mode exists to record the honest
     // cost of those lines (BUILD_NOTES round-9 table).
     val fullEval = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    def execute(df: org.apache.spark.sql.DataFrame): Unit =
+    def execute(df: DataFrame): Unit =
       if (fullEval) df.queryExecution.toRdd.count() else df.count()
     val samples = scala.collection.mutable.Map.empty[String, Double]
     // a query that throws in any pass is listed under "failed" and

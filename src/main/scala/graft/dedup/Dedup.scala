@@ -1168,11 +1168,9 @@ object Dedup {
       else symSelf0)
       .persist()
     var prevSum = obs0.get("label_sum").asInstanceOf[java.math.BigDecimal]
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     var changed = true
     var it = 0
     while (changed && it < maxIter) {
-      val t0 = System.nanoTime()
       val obs = org.apache.spark.sql.Observation()
       val propagated = symSelf.join(hintSmall(labels), col("b") === col("node"))
         .groupBy(col("a"))
@@ -1205,8 +1203,6 @@ object Dedup {
       checkpointed = next
       labels = next
       it += 1
-      if (debug) System.err.println(
-        f"[cc] round $it: sum=$newSum ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     symSelf.unpersist()
     sym.unpersist()
@@ -1327,7 +1323,6 @@ object Dedup {
         .agg(sum(col("ishi")).as("nh"), sum(col("islo")).as("nl"))
         .filter(col("nh") > 1 || (col("nh") > 0 && col("nl") > 0))
         .isEmpty
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     var prevSig = sig(obs0)
     var apps = 0 // star-step applications, including any detection round
     var changedApps = 0 // applications that changed the edge set
@@ -1357,7 +1352,6 @@ object Dedup {
     if (prevSig._1 > 0 && prevSig._1 <= maxInTask)
       return finishInTask(0)
     while (!converged && apps <= maxIter) {
-      val t0 = System.nanoTime()
       val obs = org.apache.spark.sql.Observation()
       val next = smallStar(largeStar(d))
         .observe(obs, setSig.head, setSig.tail: _*)
@@ -1373,9 +1367,6 @@ object Dedup {
       prevSig = curSig
       d.unpersist()
       d = next
-      if (debug) System.err.println(
-        f"[cc-star] round $apps: edges=${curSig._1} changed=$setChanged " +
-          f"${(System.nanoTime() - t0) / 1e9}%.3f s")
       // geometric-shrink switch-over (the union-find byte-budget
       // heuristic applied MID-contraction): star rounds shrink the
       // edge set geometrically, so the tail rounds carry tiny frames

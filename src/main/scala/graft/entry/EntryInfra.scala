@@ -173,6 +173,8 @@ private[graft] trait EntryInfra {
     * keying scheme — md5 of the FULL path + the pid — lives here only,
     * so the collision-resistance and cross-process-isolation rationale
     * can never drift between the float and quantized index variants.
+    * No other process can reuse a pid-keyed dir, so each one is deleted
+    * when this JVM exits (registered once, at build time).
     */
   protected def builtIndexDir(prefix: String, d: String)(
       write: String => Unit): String = {
@@ -180,7 +182,11 @@ private[graft] trait EntryInfra {
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
       s"${prefix}_${pathDigest}_${ProcessHandle.current().pid()}").getPath
-    ivfIndexBuilt.computeIfAbsent(dir, p => { write(p); p })
+    ivfIndexBuilt.computeIfAbsent(dir, p => {
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+      write(p)
+      p
+    })
     dir
   }
 

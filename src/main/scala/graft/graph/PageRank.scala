@@ -262,16 +262,10 @@ object PageRank {
     // no per-round contribs broadcast build (see rankRound). Past
     // broadcastability the checkpoint is left as-is and every round
     // plans exactly as before.
-    def ckLayout(df: DataFrame): DataFrame = {
-      val out =
-        if (broadcastRanks)
-          graft.Frames.checkpointWithHashLayout(df, Seq("node"), width)
-        else df.localCheckpoint(true)
-      if (sys.env.contains("GRAFT_PR_EXPLAIN"))
-        System.err.println("=== round plan ===\n" +
-          df.queryExecution.executedPlan.toString)
-      out
-    }
+    def ckLayout(df: DataFrame): DataFrame =
+      if (broadcastRanks)
+        graft.Frames.checkpointWithHashLayout(df, Seq("node"), width)
+      else df.localCheckpoint(true)
     var checkpointed = ckLayout(nodes
       .withColumn("rank", lit(1.0 / n))
       .observe(obs0, danglingSum))

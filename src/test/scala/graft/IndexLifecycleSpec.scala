@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -221,7 +219,7 @@ class IndexLifecycleSpec extends SparkSpec {
   /** Fresh rebuild on `rows`, served the same way — the cross-check
     * every stage compares against. */
   private def rebuildServe(f: Family, rows: DataFrame): Seq[String] = {
-    val p = Files.createTempDirectory(s"graft_lc_reb").toString + "/idx"
+    val p = tempDir("graft_lc_reb") + "/idx"
     f.build(rows, p)
     f.serve(p)
   }
@@ -239,7 +237,7 @@ class IndexLifecycleSpec extends SparkSpec {
   }
 
   private def lifecycle(f: Family): Unit = {
-    val root = Files.createTempDirectory("graft_lc").toString
+    val root = tempDir("graft_lc")
     val idx = s"$root/idx"
     val ids = f.corpus.select(col(f.idCol)).collect()
       .map(_.getLong(0)).sorted.toSeq
@@ -333,7 +331,7 @@ class IndexLifecycleSpec extends SparkSpec {
         vf.reclusterTo(idx, cents2, s"$root/idx2")
         val served = render(vf.topKWith(cents2)(
           Similarity.readIvfIndex(spark, s"$root/idx2")))
-        val reb = Files.createTempDirectory("graft_lc_rc").toString + "/idx"
+        val reb = tempDir("graft_lc_rc") + "/idx"
         vf.buildWith(cents2)(rowsOf(live4 ++ a2), reb)
         assert(served === render(vf.topKWith(cents2)(
           spark.read.parquet(reb))),

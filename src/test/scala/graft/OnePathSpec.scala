@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps main on one execution path per native expression and one
-  * session factory: the registration check lives only beside the
-  * function table (GraftFunctions.call registers on demand), and a
-  * session is built only in graft.Sessions.
+/** Keeps main on one execution path per native expression, one
+  * session factory and one profiler: the registration check lives only
+  * beside the function table (GraftFunctions.call registers on demand),
+  * a session is built only in graft.Sessions, and graft.tools.Profile is
+  * the only job collector.
   */
 class OnePathSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -30,6 +31,25 @@ class OnePathSpec extends AnyFunSuite {
   test("SparkSession.builder appears only in Sessions.scala") {
     assert(filesMentioning("SparkSession.builder") ===
       Seq("graft/Sessions.scala"))
+  }
+
+  // one profiler: the dev mains are Profile and the two fixture generators
+  private val tools = root.resolve("graft/tools")
+
+  test("graft/tools holds only Profile, ScaleUp and ScaleUpMedia") {
+    val files = Files.list(tools)
+    try assert(files.iterator.asScala.map(_.getFileName.toString).toSeq.sorted ===
+      Seq("Profile.scala", "ScaleUp.scala", "ScaleUpMedia.scala"))
+    finally files.close()
+  }
+
+  test("SparkListener appears only in SessionCaches.scala and tools/Profile.scala") {
+    assert(filesMentioning("SparkListener") ===
+      Seq("graft/SessionCaches.scala", "graft/tools/Profile.scala"))
+  }
+
+  test("no Thread.sleep under graft/tools") {
+    assert(!filesMentioning("Thread.sleep").exists(_.startsWith("graft/tools/")))
   }
 
   // the streaming layer: one sink scaffold, one batch-partition writer

@@ -660,8 +660,7 @@ class PropertySpec extends SparkSpec {
         id -> (if (id == allIds.head) 0 else rnd.nextInt(nApp + 1))).toMap
       val batchIds = (0 to nApp).map(b =>
         b -> allIds.filter(assign(_) == b).toSeq).toMap
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_retp$scenario").toString + "/idx"
+      val root = tempDir(s"graft_retp$scenario") + "/idx"
       Similarity.writeIvfIndex(rowsOf(batchIds(0)), cents, root)
       val appNames = (1 to nApp).filter(b => batchIds(b).nonEmpty).map { b =>
         Similarity.appendToIvfIndex(rowsOf(batchIds(b)), cents, root, s"a$b")
@@ -723,8 +722,7 @@ class PropertySpec extends SparkSpec {
         id -> (if (id == allIds.head) 0 else rnd.nextInt(3))).toMap
       val batchIds = (0 to 2).map(b =>
         b -> allIds.filter(assign(_) == b).toSeq).toMap
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_gretp$scenario").toString
+      val root = tempDir(s"graft_gretp$scenario")
       TextAnalysis.writeMemorizationIndex(
         TextAnalysis.memorizationIndex(rowsOf(batchIds(0)), 3), root)
       val appNames = (1 to 2).filter(b => batchIds(b).nonEmpty).map { b =>

@@ -15,7 +15,7 @@ class TablesEventsSpec extends SparkSpec {
   private val epochMicros = 1709296496789012L // the wall clock AS UTC
 
   private def loadFrom(writer: String => Unit): Long = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val dir = tempDir("graft-events")
     writer(s"$dir/events.parquet")
     val row = Tables.events(spark, dir)
       .select(col("ts")).head()

@@ -742,8 +742,7 @@ class DedupSpec extends SparkSpec {
 
   test("fingerprint index round-trips through the written artifact") {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_fpidx").toString
+    val tmp = tempDir("graft_fpidx")
     val fps = Seq((1L, 42L), (2L, -1L), (3L, Long.MinValue))
       .toDF("id0", "h0")
     Dedup.writeFingerprintIndex(fps, "id0", "h0", s"$tmp/index")

@@ -201,7 +201,7 @@ class PageRankSpec extends SparkSpec {
     // plan), so the probe memo must key on the file snapshot too —
     // else the stale small count keeps routing a now-large graph to
     // the exact distinct-count fallback job the gate exists to avoid
-    val dir = java.nio.file.Files.createTempDirectory("graft-gate").toString
+    val dir = tempDir("graft-gate")
     (1L to 4L).map(i => (i, i + 1L)).toDF("s", "t")
       .write.mode("append").parquet(dir)
     val small = spark.read.parquet(dir)

@@ -184,8 +184,7 @@ class SampleOpsSpec extends SparkSpec {
   }
 
   test("written training shards: one dir per shard, in-file pos order") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_shards").toString + "/shards"
+    val dir = tempDir("graft_shards") + "/shards"
     SampleOps.writeTrainingShards(docs.select("doc_id"), "doc_id", 4, dir)
     // one partition directory per shard
     val dirs = new java.io.File(dir).listFiles()

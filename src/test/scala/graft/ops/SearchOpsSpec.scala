@@ -170,7 +170,7 @@ class SearchOpsSpec extends SparkSpec {
   }
 
   test("BM25 index: served ranking ≡ one-shot; buckets prune; no tokenize") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = tempDir("graft-bm25")
     SearchOps.writeBm25Index(docs, dir)
     val terms = Seq("merge", "query")
     val served = SearchOps.searchBm25FromIndex(spark, dir, terms, 10)
@@ -194,8 +194,7 @@ class SearchOpsSpec extends SparkSpec {
   test("past termLiteralMax the postings term filter is a broadcast " +
       "join (O(1) plan in the term count), rows ≡ the literal path; " +
       "bucket directory pruning survives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25tl")
-      .toString
+    val dir = tempDir("graft-bm25tl")
     SearchOps.writeBm25Index(docs, dir)
     val terms = Seq("merge", "query", "sort", "window")
     def run() = SearchOps.searchBm25FromIndex(spark, dir, terms, 10)
@@ -220,8 +219,7 @@ class SearchOpsSpec extends SparkSpec {
   test("term-bucketed postings serve ≡ path-layout serve; the df " +
       "re-aggregation rides the bucket layout exchange-free and the " +
       "term predicate prunes bucket files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25bkt")
-      .toString
+    val dir = tempDir("graft-bm25bkt")
     SearchOps.writeBm25Index(docs, dir)
     SearchOps.writeBm25BucketedPostings(spark, dir, "b_postings", 8)
     try {
@@ -252,7 +250,7 @@ class SearchOpsSpec extends SparkSpec {
 
   test("retrievalEvalFromIndex ≡ one-shot eval, on a postings-pruned scan") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-ev").toString
+    val dir = tempDir("graft-bm25-ev")
     SearchOps.writeBm25Index(docs, dir)
     val queries = Seq("merge+query" -> Seq("merge", "query"),
       "nohit" -> Seq("zzzznotaword"))
@@ -269,8 +267,8 @@ class SearchOpsSpec extends SparkSpec {
 
   test("appendToBm25Index ≡ full rebuild: stats, postings, served ranking") {
     import org.apache.spark.sql.functions.col
-    val full = java.nio.file.Files.createTempDirectory("graft-bm25-full").toString
-    val inc = java.nio.file.Files.createTempDirectory("graft-bm25-inc").toString
+    val full = tempDir("graft-bm25-full")
+    val inc = tempDir("graft-bm25-inc")
     SearchOps.writeBm25Index(docs, full)
     SearchOps.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 1), inc)
     // two appended batches — the merged scalars must stay exact
@@ -308,8 +306,8 @@ class SearchOpsSpec extends SparkSpec {
       "retries and overlapping batches never double-subtract; " +
       "compaction is invisible to serving and drops the tombstones") {
     import org.apache.spark.sql.functions.col
-    val del = java.nio.file.Files.createTempDirectory("graft-bm25-del").toString
-    val reb = java.nio.file.Files.createTempDirectory("graft-bm25-reb").toString
+    val del = tempDir("graft-bm25-del")
+    val reb = tempDir("graft-bm25-reb")
     val terms = Seq("merge", "query")
     SearchOps.writeBm25Index(docs, del)
     SearchOps.writeBm25Index(docs.filter(col("doc_id") % 7 =!= 3), reb)
@@ -353,7 +351,7 @@ class SearchOpsSpec extends SparkSpec {
   test("searchBm25FromIndexAsOf: every batch-prefix snapshot ≡ the " +
       "rebuild at that point in history; batch_id prunes partitions") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-asof").toString
+    val dir = tempDir("graft-bm25-asof")
     val terms = Seq("merge", "query")
     val base = docs.filter(col("doc_id") % 4 === 0)
     val a1 = docs.filter(col("doc_id") % 4 === 1)
@@ -364,7 +362,7 @@ class SearchOpsSpec extends SparkSpec {
     SearchOps.deleteFromBm25Index(
       base.filter(col("doc_id") % 8 === 0).select(col("doc_id")), dir, "d1")
     def rebuildAt(df: org.apache.spark.sql.DataFrame) = {
-      val p = java.nio.file.Files.createTempDirectory("graft-bm25-rb").toString
+      val p = tempDir("graft-bm25-rb")
       SearchOps.writeBm25Index(df, p)
       SearchOps.searchBm25FromIndex(spark, p, terms, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -434,7 +432,7 @@ class SearchOpsSpec extends SparkSpec {
 
   test("hybridSearchIndexed ≡ hybridSearch on the shared corpus") {
     val emb = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25h").toString
+    val dir = tempDir("graft-bm25h")
     SearchOps.writeBm25Index(docs, dir)
     val direct = SearchOps.hybridSearch(docs, emb, Seq("merge", "query"),
       0L, 20).collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq
@@ -448,12 +446,12 @@ class SearchOpsSpec extends SparkSpec {
       "per-query hybridSearchServed rows") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sfDir)
-    val bm25Dir = java.nio.file.Files.createTempDirectory("graft-bm25m").toString
+    val bm25Dir = tempDir("graft-bm25m")
     SearchOps.writeBm25Index(docs, bm25Dir)
     val Similarity = graft.similarity.Similarity
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft-pqm").toString + "/idx"
+    val pqDir = tempDir("graft-pqm") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
     val qs = Seq(0L -> Seq("merge", "query"), 1L -> Seq("sort", "window"))
@@ -478,15 +476,13 @@ class SearchOpsSpec extends SparkSpec {
       "postings side") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sfDir)
-    val bm25Dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25hbkt").toString
+    val bm25Dir = tempDir("graft-bm25hbkt")
     SearchOps.writeBm25Index(docs, bm25Dir)
     SearchOps.writeBm25BucketedPostings(spark, bm25Dir, "hb_postings", 8)
     val Similarity = graft.similarity.Similarity
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft-pqhbkt")
-      .toString + "/idx"
+    val pqDir = tempDir("graft-pqhbkt") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
     val qs = Seq((0L, Seq("merge", "query"), 0L),
@@ -530,8 +526,7 @@ class SearchOpsSpec extends SparkSpec {
     // numeric micro-batch ids (0,1,…) — Spark's partition-type
     // inference reads the column back as INTEGER, so the as-of path
     // must compare as string or the ledger check ClassCastExceptions
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-num")
-      .toString + "/idx"
+    val dir = tempDir("graft-bm25-num") + "/idx"
     val b0 = docs.filter(col("doc_id") % 2 === 0)
     val b1 = docs.filter(col("doc_id") % 2 === 1)
     graft.streaming.Pipelines.processBm25IngestBatch(b0, dir, 0L)
@@ -539,7 +534,7 @@ class SearchOpsSpec extends SparkSpec {
     val terms = Seq("merge", "query")
     def ranked(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val rb = java.nio.file.Files.createTempDirectory("graft-bm25-numrb").toString
+    val rb = tempDir("graft-bm25-numrb")
     SearchOps.writeBm25Index(b0, rb)
     assert(ranked(SearchOps.searchBm25FromIndexAsOf(spark, dir, terms, 10,
       Seq("0"))) === ranked(SearchOps.searchBm25FromIndex(spark, rb, terms, 10)))
@@ -555,7 +550,7 @@ class SearchOpsSpec extends SparkSpec {
   test("batchKey reservations: \"del-\" prefix rejected everywhere; a " +
       "manual key shaped like a registered delete stream's is rejected") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-res").toString
+    val dir = tempDir("graft-bm25-res")
     SearchOps.writeBm25Index(docs, dir)
     // an append named "del-x" would pair batch "x" with this ledger
     // row in the as-of existence check — reserved
@@ -589,7 +584,7 @@ class SearchOpsSpec extends SparkSpec {
       "applied physically; the kept-part correction re-materializes " +
       "as retained tombstones + an exact ledger row") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-ret").toString
+    val dir = tempDir("graft-bm25-ret")
     val terms = Seq("merge", "query")
     SearchOps.writeBm25Index(
       docs.filter(col("doc_id") % 8 =!= 5 && col("doc_id") % 8 =!= 6), dir)
@@ -625,7 +620,7 @@ class SearchOpsSpec extends SparkSpec {
     // folded build, kept w2 raw, and the exact negative kept-part
     // correction — compare each against a fresh reference index's row
     def refStats(sub: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val t = java.nio.file.Files.createTempDirectory("graft-bm25-ref").toString
+      val t = tempDir("graft-bm25-ref")
       SearchOps.writeBm25Index(sub, t)
       val r = spark.read.parquet(t + "/stats").collect().head
       (r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl"))
@@ -649,7 +644,7 @@ class SearchOpsSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet)
     // as-of: the fold is self-consistent (folded postings against
     // folded-only scalars ≡ a fresh rebuild); the folded name is gone
-    val reb = java.nio.file.Files.createTempDirectory("graft-bm25-rfold").toString
+    val reb = tempDir("graft-bm25-rfold")
     SearchOps.writeBm25Index(
       docs.filter(col("doc_id") % 8 =!= 6 && col("doc_id") % 7 =!= 3), reb)
     assert(serve(dir, Some(Seq("build"))) === serve(reb))
@@ -659,7 +654,7 @@ class SearchOpsSpec extends SparkSpec {
     // omitting the retained delete reproduces pre-erasure history for
     // the KEPT docs only (folded erasure is physical, the named-delete
     // visibility rule for the rest)
-    val reb2 = java.nio.file.Files.createTempDirectory("graft-bm25-rpre").toString
+    val reb2 = tempDir("graft-bm25-rpre")
     SearchOps.writeBm25Index(
       docs.filter(col("doc_id") % 8 === 6 || col("doc_id") % 7 =!= 3), reb2)
     assert(serve(dir, Some(Seq("build", "w2"))) === serve(reb2))
@@ -669,7 +664,7 @@ class SearchOpsSpec extends SparkSpec {
     SearchOps.appendToBm25Index(
       docs.filter(col("doc_id") % 8 === 5 && col("doc_id") % 7 === 3),
       dir, "w3")
-    val reb3 = java.nio.file.Files.createTempDirectory("graft-bm25-rw3").toString
+    val reb3 = tempDir("graft-bm25-rw3")
     SearchOps.writeBm25Index(docs.filter(col("doc_id") % 7 =!= 3 ||
       (col("doc_id") % 8 === 5 && col("doc_id") % 7 === 3)), reb3)
     assert(serve(dir) === serve(reb3))
@@ -679,7 +674,7 @@ class SearchOpsSpec extends SparkSpec {
       "delete folded, no kept-part corrections — removes the " +
       "tombstones root so serving keeps working") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-ret0").toString
+    val dir = tempDir("graft-bm25-ret0")
     val terms = Seq("merge", "query")
     SearchOps.writeBm25Index(
       docs.filter(col("doc_id") % 8 =!= 6), dir)
@@ -710,7 +705,7 @@ class SearchOpsSpec extends SparkSpec {
   test("\"retained\" is reserved: appends and deletes under " +
       "retention's tombstone key are rejected loudly") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-resv").toString
+    val dir = tempDir("graft-bm25-resv")
     SearchOps.writeBm25Index(docs.filter(col("doc_id") < 100), dir)
     intercept[IllegalArgumentException] {
       SearchOps.appendToBm25Index(docs.limit(1), dir, "retained")
@@ -724,7 +719,7 @@ class SearchOpsSpec extends SparkSpec {
   test("tombstone broadcast budget: past the byte budget the hint is " +
       "dropped and serving still matches the broadcast plan's result") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-tbud").toString
+    val dir = tempDir("graft-bm25-tbud")
     val terms = Seq("merge", "query")
     SearchOps.writeBm25Index(docs, dir)
     SearchOps.deleteFromBm25Index(
@@ -759,14 +754,12 @@ class SearchOpsSpec extends SparkSpec {
       "its own single-query eval") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sfDir)
-    val bm25Dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25shv").toString
+    val bm25Dir = tempDir("graft-bm25shv")
     SearchOps.writeBm25Index(docs, bm25Dir)
     val Similarity = graft.similarity.Similarity
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft-pqshv")
-      .toString + "/idx"
+    val pqDir = tempDir("graft-pqshv") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
     // two term formulations, ONE shared relevance vector (vec 0) —
@@ -791,14 +784,12 @@ class SearchOpsSpec extends SparkSpec {
       "fails loudly") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sfDir)
-    val bm25Dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25qt").toString
+    val bm25Dir = tempDir("graft-bm25qt")
     SearchOps.writeBm25Index(docs, bm25Dir)
     val Similarity = graft.similarity.Similarity
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft-pqqt")
-      .toString + "/idx"
+    val pqDir = tempDir("graft-pqqt") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
     val qs = Seq(0L -> Seq("merge", "query"), 1L -> Seq("sort", "window"),

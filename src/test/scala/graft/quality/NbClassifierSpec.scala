@@ -120,8 +120,7 @@ class NbClassifierSpec extends SparkSpec {
 
   test("write/read round-trips the artifact and serves identically") {
     val m = NbClassifier.nbTrain(df, col("pos"), B)
-    val dir = java.nio.file.Files
-      .createTempDirectory("nb-model").toString
+    val dir = tempDir("nb-model")
     NbClassifier.writeNbModel(spark, m, dir)
     val back = NbClassifier.readNbModel(spark, dir)
     assert(back === m)

@@ -99,8 +99,7 @@ class DsirSpec extends SparkSpec {
 
   test("model write/read round-trips and scores identically") {
     val m = Dsir.dsirTrain(df, df.filter(col("lang") === "en"), B)
-    val dir = java.nio.file.Files
-      .createTempDirectory("dsir-model").toString
+    val dir = tempDir("dsir-model")
     Dsir.writeDsirModel(spark, m, dir)
     val back = Dsir.readDsirModel(spark, dir)
     assert(back.ratios6 == m.ratios6)
@@ -202,8 +201,7 @@ class DsirSpec extends SparkSpec {
     val merged = base.merge(inc)
     assert(merged.toModel.ratios6 == full.ratios6)
     // counts persist and reload bit-for-bit
-    val dir = java.nio.file.Files
-      .createTempDirectory("dsir-counts").toString
+    val dir = tempDir("dsir-counts")
     Dsir.writeDsirCounts(spark, merged, dir)
     val back = Dsir.readDsirCounts(spark, dir)
     assert(back.raw == merged.raw && back.target == merged.target)

@@ -220,8 +220,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("appendToIvfIndex ≡ full rebuild, entry for entry, pruning intact") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val full = java.nio.file.Files.createTempDirectory("graft-ivf-full").toString
-    val inc = java.nio.file.Files.createTempDirectory("graft-ivf-inc").toString
+    val full = tempDir("graft-ivf-full")
+    val inc = tempDir("graft-ivf-inc")
     Similarity.writeIvfIndex(emb, cents, full)
     Similarity.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 1), cents, inc)
     // two appended batches against the SAME frozen centroids
@@ -262,7 +262,7 @@ class SimilaritySpec extends SparkSpec {
         .select(col("vec_id"), col("cell").cast("int")).collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSet
     def rebuiltEntries(df: org.apache.spark.sql.DataFrame) = {
-      val p = java.nio.file.Files.createTempDirectory("graft-ivf-ao").toString
+      val p = tempDir("graft-ivf-ao")
       Similarity.writeIvfIndex(df, cents, p)
       spark.read.parquet(p)
         .select(col("vec_id"), col("cell").cast("int")).collect()
@@ -290,8 +290,8 @@ class SimilaritySpec extends SparkSpec {
     }
     // the compressed twin carries the same contract: int8 entries,
     // append ≡ rebuild entry for entry
-    val qFull = java.nio.file.Files.createTempDirectory("graft-qivf-f").toString
-    val qInc = java.nio.file.Files.createTempDirectory("graft-qivf-i").toString
+    val qFull = tempDir("graft-qivf-f")
+    val qInc = tempDir("graft-qivf-i")
     Similarity.writeQuantizedIvfIndex(emb, cents, qFull)
     Similarity.writeQuantizedIvfIndex(
       emb.filter(col("vec_id") % 3 =!= 2), cents, qInc)
@@ -313,8 +313,8 @@ class SimilaritySpec extends SparkSpec {
   test("deleteFromIvfIndex: tombstoned serving ≡ rebuild-on-remaining; " +
       "pruning intact; compaction invisible and drops tombstones") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val del = java.nio.file.Files.createTempDirectory("graft-ivf-del").toString
-    val reb = java.nio.file.Files.createTempDirectory("graft-ivf-reb").toString
+    val del = tempDir("graft-ivf-del")
+    val reb = tempDir("graft-ivf-reb")
     Similarity.writeIvfIndex(emb, cents, del)
     Similarity.writeIvfIndex(emb.filter(col("vec_id") % 5 =!= 2), cents, reb)
     Similarity.deleteFromIvfIndex(
@@ -346,8 +346,7 @@ class SimilaritySpec extends SparkSpec {
     val full = Similarity.ivfTopKFromIndex(Similarity.readIvfIndex(spark, del),
       cents, q, 10, 2).collect().toSeq
     val fullWant = Similarity.ivfTopKFromIndex(
-      spark.read.parquet(java.nio.file.Files
-        .createTempDirectory("graft-ivf-fw").toString match {
+      spark.read.parquet(tempDir("graft-ivf-fw") match {
           case p => Similarity.writeIvfIndex(emb, cents, p); p
         }), cents, q, 10, 2).collect().toSeq
     assert(full === fullWant)
@@ -357,16 +356,16 @@ class SimilaritySpec extends SparkSpec {
       "accounts for every live vector and honors tombstones") {
     val sub = emb.limit(80).select("vec_id", "embedding").cache()
     val cents0 = Similarity.seedCentroids(sub, 8)
-    val old = java.nio.file.Files.createTempDirectory("graft-ivf-rc0").toString
+    val old = tempDir("graft-ivf-rc0")
     Similarity.writeIvfIndex(sub, cents0, old)
     // tombstone a slice — recluster must NOT resurrect it
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 9 === 1).select(col("vec_id")), old, "d1")
     val live = sub.filter(col("vec_id") % 9 =!= 1)
     val cents1 = Similarity.ivfBuild(sub, 8, 1)
-    val nw = java.nio.file.Files.createTempDirectory("graft-ivf-rc1").toString
+    val nw = tempDir("graft-ivf-rc1")
     Similarity.reclusterIvfIndex(spark, old, cents1, nw)
-    val reb = java.nio.file.Files.createTempDirectory("graft-ivf-rc2").toString
+    val reb = tempDir("graft-ivf-rc2")
     Similarity.writeIvfIndex(live, cents1, reb)
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("cell").cast("long")).collect()
@@ -392,13 +391,13 @@ class SimilaritySpec extends SparkSpec {
     // refresh re-quantizes from the caller-supplied source — result
     // ≡ a quantized rebuild on the live source rows, tombstones
     // honored, and the churn matrix equals the float family's
-    val qOld = java.nio.file.Files.createTempDirectory("graft-qivf-rc0").toString
+    val qOld = tempDir("graft-qivf-rc0")
     Similarity.writeQuantizedIvfIndex(sub, cents0, qOld)
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 9 === 1).select(col("vec_id")), qOld, "d1")
-    val qNw = java.nio.file.Files.createTempDirectory("graft-qivf-rc1").toString
+    val qNw = tempDir("graft-qivf-rc1")
     Similarity.reclusterQuantizedIvfIndex(spark, qOld, sub, cents1, qNw)
-    val qReb = java.nio.file.Files.createTempDirectory("graft-qivf-rc2").toString
+    val qReb = tempDir("graft-qivf-rc2")
     Similarity.writeQuantizedIvfIndex(live, cents1, qReb)
     def qEntries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("scale"), col("qvec"), col("cell").cast("long"))
@@ -413,7 +412,7 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.reclusterQuantizedIvfIndex(spark, qOld,
         sub.filter(col("vec_id") % 2 === 0), cents1,
-        java.nio.file.Files.createTempDirectory("graft-qivf-rc3").toString)
+        tempDir("graft-qivf-rc3"))
     }
     sub.unpersist()
   }
@@ -423,7 +422,7 @@ class SimilaritySpec extends SparkSpec {
     val sub = emb.limit(80).select("vec_id", "embedding").cache()
     val cents0 = Similarity.seedCentroids(sub, 8)
     val cb0 = Similarity.pqBuild(sub, m = 8, ksub = 16, iterations = 1)
-    val old = java.nio.file.Files.createTempDirectory("graft_pqrc0").toString
+    val old = tempDir("graft_pqrc0")
     Similarity.writePqIndex(sub, cents0, cb0, old)
     // tombstone a slice — the refresh must NOT resurrect it
     Similarity.deleteFromIvfIndex(
@@ -431,9 +430,9 @@ class SimilaritySpec extends SparkSpec {
     val live = sub.filter(col("vec_id") % 9 =!= 1)
     val cents1 = Similarity.ivfBuild(sub, 8, 1)
     val cb1 = Similarity.pqBuild(live, m = 8, ksub = 16, iterations = 1)
-    val nw = java.nio.file.Files.createTempDirectory("graft_pqrc1").toString
+    val nw = tempDir("graft_pqrc1")
     Similarity.reclusterPqIndex(spark, old, sub, cents1, cb1, nw)
-    val reb = java.nio.file.Files.createTempDirectory("graft_pqrc2").toString
+    val reb = tempDir("graft_pqrc2")
     Similarity.writePqIndex(live, cents1, cb1, reb)
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("codes"), col("cell").cast("long"))
@@ -448,7 +447,7 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.reclusterPqIndex(spark, old,
         sub.filter(col("vec_id") % 2 === 0), cents1, cb1,
-        java.nio.file.Files.createTempDirectory("graft_pqrc3").toString)
+        tempDir("graft_pqrc3"))
     }
     // pqRecall with ALL cells probed isolates the pure ADC loss: per
     // query the recall must equal an independent overlap count between
@@ -475,7 +474,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF index written partitionBy(cell) gives partition-pruned probe scans") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     val cents = Similarity.seedCentroids(emb, 8)
     Similarity.writeIvfIndex(emb, cents, dir)
     val idx = spark.read.parquet(dir)
@@ -499,7 +498,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfTopKFromIndex over the written index ≡ the in-plan probe path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-q").toString
+    val dir = tempDir("graft-ivf-q")
     val cents = Similarity.seedCentroids(emb, 16)
     Similarity.writeIvfIndex(emb, cents, dir)
     val qv = emb.filter($"vec_id" === 0L)
@@ -577,7 +576,7 @@ class SimilaritySpec extends SparkSpec {
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
     val corpus = base.unionByName(planted)
     val cents = Similarity.seedCentroids(base, 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdedup").toString
+    val dir = tempDir("graft_semdedup")
     Similarity.writeIvfIndex(corpus, cents, dir)
     val direct = Similarity.semanticDuplicates(corpus, cents, 0.999)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -622,8 +621,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("quantized IVF index: pruned probe ≡ in-plan quantized ranking") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-qivf").toString + "/idx"
+    val dir = tempDir("graft-qivf") + "/idx"
     val cents = Similarity.seedCentroids(emb, 8)
     Similarity.writeQuantizedIvfIndex(emb, cents, dir)
     val idx = spark.read.parquet(dir)
@@ -708,7 +706,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("PQ-IVF index: pruned probe ≡ full-scan ADC restricted to probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_ivf").toString + "/idx"
+    val dir = tempDir("graft_pq_ivf") + "/idx"
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     Similarity.writePqIndex(emb, cents, cb, dir)
@@ -746,8 +744,8 @@ class SimilaritySpec extends SparkSpec {
       "never duplicate, as-of and erasure compose layout-generically") {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val full = java.nio.file.Files.createTempDirectory("graft_pqm_f").toString
-    val inc = java.nio.file.Files.createTempDirectory("graft_pqm_i").toString
+    val full = tempDir("graft_pqm_f")
+    val inc = tempDir("graft_pqm_i")
     Similarity.writePqIndex(emb, cents, cb, full)
     Similarity.writePqIndex(emb.filter(col("vec_id") % 4 =!= 1), cents, cb, inc)
     Similarity.appendToPqIndex(
@@ -762,7 +760,7 @@ class SimilaritySpec extends SparkSpec {
     assert(entries(inc) === entries(full))
     assert(spark.read.parquet(inc).count() === spark.read.parquet(full).count())
     // as-of "build" ≡ the base split's rebuild
-    val rebBase = java.nio.file.Files.createTempDirectory("graft_pqm_b").toString
+    val rebBase = tempDir("graft_pqm_b")
     Similarity.writePqIndex(emb.filter(col("vec_id") % 4 =!= 1), cents, cb,
       rebBase)
     assert(Similarity.readIvfIndexAsOf(spark, inc, Seq("build"))
@@ -868,7 +866,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rpq").toString + "/idx"
+    val dir = tempDir("graft_rpq") + "/idx"
     Similarity.writeResidualPqIndex(emb, cents, cb, dir)
     val index = spark.read.parquet(dir)
     val q = emb.filter($"vec_id" === 0L)
@@ -914,7 +912,7 @@ class SimilaritySpec extends SparkSpec {
 
     // maintenance composes: append ≡ rebuild entry for entry, and the
     // retry replay never duplicates (dynamic partition self-overwrite)
-    val inc = java.nio.file.Files.createTempDirectory("graft_rpq_i").toString
+    val inc = tempDir("graft_rpq_i")
     Similarity.writeResidualPqIndex(
       emb.filter(col("vec_id") % 4 =!= 1), cents, cb, inc)
     Similarity.appendToResidualPqIndex(
@@ -932,7 +930,7 @@ class SimilaritySpec extends SparkSpec {
       "In-pushdown candidate fetch; refined recall matches the overlap") {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq2s").toString + "/idx"
+    val dir = tempDir("graft_pq2s") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, dir)
     val index = spark.read.parquet(dir)
     val q = emb.filter($"vec_id" === 0L)
@@ -990,7 +988,7 @@ class SimilaritySpec extends SparkSpec {
       "for row — shared shortlist/fetch/baseline change nothing") {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqcv").toString + "/idx"
+    val dir = tempDir("graft_pqcv") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, dir)
     val index = spark.read.parquet(dir)
     // 999999L: a query id with no embedding row (absent from both
@@ -1013,7 +1011,7 @@ class SimilaritySpec extends SparkSpec {
       "from ONE scan of the union of probed cells") {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqm").toString + "/idx"
+    val dir = tempDir("graft_pqm") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
@@ -1043,7 +1041,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rpq2s").toString + "/idx"
+    val dir = tempDir("graft_rpq2s") + "/idx"
     Similarity.writeResidualPqIndex(emb, cents, cb, dir)
     val index = spark.read.parquet(dir)
     val q = emb.filter($"vec_id" === 0L)
@@ -1076,7 +1074,7 @@ class SimilaritySpec extends SparkSpec {
       "serves; one bounded float fetch re-ranks the whole batch") {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqm2s").toString + "/idx"
+    val dir = tempDir("graft_pqm2s") + "/idx"
     Similarity.writePqIndex(emb, cents, cb, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
@@ -1108,7 +1106,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rpqm").toString + "/idx"
+    val dir = tempDir("graft_rpqm") + "/idx"
     Similarity.writeResidualPqIndex(emb, cents, cb, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
@@ -1135,7 +1133,7 @@ class SimilaritySpec extends SparkSpec {
   test("ivfMultiTopKFromIndex: batched float serving ≡ per-query " +
       "serves, from ONE scan of the union of probed cells") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_fm").toString + "/idx"
+    val dir = tempDir("graft_fm") + "/idx"
     Similarity.writeIvfIndex(emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
@@ -1166,7 +1164,7 @@ class SimilaritySpec extends SparkSpec {
   test("quantizedMultiTopKFromIndex: batched int8 serving ≡ per-query " +
       "serves, one scan, exact integer dots") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qm").toString + "/idx"
+    val dir = tempDir("graft_qm") + "/idx"
     Similarity.writeQuantizedIvfIndex(emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 3L, 5L)
@@ -1292,7 +1290,7 @@ class SimilaritySpec extends SparkSpec {
       "stay addressable, serving is invariant") {
     val sub = emb.limit(120).select("vec_id", "embedding").cache()
     val cents = Similarity.seedCentroids(sub, 8)
-    val p = java.nio.file.Files.createTempDirectory("graft_ret").toString + "/idx"
+    val p = tempDir("graft_ret") + "/idx"
     Similarity.writeIvfIndex(
       sub.filter(col("vec_id") % 8 =!= 1 && col("vec_id") % 8 =!= 6),
       cents, p)
@@ -1359,7 +1357,7 @@ class SimilaritySpec extends SparkSpec {
       "manual deletes under retention's tombstone key are rejected") {
     val sub = emb.limit(40).select("vec_id", "embedding")
     val cents = Similarity.seedCentroids(sub, 4)
-    val p = java.nio.file.Files.createTempDirectory("graft_resv").toString + "/idx"
+    val p = tempDir("graft_resv") + "/idx"
     Similarity.writeIvfIndex(sub, cents, p)
     intercept[IllegalArgumentException] {
       Similarity.appendToIvfIndex(sub.limit(1), cents, p, "retained")
@@ -1375,7 +1373,7 @@ class SimilaritySpec extends SparkSpec {
       "serving is unchanged") {
     val sub = emb.limit(100).select("vec_id", "embedding").cache()
     val cents = Similarity.seedCentroids(sub, 8)
-    val p = java.nio.file.Files.createTempDirectory("graft_tbud").toString + "/idx"
+    val p = tempDir("graft_tbud") + "/idx"
     Similarity.writeIvfIndex(sub, cents, p)
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 5 === 0).select(col("vec_id")), p, "d1")
@@ -1405,7 +1403,7 @@ class SimilaritySpec extends SparkSpec {
   test("quantizedRecall measures the int8 serving path against the " +
       "exact ranking") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qr").toString + "/idx"
+    val dir = tempDir("graft_qr") + "/idx"
     Similarity.writeQuantizedIvfIndex(emb, cents, dir)
     val index = spark.read.parquet(dir)
     // all cells probed isolates the pure quantization loss: per query
@@ -1434,7 +1432,7 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val rcb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
-    val base = java.nio.file.Files.createTempDirectory("graft_qt").toString
+    val base = tempDir("graft_qt")
     Similarity.writeIvfIndex(emb, cents, base + "/f")
     Similarity.writeQuantizedIvfIndex(emb, cents, base + "/q")
     Similarity.writePqIndex(emb, cents, cb, base + "/p")
@@ -1496,8 +1494,7 @@ class SimilaritySpec extends SparkSpec {
       "Spark jobs, the broadcast budget refuses an over-budget batch " +
       "loudly, and artifacts are one row per query") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qtg")
-      .toString + "/f"
+    val dir = tempDir("graft_qtg") + "/f"
     Similarity.writeIvfIndex(emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qframe = emb.filter($"vec_id" < 5)
@@ -1592,8 +1589,7 @@ class SimilaritySpec extends SparkSpec {
       "join, no per-query literals; Seq entries re-route past the " +
       "literal-Q threshold") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qtp")
-      .toString + "/f"
+    val dir = tempDir("graft_qtp") + "/f"
     Similarity.writeIvfIndex(emb, cents, dir)
     val index = spark.read.parquet(dir)
     def qframe(n: Int) = emb.filter($"vec_id" < n)
@@ -1637,8 +1633,7 @@ class SimilaritySpec extends SparkSpec {
       "on the query frames, broadcast-join re-rank fetch") {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qtrr")
-      .toString + "/p"
+    val dir = tempDir("graft_qtrr") + "/p"
     Similarity.writePqIndex(emb, cents, cb, dir)
     val qframe = emb.filter($"vec_id".isin(0L, 1L, 2L, 3L, 4L))
       .select($"vec_id".as("query_id"), $"embedding")
@@ -1661,8 +1656,7 @@ class SimilaritySpec extends SparkSpec {
       "scanning the table") {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qtbkt")
-      .toString + "/p"
+    val dir = tempDir("graft_qtbkt") + "/p"
     Similarity.writePqIndex(emb, cents, cb, dir)
     val pIdx = spark.read.parquet(dir)
     graft.ops.BucketedTables.writeBucketed(
@@ -1697,8 +1691,7 @@ class SimilaritySpec extends SparkSpec {
       "construction), and it is the working fallback for an " +
       "over-budget batch the one-shot serve loudly refuses") {
     val cents = Similarity.seedCentroids(emb, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qtchunk")
-      .toString + "/p"
+    val dir = tempDir("graft_qtchunk") + "/p"
     Similarity.writeIvfIndex(emb, cents, dir)
     val idx = spark.read.parquet(dir)
     val qframe = emb.filter($"vec_id" < 8)

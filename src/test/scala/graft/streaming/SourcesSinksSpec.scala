@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -14,14 +14,14 @@ class SourcesSinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("S4/S5: append write accumulates rows") {
-    val dir = Files.createTempDirectory("graft-append").toString + "/t"
+    val dir = tempDir("graft-append") + "/t"
     Seq((1L, "a")).toDF("id", "v").write.mode("append").parquet(dir)
     Seq((2L, "b")).toDF("id", "v").write.mode("append").parquet(dir)
     assert(spark.read.parquet(dir).count() === 2)
   }
 
   test("S11/S12: blob put + binaryFile get") {
-    val dir = Files.createTempDirectory("graft-blob")
+    val dir = Paths.get(tempDir("graft-blob"))
     val f = dir.resolve("42/content")
     Files.createDirectories(f.getParent)
     Files.write(f, "blob bytes here".getBytes)

@@ -132,8 +132,7 @@ class BpeVocabSpec extends SparkSpec {
   test("the written vocab artifact serves the identical tokenization") {
     val merges = TextAnalysis.bpeMergesLocal(wordCounts, 256)
       .map(m => (m._2, m._3))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bpevocab").toString + "/vt"
+    val dir = tempDir("graft-bpevocab") + "/vt"
     TextAnalysis.writeVocabTokens(docs, merges, dir)
     val fromIndex = TextAnalysis.bpeEncodeFromVocabIndex(docs, dir)
       .orderBy("doc_id").collect().toSeq

@@ -349,7 +349,7 @@ class TextAnalysisSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("lm_nll")).toMap
     assert(scored === Map(10L -> expect(5.0), 11L -> expect(3.0)))
     // the model is three plain tables: write, reload, score identically
-    val dir = java.nio.file.Files.createTempDirectory("graft_lm").toString
+    val dir = tempDir("graft_lm")
     model.grams.write.parquet(s"$dir/grams")
     model.contexts.write.parquet(s"$dir/contexts")
     model.vocab.write.parquet(s"$dir/vocab")
@@ -503,7 +503,7 @@ class TextAnalysisSpec extends SparkSpec {
       "retries idempotent; no-deletes reads are just the aggregate") {
     val keepA = Seq((1L, "a b c d"), (2L, "a b c")).toDF("doc_id", "text")
     val gone = Seq((10L, "a b c x"), (11L, "p q r s")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-memdel").toString
+    val dir = tempDir("graft-memdel")
     TextAnalysis.writeMemorizationIndex(
       TextAnalysis.memorizationIndex(keepA.unionByName(gone), 3), dir)
     TextAnalysis.deleteFromMemorizationIndex(gone, dir, "d1", 3)
@@ -516,7 +516,7 @@ class TextAnalysisSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(merged === retrain)
     // an index with no deletions reads identically through the helper
-    val plain = java.nio.file.Files.createTempDirectory("graft-memnd").toString
+    val plain = tempDir("graft-memnd")
     TextAnalysis.writeMemorizationIndex(
       TextAnalysis.memorizationIndex(keepA, 3), plain)
     assert(TextAnalysis.readMemorizationIndexMerged(spark, plain)
@@ -544,7 +544,7 @@ class TextAnalysisSpec extends SparkSpec {
     val base = Seq((1L, "a b c d"), (2L, "a b c")).toDF("doc_id", "text")
     val add = Seq((10L, "a b c x"), (11L, "p q r s")).toDF("doc_id", "text")
     val gone = Seq((2L, "a b c")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-memapp").toString
+    val dir = tempDir("graft-memapp")
     TextAnalysis.writeMemorizationIndex(idx(base), dir)
     TextAnalysis.appendToMemorizationIndex(add, dir, "a1", 3)
     // retried append overwrites its own partition — no double count
@@ -588,7 +588,7 @@ class TextAnalysisSpec extends SparkSpec {
     // append — the fold must apply the first physically and keep a
     // NEGATIVE correction for the second
     val gone = Seq((2L, "a b c"), (21L, "a b q")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-memret").toString
+    val dir = tempDir("graft-memret")
     TextAnalysis.writeMemorizationIndex(idx(base), dir)
     TextAnalysis.appendToMemorizationIndex(w1, dir, "w1", 3)
     TextAnalysis.appendToMemorizationIndex(w2, dir, "w2", 3)
