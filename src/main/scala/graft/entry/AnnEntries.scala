@@ -10,7 +10,7 @@ import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
 import graft.ops._
 import graft.quality.RuleBasedScorer
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec, VectorStore}
 import graft.textanalysis.TextAnalysis
 
 /** ANN / vector-index families (float, int8, PQ, truncation) — one module of the per-family SparkEntry split (round 14):
@@ -119,7 +119,8 @@ private[graft] trait AnnEntries extends EntryInfra {
     // index — the probe predicate is a literal IN list, so the scan
     // prunes to nProbe partition directories (the 100 TB path)
     "q_ann_ivf_indexed" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(s.read.parquet(builtIvfIndex(s, d)),
+      VectorStore.topKFromIndex(VectorCodec.Float,
+        s.read.parquet(builtIvfIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // Index maintenance: ERASURE — ids ≡ 3 mod 7 tombstoned out of
     // the written index (O(batch); cells never read), served through
@@ -133,14 +134,14 @@ private[graft] trait AnnEntries extends EntryInfra {
     // serve shares the erasure replay verbatim; the as-of twin below
     // gates the fold itself
     "q_ann_ivf_retention" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         Similarity.readIvfIndex(s, builtIvfRetentionIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, nProbe = 2)),
     // as-of("build") AFTER retention = base ∪ folded-w1 − erased —
     // the rolling window's history contract, hash-gated: the folded
     // batch is gone as a NAME but its live rows are in the base
     "q_ann_ivf_retention_asof" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         Similarity.readIvfIndexAsOf(s, builtIvfRetentionIndex(s, d),
           Seq("build")),
         seedCents16(s, d), queryVec0(s, d), 10, nProbe = 2)),
@@ -153,14 +154,14 @@ private[graft] trait AnnEntries extends EntryInfra {
     "q_ann_ivf_history" -> ((s, d) =>
       Similarity.ivfIndexHistory(s, builtIvfRetentionIndex(s, d))),
     "q_ann_ivf_deleted" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         Similarity.readIvfIndex(s, builtIvfDelIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // STREAMING ERASURE under the query gate: the same vec batch
     // tombstoned through two checkpointed micro-batches
     // (ivfDeleteSink) — shares the deleted oracle verbatim
     "q_ann_ivf_stream_deleted" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         Similarity.readIvfIndex(s, builtIvfStrDelIndex(s, d) + "/idx"),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // ...and after COMPACTION makes the erasure physical (cells
@@ -169,7 +170,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // shares the deleted oracle, so compacted ≡ tombstoned ≡
     // rebuild-on-remaining is the hash itself
     "q_ann_ivf_compacted" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         s.read.parquet(builtIvfCmpIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // Index maintenance: the same probe over an index built as
@@ -178,14 +179,15 @@ private[graft] trait AnnEntries extends EntryInfra {
     // gated by sharing the full-rebuild oracle; per-batch cost is
     // O(batch), the existing inverted lists are never read
     "q_ann_ivf_incremental" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(s.read.parquet(builtIvfIncIndex(s, d)),
+      VectorStore.topKFromIndex(VectorCodec.Float,
+        s.read.parquet(builtIvfIncIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // Streaming ingestion into the live ANN index: the same probe
-    // over an index the ivfIndexSink built from three checkpointed
+    // over an index the vectorIndexSink built from three checkpointed
     // micro-batches against frozen centroids — stream-built ≡
     // rebuild, gated by sharing the full-rebuild oracle
     "q_ann_ivf_streamed" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         s.read.parquet(builtIvfStreamedIndex(s, d) + "/idx"),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // SNAPSHOT of the stream-built index: the same probe served as
@@ -195,7 +197,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // the prefix's vectors. Time travel = one partition-column
     // range predicate next to the cell probes
     "q_ann_ivf_asof" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         Similarity.readIvfIndexAsOf(s,
           builtIvfStreamedIndex(s, d) + "/idx", 1L),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
@@ -206,7 +208,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // streamed index gets, without a streaming sink in the picture.
     // The oracle replays the rebuild on the base split
     "q_ann_ivf_asof_batch" -> ((s, d) =>
-      Similarity.ivfTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Float,
         Similarity.readIvfIndexAsOf(s, builtIvfIncIndex(s, d),
           Seq("build")),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
@@ -235,13 +237,13 @@ private[graft] trait AnnEntries extends EntryInfra {
       Similarity.reclusterChurn(s, builtIvfIndex(s, d),
         builtIvfReclusteredIndex(s, d))),
     // Batched one-scan serving for the FLOAT store (round-13 verdict
-    // #2): the pqMultiTopKFromIndex trick with per-query literal
+    // #2): the VectorStore.multiTopK trick with per-query literal
     // query vectors instead of LUTs — 5 queries, one pass over the
     // union of their probed cells, one bounded (query_id, vec_id,
     // score) shuffle. Batched ≡ 5 single serves is the hash gate
     // (the oracle replays each query's pruned ranking)
     "q_knn_ivf_multi" -> ((s, d) =>
-      Similarity.ivfMultiTopKFromIndex(
+      VectorStore.multiTopK(VectorCodec.Float,
         s.read.parquet(builtIvfIndex(s, d)), seedCents16(s, d),
         multiQueryVecs(s, d), 10, nProbe = 2)),
     // ...and for the COMPRESSED (int8) store — the high-QPS hot tier
@@ -249,7 +251,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // against every query's quantized literal, dequantized by the
     // two scales exactly as the single-query path
     "q_knn_quantized_multi" -> ((s, d) =>
-      Similarity.quantizedMultiTopKFromIndex(
+      VectorStore.multiTopK(VectorCodec.Int8,
         s.read.parquet(builtQuantizedIvfIndex(s, d)), seedCents16(s, d),
         multiQueryVecs(s, d), 10, nProbe = 2)),
     // QUERY-TABLE batched serving (round-15 verdict #1): the same 5
@@ -258,13 +260,13 @@ private[graft] trait AnnEntries extends EntryInfra {
     // pruning survives as dynamic partition pruning), O(1) plan size
     // in Q. Same oracle as the literal twin: batched ≡ singles
     "q_knn_ivf_multi_qt" -> ((s, d) =>
-      Similarity.ivfMultiTopKFromIndexQT(
+      VectorStore.multiTopK(VectorCodec.Float,
         s.read.parquet(builtIvfIndex(s, d)), seedCents16(s, d),
         multiQueryFrame(s, d), 10, nProbe = 2)),
     // ...and for the int8 store: the query side quantizes IN-PLAN
     // through the store's own native quantization
     "q_knn_quantized_multi_qt" -> ((s, d) =>
-      Similarity.quantizedMultiTopKFromIndexQT(
+      VectorStore.multiTopK(VectorCodec.Int8,
         s.read.parquet(builtQuantizedIvfIndex(s, d)), seedCents16(s, d),
         multiQueryFrame(s, d), 10, nProbe = 2)),
     // the query-table serve composed with the MAINTAINED store: the
@@ -272,7 +274,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // broadcast-probe plan — erased ids must be absent from every
     // query's ranking (the deleted replay per query is the oracle)
     "q_knn_quantized_multi_qt_deleted" -> ((s, d) =>
-      Similarity.quantizedMultiTopKFromIndexQT(
+      VectorStore.multiTopK(VectorCodec.Int8,
         Similarity.readIvfIndex(s, builtQivfDelIndex(s, d)),
         seedCents16(s, d), multiQueryFrame(s, d), 10, nProbe = 2)),
     // ...and with TIME TRAVEL: the batched serve over the stream-
@@ -282,7 +284,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // dynamic cell pruning are BOTH partition filters on the same
     // scan — time travel costs the batched plan nothing extra
     "q_knn_ivf_multi_qt_asof" -> ((s, d) =>
-      Similarity.ivfMultiTopKFromIndexQT(
+      VectorStore.multiTopK(VectorCodec.Float,
         Similarity.readIvfIndexAsOf(s,
           builtIvfStreamedIndex(s, d) + "/idx", 1L),
         seedCents16(s, d), multiQueryFrame(s, d), 10, nProbe = 2)),
@@ -293,7 +295,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // guard. Chunked ≡ one-shot ≡ singles: same oracle verbatim
     "q_knn_ivf_multi_qt_chunked" -> ((s, d) =>
       Similarity.servedInChunks(multiQueryFrame(s, d), 3)(q =>
-        Similarity.ivfMultiTopKFromIndexQT(
+        VectorStore.multiTopK(VectorCodec.Float,
           s.read.parquet(builtIvfIndex(s, d)), seedCents16(s, d),
           q, 10, nProbe = 2))),
     // The int8 member of the compression/recall frontier: recall@10
@@ -303,7 +305,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     // PQ the cold tier. Static oracle: quantization replay + routing
     // + exact baseline are all corpus-derived
     "q_int8_recall" -> ((s, d) =>
-      Similarity.quantizedRecall(
+      VectorStore.recall(VectorCodec.Int8,
         s.read.parquet(builtQuantizedIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
         Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
@@ -360,28 +362,28 @@ private[graft] trait AnnEntries extends EntryInfra {
     // The compressed store under IVF serving: probe cells prune to
     // partition directories of int8 entries (pruning × compression)
     "q_knn_quantized_ivf" -> ((s, d) =>
-      Similarity.quantizedTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Int8,
         s.read.parquet(builtQuantizedIvfIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // ERASURE for the compressed store: ids ≡ 3 mod 7 tombstoned
     // (the layout-agnostic reader anti-joins on vec_id), oracled by
     // the int8 replay on the REMAINING vectors
     "q_knn_quantized_ivf_deleted" -> ((s, d) =>
-      Similarity.quantizedTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Int8,
         Similarity.readIvfIndex(s, builtQivfDelIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // ...and after COMPACTION rewrites the int8 cells without the
     // tombstoned rows (layout-agnostic compactIvfIndex) — a plain
     // cell scan serves the erased state; shares the deleted oracle
     "q_knn_quantized_ivf_compacted" -> ((s, d) =>
-      Similarity.quantizedTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Int8,
         s.read.parquet(builtQivfCmpIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // Index maintenance for the COMPRESSED store: the same pruned
     // int8 probe over an index built as base-write + batch-append
     // against frozen centroids — append ≡ rebuild, shared oracle
     "q_knn_quantized_ivf_incremental" -> ((s, d) =>
-      Similarity.quantizedTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Int8,
         s.read.parquet(builtQuantIvfIncIndex(s, d)),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // ...and the SNAPSHOT of that batch-maintained compressed index
@@ -390,17 +392,17 @@ private[graft] trait AnnEntries extends EntryInfra {
     // float one; the oracle replays the int8 ranking on the base
     // split
     "q_knn_quantized_ivf_asof" -> ((s, d) =>
-      Similarity.quantizedTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Int8,
         Similarity.readIvfIndexAsOf(s, builtQuantIvfIncIndex(s, d),
           Seq("build")),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // STREAMING ingestion into the compressed store — the int8 twin
     // of q_ann_ivf_streamed, closing the last family asymmetry: the
-    // probe over an index the quantizedIvfIndexSink built from three
+    // probe over an index the vectorIndexSink built from three
     // checkpointed micro-batches; stream-built ≡ rebuild, gated by
     // sharing the full-rebuild oracle
     "q_knn_quantized_ivf_streamed" -> ((s, d) =>
-      Similarity.quantizedTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Int8,
         s.read.parquet(builtQivfStreamedIndex(s, d) + "/idx"),
         seedCents16(s, d), queryVec0(s, d), 10, 2)),
     // CENTROID REFRESH for the compressed store (round-11 verdict
@@ -417,7 +419,7 @@ private[graft] trait AnnEntries extends EntryInfra {
         builtQivfReclusteredIndex(s, d))),
     // STREAM ≡ BATCH for the SERVING-sink family (round-16 verdict
     // #3): the accumulated batch-stamped catalog of the hot-tier
-    // quantizedServingSink (two checkpointed micro-batches: queries
+    // vectorServingSink (two checkpointed micro-batches: queries
     // {0,1,2} then {3,4}, served through the int8 query-table plan
     // against the frozen index) re-sorted as one readout — per-batch
     // serves must accumulate to exactly the one-shot 5-query batched
@@ -1287,12 +1289,13 @@ private[graft] trait AnnEntries extends EntryInfra {
     */
   protected def builtIvfIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_ivf", d) { p =>
-      Similarity.writeIvfIndex(Tables.embeddings(s, d), seedCents16(s, d), p)
+      VectorStore.write(VectorCodec.Float,
+        Tables.embeddings(s, d), seedCents16(s, d), p)
     }
 
   /** Build-once RECLUSTERED index: the seed-built index's live
     * entries re-assigned against the Lloyd-refined centroids into a
-    * fresh directory ([[graft.similarity.Similarity.reclusterIvfIndex]]).
+    * fresh directory ([[graft.similarity.VectorStore.recluster]]).
     */
   protected def builtIvfReclusteredIndex(s: SparkSession, d: String): String = {
     // resolve the source index and centroids BEFORE entering the
@@ -1303,7 +1306,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     val src = builtIvfIndex(s, d)
     val cents = kmeansCentroids(s, d)
     builtIndexDir("graft_ivf_rc", d) { p =>
-      Similarity.reclusterIvfIndex(s, src, cents, p)
+      VectorStore.recluster(VectorCodec.Float, s, src, cents, p)
     }
   }
 
@@ -1317,16 +1320,16 @@ private[graft] trait AnnEntries extends EntryInfra {
   protected def builtIvfIncIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_ivf_inc", d) { p =>
       val emb = Tables.embeddings(s, d)
-      Similarity.writeIvfIndex(
+      VectorStore.write(VectorCodec.Float,
         emb.filter(col("vec_id") % 8 =!= 3), seedCents16(s, d), p)
-      Similarity.appendToIvfIndex(
+      VectorStore.append(VectorCodec.Float,
         emb.filter(col("vec_id") % 8 === 3), seedCents16(s, d), p, "inc1")
       // the batch-keyed append is retry-idempotent BY LAYOUT: a
       // replay of the same key dynamic-overwrites its own
       // (cell, batch_id) partitions — q_ann_ivf_incremental's shared
       // full-rebuild oracle hashes the post-retry index, so a
       // double-insert would fail the gate itself
-      Similarity.appendToIvfIndex(
+      VectorStore.append(VectorCodec.Float,
         emb.filter(col("vec_id") % 8 === 3), seedCents16(s, d), p, "inc1")
     }
 
@@ -1342,12 +1345,12 @@ private[graft] trait AnnEntries extends EntryInfra {
     builtIndexDir("graft_ivf_ret", d) { p =>
       val emb = Tables.embeddings(s, d)
       val cents = seedCents16(s, d)
-      Similarity.writeIvfIndex(
+      VectorStore.write(VectorCodec.Float,
         emb.filter(col("vec_id") % 8 =!= 1 && col("vec_id") % 8 =!= 6),
         cents, p)
-      Similarity.appendToIvfIndex(
+      VectorStore.append(VectorCodec.Float,
         emb.filter(col("vec_id") % 8 === 1), cents, p, "w1")
-      Similarity.appendToIvfIndex(
+      VectorStore.append(VectorCodec.Float,
         emb.filter(col("vec_id") % 8 === 6), cents, p, "w2")
       Similarity.deleteFromIvfIndex(
         emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), p, "d1")
@@ -1359,7 +1362,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     */
   protected def builtQuantizedIvfIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_qivf", d) { p =>
-      Similarity.writeQuantizedIvfIndex(Tables.embeddings(s, d),
+      VectorStore.write(VectorCodec.Int8, Tables.embeddings(s, d),
         seedCents16(s, d), p)
     }
 
@@ -1373,14 +1376,14 @@ private[graft] trait AnnEntries extends EntryInfra {
     val src = builtQuantizedIvfIndex(s, d)
     val cents = kmeansCentroids(s, d)
     builtIndexDir("graft_qivf_rc", d) { p =>
-      Similarity.reclusterQuantizedIvfIndex(s, src,
-        Tables.embeddings(s, d), cents, p)
+      VectorStore.recluster(VectorCodec.Int8,
+        s, src, cents, p, Some(Tables.embeddings(s, d)))
     }
   }
 
   /** Build-once STREAM-BUILT compressed IVF index — the int8 twin of
     * [[builtIvfStreamedIndex]]: three checkpointed MemoryStream
-    * micro-batches through the real quantizedIvfIndexSink against
+    * micro-batches through the real vectorIndexSink against
     * frozen centroids; q_knn_quantized_ivf_streamed shares the
     * full-rebuild oracle.
     */
@@ -1392,8 +1395,8 @@ private[graft] trait AnnEntries extends EntryInfra {
       val emb = Tables.embeddings(s, d)
       val mem = MemoryStream[Long]
       val src = mem.toDS().toDF("vec_id").join(emb, "vec_id")
-      val q = graft.streaming.Pipelines.quantizedIvfIndexSink(
-        src, seedCents16(s, d), p + "/idx", p + "/ckpt")
+      val q = graft.streaming.Pipelines.vectorIndexSink(
+        src, VectorCodec.Int8, seedCents16(s, d), p + "/idx", p + "/ckpt")
       try {
         val ids = emb.select("vec_id").collect().map(_.getLong(0)).sorted
         (0L until 3L).foreach { b =>
@@ -1411,20 +1414,20 @@ private[graft] trait AnnEntries extends EntryInfra {
   protected def builtQuantIvfIncIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_qivf_inc", d) { p =>
       val emb = Tables.embeddings(s, d)
-      Similarity.writeQuantizedIvfIndex(
+      VectorStore.write(VectorCodec.Int8,
         emb.filter(col("vec_id") % 8 =!= 6), seedCents16(s, d), p)
-      Similarity.appendToQuantizedIvfIndex(
+      VectorStore.append(VectorCodec.Int8,
         emb.filter(col("vec_id") % 8 === 6), seedCents16(s, d), p, "inc1")
       // retry replay — same key, own partitions overwritten, no
       // double-insert (gated by the shared full-rebuild oracle)
-      Similarity.appendToQuantizedIvfIndex(
+      VectorStore.append(VectorCodec.Int8,
         emb.filter(col("vec_id") % 8 === 6), seedCents16(s, d), p, "inc1")
     }
 
   /** Build-once SERVED CATALOG of the hot-tier streaming serve sink
     * (round-16 verdict #3): two checkpointed micro-batches of query
     * rows ({0,1,2} then {3,4}, id-joined to their embeddings) through
-    * the real [[graft.streaming.Pipelines.quantizedServingSink]]
+    * the real [[graft.streaming.Pipelines.vectorServingSink]]
     * against the build-once int8 index — the accumulated
     * batch-stamped output table q_knn_served_catalog reads.
     */
@@ -1439,8 +1442,8 @@ private[graft] trait AnnEntries extends EntryInfra {
       val src = mem.toDS().toDF("query_id")
         .join(emb, col("query_id") === col("vec_id"))
         .select(col("query_id"), col("embedding"))
-      val q = graft.streaming.Pipelines.quantizedServingSink(
-        src, seedCents16(s, d), idx, p + "/out", p + "/ckpt")
+      val q = graft.streaming.Pipelines.vectorServingSink(
+        src, VectorCodec.Int8, seedCents16(s, d), idx, p + "/out", p + "/ckpt")
       try {
         mem.addData(Seq(0L, 1L, 2L))
         q.processAllAvailable()
@@ -1453,7 +1456,8 @@ private[graft] trait AnnEntries extends EntryInfra {
   /** Build-once IVF index with the ids ≡ 3 mod 7 batch tombstoned. */
   protected def builtIvfDelIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_ivf_del", d) { p =>
-      Similarity.writeIvfIndex(Tables.embeddings(s, d), seedCents16(s, d), p)
+      VectorStore.write(VectorCodec.Float,
+        Tables.embeddings(s, d), seedCents16(s, d), p)
       Similarity.deleteFromIvfIndex(
         Tables.embeddings(s, d).filter(col("vec_id") % 7 === 3)
           .select(col("vec_id")), p, batchKey = "del1")
@@ -1469,7 +1473,7 @@ private[graft] trait AnnEntries extends EntryInfra {
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val emb = Tables.embeddings(s, d)
-      Similarity.writeIvfIndex(emb, seedCents16(s, d), p + "/idx")
+      VectorStore.write(VectorCodec.Float, emb, seedCents16(s, d), p + "/idx")
       val mem = MemoryStream[Long]
       val q = graft.streaming.Pipelines.ivfDeleteSink(
         mem.toDS().toDF("vec_id"), p + "/idx", p + "/ckpt")
@@ -1488,7 +1492,8 @@ private[graft] trait AnnEntries extends EntryInfra {
     */
   protected def builtIvfCmpIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_ivf_cmp", d) { p =>
-      Similarity.writeIvfIndex(Tables.embeddings(s, d), seedCents16(s, d), p)
+      VectorStore.write(VectorCodec.Float,
+        Tables.embeddings(s, d), seedCents16(s, d), p)
       Similarity.deleteFromIvfIndex(
         Tables.embeddings(s, d).filter(col("vec_id") % 7 === 3)
           .select(col("vec_id")), p, batchKey = "del1")
@@ -1500,7 +1505,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     */
   protected def builtQivfDelIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_qivf_del", d) { p =>
-      Similarity.writeQuantizedIvfIndex(Tables.embeddings(s, d),
+      VectorStore.write(VectorCodec.Int8, Tables.embeddings(s, d),
         seedCents16(s, d), p)
       Similarity.deleteFromIvfIndex(
         Tables.embeddings(s, d).filter(col("vec_id") % 7 === 3)
@@ -1512,7 +1517,7 @@ private[graft] trait AnnEntries extends EntryInfra {
     */
   protected def builtQivfCmpIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_qivf_cmp", d) { p =>
-      Similarity.writeQuantizedIvfIndex(Tables.embeddings(s, d),
+      VectorStore.write(VectorCodec.Int8, Tables.embeddings(s, d),
         seedCents16(s, d), p)
       Similarity.deleteFromIvfIndex(
         Tables.embeddings(s, d).filter(col("vec_id") % 7 === 3)
@@ -1522,7 +1527,7 @@ private[graft] trait AnnEntries extends EntryInfra {
 
   /** Build-once STREAM-BUILT IVF index per corpus — the ANN twin of
     * [[builtBm25StreamedIndex]]: three MemoryStream batches through
-    * [[graft.streaming.Pipelines.ivfIndexSink]] against the frozen
+    * [[graft.streaming.Pipelines.vectorIndexSink]] against the frozen
     * seed centroids; q_ann_ivf_streamed shares the full-rebuild
     * oracle.
     */
@@ -1534,8 +1539,8 @@ private[graft] trait AnnEntries extends EntryInfra {
       val emb = Tables.embeddings(s, d)
       val mem = MemoryStream[Long]
       val src = mem.toDS().toDF("vec_id").join(emb, "vec_id")
-      val q = graft.streaming.Pipelines.ivfIndexSink(
-        src, seedCents16(s, d), p + "/idx", p + "/ckpt")
+      val q = graft.streaming.Pipelines.vectorIndexSink(
+        src, VectorCodec.Float, seedCents16(s, d), p + "/idx", p + "/ckpt")
       try {
         val ids = emb.select("vec_id").collect().map(_.getLong(0)).sorted
         (0L until 3L).foreach { b =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops._
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec, VectorStore}
 
 /** Product-quantization, residual, rotation, and truncation families
   * — one module of the per-family SparkEntry split (round 14): the
@@ -35,8 +35,9 @@ private[graft] trait PqEntries extends AnnEntries {
     // codebook replay of q_knn_pq composed with the static seed-cell
     // assignment/probe CTEs of q_ann_ivf.
     "q_knn_pq_ivf" -> ((s, d) =>
-      Similarity.pqTopKFromIndex(s.read.parquet(builtPqIvfIndex(s, d)),
-        seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
+      VectorStore.topKFromIndex(VectorCodec.Pq(pqCodebookFor(s, d)),
+        s.read.parquet(builtPqIvfIndex(s, d)),
+        seedCents16(s, d), queryVec0(s, d), 10,
         nProbe = 2)),
     // The IVF-PQ maintenance matrix — the composed 100 TB serving
     // shape gets the same five members as the other index families,
@@ -44,55 +45,56 @@ private[graft] trait PqEntries extends AnnEntries {
     // append/stream, filtered splits for erasure/as-of):
     // retry-idempotent batch append (built with the append run TWICE)
     "q_knn_pq_ivf_incremental" -> ((s, d) =>
-      Similarity.pqTopKFromIndex(s.read.parquet(builtPqIvfIncIndex(s, d)),
-        seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
+      VectorStore.topKFromIndex(VectorCodec.Pq(pqCodebookFor(s, d)),
+        s.read.parquet(builtPqIvfIncIndex(s, d)),
+        seedCents16(s, d), queryVec0(s, d), 10,
         nProbe = 2)),
     // erasure: ids ≡ 3 mod 7 tombstoned; the layout-generic reader
     // anti-joins — tombstoned ≡ rebuild-on-remaining
     "q_knn_pq_ivf_deleted" -> ((s, d) =>
-      Similarity.pqTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Pq(pqCodebookFor(s, d)),
         Similarity.readIvfIndex(s, builtPqIvfDelIndex(s, d)),
-        seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
+        seedCents16(s, d), queryVec0(s, d), 10,
         nProbe = 2)),
     // ...and compacted: erasure made physical, a plain cell scan
     // serves the erased state (shares the deleted replay)
     "q_knn_pq_ivf_compacted" -> ((s, d) =>
-      Similarity.pqTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Pq(pqCodebookFor(s, d)),
         s.read.parquet(builtPqIvfCmpIndex(s, d)),
-        seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
+        seedCents16(s, d), queryVec0(s, d), 10,
         nProbe = 2)),
     // snapshot by batch name: the probe as of the base build — the
     // "inc1" append's ids ≡ 1 mod 8 must vanish
     "q_knn_pq_ivf_asof" -> ((s, d) =>
-      Similarity.pqTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Pq(pqCodebookFor(s, d)),
         Similarity.readIvfIndexAsOf(s, builtPqIvfIncIndex(s, d),
           Seq("build")),
-        seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
+        seedCents16(s, d), queryVec0(s, d), 10,
         nProbe = 2)),
     // streaming ingestion: three checkpointed micro-batches through
-    // pqIndexSink — stream-built ≡ rebuild
+    // vectorIndexSink — stream-built ≡ rebuild
     "q_knn_pq_ivf_streamed" -> ((s, d) =>
-      Similarity.pqTopKFromIndex(
+      VectorStore.topKFromIndex(VectorCodec.Pq(pqCodebookFor(s, d)),
         s.read.parquet(builtPqIvfStreamedIndex(s, d) + "/idx"),
-        seedCents16(s, d), pqCodebookFor(s, d), queryVec0(s, d), 10,
+        seedCents16(s, d), queryVec0(s, d), 10,
         nProbe = 2)),
     // BATCHED ADC serving: 5 queries' top-10 in ONE pass over the
     // union of their probed cells — the high-QPS economics (Q pruned
     // scans collapse to one; per-query results identical to the
     // single-query path, which the shared generated oracle gates)
     "q_knn_pq_multi" -> ((s, d) =>
-      Similarity.pqMultiTopKFromIndex(
+      VectorStore.multiTopK(VectorCodec.Pq(pqCodebookFor(s, d)),
         s.read.parquet(builtPqIvfIndex(s, d)), seedCents16(s, d),
-        pqCodebookFor(s, d), multiQueryVecs(s, d), 10, nProbe = 2)),
+        multiQueryVecs(s, d), 10, nProbe = 2)),
     // QUERY-TABLE batched ADC serving (round-15 verdict #1): the
     // same 5-query batch as a DataFrame — each query's integer LUT
     // computed IN-PLAN on the broadcast probe side, O(1) plan size
     // in Q. Shares the literal twin's generated replay (batched ≡
     // singles stays the hash gate)
     "q_knn_pq_multi_qt" -> ((s, d) =>
-      Similarity.pqMultiTopKFromIndexQT(
+      VectorStore.multiTopK(VectorCodec.Pq(pqCodebookFor(s, d)),
         s.read.parquet(builtPqIvfIndex(s, d)), seedCents16(s, d),
-        pqCodebookFor(s, d), multiQueryFrame(s, d), 10, nProbe = 2)),
+        multiQueryFrame(s, d), 10, nProbe = 2)),
     // PQ operating-point evaluation: recall@10 of the written IVF-PQ
     // index's ADC ranking (nProbe=2 of 16 cells, 8-byte codes)
     // against exact float brute force for 5 queries — the doubly-
@@ -100,8 +102,9 @@ private[graft] trait PqEntries extends AnnEntries {
     // per-query integer LUTs, probe routing, and the exact baseline,
     // so the recall numbers themselves are hash-gated
     "q_pq_recall" -> ((s, d) =>
-      Similarity.pqRecall(s.read.parquet(builtPqIvfIndex(s, d)),
-        Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
+      VectorStore.recall(VectorCodec.Pq(pqCodebookFor(s, d)),
+        s.read.parquet(builtPqIvfIndex(s, d)),
+        Tables.embeddings(s, d), seedCents16(s, d),
         Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
     // The OPERATING CURVE behind q_pq_recall's single point: the
     // same ADC serving path swept over nProbe ∈ {1, 2, 4, 8} of 16
@@ -114,15 +117,16 @@ private[graft] trait PqEntries extends AnnEntries {
       val emb = Tables.embeddings(s, d)
       val qs = Seq(0L, 1L, 2L, 3L, 4L)
       Seq(1, 2, 4, 8).map { np =>
-        Similarity.pqRecall(idx, emb, seedCents16(s, d),
-          pqCodebookFor(s, d), qs, 10, np)
+        VectorStore.recall(VectorCodec.Pq(pqCodebookFor(s, d)),
+          idx, emb, seedCents16(s, d),
+          qs, 10, np)
           .withColumn("n_probe", lit(np))
       }.reduce(_.unionByName(_))
         .orderBy(col("n_probe"), col("query_id"))
     }),
     // Drift maintenance for the composed index: the (cell_old →
     // cell_new) movement matrix between the built IVF-PQ index and
-    // its reclusterPqIndex refresh — shares the float recluster's
+    // its VectorStore.recluster refresh — shares the float recluster's
     // generated oracle VERBATIM (cell assignment is from true floats
     // in every family; one SQL, three hash gates)
     "q_knn_pq_ivf_recluster" -> ((s, d) =>
@@ -131,7 +135,7 @@ private[graft] trait PqEntries extends AnnEntries {
     // The measurement that justifies a PQ refresh: the drifted corpus
     // (q_ann_ivf_recluster_recall's fixture) served from the STALE
     // index (frozen seed cells + frozen corpus codebook — exactly an
-    // append-fed index, by append ≡ rebuild) vs the reclusterPqIndex
+    // append-fed index, by append ≡ rebuild) vs the VectorStore.recluster
     // REFRESH (drift-seeded Lloyd cells + drift-retrained codebook);
     // recall@10 for drift-batch queries before and after, exact float
     // baseline shared. Generated oracle replays BOTH full encode+ADC
@@ -139,14 +143,14 @@ private[graft] trait PqEntries extends AnnEntries {
     "q_pq_recluster_recall" -> ((s, d) => {
       val dr = driftedEmbeddings(s, d)
       val qs = Seq(2000000L, 2000010L, 2000020L, 2000030L, 2000040L)
-      val before = Similarity.pqRecall(
+      val before = VectorStore.recall(VectorCodec.Pq(pqCodebookFor(s, d)),
         s.read.parquet(builtPqDriftStaleIndex(s, d)), dr,
-        seedCents16(s, d), pqCodebookFor(s, d), qs, 10, 2)
+        seedCents16(s, d), qs, 10, 2)
         .select(col("query_id"), col("n_exact"),
           col("recall").as("recall_before"))
-      val after = Similarity.pqRecall(
+      val after = VectorStore.recall(VectorCodec.Pq(driftedPqCodebook(s, d)),
         s.read.parquet(builtPqDriftFreshIndex(s, d)), dr,
-        driftedCentroids(s, d), driftedPqCodebook(s, d), qs, 10, 2)
+        driftedCentroids(s, d), qs, 10, 2)
         .select(col("query_id"), col("recall").as("recall_after"))
       before.join(after, Seq("query_id")).orderBy(col("query_id"))
     }),
@@ -156,8 +160,9 @@ private[graft] trait PqEntries extends AnnEntries {
     // point lookups, never a corpus pass). Generated oracle replays
     // shortlist + re-rank, so the refined ranking is hash-gated
     "q_knn_pq_refined" -> ((s, d) =>
-      Similarity.pqTopKRefined(s.read.parquet(builtPqIvfIndex(s, d)),
-        Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
+      VectorStore.topKRefined(VectorCodec.Pq(pqCodebookFor(s, d)),
+        s.read.parquet(builtPqIvfIndex(s, d)),
+        Tables.embeddings(s, d), seedCents16(s, d),
         queryVec0(s, d), 10, nProbe = 2, shortlist = 40)),
     // BATCHED two-stage serving (round 14 — the two high-QPS waves
     // composed): 5 queries' shortlists from ONE code scan, every
@@ -165,16 +170,18 @@ private[graft] trait PqEntries extends AnnEntries {
     // float rows — two scans for the whole batch vs 2Q single-query
     // passes. Batched ≡ 5 single refined serves is the hash gate
     "q_knn_pq_refined_multi" -> ((s, d) =>
-      Similarity.pqMultiTopKRefined(s.read.parquet(builtPqIvfIndex(s, d)),
-        Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
+      VectorStore.multiTopKRefined(VectorCodec.Pq(pqCodebookFor(s, d)),
+        s.read.parquet(builtPqIvfIndex(s, d)),
+        Tables.embeddings(s, d), seedCents16(s, d),
         multiQueryVecs(s, d), 10, nProbe = 2, shortlist = 40)),
     // QUERY-TABLE batched two-stage (round-15 verdict #1): the
     // shortlist stays a DataFrame and the re-rank is a semi-join —
     // NO Q×R driver collect, no per-query isin literals. Shares the
     // literal twin's generated refined replay
     "q_knn_pq_refined_multi_qt" -> ((s, d) =>
-      Similarity.pqMultiTopKRefinedQT(s.read.parquet(builtPqIvfIndex(s, d)),
-        Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
+      VectorStore.multiTopKRefined(VectorCodec.Pq(pqCodebookFor(s, d)),
+        s.read.parquet(builtPqIvfIndex(s, d)),
+        Tables.embeddings(s, d), seedCents16(s, d),
         multiQueryFrame(s, d), 10, nProbe = 2, shortlist = 40)),
     // ...and with the re-rank fetch BUCKET-PRUNED (round-16 verdict
     // #1, the last streamed pass on the serving path): the float
@@ -184,7 +191,7 @@ private[graft] trait PqEntries extends AnnEntries {
     // a full streamed pass per batch. Shares the refined replay
     // verbatim: bucketed ≡ streamed ≡ Q singles is the hash gate
     // STREAM ≡ BATCH for the COLD-tier serve sink: the accumulated
-    // batch-stamped catalog of pqRefinedServingSink (two checkpointed
+    // batch-stamped catalog of vectorServingSink (two checkpointed
     // micro-batches {0,1,2}+{3,4} through the two-stage refined plan)
     // re-sorted as one readout must equal the one-shot 5-query
     // refined serve — shares q_knn_pq_refined_multi's replay verbatim
@@ -193,10 +200,10 @@ private[graft] trait PqEntries extends AnnEntries {
         .select(col("query_id"), col("vec_id"), col("cos_sim"))
         .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id"))),
     "q_knn_pq_refined_multi_qt_bucketed" -> ((s, d) =>
-      Similarity.pqMultiTopKRefinedQTBucketed(
+      VectorStore.multiTopKRefinedBucketed(VectorCodec.Pq(pqCodebookFor(s, d)),
         s.read.parquet(builtPqIvfIndex(s, d)),
         graft.ops.BucketedTables.readTable(s, builtBucketedEmb(s, d)),
-        seedCents16(s, d), pqCodebookFor(s, d),
+        seedCents16(s, d),
         multiQueryFrame(s, d), 10, nProbe = 2, shortlist = 40)),
     // The measurement that prices the re-rank stage: recall@10 of the
     // two-stage path vs q_pq_recall's pure-ADC 0.52 — measured 0.88,
@@ -204,8 +211,9 @@ private[graft] trait PqEntries extends AnnEntries {
     // 0.90): a deep-enough shortlist recovers ALL ADC loss, and the
     // residual gap is coarse routing, which only nProbe can buy back
     "q_pq_refined_recall" -> ((s, d) =>
-      Similarity.pqRefinedRecall(s.read.parquet(builtPqIvfIndex(s, d)),
-        Tables.embeddings(s, d), seedCents16(s, d), pqCodebookFor(s, d),
+      VectorStore.refinedRecall(VectorCodec.Pq(pqCodebookFor(s, d)),
+        s.read.parquet(builtPqIvfIndex(s, d)),
+        Tables.embeddings(s, d), seedCents16(s, d),
         Seq(0L, 1L, 2L, 3L, 4L), 10, nProbe = 2, shortlist = 40)),
     // The SHORTLIST-DEPTH operating curve behind that single point —
     // the knob a deployment sizes the re-rank I/O budget with:
@@ -220,8 +228,9 @@ private[graft] trait PqEntries extends AnnEntries {
       // per-depth unionByName form (SimilaritySpec parity pin), with
       // the ADC shortlist, float fetch and exact baseline computed
       // once instead of once per depth
-      Similarity.pqRefinedRecallCurve(idx, emb, seedCents16(s, d),
-        pqCodebookFor(s, d), qs, 10, nProbe = 2, Seq(10, 20, 40, 80))
+      VectorStore.refinedRecallCurve(VectorCodec.Pq(pqCodebookFor(s, d)),
+        idx, emb, seedCents16(s, d),
+        qs, 10, nProbe = 2, Seq(10, 20, 40, 80))
     }),
     // The CODE-WIDTH lever, measured: the same m=8 code count with
     // 8-bit books (ksub 64 → 256, the full byte the "8-byte code"
@@ -230,9 +239,10 @@ private[graft] trait PqEntries extends AnnEntries {
     // Own trained codebook, own written index, same generated-replay
     // oracle shape
     "q_pq_recall_wide" -> ((s, d) =>
-      Similarity.pqRecall(s.read.parquet(builtWidePqIvfIndex(s, d)),
+      VectorStore.recall(VectorCodec.Pq(widePqCodebookFor(s, d)),
+        s.read.parquet(builtWidePqIvfIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
-        widePqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
+        Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
     // RESIDUAL encoding (IVFADC proper, Jégou §III): codes quantize
     // v − c_cell instead of v; serving adds one per-cell LUT term
     // (dot(q,v) = dot(q,c_cell) + dot(q,r) decomposes exactly).
@@ -243,31 +253,35 @@ private[graft] trait PqEntries extends AnnEntries {
     // residual encoding). The operator is the standard shape for
     // clustered corpora; the measurement is the when-to-use guidance
     "q_knn_pq_residual" -> ((s, d) =>
-      Similarity.residualPqTopKFromIndex(
+      VectorStore.topKFromIndex(
+        VectorCodec.ResidualPq(residualPqCodebookFor(s, d)),
         s.read.parquet(builtResidualPqIndex(s, d)), seedCents16(s, d),
-        residualPqCodebookFor(s, d), queryVec0(s, d), 10, nProbe = 2)),
+        queryVec0(s, d), 10, nProbe = 2)),
     "q_pq_residual_recall" -> ((s, d) =>
-      Similarity.residualPqRecall(
+      VectorStore.recall(
+        VectorCodec.ResidualPq(residualPqCodebookFor(s, d)),
         s.read.parquet(builtResidualPqIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
-        residualPqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
+        Seq(0L, 1L, 2L, 3L, 4L), 10, 2)),
     // BATCHED serving for the residual store — the last cell of the
     // batched matrix (each query carries its LUT and its per-cell
     // term literal; one pass over the union of probed cells).
     // Batched ≡ 5 single residual serves is the hash gate
     "q_knn_pq_residual_multi" -> ((s, d) =>
-      Similarity.residualPqMultiTopKFromIndex(
+      VectorStore.multiTopK(
+        VectorCodec.ResidualPq(residualPqCodebookFor(s, d)),
         s.read.parquet(builtResidualPqIndex(s, d)), seedCents16(s, d),
-        residualPqCodebookFor(s, d), multiQueryVecs(s, d), 10,
+        multiQueryVecs(s, d), 10,
         nProbe = 2)),
     // QUERY-TABLE batched residual serving (round-15 verdict #1):
     // both per-query LUTs (residual codebook + per-cell term) are
     // broadcast-side COLUMNS. Shares the literal twin's generated
     // residual replay
     "q_knn_pq_residual_multi_qt" -> ((s, d) =>
-      Similarity.residualPqMultiTopKFromIndexQT(
+      VectorStore.multiTopK(
+        VectorCodec.ResidualPq(residualPqCodebookFor(s, d)),
         s.read.parquet(builtResidualPqIndex(s, d)), seedCents16(s, d),
-        residualPqCodebookFor(s, d), multiQueryFrame(s, d), 10,
+        multiQueryFrame(s, d), 10,
         nProbe = 2)),
     // Two-stage serving over the RESIDUAL store (round 14 — the
     // composition the IVFADC family lacked): residual-ADC shortlist
@@ -275,20 +289,22 @@ private[graft] trait PqEntries extends AnnEntries {
     // rows — the same bounded-In-pushdown tail as q_knn_pq_refined.
     // Generated oracle replays residual encode + shortlist + re-rank
     "q_knn_pq_residual_refined" -> ((s, d) =>
-      Similarity.residualPqTopKRefined(
+      VectorStore.topKRefined(
+        VectorCodec.ResidualPq(residualPqCodebookFor(s, d)),
         s.read.parquet(builtResidualPqIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
-        residualPqCodebookFor(s, d), queryVec0(s, d), 10, nProbe = 2,
+        queryVec0(s, d), 10, nProbe = 2,
         shortlist = 40)),
     // ...and its measured operating point: the re-rank recovers
     // residual-ADC loss up to the shared routing ceiling, so raw vs
     // residual codes wash out under a deep shortlist — the store
     // decision stays with the residual-norm diagnostic
     "q_pq_residual_refined_recall" -> ((s, d) =>
-      Similarity.residualPqRefinedRecall(
+      VectorStore.refinedRecall(
+        VectorCodec.ResidualPq(residualPqCodebookFor(s, d)),
         s.read.parquet(builtResidualPqIndex(s, d)),
         Tables.embeddings(s, d), seedCents16(s, d),
-        residualPqCodebookFor(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10, 2,
+        Seq(0L, 1L, 2L, 3L, 4L), 10, 2,
         40)),
     // The FOURTH compression lever: prefix truncation (Matryoshka) —
     // recall@10 serving only the first d ∈ {8,16,32,64} components
@@ -366,13 +382,14 @@ private[graft] trait PqEntries extends AnnEntries {
     */
   protected def builtPqIvfIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_pqivf", d) { p =>
-      Similarity.writePqIndex(Tables.embeddings(s, d), seedCents16(s, d),
-        pqCodebookFor(s, d), p)
+      VectorStore.write(VectorCodec.Pq(pqCodebookFor(s, d)),
+        Tables.embeddings(s, d), seedCents16(s, d),
+        p)
     }
 
   /** Build-once SERVED CATALOG of the COLD-tier streaming serve sink
     * — [[builtQuantServedCatalog]]'s twin for
-    * [[graft.streaming.Pipelines.pqRefinedServingSink]]: the same two
+    * [[graft.streaming.Pipelines.vectorServingSink]]: the same two
     * checkpointed micro-batches ({0,1,2} then {3,4}) through the real
     * two-stage refined sink against the build-once IVF-PQ index, so
     * the accumulated catalog must equal the one-shot 5-query refined
@@ -392,9 +409,9 @@ private[graft] trait PqEntries extends AnnEntries {
       val src = mem.toDS().toDF("query_id")
         .join(emb, col("query_id") === col("vec_id"))
         .select(col("query_id"), col("embedding"))
-      val q = graft.streaming.Pipelines.pqRefinedServingSink(
-        src, seedCents16(s, d), cb, idx, p + "/emb", p + "/out",
-        p + "/ckpt", k = 10, nProbe = 2, shortlist = 40)
+      val q = graft.streaming.Pipelines.vectorServingSink(
+        src, VectorCodec.Pq(cb), seedCents16(s, d), idx, p + "/out",
+        p + "/ckpt", k = 10, nProbe = 2, rerank = Some((p + "/emb", 40)))
       try {
         mem.addData(Seq(0L, 1L, 2L))
         q.processAllAvailable()
@@ -421,8 +438,10 @@ private[graft] trait PqEntries extends AnnEntries {
     */
   protected def builtResidualPqIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_rpqivf", d) { p =>
-      Similarity.writeResidualPqIndex(Tables.embeddings(s, d),
-        seedCents16(s, d), residualPqCodebookFor(s, d), p)
+      VectorStore.write(
+        VectorCodec.ResidualPq(residualPqCodebookFor(s, d)),
+        Tables.embeddings(s, d),
+        seedCents16(s, d), p)
     }
 
   /** Cell-partitioned WIDE-BOOK (ksub=256) IVF-PQ index per corpus —
@@ -430,8 +449,9 @@ private[graft] trait PqEntries extends AnnEntries {
     */
   protected def builtWidePqIvfIndex(s: SparkSession, d: String): String =
     builtIndexDir("graft_wpqivf", d) { p =>
-      Similarity.writePqIndex(Tables.embeddings(s, d), seedCents16(s, d),
-        widePqCodebookFor(s, d), p)
+      VectorStore.write(VectorCodec.Pq(widePqCodebookFor(s, d)),
+        Tables.embeddings(s, d), seedCents16(s, d),
+        p)
     }
 
   /** Incrementally-assembled IVF-PQ index: base = corpus minus its
@@ -446,12 +466,12 @@ private[graft] trait PqEntries extends AnnEntries {
     val cb = pqCodebookFor(s, d)
     builtIndexDir("graft_pqivf_inc", d) { p =>
       val emb = Tables.embeddings(s, d)
-      Similarity.writePqIndex(
-        emb.filter(col("vec_id") % 8 =!= 1), cents, cb, p)
-      Similarity.appendToPqIndex(
-        emb.filter(col("vec_id") % 8 === 1), cents, cb, p, "inc1")
-      Similarity.appendToPqIndex(
-        emb.filter(col("vec_id") % 8 === 1), cents, cb, p, "inc1")
+      VectorStore.write(VectorCodec.Pq(cb),
+        emb.filter(col("vec_id") % 8 =!= 1), cents, p)
+      VectorStore.append(VectorCodec.Pq(cb),
+        emb.filter(col("vec_id") % 8 === 1), cents, p, "inc1")
+      VectorStore.append(VectorCodec.Pq(cb),
+        emb.filter(col("vec_id") % 8 === 1), cents, p, "inc1")
     }
   }
 
@@ -464,7 +484,7 @@ private[graft] trait PqEntries extends AnnEntries {
     val cb = pqCodebookFor(s, d)
     builtIndexDir("graft_pqivf_del", d) { p =>
       val emb = Tables.embeddings(s, d)
-      Similarity.writePqIndex(emb, cents, cb, p)
+      VectorStore.write(VectorCodec.Pq(cb), emb, cents, p)
       Similarity.deleteFromIvfIndex(
         emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), p, "d1")
     }
@@ -479,7 +499,7 @@ private[graft] trait PqEntries extends AnnEntries {
     val cb = pqCodebookFor(s, d)
     builtIndexDir("graft_pqivf_cmp", d) { p =>
       val emb = Tables.embeddings(s, d)
-      Similarity.writePqIndex(emb, cents, cb, p)
+      VectorStore.write(VectorCodec.Pq(cb), emb, cents, p)
       Similarity.deleteFromIvfIndex(
         emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), p, "d1")
       Similarity.compactIvfIndex(s, p)
@@ -487,7 +507,7 @@ private[graft] trait PqEntries extends AnnEntries {
   }
 
   /** Build-once STREAM-BUILT IVF-PQ index: three checkpointed
-    * MemoryStream micro-batches through the real pqIndexSink.
+    * MemoryStream micro-batches through the real vectorIndexSink.
     */
   protected def builtPqIvfStreamedIndex(s: SparkSession, d: String): String = {
     val cents = seedCents16(s, d)
@@ -499,8 +519,8 @@ private[graft] trait PqEntries extends AnnEntries {
       val emb = Tables.embeddings(s, d)
       val mem = MemoryStream[Long]
       val src = mem.toDS().toDF("vec_id").join(emb, "vec_id")
-      val q = graft.streaming.Pipelines.pqIndexSink(
-        src, cents, cb, p + "/idx", p + "/ckpt")
+      val q = graft.streaming.Pipelines.vectorIndexSink(
+        src, VectorCodec.Pq(cb), cents, p + "/idx", p + "/ckpt")
       try {
         val ids = emb.select("vec_id").collect().map(_.getLong(0)).sorted
         (0L until 3L).foreach { b =>
@@ -524,8 +544,8 @@ private[graft] trait PqEntries extends AnnEntries {
     val cents = kmeansCentroids(s, d)
     val cb = pqCodebookFor(s, d)
     builtIndexDir("graft_pqivf_rc", d) { p =>
-      Similarity.reclusterPqIndex(s, src, Tables.embeddings(s, d), cents,
-        cb, p)
+      VectorStore.recluster(VectorCodec.Pq(cb),
+        s, src, cents, p, Some(Tables.embeddings(s, d)))
     }
   }
 
@@ -533,19 +553,19 @@ private[graft] trait PqEntries extends AnnEntries {
     * batch encoded with the FROZEN build literals (seed centroids +
     * corpus codebook) — by the append ≡ rebuild contract this is
     * exactly the state of a served index whose drift batches arrived
-    * through [[graft.similarity.Similarity.appendToPqIndex]] with no
+    * through [[graft.similarity.VectorStore.append]] with no
     * refresh, the "before" side of the recall measurement.
     */
   protected def builtPqDriftStaleIndex(s: SparkSession, d: String): String = {
     val cents = seedCents16(s, d)
     val cb = pqCodebookFor(s, d)
     builtIndexDir("graft_pqd_stale", d) { p =>
-      Similarity.writePqIndex(driftedEmbeddings(s, d), cents, cb, p)
+      VectorStore.write(VectorCodec.Pq(cb), driftedEmbeddings(s, d), cents, p)
     }
   }
 
   /** The stale drift index REFRESHED through
-    * [[graft.similarity.Similarity.reclusterPqIndex]]: coarse
+    * [[graft.similarity.VectorStore.recluster]]: coarse
     * centroids re-trained on the drifted corpus (the
     * [[driftedCentroids]] seeding policy) AND the codebook re-trained
     * on the drifted corpus — the "after" side.
@@ -555,8 +575,8 @@ private[graft] trait PqEntries extends AnnEntries {
     val cents = driftedCentroids(s, d)
     val cb = driftedPqCodebook(s, d)
     builtIndexDir("graft_pqd_rc", d) { p =>
-      Similarity.reclusterPqIndex(s, stale, driftedEmbeddings(s, d),
-        cents, cb, p)
+      VectorStore.recluster(VectorCodec.Pq(cb),
+        s, stale, cents, p, Some(driftedEmbeddings(s, d)))
     }
   }
 

@@ -128,7 +128,7 @@ private[graft] trait TextEntries extends EntryInfra {
         Tables.documents(s, d), bpeVocabTable(s, d))
         .orderBy(col("doc_id"))),
     // The same tokenization served from the WRITTEN artifact (the
-    // writeIvfIndex lifecycle): the vocab-token table reads back
+    // VectorStore.write lifecycle): the vocab-token table reads back
     // from parquet and the corpus joins it — cross-session serving,
     // gated by the same direct-replay oracle
     "q_bpe_encode_indexed" -> ((s, d) =>
@@ -1132,7 +1132,7 @@ private[graft] trait TextEntries extends EntryInfra {
 
   /** Build-once WRITTEN DSIR model per corpus — the full artifact
     * lifecycle under the gate: train → parquet → read back → score
-    * (the writeIvfIndex / q_bpe_encode_indexed precedent).
+    * (the VectorStore.write / q_bpe_encode_indexed precedent).
     */
   protected def builtDsirModel(s: SparkSession, d: String): String =
     builtIndexDir("graft_dsir", d) { p =>

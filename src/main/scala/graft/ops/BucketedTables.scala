@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * That converts the recurring shuffle of a fact⋈dim or
   * corpus⋈signatures join into a one-time write-side cost — exactly
   * the trade a nightly 100 TB pipeline wants, and the file-level
-  * analogue of what [[graft.similarity.Similarity.writeIvfIndex]]
+  * analogue of what [[graft.similarity.VectorStore.write]]
   * does with partition pruning for probe scans.
   *
   * Spark constraint worth knowing before copying this to a cluster:

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.words
+import graft.similarity.{VectorCodec, VectorStore}
 
 /** Deterministic search — the engine's replacement for the
   * reference's Elasticsearch query (services/search/app/main.py:72-147:
@@ -276,7 +277,7 @@ object SearchOps {
 
   /** Ingest a batch of NEW documents into a written BM25 index
     * WITHOUT rebuilding it — the text-retrieval member of the
-    * index-maintenance family ([[graft.similarity.Similarity.appendToIvfIndex]],
+    * index-maintenance family ([[graft.similarity.VectorStore.append]],
     * the gram/fingerprint probes). The batch's postings append inside
     * the existing term-bucket directories (same term-hash assignment,
     * so a query's PartitionFilter prunes old and new postings through
@@ -705,7 +706,7 @@ object SearchOps {
 
   /** Re-lay the index's postings out as a TERM-bucketed catalog table
     * — the lexical twin of the vec_id-bucketed embeddings behind
-    * [[graft.similarity.Similarity.pqMultiTopKRefinedQTBucketed]]:
+    * [[graft.similarity.VectorStore.multiTopKRefinedBucketed]]:
     * at 100 TB the postings table is the corpus-sized artifact, and
     * bucketing it on `term` means (a) a query's term predicate prunes
     * bucket FILES (the same mechanism directory pruning gives the
@@ -1229,7 +1230,7 @@ object SearchOps {
     * stack at high QPS: Q queries' lexical rankings from ONE pruned
     * postings read (the union of all eval terms' buckets, per-query
     * BM25 via the shared [[scoredEvidence]] scoring), their semantic
-    * rankings from [[graft.similarity.Similarity.pqMultiTopKRefined]]
+    * rankings from [[graft.similarity.VectorStore.multiTopKRefined]]
     * (one code scan + one bounded float fetch), RRF-fused per query
     * with the single-path formula. Three scans for the whole batch
     * where Q single [[hybridSearchServed]] calls issue ~4Q. Output:
@@ -1254,7 +1255,7 @@ object SearchOps {
     * with different term sets (the eval comparison [[hybridEval]]
     * needs) — the semantic branch serves each DISTINCT vector id once
     * and joins the rankings back to the query keys. Past
-    * [[graft.similarity.Similarity.literalMaxQ]] the vector fetch is
+    * [[graft.similarity.VectorStore.LiteralMaxQ]] the vector fetch is
     * a JOIN against the query-id frame and the two-stage serve runs
     * through the QUERY-TABLE plan (round-16 verdict #5: the
     * driver-collected `isin` vector fetch was exactly the pattern
@@ -1319,8 +1320,7 @@ object SearchOps {
     // distinct vector ids' two-stage rankings, joined back to the
     // query keys (rankings are per-vector, so shared ids share rows)
     val semByVid =
-      if (vids.length <= graft.similarity.Similarity
-          .literalMaxQ(embeddings)) {
+      if (vids.length <= VectorStore.LiteralMaxQ) {
         // small batch: bounded driver collect of the vectors, the
         // measured-fastest literal plan
         val qvecs = embeddings.filter(col("vec_id").isin(vids: _*))
@@ -1333,8 +1333,8 @@ object SearchOps {
         require(missing.isEmpty,
           s"query vector ids ${missing.mkString(", ")} have no " +
             "embedding row")
-        graft.similarity.Similarity.pqMultiTopKRefined(pqIndex,
-          embeddings, cents, cb, vids.map(v => v -> qvecs(v)),
+        VectorStore.multiTopKRefined(VectorCodec.Pq(cb), pqIndex,
+          embeddings, cents, vids.map(v => v -> qvecs(v)),
           depth, nProbe, shortlist)
       } else {
         // large batch: the vectors never touch the driver — the
@@ -1361,8 +1361,8 @@ object SearchOps {
                 "embedding row — the batched hybrid refuses to " +
                 "silently drop eval queries"))
               .cast("long")))
-        graft.similarity.Similarity.pqMultiTopKRefinedQT(pqIndex,
-          embeddings, cents, cb, guarded, depth, nProbe, shortlist)
+        VectorStore.multiTopKRefined(VectorCodec.Pq(cb), pqIndex,
+          embeddings, cents, guarded, depth, nProbe, shortlist)
       }
     val vidMap = queries.map(q => (q._1, q._3))
       .toDF("query_id", "q_vid")
@@ -1524,7 +1524,7 @@ object SearchOps {
     * no corpus pass on either: the lexical top-`depth` from the BM25
     * inverted file (bucket-pruned postings + ledger scalars), the
     * semantic top-`depth` from the IVF-PQ store via two-stage serving
-    * ([[graft.similarity.Similarity.pqTopKRefined]]: directory-pruned
+    * ([[graft.similarity.VectorStore.topKRefined]]: directory-pruned
     * 8-byte ADC shortlist, then exact re-rank of the bounded
     * candidate ids — In-pushdown point lookups). This is the complete
     * production retrieval stack at 100 TB: the only per-query I/O is
@@ -1541,8 +1541,8 @@ object SearchOps {
       rrfK: Int = 60): DataFrame =
     rrfFuse(
       searchBm25FromIndex(spark, bm25Path, queryTerms, depth),
-      graft.similarity.Similarity.pqTopKRefined(pqIndex, embeddings,
-        cents, cb, queryVec, depth, nProbe, shortlist),
+      VectorStore.topKRefined(VectorCodec.Pq(cb), pqIndex, embeddings,
+        cents, queryVec, depth, nProbe, shortlist),
       k, rrfK)
 
   /** F4: highlight matched terms — presentation-level, regex-free. */

@@ -271,7 +271,7 @@ object Dsir {
 
   /** Persist the ratio table as parquet — train once on the reference
     * corpora, score any later batch or stream against the artifact
-    * (the writeLmModel / writeIvfIndex lifecycle).
+    * (the writeLmModel / VectorStore.write lifecycle).
     */
   def writeDsirModel(spark: SparkSession, model: DsirModel,
       dir: String): Unit = {

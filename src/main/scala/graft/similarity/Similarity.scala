@@ -26,13 +26,13 @@ import graft.plans.{GraftFunctions, TextHashFunctions}
   */
 object Similarity {
 
-  private def asDouble(v: Column): Column = v.cast("array<double>")
+  private[similarity] def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Cosine similarity as the native fused-loop Catalyst expression
     * (graft.plans.CosineSimilarity): one array walk instead of the
     * composed dot/norm form's four, bit-identical (CosineSimilaritySpec).
     */
-  private def cosineFor(df: DataFrame)(a: Column, b: Column): Column =
+  private[similarity] def cosineFor(df: DataFrame)(a: Column, b: Column): Column =
     GraftFunctions.call(df)(GraftFunctions.CosineName, asDouble(a), asDouble(b))
 
   /** Exact top-k by cosine against one stored vector (query joined in
@@ -63,7 +63,7 @@ object Similarity {
     * cross-engine. Same plan as [[bruteForceTopK]]: one scan,
     * broadcast query, TakeOrdered; the gate adds zero exchanges.
     * For serving scale, compose the same filter over
-    * [[ivfTopKFromIndex]]'s pruned scan instead.
+    * [[VectorStore.topKFromIndex]]'s pruned scan instead.
     */
   /** Embedding-space drift monitor: cosine of each label's centroid
     * against the global centroid — the embedding analog of
@@ -552,21 +552,12 @@ object Similarity {
     cents
   }
 
-  /** Materialize the IVF index as a cell-partitioned table — the
-    * inverted lists as a physical layout. At 100 TB this is the point
-    * of IVF: a probe query filters on `cell` and the scan prunes to
-    * nProbe directories (PartitionFilters on the parquet scan,
-    * asserted in spec) instead of touching the corpus. Zero-norm
-    * (unindexable) vectors are dropped, matching the probe scan.
+  /** The cell-assigned frame every vector-store write encodes: the
+    * input columns plus `cell`, the argmax cell against the frozen
+    * centroid literals (a NARROW projection — vectors never shuffle).
+    * Zero-norm (unindexable) rows are dropped, matching the probe scan.
     */
-  /** The (embeddings + cell) assignment frame both index writers
-    * share: narrow projection against the frozen centroid literals,
-    * zero-norm (unindexable) rows dropped, each cell co-located
-    * before the write — without the repartition every input partition
-    * opens up to nCells concurrent writers and the output is
-    * inputPartitions × nCells small files.
-    */
-  private[graft] def ivfAssignedForWrite(embeddings: DataFrame,
+  private[similarity] def cellAssigned(embeddings: DataFrame,
       cents: Seq[Seq[Double]]): DataFrame = {
     val centLit = typedlit(cents)
     embeddings
@@ -575,56 +566,6 @@ object Similarity {
       .withColumn("cell", cellOf(col("__scores")))
       .drop("__scores")
       .filter(col("cell").isNotNull)
-      .repartition(col("cell"))
-  }
-
-  def writeIvfIndex(embeddings: DataFrame, cents: Seq[Seq[Double]],
-      path: String): Unit =
-    ivfAssignedForWrite(embeddings, cents)
-      .withColumn("batch_id", lit("build"))
-      .write.mode("overwrite").partitionBy("cell", "batch_id").parquet(path)
-
-  /** The batch-name contract shared by [[appendToIvfIndex]],
-    * [[appendToQuantizedIvfIndex]] and [[appendToPqIndex]] — same
-    * rules as BM25's (`"build"` is the build's reserved name;
-    * distinct appends need distinct keys; a RETRY reuses its key on
-    * purpose). All-digit keys are rejected: the streaming ingest
-    * sinks partition by the RAW numeric micro-batch id, so a manual
-    * append named "5" on a stream-fed index would be dynamic-
-    * overwritten by a checkpoint replay of micro-batch 5, silently
-    * dropping its vectors.
-    */
-  private def requireIvfBatchKey(batchKey: String): Unit = {
-    require(batchKey.nonEmpty && batchKey != "build",
-      "batchKey must be a non-empty name other than the reserved \"build\"")
-    require(!batchKey.forall(_.isDigit),
-      s"batchKey \"$batchKey\" is all digits — the streaming ingest " +
-        "sinks key their partitions by raw numeric micro-batch id, and " +
-        "a checkpoint replay of that micro-batch would overwrite this " +
-        "append; pick a non-numeric name")
-    // compactIvfIndexKeeping writes kept-part tombstones under batch
-    // "retained"; a later batch under that name would dynamic-
-    // overwrite them, resurrecting previously erased kept-batch rows
-    require(batchKey != "retained",
-      "\"retained\" is reserved for compactIvfIndexKeeping's " +
-        "kept-part tombstones — pick another name")
-  }
-
-  /** Loud layout guard for the batch-keyed appends: an index written
-    * before the (cell, batch_id) layout has flat `cell=N` directories,
-    * and appending nested `cell=N/batch_id=K` files would poison
-    * PARTITION DISCOVERY for every later read ("conflicting directory
-    * structures") — fail at write time instead.
-    */
-  private def requireBatchLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      require(spark.read.parquet(path).columns.contains("batch_id"),
-        s"IVF index at $path predates the (cell, batch_id) layout — " +
-          "rebuild it with writeIvfIndex/writeQuantizedIvfIndex before " +
-          "batch-keyed appends")
   }
 
   /** Is the inferred batch_id partition column an integer family type
@@ -758,7 +699,7 @@ object Similarity {
   }
 
   /** SNAPSHOT read of a STREAM-BUILT IVF index
-    * ([[graft.streaming.Pipelines.ivfIndexSink]]'s (cell, batch_id)
+    * ([[graft.streaming.Pipelines.vectorIndexSink]]'s (cell, batch_id)
     * layout): the index as it stood after micro-batch `upToBatch` —
     * the sink's batch clock is monotonic, so the prefix IS the
     * historical state, and time travel is one range predicate on a
@@ -773,7 +714,7 @@ object Similarity {
     * [[compactIvfIndex]], which also collapses the batch history
     * into batch 0 — as-of reads predating the compaction see the
     * whole compacted state, never a stale partial one).
-    * Name-keyed layouts (writeIvfIndex's "build" + appendToIvfIndex
+    * Name-keyed layouts (VectorStore.write's "build" + VectorStore.append
     * batchKeys) have no monotonic clock and are rejected here — use
     * the named-batch overload below.
     */
@@ -782,7 +723,7 @@ object Similarity {
     val snap = readIvfIndex(spark, path)
     require(snap.columns.contains("batch_id"),
       s"index at $path carries no batch_id history (pre-layout " +
-        "index) — rebuild it with writeIvfIndex first")
+        "index) — rebuild it with VectorStore.write first")
     // the ≤ prefix read is only meaningful on the sink's MONOTONIC
     // numeric clock; a name-keyed layout ("build", append batchKeys)
     // has no order, and the implicit string-vs-long cast would
@@ -797,8 +738,8 @@ object Similarity {
   /** SNAPSHOT read of a BATCH-MAINTAINED IVF index by batch NAME —
     * the [[graft.ops.SearchOps.searchBm25FromIndexAsOf]] semantics
     * for the vector family: serve exactly the named batches
-    * ("build" for [[writeIvfIndex]]'s base, append batchKeys for
-    * [[appendToIvfIndex]] / [[appendToQuantizedIvfIndex]]; a
+    * ("build" for [[VectorStore.write]]'s base, append batchKeys for
+    * [[VectorStore.append]]; a
     * stream-built index's numeric micro-batch ids work as strings
     * too). Pure partition pruning — batch_id rides the scan's
     * PartitionFilters next to the cell probes; no copy, no restore.
@@ -815,7 +756,7 @@ object Similarity {
     val snap = readIvfIndex(spark, path)
     require(snap.columns.contains("batch_id"),
       s"index at $path carries no batch_id history (pre-layout " +
-        "index) — rebuild it with writeIvfIndex first")
+        "index) — rebuild it with VectorStore.write first")
     val known = ivfKnownBatches(spark, path)
     val missing = batches.filterNot(known)
     require(missing.isEmpty,
@@ -892,7 +833,7 @@ object Similarity {
     val base0 = spark.read.parquet(path)
     require(base0.columns.contains("batch_id"),
       s"index at $path carries no batch_id history (pre-layout " +
-        "index) — rebuild it with writeIvfIndex first")
+        "index) — rebuild it with VectorStore.write first")
     val base = inventory(base0, "batch")
     val tombP = new org.apache.hadoop.fs.Path(path + "/_tombstones")
     val fs = tombP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -948,7 +889,7 @@ object Similarity {
     val base0 = spark.read.parquet(path)
     require(base0.columns.contains("batch_id"),
       s"index at $path carries no batch_id history (pre-layout " +
-        "index) — rebuild it with writeIvfIndex first")
+        "index) — rebuild it with VectorStore.write first")
     val known = ivfKnownBatches(spark, path)
     val missingKeep = keep.filterNot(known)
     require(missingKeep.isEmpty,
@@ -1013,58 +954,6 @@ object Similarity {
     }
   }
 
-  /** Centroid REFRESH for a written float IVF index — the
-    * maintenance member append/delete/compact still lacked: as the
-    * corpus grows, the frozen build centroids drift away from the
-    * data distribution and probe recall decays, so periodically the
-    * LIVE entries (tombstones honored) re-cluster against NEW
-    * centroids into a fresh directory. The old index is never
-    * mutated — serving stays up and cutover is a path swap; the new
-    * index is a [[writeIvfIndex]] layout, so probes prune and the
-    * whole maintenance family (append/delete/compact/as-of via the
-    * streaming sink) applies to it unchanged. O(index) by design —
-    * the background job, like compaction.
-    */
-  def reclusterIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      oldPath: String, cents: Seq[Seq[Double]], newPath: String): Unit =
-    writeIvfIndex(
-      readIvfIndex(spark, oldPath).select(col("vec_id"), col("embedding")),
-      cents, newPath)
-
-  /** Centroid REFRESH for the COMPRESSED (int8) index — the drift-
-    * maintenance member the family still lacked, and at 100 TB the
-    * one that matters: the compressed index is the one a deployment
-    * actually serves. The int8 store holds only (vec_id, scale,
-    * qvec) — no float embeddings — so refresh re-quantizes from a
-    * caller-supplied SOURCE of the original embeddings (the upstream
-    * corpus table): cell assignment must come from the true float
-    * vectors — a dequantized approximate reassignment would let
-    * quantization error move rows across cell boundaries, breaking
-    * the recluster ≡ rebuild-on-live exactness every other
-    * maintenance member carries — and re-quantizing the same source
-    * rows reproduces the stored entries bit-for-bit (per-row
-    * symmetric quantization is deterministic and index-independent).
-    * Live ids (tombstones honored) with no source row fail LOUDLY —
-    * a refresh must never silently shrink the index. Same operating
-    * model as [[reclusterIvfIndex]]: old index untouched, cutover is
-    * a path swap, O(index) background work by design.
-    */
-  def reclusterQuantizedIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      oldPath: String, source: DataFrame, cents: Seq[Seq[Double]],
-      newPath: String): Unit = {
-    val live = readIvfIndex(spark, oldPath).select(col("vec_id"))
-    val src = source.select(col("vec_id"), col("embedding"))
-    val missing = live.join(src, Seq("vec_id"), "left_anti")
-      .limit(5).collect().map(_.getLong(0))
-    require(missing.isEmpty,
-      s"live ids ${missing.mkString(", ")}… of the index at $oldPath " +
-        "have no row in the supplied source table — the compressed " +
-        "store carries no embeddings, so refresh needs the original " +
-        "vectors for every live entry")
-    writeQuantizedIvfIndex(
-      src.join(live, Seq("vec_id"), "left_semi"), cents, newPath)
-  }
-
   /** The audit that justifies a recluster cutover: the
     * (cell_old → cell_new, n_vectors) movement matrix between two
     * WRITTEN indexes over the same ids, joined on vec_id. High
@@ -1084,49 +973,6 @@ object Similarity {
       .groupBy(col("cell_old"), col("cell_new"))
       .agg(count(lit(1)).as("n_vectors"))
       .orderBy(col("cell_old"), col("cell_new"))
-
-  /** Append a batch of NEW vectors to a written IVF index WITHOUT
-    * rebuilding it — the index-maintenance member of the frozen-
-    * serving family (gram index, NB gate, community labels, media
-    * fingerprint probe). Assignment uses the SAME frozen centroids
-    * the index was built with, so append ≡ full rebuild EXACTLY, not
-    * approximately: cell assignment is per-row against frozen
-    * literals, the probe scan is order-blind within a cell, and
-    * appended files land inside the existing `cell=N` directories —
-    * a probe's PartitionFilter prunes old and new entries through
-    * the same directory listing. Per-batch cost is O(batch), never
-    * O(index): the existing lists are not read, let alone rewritten.
-    *
-    * The caller owns id disjointness ACROSS batches (duplicate
-    * vec_ids would serve twice — the upsert-by-key story belongs to
-    * the keyed sinks, not the ANN index); centroids must be the
-    * build's centroids, or the rebuild equivalence breaks by
-    * construction.
-    *
-    * `batchKey` names the append: rows land under their own
-    * (cell=N, batch_id=batchKey) partitions via DYNAMIC partition
-    * overwrite, so a RETRY of the same key — recovery from a
-    * partially-failed append — recomputes identical rows and
-    * overwrites exactly its own partitions instead of
-    * double-inserting vectors into served top-k (the
-    * [[graft.ops.SearchOps.appendToBm25Index]] idempotence story;
-    * the streaming sink's (cell, batch_id) layout already proved
-    * it). Because every batch keeps its own partitions, the layout
-    * carries HISTORY: [[readIvfIndexAsOf]]'s named-batch overload
-    * time-travels batch-maintained indexes too. Distinct appends
-    * need distinct keys; "build" is reserved for [[writeIvfIndex]].
-    */
-  def appendToIvfIndex(newVectors: DataFrame, cents: Seq[Seq[Double]],
-      path: String, batchKey: String): Unit = {
-    requireIvfBatchKey(batchKey)
-    requireBatchLayout(newVectors.sparkSession, path)
-    ivfAssignedForWrite(newVectors, cents)
-      .withColumn("batch_id", lit(batchKey))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(path)
-  }
 
   /** IVF probe scan against caller-supplied centroids (see ivfTopK /
     * ivfBuild).
@@ -1233,78 +1079,6 @@ object Similarity {
     }.sortBy { case (s, i) => (-s, i) }.take(nProbe).map(_._2)
   }
 
-  /** Probe scan served from a [[writeIvfIndex]] table on disk — the
-    * payoff of the physical layout: probe cells are literals, so the
-    * `cell` predicate becomes a PartitionFilter and the scan touches
-    * nProbe directories out of nCells, never the corpus. This is the
-    * path a 100 TB deployment actually runs; `ivfTopKFrom` is its
-    * index-free twin for ad-hoc queries.
-    */
-  def ivfTopKFromIndex(index: DataFrame, cents: Seq[Seq[Double]],
-      queryVec: Seq[Double], k: Int, nProbe: Int): DataFrame = {
-    val probes = probeCells(cents, queryVec, nProbe)
-    val filtered =
-      if (probes.isEmpty) index.filter(lit(false)) // zero-norm query
-      else index.filter(col("cell").isin(probes: _*))
-    filtered
-      .select(col("vec_id"),
-        round(cosineFor(index)(col("embedding"), typedlit(queryVec.toVector)), 4)
-          .as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** The COMPRESSED IVF index: [[writeIvfIndex]]'s cell-partitioned
-    * layout with int8 entries — (vec_id, scale, qvec, cell). Cell
-    * assignment still uses the ORIGINAL float vectors (quantization
-    * error must not move a vector across a cell boundary); only the
-    * stored entries compress. A probed directory costs ~4× less scan
-    * I/O than the float index — at 100 TB this stacks directory
-    * pruning (nProbe of nCells cells) on top of byte compression.
-    */
-  /** The quantized twin of [[ivfAssignedForWrite]] — same frozen
-    * assignment, int8 entries. */
-  private[graft] def quantizedAssignedForWrite(embeddings: DataFrame,
-      cents: Seq[Seq[Double]]): DataFrame = {
-    val centLit = typedlit(cents)
-    val q = GraftFunctions.call(embeddings)(TextHashFunctions.QuantizeVecName,
-      col("embedding"))
-    embeddings
-      .withColumn("__scores",
-        cellScoresFor(embeddings, centLit)(col("embedding")))
-      .withColumn("cell", cellOf(col("__scores")))
-      .filter(col("cell").isNotNull)
-      .select(col("vec_id"), q.getField("scale").as("scale"),
-        q.getField("qvec").as("qvec"), col("cell"))
-      .repartition(col("cell"))
-  }
-
-  def writeQuantizedIvfIndex(embeddings: DataFrame, cents: Seq[Seq[Double]],
-      path: String): Unit =
-    quantizedAssignedForWrite(embeddings, cents)
-      .withColumn("batch_id", lit("build"))
-      .write.mode("overwrite").partitionBy("cell", "batch_id").parquet(path)
-
-  /** Batch append into a written COMPRESSED IVF index — exactly
-    * [[appendToIvfIndex]]'s contract (frozen centroids ⇒ append ≡
-    * rebuild; O(batch); appended files inside the existing cell
-    * directories; `batchKey` dynamic-overwrites its own
-    * (cell, batch_id) partitions so retries never double-insert)
-    * with int8 entries: per-row quantization is index-independent,
-    * so compression changes nothing about the equivalence argument.
-    */
-  def appendToQuantizedIvfIndex(newVectors: DataFrame,
-      cents: Seq[Seq[Double]], path: String, batchKey: String): Unit = {
-    requireIvfBatchKey(batchKey)
-    requireBatchLayout(newVectors.sparkSession, path)
-    quantizedAssignedForWrite(newVectors, cents)
-      .withColumn("batch_id", lit(batchKey))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(path)
-  }
-
   /** Driver-side symmetric int8 quantization of one query vector —
     * the same rule as [[quantizeEmbeddings]] bit-for-bit (max|x|/127, round
     * half up; degenerate → scale 0 and zeros), for probing a
@@ -1318,29 +1092,6 @@ object Similarity {
       (s, v.map(x => BigDecimal(x / s)
         .setScale(0, BigDecimal.RoundingMode.HALF_UP).toInt))
     }
-  }
-
-  /** Top-k served from a [[writeQuantizedIvfIndex]] table: literal
-    * probe cells become PartitionFilters (directory pruning, as
-    * [[ivfTopKFromIndex]]) and the probed cells scan int8 lists with
-    * EXACT integer dots, dequantized by the two scales. A degenerate
-    * (zero/non-finite) query has no cosine direction → empty result.
-    */
-  def quantizedTopKFromIndex(index: DataFrame, cents: Seq[Seq[Double]],
-      queryVec: Seq[Double], k: Int, nProbe: Int): DataFrame = {
-    // quantize FIRST: a degenerate query must short-circuit before
-    // probe selection ever touches its (possibly non-finite) values
-    val (qs, qq) = quantizeQuery(queryVec)
-    val probes = if (qs == 0.0) Seq.empty else probeCells(cents, queryVec, nProbe)
-    val filtered =
-      if (probes.isEmpty || qs == 0.0) index.filter(lit(false))
-      else index.filter(col("cell").isin(probes: _*))
-    filtered
-      .select(col("vec_id"),
-        round(col("scale") * lit(qs) *
-          qdotFor(index)(col("qvec"), typedlit(qq.toVector)), 6).as("q_sim"))
-      .orderBy(col("q_sim").desc, col("vec_id"))
-      .limit(k)
   }
 
   // ---------------------------------------------------------------
@@ -1378,7 +1129,7 @@ object Similarity {
     * [[pqEncode]] and the cell-carrying residual writer so raw and
     * residual encoding can never disagree on rounding or tie-break.
     */
-  private def pqCodesCol(cb: PqCodebook, v: Column): Column =
+  private[similarity] def pqCodesCol(cb: PqCodebook, v: Column): Column =
     array((0 until cb.m).map { j =>
       val sub = slice(v, j * cb.subDim + 1, cb.subDim)
       val d = subDistances(sub, cb.centroids(j))
@@ -1479,83 +1230,14 @@ object Similarity {
     * PQ recall trade-off (spec'd against the exact ranking).
     */
   def pqTopK(codes: DataFrame, cb: PqCodebook, query: Seq[Double],
-      k: Int): DataFrame = {
-    val lut = typedlit(pqLut6(cb, query))
-    val score6 = (0 until cb.m).map(j =>
-      element_at(element_at(lut, j + 1),
-        element_at(col("codes"), j + 1) + 1)).reduce(_ + _)
-    codes
-      .select(col("vec_id"), round(score6 / 1e6, 6).as("pq_sim"))
-      .orderBy(col("pq_sim").desc, col("vec_id"))
-      .limit(k)
-  }
+      k: Int): DataFrame =
+    codedTopK(VectorCodec.Pq(cb), codes, Nil, query, k)
 
-  /** PQ composed with the IVF layout: codes written cell-partitioned
-    * (cells assigned on the ORIGINAL floats, as the int8 index does),
-    * so a probe prunes to nProbe directories of 8-byte codes — IVF's
-    * directory pruning stacked on PQ's 32× compression. This is the
-    * standard IVF-PQ serving shape.
-    */
-  def writePqIndex(embeddings: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, path: String): Unit =
-    pqAssignedForWrite(embeddings, cents, cb)
-      .withColumn("batch_id", lit("build"))
-      .write.mode("overwrite").partitionBy("cell", "batch_id").parquet(path)
-
-  /** The (codes + cell) assignment frame the PQ index writers share —
-    * cell from the true float vector against frozen coarse centroids,
-    * codes from the frozen codebook, co-located per cell.
-    */
-  private[graft] def pqAssignedForWrite(embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook): DataFrame = {
-    val centLit = typedlit(cents)
-    val cells = embeddings
-      .withColumn("__scores",
-        cellScoresFor(embeddings, centLit)(col("embedding")))
-      .withColumn("cell", cellOf(col("__scores")))
-      .filter(col("cell").isNotNull)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    pqEncode(cells, cb)
-      .join(cells.select(col("vec_id"), col("cell")), "vec_id")
-      .repartition(col("cell"))
-  }
-
-  /** Batch append into a written IVF-PQ index — the
-    * [[appendToIvfIndex]] contract for the composed 100 TB serving
-    * shape: coarse assignment and PQ encoding are both per-row
-    * against frozen literals (centroids + codebook), so append ≡
-    * rebuild exactly; `batchKey` dynamic-overwrites its own
-    * (cell, batch_id) partitions, so retries never double-insert;
-    * O(batch), existing code lists never read. The rest of the
-    * maintenance family composes for free: [[deleteFromIvfIndex]] /
-    * [[compactIvfIndex]] / [[readIvfIndex]] / [[readIvfIndexAsOf]]
-    * are layout-generic over (vec_id, …, cell, batch_id) tables.
-    */
-  def appendToPqIndex(newVectors: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, path: String, batchKey: String): Unit = {
-    requireIvfBatchKey(batchKey)
-    requireBatchLayout(newVectors.sparkSession, path)
-    pqAssignedForWrite(newVectors, cents, cb)
-      .withColumn("batch_id", lit(batchKey))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(path)
-  }
-
-  /** Serve top-k from a [[writePqIndex]] table: literal probe cells
-    * become PartitionFilters (directory pruning), then the ADC scan
-    * of [[pqTopK]] over the probed codes.
-    */
-  def pqTopKFromIndex(index: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, queryVec: Seq[Double], k: Int,
-      nProbe: Int): DataFrame = {
-    val probes = probeCells(cents, queryVec, nProbe)
-    val filtered =
-      if (probes.isEmpty) index.filter(lit(false))
-      else index.filter(col("cell").isin(probes: _*))
-    pqTopK(filtered, cb, queryVec, k)
-  }
+  /** Rank every row of a code table by a PQ codec's literal score. */
+  private def codedTopK(codec: VectorCodec.PqCodec, codes: DataFrame,
+      cents: Seq[Seq[Double]], query: Seq[Double], k: Int): DataFrame =
+    VectorStore.ranked(codes, codec.literalScore(codes, cents, query).get,
+      codec.scoreName, k)
 
   /** The corpus's (un-normalized) second-moment matrix E-ish[x xᵀ]
     * — ONE exploded scan + a (dim groups × dim sums) aggregation,
@@ -1729,122 +1411,6 @@ object Similarity {
       .orderBy(col("dims"), col("query_id"))
   }
 
-  /** BATCHED ADC serving: top-k for MANY queries in ONE pass over
-    * the union of their probed cells — the high-QPS serving
-    * economics. Q queries against [[pqTopKFromIndex]] issue Q pruned
-    * scans; here the scan runs once, each scanned code row scores
-    * against every query's integer LUT (a literal array — no join),
-    * rows outside a query's own probe cells drop, and one bounded
-    * (query_id, vec_id, score) shuffle ranks per query. Per-query
-    * results are identical to the single-query path (spec-pinned);
-    * zero-norm queries have no probes and are absent. Output:
-    * (query_id, vec_id, pq_sim), k rows per servable query.
-    */
-  def pqMultiTopKFromIndex(index: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, queries: Seq[(Long, Seq[Double])], k: Int,
-      nProbe: Int): DataFrame = {
-    requireDistinctBatch(queries)
-    if (queries.length > literalMaxQ(index))
-      return pqMultiTopKFromIndexQT(index, cents, cb,
-        queriesToFrame(index.sparkSession, queries), k, nProbe)
-    val perQuery = queries.map { case (qid, qv) =>
-      val lutLit = typedlit(pqLut6(cb, qv))
-      val s6 = (0 until cb.m).map(j =>
-        element_at(element_at(lutLit, j + 1),
-          element_at(col("codes"), j + 1) + 1)).reduce(_ + _)
-      (qid, probeCells(cents, qv, nProbe).toSet, round(s6 / 1e6, 6))
-    }
-    multiServeOneScan(index, perQuery, "pq_sim", k)
-  }
-
-  /** The one-scan batched core shared by the THREE pruned stores
-    * (PQ via [[pqMultiTopKFromIndex]]'s LUT, float and int8 via
-    * per-query literal query vectors): scan the union of every
-    * query's probe cells ONCE, score each scanned row against every
-    * query's scoring column, drop rows outside a query's own probe
-    * cells, rank per query through one bounded (query_id, vec_id,
-    * score) shuffle. `perQuery` carries (query_id, that query's
-    * probe-cell set, its scoring column over the scanned row).
-    */
-  /** The batched entry points' shared batch-shape guard: non-empty
-    * and DISTINCT query ids. A repeated id would emit two identical
-    * structs per scanned row — after the explode each (query_id,
-    * vec_id) pair appears twice and row_number spends two ranks per
-    * doc, silently returning ~k/2 distinct results.
-    */
-  private def requireDistinctBatch(queries: Seq[(Long, Any)]): Unit = {
-    require(queries.nonEmpty, "batched serving needs at least one query")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "query ids must be distinct — a repeated id would double every " +
-        "(query_id, vec_id) pair and halve the distinct top-k")
-  }
-
-  private def multiServeOneScan(index: DataFrame,
-      perQuery0: Seq[(Long, Set[Int], Column)], scoreName: String,
-      k: Int): DataFrame = {
-    // a query with no probes (zero-norm/degenerate) contributes no
-    // rows AND must not score: its scoring column would still
-    // evaluate inside the struct for every scanned row (an ANSI
-    // divide-by-zero for the cosine), so drop it from the scan
-    val perQuery = perQuery0.filter(_._2.nonEmpty)
-    if (perQuery.isEmpty)
-      return index.filter(lit(false))
-        .select(lit(0L).as("query_id"), col("vec_id"),
-          lit(0.0).as(scoreName))
-    val allCells = perQuery.flatMap(_._2).toSeq.distinct
-    val scanned = index.filter(col("cell").isin(allCells: _*))
-    val entries = perQuery.map { case (qid, cells, score) =>
-      val member = col("cell").cast("int").isin(cells.toSeq: _*)
-      struct(lit(qid).as("query_id"), member.as("m"), score.as("s"))
-    }
-    import org.apache.spark.sql.expressions.Window
-    scanned
-      .select(col("vec_id"), explode(array(entries: _*)).as("e"))
-      .filter(col("e.m"))
-      .select(col("e.query_id").as("query_id"), col("vec_id"),
-        col("e.s").as(scoreName))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col(scoreName).desc, col("vec_id"))))
-      .filter(col("rn") <= k).drop("rn")
-      .orderBy(col("query_id"), col(scoreName).desc, col("vec_id"))
-  }
-
-  // ---------------------------------------------------------------
-  // QUERY-TABLE batched serving (round 15) — the large-Q shape
-  // ---------------------------------------------------------------
-
-  /** Upper Q for the per-query-LITERAL batched plans. The literal
-    * path ([[multiServeOneScan]]) embeds every query's vector/LUT in
-    * the plan and explodes a Q-struct array per scanned row: measured
-    * fastest at the oracle-gated Q=3–5, but plan size, analysis time,
-    * and the 64 KB codegen method limit all grow O(Q·dim). Past this
-    * threshold the Seq entry points re-route to the query-TABLE path
-    * (broadcast probe join — O(1) plan size in Q). Conf-overridable
-    * for operating-point experiments.
-    */
-  private[graft] def literalMaxQ(df: DataFrame): Int =
-    df.sparkSession.conf
-      .get("spark.graft.batchedServeLiteralMaxQ", "16").toInt
-
-  private def queriesToFrame(spark: org.apache.spark.sql.SparkSession,
-      queries: Seq[(Long, Seq[Double])]): DataFrame =
-    spark.createDataFrame(queries.map { case (id, v) => (id, v) })
-      .toDF("query_id", "embedding")
-
-  /** Finite positive squared norm — the in-plan twin of
-    * [[probeCells]]' degenerate-query guard (zero-norm or any
-    * non-finite entry ⇒ no cosine direction ⇒ the query is absent
-    * from batched results, matching the single-serve paths). MUST
-    * filter the query table before any cosine against centroids:
-    * under ANSI mode the native cosine THROWS on a zero-norm input
-    * rather than degrading.
-    */
-  private def servableQuery(qe: Column): Column = {
-    val n2 = aggregate(qe, lit(0.0), (acc, x) => acc + x * x)
-    n2 > 0.0 && !isnan(n2) && n2 =!= Double.PositiveInfinity
-  }
-
   /** In-plan probe selection ≡ [[probeCells]] bit-for-bit: the same
     * 4-place HALF_UP rounded cosine per centroid, the same
     * (score desc, cell asc) tie-break, the same zero-norm-centroid
@@ -1866,295 +1432,7 @@ object Similarity {
     transform(slice(sorted, 1, nProbe), p => p.getField("c"))
   }
 
-  /** Broadcast-payload budget for one query-table serve (round-16
-    * verdict #4 — the [[graft.Frames.hintTombstones]] loud-ceiling
-    * convention): Q·(artifact bytes + nProbe·16) must stay under it
-    * or the serve's own action fails loudly with the documented
-    * fallback — CHUNK THE QUERY BATCH into smaller serves. Without
-    * the ceiling a caller passing a corpus-sized "query frame" gets
-    * a driver/executor OOM from the forced broadcast instead of a
-    * contract error. Override: `spark.graft.qtBroadcastBudget`
-    * (bytes; default 64 MB ≈ 260k queries of an m=8/ksub=256 LUT at
-    * nProbe=16 chunked into ~4k-query serves).
-    */
-  private def qtBroadcastBudget(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.qtBroadcastBudget")
-      .map(_.toLong).getOrElse(64L << 20)
-
-  /** The guarded SERVABLE query frame every query-table serve starts
-    * from: (query_id, q_emb) with degenerate (zero-norm/non-finite)
-    * queries dropped so they are ABSENT — the single-serve contract —
-    * and the batch-shape contracts folded INTO THE PLAN (round-16
-    * verdict #6): the previous eager groupBy/limit/collect
-    * distinctness probe cost one extra Spark job per serve — in
-    * [[graft.streaming.Pipelines.knnServingSink]]'s foreachBatch an
-    * extra evaluation of the (uncached) micro-batch lineage on every
-    * trigger's latency path. Now distinct-ids and the broadcast
-    * budget ride the query_id column of every servable row (two
-    * window counts over the bounded query frame — zero extra jobs),
-    * so a duplicated id or an over-budget batch fails the serve's
-    * OWN action loudly. Schema stays an eager check (metadata only,
-    * no job). `artifactBytes`: estimated per-query broadcast payload
-    * over the q_emb column (the scoring-artifact row plus nProbe
-    * 16-byte probe pairs) for the budget check.
-    */
-  private[similarity] def guardedServable(queries: DataFrame,
-      nProbe: Int, artifactBytes: Column): DataFrame = {
-    require(queries.columns.contains("query_id") &&
-        queries.columns.contains("embedding"),
-      s"query table needs (query_id, embedding), got " +
-        s"(${queries.columns.mkString(", ")})")
-    val budget = qtBroadcastBudget(queries.sparkSession)
-    val idType = queries.schema("query_id").dataType
-    import org.apache.spark.sql.expressions.Window
-    val dupN = count(lit(1)).over(Window.partitionBy(col("query_id")))
-    val batchBytes = sum(artifactBytes.cast("long") +
-        lit(nProbe.toLong * 16L))
-      .over(Window.partitionBy())
-    queries
-      .select(col("query_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("query_id",
-        when(dupN > 1, raise_error(concat(
-            lit("query ids must be distinct — id "),
-            col("query_id").cast("string"),
-            lit(" appears more than once (a repeated id would halve " +
-              "the distinct top-k silently)"))).cast(idType))
-          .when(batchBytes > budget, raise_error(concat(
-            lit("query-table broadcast budget exceeded: ~"),
-            batchBytes.cast("string"),
-            lit(s" bytes of probe/artifact rows against the $budget" +
-              "-byte ceiling (spark.graft.qtBroadcastBudget) — chunk " +
-              "the query batch into smaller serves"))).cast(idType))
-          .otherwise(col("query_id")))
-      .filter(servableQuery(col("q_emb")))
-  }
-
-  /** The bounded (query_id, cell) probe-PAIR table: one 16-byte row
-    * per (servable query, probed cell), Q·nProbe rows — the broadcast
-    * side of the serve's cell join. The per-query scoring artifacts
-    * ride a SECOND Q-row broadcast keyed by query_id (round-16
-    * verdict #2: the artifacts used to be columns of this exploded
-    * table, so an m×ksub LUT was computed and shipped nProbe times
-    * per query — at nProbe=16 that is 16× the bytes and 16× the
-    * per-row transform work for identical results).
-    */
-  private[similarity] def probePairs(servable: DataFrame,
-      cents: Seq[Seq[Double]], nProbe: Int): DataFrame =
-    servable.select(col("query_id"),
-      explode(probeCellsCol(servable, cents, nProbe)(col("q_emb")))
-        .as("cell"))
-
-  /** The query-TABLE batched core — [[multiServeOneScan]] re-shaped
-    * for large Q (round-15 verdict #1): queries ride a BROADCAST
-    * probe table joined on `cell` instead of per-row Q-struct
-    * explosion over plan literals, so plan size, codegen, and driver
-    * work are O(1) in Q and the only Q-proportional costs are the
-    * broadcast (Q·nProbe rows of query artifacts) and the bounded
-    * (query_id, vec_id, score) rank shuffle. Directory pruning
-    * survives as DYNAMIC partition pruning: the scan's `cell`
-    * partition column is joined against the bounded probe side, so
-    * Spark prunes the union of probed cells at runtime — the same
-    * cells the literal path pins statically. Scoring artifacts
-    * (query vector / int8 pair / integer LUTs) are a SEPARATE Q-row
-    * broadcast keyed by query_id — computed once per QUERY, not once
-    * per (query, probed cell) — evaluated by the same expressions as
-    * the literal path, so per-query results are bit-identical to Q
-    * single serves (spec- and oracle-gated).
-    */
-  private def multiServeQueryTable(index: DataFrame, pairs: DataFrame,
-      arts: DataFrame, score: Column, scoreName: String,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    index.join(broadcast(pairs), Seq("cell"))
-      .join(broadcast(arts), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), score.as(scoreName))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col(scoreName).desc, col("vec_id"))))
-      .filter(col("rn") <= k).drop("rn")
-      .orderBy(col("query_id"), col(scoreName).desc, col("vec_id"))
-  }
-
-  /** Query-table batched serving for the FLOAT IVF store — the
-    * large-Q twin of [[ivfMultiTopKFromIndex]] (which re-routes here
-    * past [[literalMaxQ]]). `queries`: (query_id, embedding), ids
-    * distinct. Output ≡ Q single [[ivfTopKFromIndex]] serves.
-    */
-  def ivfMultiTopKFromIndexQT(index: DataFrame, cents: Seq[Seq[Double]],
-      queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val sv = guardedServable(queries, nProbe,
-      size(col("q_emb")).cast("long") * 8L + 16L)
-    multiServeQueryTable(index, probePairs(sv, cents, nProbe),
-      sv.select(col("query_id"), col("q_emb")),
-      round(cosineFor(index)(col("embedding"), col("q_emb")), 4),
-      "cos_sim", k)
-  }
-
-  /** Query-table batched serving for the COMPRESSED (int8) store —
-    * the large-Q twin of [[quantizedMultiTopKFromIndex]]. The query
-    * side quantizes IN-PLAN through the native quantization the store
-    * itself uses (bit-identical to the driver-side [[quantizeQuery]]),
-    * so the dequantized integer dot is the single-serve score exactly.
-    */
-  def quantizedMultiTopKFromIndexQT(index: DataFrame,
-      cents: Seq[Seq[Double]], queries: DataFrame, k: Int,
-      nProbe: Int): DataFrame = {
-    val sv = guardedServable(queries, nProbe,
-      size(col("q_emb")).cast("long") * 4L + 24L)
-    val q = GraftFunctions.call(sv)(TextHashFunctions.QuantizeVecName,
-      col("q_emb"))
-    multiServeQueryTable(index, probePairs(sv, cents, nProbe),
-      sv.select(col("query_id"), q.getField("scale").as("q_scale"),
-        q.getField("qvec").as("q_qvec")),
-      round(col("scale") * col("q_scale") *
-        qdotFor(index)(col("qvec"), col("q_qvec")), 6),
-      "q_sim", k)
-  }
-
-  /** The in-plan ADC lookup table — [[pqLut6]] as a Column over the
-    * query-vector column: same index-order sub-dot fold (IEEE-equal
-    * to the driver loop), same ·1e6 HALF_UP long rounding, computed
-    * ONCE per query row on the broadcast side.
-    */
-  private def pqLut6Col(cb: PqCodebook)(qe: Column): Column = {
-    val cbLit = typedlit(cb.centroids.map(_.map(_.toVector).toVector).toVector)
-    transform(cbLit, (subCents, j) =>
-      transform(subCents, c =>
-        round(aggregate(zip_with(
-          slice(qe, j * cb.subDim + 1, lit(cb.subDim)), c,
-          (x, y) => x * y), lit(0.0), (acc, x) => acc + x) * 1e6, 0)
-          .cast("long")))
-  }
-
-  /** [[cellLut6]] as a Column: the per-cell query·centroid term of
-    * the residual decomposition, in the same exact micro-units.
-    */
-  private def cellLut6Col(cents: Seq[Seq[Double]])(qe: Column): Column = {
-    val centLit = typedlit(cents.map(_.toVector).toVector)
-    transform(centLit, c =>
-      round(aggregate(zip_with(qe, c, (x, y) => x * y), lit(0.0),
-        (acc, x) => acc + x) * 1e6, 0).cast("long"))
-  }
-
-  private def lutScore6(lut: Column, m: Int): Column =
-    (0 until m).map(j =>
-      element_at(element_at(lut, j + 1),
-        element_at(col("codes"), j + 1) + 1)).reduce(_ + _)
-
-  /** Query-table batched ADC serving — the large-Q twin of
-    * [[pqMultiTopKFromIndex]]: each query's integer LUT is a COLUMN
-    * of the broadcast probe table (computed once per query), each
-    * scanned code row pays m lookups + a long sum exactly as the
-    * single-serve scan does.
-    */
-  def pqMultiTopKFromIndexQT(index: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val sv = guardedServable(queries, nProbe,
-      lit(cb.m.toLong * cb.centroids.head.length * 8L + 16L))
-    multiServeQueryTable(index, probePairs(sv, cents, nProbe),
-      sv.select(col("query_id"), pqLut6Col(cb)(col("q_emb")).as("q_lut")),
-      round(lutScore6(col("q_lut"), cb.m) / 1e6, 6), "pq_sim", k)
-  }
-
-  /** Query-table batched RESIDUAL (IVFADC) serving — the large-Q
-    * twin of [[residualPqMultiTopKFromIndex]]: the broadcast side
-    * carries BOTH per-query LUTs (residual codebook + per-cell
-    * term), the scan pays one extra lookup per row, exactly the
-    * single-serve decomposition.
-    */
-  def residualPqMultiTopKFromIndexQT(index: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queries: DataFrame,
-      k: Int, nProbe: Int): DataFrame = {
-    val sv = guardedServable(queries, nProbe,
-      lit(cb.m.toLong * cb.centroids.head.length * 8L +
-        cents.length.toLong * 8L + 16L))
-    multiServeQueryTable(index, probePairs(sv, cents, nProbe),
-      sv.select(col("query_id"), pqLut6Col(cb)(col("q_emb")).as("q_lut"),
-        cellLut6Col(cents)(col("q_emb")).as("q_clut")),
-      round((element_at(col("q_clut"), col("cell").cast("int") + 1) +
-        lutScore6(col("q_lut"), cb.m)) / 1e6, 6), "pq_sim", k)
-  }
-
-  /** Query-table batched TWO-STAGE serving — the large-Q twin of
-    * [[pqMultiTopKRefined]] with the driver round-trip removed
-    * (round-15 verdict #1): the ADC shortlist stays a DataFrame and
-    * re-ranking is a SEMI-JOIN shape — candidates = embeddings ⋈
-    * broadcast(shortlist pairs) ⋈ broadcast(query vectors) — so no
-    * Q×R id set ever collects or re-embeds as `isin` literals. At
-    * 100 TB the bounded pair table broadcast + Spark's runtime
-    * row-group filtering replace the literal path's static In
-    * pushdown; per-query results ≡ Q single refined serves.
-    */
-  def pqMultiTopKRefinedQT(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queries: DataFrame,
-      k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(shortlist >= k, s"shortlist $shortlist must cover top-$k")
-    val short = pqMultiTopKFromIndexQT(index, cents, cb, queries,
-      shortlist, nProbe).select(col("query_id"), col("vec_id"))
-    val qv = queries.select(col("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
-    embeddings.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosineFor(embeddings)(col("embedding"), col("q_emb")), 4)
-          .as("cos_sim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))))
-      .filter(col("rn") <= k).drop("rn")
-      .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id"))
-  }
-
-  /** [[pqMultiTopKRefinedQT]] with the re-rank fetch BUCKET-PRUNED
-    * (round-16 verdict #1 — the last streamed pass on the serving
-    * path): `embeddings` is a vec_id-BUCKETED catalog table
-    * ([[graft.ops.BucketedTables.writeBucketed]]); the bounded Q×R
-    * ADC shortlist collects ONCE to the driver (2 longs per row —
-    * the same bounded-artifact class as centroids and codebooks, and
-    * the only way to reach bucket pruning: Spark prunes bucket FILES
-    * from literal predicates on the bucket column, which no
-    * DPP/bloom can deliver to a broadcast-hash-join's streamed
-    * side), and the float fetch becomes `vec_id IN (shortlist)` over
-    * the bucketed scan — at a 100 TB float table the re-rank reads
-    * ~(hit buckets)/(total buckets) of the files instead of one full
-    * streamed pass per batch. Scoring, tie-breaks, and output are
-    * the [[pqMultiTopKRefinedQT]] plan verbatim (its oracle is the
-    * gate); the unbucketed path stays the fallback for plain parquet
-    * embeddings.
-    */
-  def pqMultiTopKRefinedQTBucketed(index: DataFrame,
-      embeddings: DataFrame, cents: Seq[Seq[Double]], cb: PqCodebook,
-      queries: DataFrame, k: Int, nProbe: Int,
-      shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(shortlist >= k, s"shortlist $shortlist must cover top-$k")
-    val spark = index.sparkSession
-    val pairs = pqMultiTopKFromIndexQT(index, cents, cb, queries,
-        shortlist, nProbe)
-      .select(col("query_id"), col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val ids = pairs.map(_._2).distinct
-    val short = spark.createDataFrame(pairs).toDF("query_id", "vec_id")
-    val qv = queries.select(col("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
-    val fetched =
-      if (ids.isEmpty) embeddings.filter(lit(false))
-      else embeddings.filter(col("vec_id").isin(ids: _*))
-    fetched.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosineFor(embeddings)(col("embedding"), col("q_emb")), 4)
-          .as("cos_sim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))))
-      .filter(col("rn") <= k).drop("rn")
-      .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id"))
-  }
-
-  /** The [[qtBroadcastBudget]] fallback made real (round-16): serve
+  /** The query-table broadcast-budget fallback made real (round-16): serve
     * an over-budget query frame in `nChunks` hash-disjoint chunks and
     * union the results. Chunking is EXACT by construction — every
     * serve ranks per query, so a query's rows are identical whichever
@@ -2184,111 +1462,8 @@ object Similarity {
     }
   }
 
-  /** BATCHED serving for the FLOAT IVF store — [[pqMultiTopKFromIndex]]'s
-    * one-scan trick applied to [[ivfTopKFromIndex]]: Q queries, one
-    * pass over the union of their probed cell directories, each
-    * scanned row scored against every query's literal vector (no
-    * join), one bounded (query_id, vec_id, cos_sim) shuffle. Per-query
-    * results ≡ Q single serves (the oracle gate); zero-norm queries
-    * have no probes and are absent.
-    */
-  def ivfMultiTopKFromIndex(index: DataFrame, cents: Seq[Seq[Double]],
-      queries: Seq[(Long, Seq[Double])], k: Int, nProbe: Int): DataFrame = {
-    requireDistinctBatch(queries)
-    if (queries.length > literalMaxQ(index))
-      return ivfMultiTopKFromIndexQT(index, cents,
-        queriesToFrame(index.sparkSession, queries), k, nProbe)
-    val perQuery = queries.map { case (qid, qv) =>
-      (qid, probeCells(cents, qv, nProbe).toSet,
-        round(cosineFor(index)(col("embedding"),
-          typedlit(qv.toVector)), 4))
-    }
-    multiServeOneScan(index, perQuery, "cos_sim", k)
-  }
-
-  /** BATCHED serving for the COMPRESSED (int8) store — the high-QPS
-    * case that pays most: the hot tier serves many queries per
-    * second, and Q probes against [[quantizedTopKFromIndex]] would
-    * rescan shared cells Q times. One pass over the union of probed
-    * cells; each row's EXACT integer dot runs against every query's
-    * quantized literal, dequantized by the two scales exactly as the
-    * single-query path. Degenerate (zero/non-finite) queries are
-    * absent, matching quantizedTopKFromIndex's empty result.
-    */
-  def quantizedMultiTopKFromIndex(index: DataFrame,
-      cents: Seq[Seq[Double]], queries: Seq[(Long, Seq[Double])], k: Int,
-      nProbe: Int): DataFrame = {
-    requireDistinctBatch(queries)
-    if (queries.length > literalMaxQ(index))
-      return quantizedMultiTopKFromIndexQT(index, cents,
-        queriesToFrame(index.sparkSession, queries), k, nProbe)
-    val perQuery = queries.map { case (qid, qv) =>
-      val (qs, qq) = quantizeQuery(qv)
-      val cells =
-        if (qs == 0.0) Set.empty[Int]
-        else probeCells(cents, qv, nProbe).toSet
-      (qid, cells,
-        round(col("scale") * lit(qs) *
-          qdotFor(index)(col("qvec"), typedlit(qq.toVector)), 6))
-    }
-    multiServeOneScan(index, perQuery, "q_sim", k)
-  }
-
-  /** BATCHED serving for the RESIDUAL (IVFADC) store — the last cell
-    * of the batched matrix: each query carries its integer LUT AND
-    * its per-cell term literal (dot(q,v) = dot(q,c_cell) + dot(q,r)
-    * decomposes exactly, so the batched score is the same two-part
-    * lookup as [[residualPqTopK]]); one pass over the union of
-    * probed cells, per-query results ≡ Q single serves.
-    */
-  def residualPqMultiTopKFromIndex(index: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook,
-      queries: Seq[(Long, Seq[Double])], k: Int, nProbe: Int): DataFrame = {
-    requireDistinctBatch(queries)
-    if (queries.length > literalMaxQ(index))
-      return residualPqMultiTopKFromIndexQT(index, cents, cb,
-        queriesToFrame(index.sparkSession, queries), k, nProbe)
-    val perQuery = queries.map { case (qid, qv) =>
-      val lutLit = typedlit(pqLut6(cb, qv))
-      val clLit = typedlit(cellLut6(cents, qv).toVector)
-      val s6 = element_at(clLit, col("cell").cast("int") + 1) +
-        (0 until cb.m).map(j =>
-          element_at(element_at(lutLit, j + 1),
-            element_at(col("codes"), j + 1) + 1)).reduce(_ + _)
-      (qid, probeCells(cents, qv, nProbe).toSet, round(s6 / 1e6, 6))
-    }
-    multiServeOneScan(index, perQuery, "pq_sim", k)
-  }
-
-  /** Recall@k of the IVF-PQ serving path ([[pqTopKFromIndex]] — the
-    * DOUBLY-lossy ranking: coarse cell pruning on top of 8-byte ADC
-    * codes) against the exact float ranking — the [[annRecall]]
-    * convention applied to the compressed store. PQ degrades
-    * silently: the codes always produce a plausible top-k, so
-    * without this measurement nobody knows the operating point a
-    * (nCells, nProbe, m, ksub) choice actually buys.
-    *
-    * `embeddings` supplies the query vectors and the exact baseline
-    * (the code store carries neither floats nor the full corpus
-    * ranking). Query vectors collect to the driver — |queryIds| rows,
-    * the bounded fixture the per-query LUT needs — and each probe
-    * prunes the written index to nProbe cell directories; the only
-    * corpus-wide work is the deliberate exact baseline, which is the
-    * point of the evaluation. A degenerate (zero-norm) query vector
-    * yields no probes and scores recall 0 rather than vanishing — an
-    * eval that silently drops failing queries overstates the
-    * operating point. A query id with no embedding row at all has no
-    * exact baseline either and is absent from the readout (callers
-    * own the eval set's existence).
-    */
-  def pqRecall(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queryIds: Seq[Long],
-      k: Int, nProbe: Int): DataFrame =
-    servingRecall(embeddings, queryIds, k)(qv =>
-      pqTopKFromIndex(index, cents, cb, qv, k, nProbe))
-
   /** The recall@k harness every serving-path evaluation shares
-    * ([[pqRecall]], [[residualPqRecall]], [[quantizedRecall]]):
+    * ([[VectorStore.recall]]):
     * collect the bounded query vectors, run the caller's serving
     * ranking per query, left-join the exact float top-k, and read out
     * per-query recall. A query whose serving path yields no
@@ -2298,7 +1473,7 @@ object Similarity {
     * has no exact baseline either and is absent from the readout
     * (callers own the eval set's existence).
     */
-  private def servingRecall(embeddings: DataFrame, queryIds: Seq[Long],
+  private[similarity] def servingRecall(embeddings: DataFrame, queryIds: Seq[Long],
       k: Int)(serve: Seq[Double] => DataFrame): DataFrame = {
     require(queryIds.nonEmpty, "recall eval needs at least one query id")
     val qvecs = embeddings.filter(col("vec_id").isin(queryIds: _*))
@@ -2323,19 +1498,6 @@ object Similarity {
         round(col("n_hit") * lit(1.0) / col("n_exact"), 4).as("recall"))
       .orderBy(col("query_id"))
   }
-
-  /** Recall@k of the COMPRESSED (int8) IVF serving path
-    * ([[quantizedTopKFromIndex]]) against the exact float ranking —
-    * the [[pqRecall]] convention for the 4× store. Together with the
-    * float routing recall ([[annRecall]]) and the PQ evals this
-    * completes the measured compression/recall frontier a deployment
-    * sizes against: float (routing loss only) → int8 4× → PQ 32×.
-    */
-  def quantizedRecall(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], queryIds: Seq[Long], k: Int,
-      nProbe: Int): DataFrame =
-    servingRecall(embeddings, queryIds, k)(qv =>
-      quantizedTopKFromIndex(index, cents, qv, k, nProbe))
 
   /** Recall@k of PREFIX-truncated serving (the Matryoshka/MRL axis:
     * store and rank only the first `d` components — dim/d× less scan
@@ -2368,120 +1530,36 @@ object Similarity {
       .orderBy(col("dims"), col("query_id"))
   }
 
-  /** Centroid + codebook REFRESH for a written IVF-PQ index — the
-    * drift-maintenance member of the composed family, and the one the
-    * 100 TB argument weighs heaviest: the PQ store is doubly lossy
-    * (coarse cells AND per-subspace codes are both frozen literals),
-    * so a drifted corpus degrades its ranking twice over — stale
-    * cells mis-route the probe AND a stale codebook has no code
-    * points in the drifted cone, so even correctly-routed vectors
-    * quantize badly. The refresh re-encodes from a caller-supplied
-    * SOURCE of the original embeddings (the code store holds only
-    * 8-byte codes — the [[reclusterQuantizedIvfIndex]] contract):
-    * per-row encoding from true floats against the NEW frozen
-    * literals keeps recluster ≡ rebuild-on-live exact. Live ids
-    * (tombstones honored) with no source row fail LOUDLY. Old index
-    * untouched; cutover is a path swap; O(index) background work by
-    * design.
-    */
-  def reclusterPqIndex(spark: org.apache.spark.sql.SparkSession,
-      oldPath: String, source: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, newPath: String): Unit = {
-    val live = readIvfIndex(spark, oldPath).select(col("vec_id"))
-    val src = source.select(col("vec_id"), col("embedding"))
-    val missing = live.join(src, Seq("vec_id"), "left_anti")
-      .limit(5).collect().map(_.getLong(0))
-    require(missing.isEmpty,
-      s"live ids ${missing.mkString(", ")}… of the index at $oldPath " +
-        "have no row in the supplied source table — the PQ store " +
-        "carries no embeddings, so refresh needs the original vectors " +
-        "for every live entry")
-    writePqIndex(
-      src.join(live, Seq("vec_id"), "left_semi"), cents, cb, newPath)
-  }
-
   // ---------------------------------------------------------------
   // Residual PQ — IVFADC proper (encode v − c_cell, not v)
   // ---------------------------------------------------------------
 
-  /** Cell-assigned RESIDUAL frame: (vec_id, embedding = v − c_cell,
-    * cell). The IVFADC observation (Jégou et al. 2011, §III): within
-    * a coarse cell the residuals span a far smaller cone than the raw
-    * vectors, so the same (m, ksub) code budget quantizes them with
-    * much less error — the codebook's points chase per-cell offsets
-    * instead of the whole corpus. Narrow projection: the centroid
-    * table rides as a literal, subtraction is per-row IEEE arithmetic
-    * (exactly replayable), nothing shuffles. Zero-norm vectors have
-    * no cell, hence no residual — excluded, as in every IVF writer.
+  /** The RESIDUAL frame of a [[cellAssigned]] one: (vec_id,
+    * embedding = v − c_cell, cell). The IVFADC observation (Jégou et
+    * al. 2011, §III): within a coarse cell the residuals span a far
+    * smaller cone than the raw vectors, so the same (m, ksub) code
+    * budget quantizes them with much less error. Per-row IEEE
+    * subtraction against the centroid literal — exactly replayable,
+    * nothing shuffles.
     */
-  private[graft] def residualAssigned(embeddings: DataFrame,
-      cents: Seq[Seq[Double]]): DataFrame = {
-    val centLit = typedlit(cents)
-    embeddings
-      .withColumn("__scores",
-        cellScoresFor(embeddings, centLit)(col("embedding")))
-      .withColumn("cell", cellOf(col("__scores")))
-      .filter(col("cell").isNotNull)
-      .select(col("vec_id"),
-        zip_with(asDouble(col("embedding")),
-          element_at(centLit, col("cell") + 1),
-          (x, y) => x - y).as("embedding"),
-        col("cell"))
-  }
+  private[similarity] def residualOf(assigned: DataFrame,
+      cents: Seq[Seq[Double]]): DataFrame =
+    assigned.select(col("vec_id"),
+      zip_with(asDouble(col("embedding")),
+        element_at(typedlit(cents), col("cell") + 1),
+        (x, y) => x - y).as("embedding"),
+      col("cell"))
 
   /** Train a PQ codebook on the RESIDUAL distribution — [[pqBuild]]
     * over the (v − c_cell) frame. The trained book is only meaningful
     * against the same frozen `cents` it was trained with; callers
     * freeze the pair together (exactly the coarse-centroid/codebook
-    * coupling [[reclusterPqIndex]] refreshes as a unit).
+    * coupling [[VectorStore.recluster]] refreshes as a unit).
     */
   def pqBuildResidual(embeddings: DataFrame, cents: Seq[Seq[Double]],
       m: Int = 4, ksub: Int = 256, iterations: Int = 2): PqCodebook =
-    pqBuild(residualAssigned(embeddings, cents)
+    pqBuild(residualOf(cellAssigned(embeddings, cents), cents)
       .select(col("vec_id"), col("embedding")), m, ksub, iterations)
-
-  /** The (codes + cell) frame the residual-PQ writers share — cell
-    * from the true float vector, codes from the residual against the
-    * SAME frozen centroids (assignment and encoding can never use
-    * different cells), co-located per cell. Same layout as
-    * [[pqAssignedForWrite]], so the whole maintenance family
-    * (append / delete / compact / as-of / streaming) composes through
-    * the layout-generic readers unchanged.
-    */
-  private[graft] def residualPqAssignedForWrite(embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook): DataFrame =
-    residualAssigned(embeddings, cents)
-      .select(col("vec_id"),
-        pqCodesCol(cb, asDouble(col("embedding"))).as("codes"),
-        col("cell"))
-      .repartition(col("cell"))
-
-  /** [[writePqIndex]] with residual encoding — same 8-byte rows, same
-    * (cell, batch_id) layout, strictly better codes.
-    */
-  def writeResidualPqIndex(embeddings: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, path: String): Unit =
-    residualPqAssignedForWrite(embeddings, cents, cb)
-      .withColumn("batch_id", lit("build"))
-      .write.mode("overwrite").partitionBy("cell", "batch_id").parquet(path)
-
-  /** [[appendToPqIndex]]'s contract for the residual store: per-row
-    * assignment + residual encoding against frozen literals keeps
-    * append ≡ rebuild exact; `batchKey` dynamic-overwrites its own
-    * (cell, batch_id) partitions, so retries never double-insert.
-    */
-  def appendToResidualPqIndex(newVectors: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, path: String,
-      batchKey: String): Unit = {
-    requireIvfBatchKey(batchKey)
-    requireBatchLayout(newVectors.sparkSession, path)
-    residualPqAssignedForWrite(newVectors, cents, cb)
-      .withColumn("batch_id", lit(batchKey))
-      .write.partitionBy("cell", "batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(path)
-  }
 
   /** The per-cell half of the residual ADC score in exact integer
     * micro-units: cellLut6(c) = round(dot(q, c_cell)·1e6) as a long —
@@ -2504,278 +1582,8 @@ object Similarity {
     * index row carries.
     */
   def residualPqTopK(codes: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, query: Seq[Double], k: Int): DataFrame = {
-    val lut = typedlit(pqLut6(cb, query))
-    val cl = typedlit(cellLut6(cents, query).toVector)
-    val score6 = element_at(cl, col("cell").cast("int") + 1) +
-      (0 until cb.m).map(j =>
-        element_at(element_at(lut, j + 1),
-          element_at(col("codes"), j + 1) + 1)).reduce(_ + _)
-    codes
-      .select(col("vec_id"), round(score6 / 1e6, 6).as("pq_sim"))
-      .orderBy(col("pq_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Serve top-k from a [[writeResidualPqIndex]] table — directory
-    * pruning to nProbe cells, then the residual ADC scan.
-    */
-  def residualPqTopKFromIndex(index: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, queryVec: Seq[Double], k: Int,
-      nProbe: Int): DataFrame = {
-    val probes = probeCells(cents, queryVec, nProbe)
-    val filtered =
-      if (probes.isEmpty) index.filter(lit(false))
-      else index.filter(col("cell").isin(probes: _*))
-    residualPqTopK(filtered, cents, cb, queryVec, k)
-  }
-
-  /** Drift refresh for the residual store — [[reclusterPqIndex]]'s
-    * contract (re-encode the live set from a caller-supplied float
-    * source against the new frozen pair; missing source rows fail
-    * loudly; cutover is a path swap). Residual codes are DOUBLY
-    * centroid-coupled — a new coarse centroid moves both the cell
-    * AND the residual every member of that cell encodes — which is
-    * why refresh must re-encode from source rather than remap codes.
-    */
-  def reclusterResidualPqIndex(spark: org.apache.spark.sql.SparkSession,
-      oldPath: String, source: DataFrame, cents: Seq[Seq[Double]],
-      cb: PqCodebook, newPath: String): Unit = {
-    val live = readIvfIndex(spark, oldPath).select(col("vec_id"))
-    val src = source.select(col("vec_id"), col("embedding"))
-    val missing = live.join(src, Seq("vec_id"), "left_anti")
-      .limit(5).collect().map(_.getLong(0))
-    require(missing.isEmpty,
-      s"live ids ${missing.mkString(", ")}… of the index at $oldPath " +
-        "have no row in the supplied source table — the residual store " +
-        "carries no embeddings, so refresh needs the original vectors " +
-        "for every live entry")
-    writeResidualPqIndex(
-      src.join(live, Seq("vec_id"), "left_semi"), cents, cb, newPath)
-  }
-
-  /** Recall@k of the residual-PQ serving path against the exact float
-    * ranking — [[pqRecall]]'s twin for the IVFADC-proper store, the
-    * measurement that prices residual encoding against raw encoding
-    * at the same 32× code budget.
-    */
-  def residualPqRecall(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queryIds: Seq[Long],
-      k: Int, nProbe: Int): DataFrame =
-    servingRecall(embeddings, queryIds, k)(qv =>
-      residualPqTopKFromIndex(index, cents, cb, qv, k, nProbe))
-
-  // ---------------------------------------------------------------
-  // Two-stage PQ serving: ADC shortlist → exact re-rank
-  // ---------------------------------------------------------------
-
-  /** Two-stage retrieval from a written IVF-PQ index: the ADC scan
-    * shortlists `shortlist` candidates from the probed cells (8-byte
-    * rows, directory-pruned), then the TRUE float vectors of only
-    * those candidates re-rank exactly. The shortlist ids are a
-    * bounded driver-side list (like the recall evals' query vectors),
-    * so the re-fetch pushes `In(vec_id, …)` into the source scan —
-    * row-group-pruned point lookups, not a corpus pass. This is the
-    * standard production ANN shape (Jégou et al. 2011 §V: ADC
-    * shortlist + exact reordering): measured here it recovers ALL of
-    * the ADC loss — recall@10 is capped only by the coarse routing —
-    * at the cost of `shortlist` float-row lookups per query.
-    */
-  def pqTopKRefined(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queryVec: Seq[Double],
-      k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must cover top-$k")
-    val ids = pqTopKFromIndex(index, cents, cb, queryVec, shortlist, nProbe)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    exactRerank(embeddings, ids, queryVec, k)
-  }
-
-  /** The exact re-rank tail both two-stage serving paths share: the
-    * true float rows of the bounded shortlist ids (In-pushdown point
-    * lookups, never a corpus pass) re-ranked by exact cosine.
-    */
-  private def exactRerank(embeddings: DataFrame, ids: Seq[Long],
-      queryVec: Seq[Double], k: Int): DataFrame = {
-    val cand =
-      if (ids.isEmpty) embeddings.filter(lit(false))
-      else embeddings.filter(col("vec_id").isin(ids: _*))
-    cand
-      .select(col("vec_id"),
-        round(cosineFor(embeddings)(col("embedding"),
-          typedlit(queryVec.toVector)), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Two-stage serving over the RESIDUAL (IVFADC) store — the
-    * composition of the round-13 waves the residual family still
-    * lacked: the residual-ADC scan (cell term + residual LUTs)
-    * shortlists from the probed cells, the true float rows of only
-    * those ids re-rank exactly via the SAME tail as [[pqTopKRefined]].
-    * Worth enabling only where residual encoding itself pays (mean
-    * residual norm ≪ 1 — the [[residualPqRecall]] diagnostic); the
-    * re-rank recovers residual-ADC loss up to the routing ceiling
-    * exactly as it does raw-ADC loss.
-    */
-  def residualPqTopKRefined(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queryVec: Seq[Double],
-      k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must cover top-$k")
-    val ids = residualPqTopKFromIndex(index, cents, cb, queryVec,
-      shortlist, nProbe)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    exactRerank(embeddings, ids, queryVec, k)
-  }
-
-  /** BATCHED two-stage serving — the composition of the two
-    * high-QPS waves: Q queries' ADC shortlists come from ONE pass
-    * over the union of their probed cells ([[pqMultiTopKFromIndex]]
-    * at depth `shortlist`), then ONE bounded fetch of the union of
-    * all shortlisted float rows re-ranks every query (each scanned
-    * candidate scores against every query's literal vector, rows
-    * outside a query's own shortlist drop). Two scans total for the
-    * whole batch — a Q-query refined workload against
-    * [[pqTopKRefined]] would issue 2Q. Per-query results ≡ Q single
-    * refined serves (the hash gate); zero-norm queries are absent.
-    */
-  def pqMultiTopKRefined(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook,
-      queries: Seq[(Long, Seq[Double])], k: Int, nProbe: Int,
-      shortlist: Int): DataFrame = {
-    requireDistinctBatch(queries)
-    require(shortlist >= k, s"shortlist $shortlist must cover top-$k")
-    if (queries.length > literalMaxQ(index))
-      return pqMultiTopKRefinedQT(index, embeddings, cents, cb,
-        queriesToFrame(index.sparkSession, queries), k, nProbe,
-        shortlist)
-    val shortRows = pqMultiTopKFromIndex(index, cents, cb, queries,
-      shortlist, nProbe)
-      .select(col("query_id"), col("vec_id")).collect()
-    val byQ: Map[Long, Set[Long]] = shortRows.groupBy(_.getLong(0))
-      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val allIds = byQ.values.flatten.toSeq.distinct
-    if (allIds.isEmpty)
-      return embeddings.filter(lit(false))
-        .select(lit(0L).as("query_id"), col("vec_id"),
-          lit(0.0).as("cos_sim"))
-    val cand = embeddings.filter(col("vec_id").isin(allIds: _*))
-    val entries = queries.filter(q => byQ.contains(q._1))
-      .map { case (qid, qv) =>
-        struct(lit(qid).as("query_id"),
-          col("vec_id").isin(byQ(qid).toSeq: _*).as("m"),
-          round(cosineFor(embeddings)(col("embedding"),
-            typedlit(qv.toVector)), 4).as("s"))
-      }
-    import org.apache.spark.sql.expressions.Window
-    cand
-      .select(col("vec_id"), explode(array(entries: _*)).as("e"))
-      .filter(col("e.m"))
-      .select(col("e.query_id").as("query_id"), col("vec_id"),
-        col("e.s").as("cos_sim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id"))))
-      .filter(col("rn") <= k).drop("rn")
-      .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id"))
-  }
-
-  /** Recall@k of the residual two-stage path — prices the re-rank
-    * over the IVFADC store beside [[pqRefinedRecall]]'s raw-store
-    * number: both saturate at the shared routing ceiling, so the
-    * store choice (raw vs residual codes) washes out once a deep
-    * enough shortlist re-ranks — the decision stays with the
-    * residual-norm diagnostic, not the serving shape.
-    */
-  def residualPqRefinedRecall(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queryIds: Seq[Long],
-      k: Int, nProbe: Int, shortlist: Int): DataFrame =
-    servingRecall(embeddings, queryIds, k)(qv =>
-      residualPqTopKRefined(index, embeddings, cents, cb, qv, k, nProbe,
-        shortlist))
-
-  /** Recall@k of the two-stage (shortlist + exact re-rank) serving
-    * path — the measurement that prices the re-rank stage: together
-    * with [[pqRecall]] (the pure-ADC point) it separates what the
-    * re-rank recovers (ADC loss — all of it, if `shortlist` is deep
-    * enough) from what it cannot (coarse routing loss).
-    */
-  def pqRefinedRecall(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queryIds: Seq[Long],
-      k: Int, nProbe: Int, shortlist: Int): DataFrame =
-    servingRecall(embeddings, queryIds, k)(qv =>
-      pqTopKRefined(index, embeddings, cents, cb, qv, k, nProbe,
-        shortlist))
-
-  /** The SHORTLIST-DEPTH operating curve of [[pqRefinedRecall]] in
-    * one evaluation: per-query recall@k at every depth in
-    * `shortlists`, row-identical to |shortlists| separate
-    * [[pqRefinedRecall]] runs unioned with a `shortlist` column
-    * (SimilaritySpec pins the parity). Shares what the separate runs
-    * recompute: ADC ranks by the total order (pq_sim desc, vec_id),
-    * so ONE shortlist per query at the deepest depth prefixes every
-    * shallower one exactly; ONE bounded float fetch per query
-    * re-ranks all depths (membership in a depth = membership in its
-    * prefix); and the corpus-wide exact baseline runs ONCE instead of
-    * per depth. |queries| + 1 collects and |queries| served branches
-    * where the composed form pays |queries| × |depths| of each.
-    */
-  def pqRefinedRecallCurve(index: DataFrame, embeddings: DataFrame,
-      cents: Seq[Seq[Double]], cb: PqCodebook, queryIds: Seq[Long],
-      k: Int, nProbe: Int, shortlists: Seq[Int]): DataFrame = {
-    require(queryIds.nonEmpty, "recall eval needs at least one query id")
-    require(shortlists.nonEmpty, "curve needs at least one depth")
-    shortlists.foreach(r =>
-      require(r >= k, s"shortlist $r must cover top-$k"))
-    val maxR = shortlists.max
-    val qvecs = embeddings.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toVector)
-      .toMap
-    val present = queryIds.filter(qvecs.contains)
-    val approx = present.map { qid =>
-      // ordered deepest shortlist; take(r) IS the depth-r shortlist
-      val ids = pqTopKFromIndex(index, cents, cb, qvecs(qid), maxR,
-        nProbe).select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-      val cand =
-        if (ids.isEmpty) embeddings.filter(lit(false))
-        else embeddings.filter(col("vec_id").isin(ids: _*))
-      val entries = shortlists.map { r =>
-        val pref = ids.take(r)
-        struct(lit(r).as("shortlist"),
-          (if (pref.isEmpty) lit(false)
-           else col("vec_id").isin(pref: _*)).as("m"))
-      }
-      import org.apache.spark.sql.expressions.Window
-      cand
-        .select(col("vec_id"),
-          round(cosineFor(embeddings)(col("embedding"),
-            typedlit(qvecs(qid).toVector)), 4).as("cos_sim"),
-          explode(array(entries: _*)).as("e"))
-        .filter(col("e.m"))
-        // top-k within a depth by the exactRerank order — row_number
-        // over (cos_sim desc, vec_id) ≡ orderBy(...).limit(k)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("e.shortlist"))
-            .orderBy(col("cos_sim").desc, col("vec_id"))))
-        .filter(col("rn") <= k)
-        .select(col("e.shortlist").as("shortlist"),
-          lit(qid).as("query_id"), col("vec_id"), lit(1L).as("hit"))
-    }.reduceOption(_.unionByName(_))
-      .getOrElse(embeddings.sparkSession.emptyDataFrame
-        .select(lit(0).as("shortlist"), lit(0L).as("query_id"),
-          lit(0L).as("vec_id"), lit(1L).as("hit")).filter(lit(false)))
-    multiQueryTopK(embeddings, queryIds, k)
-      .select(col("query_id"), col("vec_id"))
-      .withColumn("shortlist", explode(typedlit(shortlists.toVector)))
-      .join(approx, Seq("shortlist", "query_id", "vec_id"), "left")
-      .groupBy(col("shortlist"), col("query_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_exact"),
-        round(col("n_hit") * lit(1.0) / col("n_exact"), 4).as("recall"),
-        col("shortlist"))
-      .orderBy(col("shortlist"), col("query_id"))
-  }
+      cb: PqCodebook, query: Seq[Double], k: Int): DataFrame =
+    codedTopK(VectorCodec.ResidualPq(cb), codes, cents, query, k)
 
   /** Embedding-cosine near-duplicate pairs: SRP-bucket join prunes
     * candidates, exact cosine ≥ threshold verifies. The classic
@@ -2839,24 +1647,17 @@ object Similarity {
   def semanticDuplicatesManaged(embeddings: DataFrame,
       cents: Seq[Seq[Double]], threshold: Double): graft.Managed = {
     require(cents.nonEmpty, "semanticDuplicates needs at least one centroid")
-    val centLit = typedlit(cents)
-    val assigned = embeddings
-      // exclude zero-norm vectors BEFORE any cosine: under ANSI the
-      // divide would throw (matching composed Divide), under non-ANSI
-      // it nulls — filtering first gives the documented exclusion in
-      // both modes, still narrow
-      .filter(aggregate(asDouble(col("embedding")), lit(0.0),
-        (acc, x) => acc + x * x) > 0)
-      .withColumn("__scores",
-        cellScoresFor(embeddings, centLit)(col("embedding")))
-      .withColumn("cell", cellOf(col("__scores")))
-      .drop("__scores")
-      .filter(col("cell").isNotNull)
-      .persist()
+    // exclude zero-norm vectors BEFORE any cosine: under ANSI the
+    // divide would throw (matching composed Divide), under non-ANSI it
+    // nulls — filtering first gives the documented exclusion in both
+    // modes, still narrow
+    val assigned = cellAssigned(embeddings.filter(aggregate(
+      asDouble(col("embedding")), lit(0.0), (acc, x) => acc + x * x) > 0),
+      cents).persist()
     new graft.Managed(semanticSurvivors(assigned)(threshold), Seq(assigned))
   }
 
-  /** SemDeDup served from a written IVF index (see [[writeIvfIndex]]):
+  /** SemDeDup served from a written IVF index (see [[VectorStore.write]]):
     * the cell column is already materialized as the partition key, so
     * dedup skips assignment entirely and the per-cell pair join reads
     * cell-partitioned parquet — the index built for ANN serving IS the

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
 import graft.Frames.freeLocalCheckpoint
 import graft.cdc.Cdc
 import graft.quality.RuleBasedScorer
+import graft.similarity.{Similarity, VectorCodec, VectorStore}
 
 /** The reference's two stream processors re-expressed as Structured
   * Streaming (SURVEY.md §2.8 ST1-ST8):
@@ -746,7 +747,7 @@ object Pipelines {
     val known = parts.map(dirName).toSet
     val base0 = spark.read.parquet(dir)
     val collapse =
-      if (graft.similarity.Similarity.integralBatchIds(base0)) "-1"
+      if (Similarity.integralBatchIds(base0)) "-1"
       else "base"
     require(!keep.contains(collapse),
       s"batch \"$collapse\" is the collapse target and always " +
@@ -852,7 +853,7 @@ object Pipelines {
     requireNoFoldInProgress(spark, dir)
     val df = spark.read.parquet(dir)
     require(df.columns.contains("batch_id") &&
-        graft.similarity.Similarity.integralBatchIds(df),
+        Similarity.integralBatchIds(df),
       s"$dir is not a numeric batch-stamped catalog table — as-of " +
         "needs the sinks' micro-batch-id layout")
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -1386,11 +1387,11 @@ object Pipelines {
     // deleteFromIvfIndex keys shaped "<keyPrefix>-N" must fail loudly
     // from the moment this stream exists, not from its first
     // non-empty batch
-    graft.similarity.Similarity.registerIvfDeleteStreamPrefix(
+    Similarity.registerIvfDeleteStreamPrefix(
       ids.sparkSession, indexDir, keyPrefix)
     startSink(ids, checkpointDir) { (batch, batchId) =>
       if (!batch.isEmpty)
-        graft.similarity.Similarity.deleteFromIvfIndexSink(
+        Similarity.deleteFromIvfIndexSink(
           batch.select(col("vec_id")), indexDir, s"$keyPrefix-$batchId")
     }
   }
@@ -1677,217 +1678,86 @@ object Pipelines {
       processBm25IngestBatch(batch, indexDir, batchId)
     }
 
-  /** Idempotent batch core of [[ivfIndexSink]]: the micro-batch
-    * assigns against the FROZEN build centroids (so stream-built ≡
-    * batch rebuild exactly — the appendToIvfIndex claim) and lands
-    * partitioned by (cell, batch_id); a replayed batch recomputes
-    * identical rows. Probes prune on the first level (cell) across all
-    * batches. Empty batches are a no-op.
+  /** Idempotent batch core of [[vectorIndexSink]]: the micro-batch
+    * assigns against the FROZEN build centroids (and codebook), so
+    * stream-built ≡ batch rebuild exactly — the `VectorStore.append`
+    * claim — and lands partitioned by (cell, batch_id); a replayed
+    * batch recomputes identical rows. Probes prune on the first level
+    * (cell) across all batches. Empty batches are a no-op.
     */
-  def processIvfIngestBatch(batch: DataFrame, cents: Seq[Seq[Double]],
-      indexDir: String, batchId: Long): Unit = {
+  def processVectorIngestBatch(batch: DataFrame, codec: VectorCodec,
+      cents: Seq[Seq[Double]], indexDir: String, batchId: Long): Unit = {
     if (batch.isEmpty) return
-    writeBatchPartition(
-      graft.similarity.Similarity.ivfAssignedForWrite(batch, cents),
+    writeBatchPartition(VectorStore.encoded(codec, batch, cents),
       indexDir, batchId, nonEmpty = true, "cell")
   }
 
   /** The streaming entry: vectors (vec_id, embedding, …) continuously
-    * ingest into a servable cell-partitioned IVF index at `indexDir`
-    * against frozen centroids through the batch core above — the
-    * streaming counterpart of
-    * `Similarity.appendToIvfIndex`.
+    * ingest into a servable cell-partitioned index of `codec` at
+    * `indexDir` through the batch core above — the streaming
+    * counterpart of `VectorStore.append`. Probes run mid-stream
+    * against whatever is committed, and the numeric batch clock makes
+    * the index as-of-readable (`Similarity.readIvfIndexAsOf`).
     */
-  def ivfIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
-      indexDir: String, checkpointDir: String): StreamingQuery =
+  def vectorIndexSink(vectors: DataFrame, codec: VectorCodec,
+      cents: Seq[Seq[Double]], indexDir: String,
+      checkpointDir: String): StreamingQuery =
     startSink(vectors, checkpointDir) { (batch, batchId) =>
-      processIvfIngestBatch(batch, cents, indexDir, batchId)
+      processVectorIngestBatch(batch, codec, cents, indexDir, batchId)
     }
 
-  /** STREAMING batched serving (round 15 — the online form of the
-    * high-QPS window): each micro-batch of queries
-    * (query_id, embedding) serves through the QUERY-TABLE batched
-    * plan against the WRITTEN float IVF index — one broadcast-probe
-    * scan per trigger regardless of the batch's Q — and the k rows
-    * per query land batch-stamped in `outDir`. A replay of batch N
-    * rewrites the identical ranking (the serve reads only the frozen
-    * index and the batch).
-    * Duplicate ids WITHIN one micro-batch fail loudly (the
-    * query-table guard); across micro-batches the same id re-serves
-    * — later answers live in later partitions, the catalog contract.
+  /** STREAMING batched serving: each micro-batch of queries
+    * (query_id, embedding) serves through the QUERY-TABLE batched plan
+    * against the written index of `codec` — one broadcast-probe scan
+    * per trigger regardless of the batch's Q — and the k rows per
+    * query land batch-stamped in `outDir`. `rerank` = (embeddings
+    * path, shortlist) selects the two-stage serve (ADC shortlist →
+    * exact float re-rank) and needs a PQ codec. A replay of batch N
+    * rewrites the identical ranking (the serve reads only the index
+    * and the batch). Duplicate ids WITHIN one micro-batch fail loudly
+    * (the query-table guard); across micro-batches the same id
+    * re-serves — later answers live in later partitions.
     */
-  def knnServingSink(queries: DataFrame, cents: Seq[Seq[Double]],
-      indexPath: String, outDir: String, checkpointDir: String,
-      k: Int = 10, nProbe: Int = 2): StreamingQuery =
+  def vectorServingSink(queries: DataFrame, codec: VectorCodec,
+      cents: Seq[Seq[Double]], indexPath: String, outDir: String,
+      checkpointDir: String, k: Int = 10, nProbe: Int = 2,
+      rerank: Option[(String, Int)] = None): StreamingQuery = {
+    require(rerank.isEmpty || codec.isInstanceOf[VectorCodec.PqCodec],
+      "the two-stage re-rank serves PQ codes only")
     startSink(queries, checkpointDir) { (batch, batchId) =>
-      processKnnServeBatch(batch, cents, indexPath, outDir, batchId,
-        k, nProbe)
+      processVectorServeBatch(batch, codec, cents, indexPath, outDir,
+        batchId, k, nProbe, rerank)
     }
+  }
 
-  /** Idempotent batch core of [[knnServingSink]]: the query-table
-    * serve over the written index. Empty micro-batches write nothing.
+  /** Idempotent batch core of [[vectorServingSink]]: the query-table
+    * serve over the index as `Similarity.readIvfIndex` reads it, so
+    * ids erased by `deleteFromIvfIndex` are never served. Empty
+    * micro-batches write nothing.
     */
-  def processKnnServeBatch(batch: DataFrame, cents: Seq[Seq[Double]],
-      indexPath: String, outDir: String, batchId: Long, k: Int,
-      nProbe: Int): Unit = {
+  def processVectorServeBatch(batch: DataFrame, codec: VectorCodec,
+      cents: Seq[Seq[Double]], indexPath: String, outDir: String,
+      batchId: Long, k: Int, nProbe: Int,
+      rerank: Option[(String, Int)] = None): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     // checked BEFORE the serve plan is even constructed (analysis
     // reads the index schema): a mid-fold catalog refuses the whole
     // trigger, not just the write
     requireNoFoldInProgress(spark, outDir)
-    writeBatchOutput(graft.similarity.Similarity.ivfMultiTopKFromIndexQT(
-      spark.read.parquet(indexPath), cents, batch, k, nProbe),
-      outDir, batchId)
-  }
-
-  /** STREAMING batched serving for the HOT tier (round-16 verdict
-    * #3): [[knnServingSink]]'s exact design — query-table plan per
-    * micro-batch, batch-stamped catalog — over the COMPRESSED (int8)
-    * store, the tier the latency/recall book says a deployment actually
-    * serves hot
-    * (≈float recall at 4× less store I/O). The layout-agnostic
-    * [[graft.similarity.Similarity.readIvfIndex]] reader serves the
-    * MAINTAINED store (tombstone anti-join) through the same plan.
-    */
-  def quantizedServingSink(queries: DataFrame, cents: Seq[Seq[Double]],
-      indexPath: String, outDir: String, checkpointDir: String,
-      k: Int = 10, nProbe: Int = 2): StreamingQuery =
-    startSink(queries, checkpointDir) { (batch, batchId) =>
-      processQuantizedServeBatch(batch, cents, indexPath, outDir,
-        batchId, k, nProbe)
+    val index = Similarity.readIvfIndex(spark, indexPath)
+    val served = (codec, rerank) match {
+      case (_, None) =>
+        VectorStore.multiTopK(codec, index, cents, batch, k, nProbe)
+      case (pq: VectorCodec.PqCodec, Some((embeddingsPath, shortlist))) =>
+        VectorStore.multiTopKRefined(pq, index,
+          spark.read.parquet(embeddingsPath), cents, batch, k, nProbe,
+          shortlist)
+      case _ => throw new IllegalArgumentException(
+        "the two-stage re-rank serves PQ codes only")
     }
-
-  /** Idempotent batch core of [[quantizedServingSink]]: the int8
-    * query-table serve (in-plan query quantization, tombstone-aware
-    * reader) over the written index.
-    */
-  def processQuantizedServeBatch(batch: DataFrame,
-      cents: Seq[Seq[Double]], indexPath: String, outDir: String,
-      batchId: Long, k: Int, nProbe: Int): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    requireNoFoldInProgress(spark, outDir)
-    writeBatchOutput(
-      graft.similarity.Similarity.quantizedMultiTopKFromIndexQT(
-        graft.similarity.Similarity.readIvfIndex(spark, indexPath),
-        cents, batch, k, nProbe),
-      outDir, batchId)
+    writeBatchOutput(served, outDir, batchId)
   }
-
-  /** STREAMING batched serving for the COLD tier (round-16 verdict
-    * #3): the two-stage refined query-table plan (ADC shortlist →
-    * exact float re-rank, both batched) per micro-batch over the
-    * written IVF-PQ index, same batch-stamped catalog + recovery as
-    * the other serve sinks.
-    */
-  def pqRefinedServingSink(queries: DataFrame,
-      cents: Seq[Seq[Double]],
-      cb: graft.similarity.Similarity.PqCodebook, indexPath: String,
-      embeddingsPath: String, outDir: String, checkpointDir: String,
-      k: Int = 10, nProbe: Int = 2, shortlist: Int = 40): StreamingQuery =
-    startSink(queries, checkpointDir) { (batch, batchId) =>
-      processPqRefinedServeBatch(batch, cents, cb, indexPath,
-        embeddingsPath, outDir, batchId, k, nProbe, shortlist)
-    }
-
-  /** Idempotent batch core of [[pqRefinedServingSink]]. */
-  def processPqRefinedServeBatch(batch: DataFrame,
-      cents: Seq[Seq[Double]],
-      cb: graft.similarity.Similarity.PqCodebook, indexPath: String,
-      embeddingsPath: String, outDir: String, batchId: Long, k: Int,
-      nProbe: Int, shortlist: Int): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    requireNoFoldInProgress(spark, outDir)
-    writeBatchOutput(
-      graft.similarity.Similarity.pqMultiTopKRefinedQT(
-        spark.read.parquet(indexPath),
-        spark.read.parquet(embeddingsPath), cents, cb, batch, k,
-        nProbe, shortlist),
-      outDir, batchId)
-  }
-
-  /** Idempotent batch core of [[quantizedIvfIndexSink]] — the int8
-    * twin of [[processIvfIngestBatch]]: frozen-centroid assignment
-    * from the TRUE float vectors, per-row symmetric quantization of
-    * the stored entries, (cell, batch_id) partitions. Same
-    * exactness argument as the batch append: assignment and
-    * quantization are both per-row and index-independent, so
-    * stream-built ≡ rebuild entry for entry.
-    */
-  def processQuantizedIvfIngestBatch(batch: DataFrame,
-      cents: Seq[Seq[Double]], indexDir: String, batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    writeBatchPartition(
-      graft.similarity.Similarity.quantizedAssignedForWrite(batch, cents),
-      indexDir, batchId, nonEmpty = true, "cell")
-  }
-
-  /** Idempotent batch core of [[pqIndexSink]] — the IVF-PQ member:
-    * frozen coarse assignment + frozen-codebook encoding per
-    * micro-batch, (cell, batch_id) partitions.
-    */
-  def processPqIngestBatch(batch: DataFrame, cents: Seq[Seq[Double]],
-      cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
-      batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    writeBatchPartition(
-      graft.similarity.Similarity.pqAssignedForWrite(batch, cents, cb),
-      indexDir, batchId, nonEmpty = true, "cell")
-  }
-
-  /** Streaming ingestion into the IVF-PQ index — the composed
-    * 100 TB serving shape (directory pruning over 8-byte codes) fed
-    * continuously through the core above; stream-built ≡ rebuild by
-    * the same frozen-literals
-    * argument as the batch append.
-    */
-  def pqIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
-      cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
-      checkpointDir: String): StreamingQuery =
-    startSink(vectors, checkpointDir) { (batch, batchId) =>
-      processPqIngestBatch(batch, cents, cb, indexDir, batchId)
-    }
-
-  /** Idempotent batch core of [[residualPqIndexSink]]: the same
-    * frozen (cents, codebook) pair as the batch append — assignment
-    * from true floats, codes from the residual against the SAME
-    * frozen centroids — so stream-built ≡ rebuild entry for entry.
-    */
-  def processResidualPqIngestBatch(batch: DataFrame,
-      cents: Seq[Seq[Double]],
-      cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
-      batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    writeBatchPartition(
-      graft.similarity.Similarity.residualPqAssignedForWrite(batch, cents, cb),
-      indexDir, batchId, nonEmpty = true, "cell")
-  }
-
-  /** Streaming ingestion into the RESIDUAL-encoded IVF-PQ index —
-    * same layout, same rebuild argument as [[pqIndexSink]].
-    */
-  def residualPqIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
-      cb: graft.similarity.Similarity.PqCodebook, indexDir: String,
-      checkpointDir: String): StreamingQuery =
-    startSink(vectors, checkpointDir) { (batch, batchId) =>
-      processResidualPqIngestBatch(batch, cents, cb, indexDir, batchId)
-    }
-
-  /** Streaming ingestion into the COMPRESSED ANN index — the int8
-    * twin of [[ivfIndexSink]], closing the family asymmetry: at
-    * 100 TB the compressed index is the one a deployment actually
-    * serves, so it is the one continuous ingestion must feed.
-    * Probes run mid-stream against whatever is committed, and the numeric
-    * batch clock makes the result as-of-readable like the float
-    * sink's.
-    */
-  def quantizedIvfIndexSink(vectors: DataFrame, cents: Seq[Seq[Double]],
-      indexDir: String, checkpointDir: String): StreamingQuery =
-    startSink(vectors, checkpointDir) { (batch, batchId) =>
-      processQuantizedIvfIngestBatch(batch, cents, indexDir, batchId)
-    }
 
   /** The streaming entry: docs (doc_id, text, …) → LM-quality-gated
     * corpus at `outDir` through the batch core above.

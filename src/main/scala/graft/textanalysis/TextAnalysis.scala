@@ -577,7 +577,7 @@ object TextAnalysis {
     a.unionByName(b).groupBy(col("g")).agg(sum(col("nd")).as("nd"))
 
   /** Persist a [[memorizationIndex]] as parquet — the frozen serving
-    * artifact (the writeIvfIndex / writeLmModel lifecycle): build
+    * artifact (the VectorStore.write / writeLmModel lifecycle): build
     * once over the corpus, then every ingest batch probes the files.
     */
   def writeMemorizationIndex(index: DataFrame, dir: String): Unit =
@@ -1704,7 +1704,7 @@ object TextAnalysis {
       .orderBy(col("lang"))
 
   /** Persist a [[bpeVocabTokens]] table as parquet — the tokenizer's
-    * WRITTEN serving artifact (the writeIvfIndex / writeBm25Index
+    * WRITTEN serving artifact (the VectorStore.write / writeBm25Index
     * lifecycle): build once per (vocabulary, merge table), then any
     * number of corpora (or later sessions / streaming batches)
     * tokenize by reading it back and joining — no re-derivation, no

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ops.SearchOps
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec, VectorStore}
 import graft.streaming.Pipelines
 
 /** ONE spec per index family drives the REAL operational sequence —
@@ -87,43 +87,46 @@ class IndexLifecycleSpec extends SparkSpec {
   private object FloatIvf extends VecFamily {
     def name = "float IVF"
     def buildWith(c: Seq[Seq[Double]])(rows: DataFrame, path: String) =
-      Similarity.writeIvfIndex(rows, c, path)
+      VectorStore.write(VectorCodec.Float, rows, c, path)
     def append(rows: DataFrame, path: String, key: String) =
-      Similarity.appendToIvfIndex(rows, cents, path, key)
+      VectorStore.append(VectorCodec.Float, rows, cents, path, key)
     def sink(src: DataFrame, path: String, ckpt: String) =
-      Pipelines.ivfIndexSink(src, cents, path, ckpt)
+      Pipelines.vectorIndexSink(src, VectorCodec.Float, cents, path, ckpt)
     def topKWith(c: Seq[Seq[Double]])(index: DataFrame) =
-      Similarity.ivfTopKFromIndex(index, c, qv, 10, nProbe = 3)
+      VectorStore.topKFromIndex(VectorCodec.Float, index, c, qv, 10, nProbe = 3)
     def reclusterTo(oldPath: String, c: Seq[Seq[Double]], newPath: String) =
-      Similarity.reclusterIvfIndex(spark, oldPath, c, newPath)
+      VectorStore.recluster(VectorCodec.Float, spark, oldPath, c, newPath)
   }
 
   private object Int8Ivf extends VecFamily {
     def name = "int8 IVF"
     def buildWith(c: Seq[Seq[Double]])(rows: DataFrame, path: String) =
-      Similarity.writeQuantizedIvfIndex(rows, c, path)
+      VectorStore.write(VectorCodec.Int8, rows, c, path)
     def append(rows: DataFrame, path: String, key: String) =
-      Similarity.appendToQuantizedIvfIndex(rows, cents, path, key)
+      VectorStore.append(VectorCodec.Int8, rows, cents, path, key)
     def sink(src: DataFrame, path: String, ckpt: String) =
-      Pipelines.quantizedIvfIndexSink(src, cents, path, ckpt)
+      Pipelines.vectorIndexSink(src, VectorCodec.Int8, cents, path, ckpt)
     def topKWith(c: Seq[Seq[Double]])(index: DataFrame) =
-      Similarity.quantizedTopKFromIndex(index, c, qv, 10, nProbe = 3)
+      VectorStore.topKFromIndex(VectorCodec.Int8, index, c, qv, 10, nProbe = 3)
     def reclusterTo(oldPath: String, c: Seq[Seq[Double]], newPath: String) =
-      Similarity.reclusterQuantizedIvfIndex(spark, oldPath, emb, c, newPath)
+      VectorStore.recluster(VectorCodec.Int8,
+        spark, oldPath, c, newPath, Some(emb))
   }
 
   private object IvfPq extends VecFamily {
     def name = "IVF-PQ"
     def buildWith(c: Seq[Seq[Double]])(rows: DataFrame, path: String) =
-      Similarity.writePqIndex(rows, c, cb, path)
+      VectorStore.write(VectorCodec.Pq(cb), rows, c, path)
     def append(rows: DataFrame, path: String, key: String) =
-      Similarity.appendToPqIndex(rows, cents, cb, path, key)
+      VectorStore.append(VectorCodec.Pq(cb), rows, cents, path, key)
     def sink(src: DataFrame, path: String, ckpt: String) =
-      Pipelines.pqIndexSink(src, cents, cb, path, ckpt)
+      Pipelines.vectorIndexSink(src, VectorCodec.Pq(cb), cents, path, ckpt)
     def topKWith(c: Seq[Seq[Double]])(index: DataFrame) =
-      Similarity.pqTopKFromIndex(index, c, cb, qv, 10, nProbe = 3)
+      VectorStore.topKFromIndex(VectorCodec.Pq(cb),
+        index, c, qv, 10, nProbe = 3)
     def reclusterTo(oldPath: String, c: Seq[Seq[Double]], newPath: String) =
-      Similarity.reclusterPqIndex(spark, oldPath, emb, c, cb, newPath)
+      VectorStore.recluster(VectorCodec.Pq(cb),
+        spark, oldPath, c, newPath, Some(emb))
   }
 
   /** The residual-encoded store is the sixth family: codes are
@@ -135,15 +138,18 @@ class IndexLifecycleSpec extends SparkSpec {
   private object ResidualPq extends VecFamily {
     def name = "residual IVF-PQ"
     def buildWith(c: Seq[Seq[Double]])(rows: DataFrame, path: String) =
-      Similarity.writeResidualPqIndex(rows, c, cb, path)
+      VectorStore.write(VectorCodec.ResidualPq(cb), rows, c, path)
     def append(rows: DataFrame, path: String, key: String) =
-      Similarity.appendToResidualPqIndex(rows, cents, cb, path, key)
+      VectorStore.append(VectorCodec.ResidualPq(cb), rows, cents, path, key)
     def sink(src: DataFrame, path: String, ckpt: String) =
-      Pipelines.residualPqIndexSink(src, cents, cb, path, ckpt)
+      Pipelines.vectorIndexSink(src, VectorCodec.ResidualPq(cb),
+        cents, path, ckpt)
     def topKWith(c: Seq[Seq[Double]])(index: DataFrame) =
-      Similarity.residualPqTopKFromIndex(index, c, cb, qv, 10, nProbe = 3)
+      VectorStore.topKFromIndex(VectorCodec.ResidualPq(cb),
+        index, c, qv, 10, nProbe = 3)
     def reclusterTo(oldPath: String, c: Seq[Seq[Double]], newPath: String) =
-      Similarity.reclusterResidualPqIndex(spark, oldPath, emb, c, newPath = newPath, cb = cb)
+      VectorStore.recluster(VectorCodec.ResidualPq(cb),
+        spark, oldPath, c, newPath, Some(emb))
   }
 
   private lazy val docs = Tables.documents(spark, sfDir).limit(96)

@@ -23,6 +23,13 @@ class OnePathSpec extends AnyFunSuite {
     finally files.close()
   }
 
+  private def mainSources: Seq[(String, String)] = {
+    val files = Files.walk(root)
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toSeq
+    finally files.close()
+  }
+
   test("isRegistered( appears only in plans/CosineSimilarity.scala") {
     assert(filesMentioning("isRegistered(") ===
       Seq("graft/plans/CosineSimilarity.scala"))
@@ -88,5 +95,26 @@ class OnePathSpec extends AnyFunSuite {
     val inScaffold = count(member("startSink"), "StreamingQueryListener")
     assert(inScaffold > 0)
     assert(count(pipelines, "StreamingQueryListener") === inScaffold)
+  }
+
+  // the vector stores: one store over a codec, one literal/query-table
+  // selection, one ingest write per codec-generic sink
+  test("no per-store vector-index def remains in main") {
+    val perStore = ("def (ivf|quantized|pq|residualPq)\\w*(AssignedForWrite|" +
+      "TopKFromIndex|MultiTopKFromIndex\\w*|TopKRefined)").r
+    val found = mainSources.flatMap { case (f, text) =>
+      perStore.findAllIn(text).map(d => s"$f: $d")
+    }
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("batchedServeLiteralMaxQ appears nowhere in main") {
+    assert(filesMentioning("batchedServeLiteralMaxQ").isEmpty)
+  }
+
+  test("Pipelines.scala writes cell partitions through " +
+      "writeBatchPartition once") {
+    val cellWrites = "writeBatchPartition\\((?:[^()]|\\([^()]*\\))*\"cell\"".r
+    assert(cellWrites.findAllIn(pipelines).size === 1)
   }
 }

@@ -8,6 +8,7 @@ import graft.dedup.Dedup
 import graft.functions.TextFunctions
 import graft.quality.RuleBasedScorer
 import graft.ops.{RelationalOps, StatsOps}
+import graft.similarity.{VectorCodec, VectorStore}
 
 /** Invariant checks over generated inputs (SURVEY §5: weight bounds,
   * pagination completeness, CDC op totality, HLL error envelope).
@@ -661,9 +662,10 @@ class PropertySpec extends SparkSpec {
       val batchIds = (0 to nApp).map(b =>
         b -> allIds.filter(assign(_) == b).toSeq).toMap
       val root = tempDir(s"graft_retp$scenario") + "/idx"
-      Similarity.writeIvfIndex(rowsOf(batchIds(0)), cents, root)
+      VectorStore.write(VectorCodec.Float, rowsOf(batchIds(0)), cents, root)
       val appNames = (1 to nApp).filter(b => batchIds(b).nonEmpty).map { b =>
-        Similarity.appendToIvfIndex(rowsOf(batchIds(b)), cents, root, s"a$b")
+        VectorStore.append(VectorCodec.Float,
+          rowsOf(batchIds(b)), cents, root, s"a$b")
         s"a$b"
       }
       val del1 = allIds.filter(_ => rnd.nextInt(4) == 0).toSeq

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
+import graft.similarity.{VectorCodec, VectorStore}
 
 class SearchOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -452,7 +453,7 @@ class SearchOpsSpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val pqDir = tempDir("graft-pqm") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, pqDir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
     val qs = Seq(0L -> Seq("merge", "query"), 1L -> Seq("sort", "window"))
     val multi = SearchOps.hybridMultiSearchServed(spark, bm25Dir,
@@ -483,7 +484,7 @@ class SearchOpsSpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val pqDir = tempDir("graft-pqhbkt") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, pqDir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
     val qs = Seq((0L, Seq("merge", "query"), 0L),
       (1L, Seq("sort", "window"), 1L), (2L, Seq("alpha", "merge"), 2L))
@@ -760,7 +761,7 @@ class SearchOpsSpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val pqDir = tempDir("graft-pqshv") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, pqDir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
     // two term formulations, ONE shared relevance vector (vec 0) —
     // the round-15 batched serve refused this shape outright
@@ -790,38 +791,38 @@ class SearchOpsSpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val pqDir = tempDir("graft-pqqt") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, pqDir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, pqDir)
     val pqIndex = spark.read.parquet(pqDir)
-    val qs = Seq(0L -> Seq("merge", "query"), 1L -> Seq("sort", "window"),
-      2L -> Seq("alpha", "merge"))
-    def run() = SearchOps.hybridMultiSearchServed(spark, bm25Dir,
-      pqIndex, emb, cents, cb, qs, 10)
-    val viaLiteral = run().collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.batchedServeLiteralMaxQ", "1")
-    try {
-      val qtServe = run()
-      // the semantic code scan rides the QT plan: DPP on the cell
-      // join is its signature (no literal path has one)
-      assert(qtServe.queryExecution.executedPlan.toString
-        .contains("dynamicpruningexpression"))
-      assert(qtServe.collect().map(_.toSeq).toSeq === viaLiteral)
-      // loud missing-id contract survives the join-based fetch
-      val bad = SearchOps.hybridMultiSearchServed(spark, bm25Dir,
-        pqIndex, emb, cents, cb,
-        qs :+ (999999999L -> Seq("merge")), 10)
-      val e = intercept[Exception] { bad.collect() }
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause)
-        .takeWhile(_ != null).take(10).map(_.getMessage).toSeq
-      assert(msgs.exists(m => m != null &&
-        m.contains("no embedding row")), msgs.mkString(" | "))
-      // ALL ids missing: zero joined rows carry zero in-plan guards —
-      // the bounded eager check must refuse, not serve lexical-only
-      val eAll = intercept[IllegalArgumentException] {
-        SearchOps.hybridMultiSearchServed(spark, bm25Dir, pqIndex, emb,
-          cents, cb, Seq(888888881L -> Seq("merge"),
-            888888882L -> Seq("sort")), 10)
-      }
-      assert(eAll.getMessage.contains("none of the"), eAll.getMessage)
-    } finally spark.conf.unset("spark.graft.batchedServeLiteralMaxQ")
+    // one more distinct vector id than the literal plan takes
+    val terms = Seq(Seq("merge", "query"), Seq("sort", "window"),
+      Seq("alpha", "merge"))
+    val past = VectorStore.LiteralMaxQ + 1
+    val qs = (0 until past).map(i => i.toLong -> terms(i % terms.size))
+    def run(batch: Seq[(Long, Seq[String])]) =
+      SearchOps.hybridMultiSearchServed(spark, bm25Dir, pqIndex, emb, cents,
+        cb, batch, 10)
+    // per-query rows do not depend on the batch a query rides in, so
+    // literal-sized batches give the reference rows
+    val viaLiteral = qs.grouped(VectorStore.LiteralMaxQ)
+      .flatMap(run(_).collect().map(_.toSeq)).toSeq
+    val qtServe = run(qs)
+    // the semantic code scan rides the QT plan: DPP on the cell
+    // join is its signature (no literal path has one)
+    assert(qtServe.queryExecution.executedPlan.toString
+      .contains("dynamicpruningexpression"))
+    assert(qtServe.collect().map(_.toSeq).toSeq === viaLiteral)
+    // loud missing-id contract survives the join-based fetch
+    val bad = run(qs :+ (999999999L -> Seq("merge")))
+    val e = intercept[Exception] { bad.collect() }
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).take(10).map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null &&
+      m.contains("no embedding row")), msgs.mkString(" | "))
+    // ALL ids missing: zero joined rows carry zero in-plan guards —
+    // the bounded eager check must refuse, not serve lexical-only
+    val eAll = intercept[IllegalArgumentException] {
+      run((1 to past).map(i => (888888880L + i) -> Seq("merge")))
+    }
+    assert(eAll.getMessage.contains("none of the"), eAll.getMessage)
   }
 }

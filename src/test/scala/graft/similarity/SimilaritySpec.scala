@@ -222,16 +222,17 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val full = tempDir("graft-ivf-full")
     val inc = tempDir("graft-ivf-inc")
-    Similarity.writeIvfIndex(emb, cents, full)
-    Similarity.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 1), cents, inc)
+    VectorStore.write(VectorCodec.Float, emb, cents, full)
+    VectorStore.write(VectorCodec.Float,
+      emb.filter(col("vec_id") % 3 =!= 1), cents, inc)
     // two appended batches against the SAME frozen centroids
-    Similarity.appendToIvfIndex(
+    VectorStore.append(VectorCodec.Float,
       emb.filter(col("vec_id") % 6 === 1), cents, inc, "b1")
-    Similarity.appendToIvfIndex(
+    VectorStore.append(VectorCodec.Float,
       emb.filter(col("vec_id") % 6 === 4), cents, inc, "b2")
     // a RETRY of batch b2 (partial-failure recovery) overwrites its
     // own (cell, batch_id) partitions — no double-inserted vectors
-    Similarity.appendToIvfIndex(
+    VectorStore.append(VectorCodec.Float,
       emb.filter(col("vec_id") % 6 === 4), cents, inc, "b2")
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("cell")).collect()
@@ -243,10 +244,12 @@ class SimilaritySpec extends SparkSpec {
       spark.read.parquet(full).count())
     // appended files land INSIDE the existing cell directories, so a
     // probe over the incremental index prunes exactly like the rebuild
-    val probeFull = Similarity.ivfTopKFromIndex(spark.read.parquet(full),
+    val probeFull = VectorStore.topKFromIndex(VectorCodec.Float,
+      spark.read.parquet(full),
       cents, emb.filter(col("vec_id") === 0).head.getSeq[Float](1)
         .map(_.toDouble).toVector, 10, 2).collect().toSeq
-    val probeInc = Similarity.ivfTopKFromIndex(spark.read.parquet(inc),
+    val probeInc = VectorStore.topKFromIndex(VectorCodec.Float,
+      spark.read.parquet(inc),
       cents, emb.filter(col("vec_id") === 0).head.getSeq[Float](1)
         .map(_.toDouble).toVector, 10, 2).collect().toSeq
     assert(probeInc === probeFull)
@@ -263,7 +266,7 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1))).toSet
     def rebuiltEntries(df: org.apache.spark.sql.DataFrame) = {
       val p = tempDir("graft-ivf-ao")
-      Similarity.writeIvfIndex(df, cents, p)
+      VectorStore.write(VectorCodec.Float, df, cents, p)
       spark.read.parquet(p)
         .select(col("vec_id"), col("cell").cast("int")).collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -292,13 +295,13 @@ class SimilaritySpec extends SparkSpec {
     // append ≡ rebuild entry for entry
     val qFull = tempDir("graft-qivf-f")
     val qInc = tempDir("graft-qivf-i")
-    Similarity.writeQuantizedIvfIndex(emb, cents, qFull)
-    Similarity.writeQuantizedIvfIndex(
+    VectorStore.write(VectorCodec.Int8, emb, cents, qFull)
+    VectorStore.write(VectorCodec.Int8,
       emb.filter(col("vec_id") % 3 =!= 2), cents, qInc)
-    Similarity.appendToQuantizedIvfIndex(
+    VectorStore.append(VectorCodec.Int8,
       emb.filter(col("vec_id") % 3 === 2), cents, qInc, "b1")
     // quantized retry replay: same key, same rows, no duplicates
-    Similarity.appendToQuantizedIvfIndex(
+    VectorStore.append(VectorCodec.Int8,
       emb.filter(col("vec_id") % 3 === 2), cents, qInc, "b1")
     def qEntries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("scale"), col("qvec"), col("cell").cast("long"))
@@ -315,15 +318,18 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val del = tempDir("graft-ivf-del")
     val reb = tempDir("graft-ivf-reb")
-    Similarity.writeIvfIndex(emb, cents, del)
-    Similarity.writeIvfIndex(emb.filter(col("vec_id") % 5 =!= 2), cents, reb)
+    VectorStore.write(VectorCodec.Float, emb, cents, del)
+    VectorStore.write(VectorCodec.Float,
+      emb.filter(col("vec_id") % 5 =!= 2), cents, reb)
     Similarity.deleteFromIvfIndex(
       emb.filter(col("vec_id") % 5 === 2).select(col("vec_id")), del, "d1")
     val q = emb.filter(col("vec_id") === 0).head.getSeq[Float](1)
       .map(_.toDouble).toVector
-    val want = Similarity.ivfTopKFromIndex(spark.read.parquet(reb),
+    val want = VectorStore.topKFromIndex(VectorCodec.Float,
+      spark.read.parquet(reb),
       cents, q, 10, 2).collect().toSeq
-    assert(Similarity.ivfTopKFromIndex(Similarity.readIvfIndex(spark, del),
+    assert(VectorStore.topKFromIndex(VectorCodec.Float,
+      Similarity.readIvfIndex(spark, del),
       cents, q, 10, 2).collect().toSeq === want)
     // cell pruning still rides the partition layout through the reader
     val pruned = Similarity.readIvfIndex(spark, del)
@@ -338,16 +344,18 @@ class SimilaritySpec extends SparkSpec {
     // compaction: same served values, tombstones gone
     Similarity.compactIvfIndex(spark, del)
     assert(!new java.io.File(del + "/_tombstones").exists())
-    assert(Similarity.ivfTopKFromIndex(Similarity.readIvfIndex(spark, del),
+    assert(VectorStore.topKFromIndex(VectorCodec.Float,
+      Similarity.readIvfIndex(spark, del),
       cents, q, 10, 2).collect().toSeq === want)
     // and the compacted layout still accepts appends
-    Similarity.appendToIvfIndex(
+    VectorStore.append(VectorCodec.Float,
       emb.filter(col("vec_id") % 5 === 2), cents, del, "readd")
-    val full = Similarity.ivfTopKFromIndex(Similarity.readIvfIndex(spark, del),
+    val full = VectorStore.topKFromIndex(VectorCodec.Float,
+      Similarity.readIvfIndex(spark, del),
       cents, q, 10, 2).collect().toSeq
-    val fullWant = Similarity.ivfTopKFromIndex(
+    val fullWant = VectorStore.topKFromIndex(VectorCodec.Float,
       spark.read.parquet(tempDir("graft-ivf-fw") match {
-          case p => Similarity.writeIvfIndex(emb, cents, p); p
+          case p => VectorStore.write(VectorCodec.Float, emb, cents, p); p
         }), cents, q, 10, 2).collect().toSeq
     assert(full === fullWant)
   }
@@ -357,16 +365,16 @@ class SimilaritySpec extends SparkSpec {
     val sub = emb.limit(80).select("vec_id", "embedding").cache()
     val cents0 = Similarity.seedCentroids(sub, 8)
     val old = tempDir("graft-ivf-rc0")
-    Similarity.writeIvfIndex(sub, cents0, old)
+    VectorStore.write(VectorCodec.Float, sub, cents0, old)
     // tombstone a slice — recluster must NOT resurrect it
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 9 === 1).select(col("vec_id")), old, "d1")
     val live = sub.filter(col("vec_id") % 9 =!= 1)
     val cents1 = Similarity.ivfBuild(sub, 8, 1)
     val nw = tempDir("graft-ivf-rc1")
-    Similarity.reclusterIvfIndex(spark, old, cents1, nw)
+    VectorStore.recluster(VectorCodec.Float, spark, old, cents1, nw)
     val reb = tempDir("graft-ivf-rc2")
-    Similarity.writeIvfIndex(live, cents1, reb)
+    VectorStore.write(VectorCodec.Float, live, cents1, reb)
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("cell").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -392,13 +400,13 @@ class SimilaritySpec extends SparkSpec {
     // ≡ a quantized rebuild on the live source rows, tombstones
     // honored, and the churn matrix equals the float family's
     val qOld = tempDir("graft-qivf-rc0")
-    Similarity.writeQuantizedIvfIndex(sub, cents0, qOld)
+    VectorStore.write(VectorCodec.Int8, sub, cents0, qOld)
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 9 === 1).select(col("vec_id")), qOld, "d1")
     val qNw = tempDir("graft-qivf-rc1")
-    Similarity.reclusterQuantizedIvfIndex(spark, qOld, sub, cents1, qNw)
+    VectorStore.recluster(VectorCodec.Int8, spark, qOld, cents1, qNw, Some(sub))
     val qReb = tempDir("graft-qivf-rc2")
-    Similarity.writeQuantizedIvfIndex(live, cents1, qReb)
+    VectorStore.write(VectorCodec.Int8, live, cents1, qReb)
     def qEntries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("scale"), col("qvec"), col("cell").cast("long"))
       .collect()
@@ -410,9 +418,9 @@ class SimilaritySpec extends SparkSpec {
     // a live id with no source row fails loudly — refresh must never
     // silently shrink the index
     intercept[IllegalArgumentException] {
-      Similarity.reclusterQuantizedIvfIndex(spark, qOld,
-        sub.filter(col("vec_id") % 2 === 0), cents1,
-        tempDir("graft-qivf-rc3"))
+      VectorStore.recluster(VectorCodec.Int8,
+        spark, qOld, cents1, tempDir("graft-qivf-rc3"),
+        Some(sub.filter(col("vec_id") % 2 === 0)))
     }
     sub.unpersist()
   }
@@ -423,7 +431,7 @@ class SimilaritySpec extends SparkSpec {
     val cents0 = Similarity.seedCentroids(sub, 8)
     val cb0 = Similarity.pqBuild(sub, m = 8, ksub = 16, iterations = 1)
     val old = tempDir("graft_pqrc0")
-    Similarity.writePqIndex(sub, cents0, cb0, old)
+    VectorStore.write(VectorCodec.Pq(cb0), sub, cents0, old)
     // tombstone a slice — the refresh must NOT resurrect it
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 9 === 1).select(col("vec_id")), old, "d1")
@@ -431,9 +439,10 @@ class SimilaritySpec extends SparkSpec {
     val cents1 = Similarity.ivfBuild(sub, 8, 1)
     val cb1 = Similarity.pqBuild(live, m = 8, ksub = 16, iterations = 1)
     val nw = tempDir("graft_pqrc1")
-    Similarity.reclusterPqIndex(spark, old, sub, cents1, cb1, nw)
+    VectorStore.recluster(VectorCodec.Pq(cb1),
+      spark, old, cents1, nw, Some(sub))
     val reb = tempDir("graft_pqrc2")
-    Similarity.writePqIndex(live, cents1, cb1, reb)
+    VectorStore.write(VectorCodec.Pq(cb1), live, cents1, reb)
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("codes"), col("cell").cast("long"))
       .collect()
@@ -445,15 +454,15 @@ class SimilaritySpec extends SparkSpec {
     // a live id with no source row fails loudly — refresh must never
     // silently shrink the index
     intercept[IllegalArgumentException] {
-      Similarity.reclusterPqIndex(spark, old,
-        sub.filter(col("vec_id") % 2 === 0), cents1, cb1,
-        tempDir("graft_pqrc3"))
+      VectorStore.recluster(VectorCodec.Pq(cb1),
+        spark, old, cents1, tempDir("graft_pqrc3"),
+        Some(sub.filter(col("vec_id") % 2 === 0)))
     }
     // pqRecall with ALL cells probed isolates the pure ADC loss: per
     // query the recall must equal an independent overlap count between
     // the plain ADC ranking and the exact float ranking
     val index = spark.read.parquet(reb)
-    val rec = Similarity.pqRecall(index, live, cents1, cb1,
+    val rec = VectorStore.recall(VectorCodec.Pq(cb1), index, live, cents1,
       Seq(0L, 2L), 5, nProbe = 8).collect()
     assert(rec.map(_.getLong(0)).toSeq === Seq(0L, 2L))
     rec.foreach { r =>
@@ -476,7 +485,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF index written partitionBy(cell) gives partition-pruned probe scans") {
     val dir = tempDir("graft-ivf")
     val cents = Similarity.seedCentroids(emb, 8)
-    Similarity.writeIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Float, emb, cents, dir)
     val idx = spark.read.parquet(dir)
     val probe = idx.filter(col("cell").isin(0, 1))
     val p = probe.queryExecution.executedPlan.toString
@@ -500,11 +509,11 @@ class SimilaritySpec extends SparkSpec {
   test("ivfTopKFromIndex over the written index ≡ the in-plan probe path") {
     val dir = tempDir("graft-ivf-q")
     val cents = Similarity.seedCentroids(emb, 16)
-    Similarity.writeIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Float, emb, cents, dir)
     val qv = emb.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>"))
       .head.getSeq[Double](0).toVector
-    val viaIndex = Similarity.ivfTopKFromIndex(
+    val viaIndex = VectorStore.topKFromIndex(VectorCodec.Float,
       spark.read.parquet(dir), cents, qv, 10, nProbe = 2)
     val inPlan = Similarity.ivfTopKFrom(emb, cents, 0L, 10, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -577,7 +586,7 @@ class SimilaritySpec extends SparkSpec {
     val corpus = base.unionByName(planted)
     val cents = Similarity.seedCentroids(base, 16)
     val dir = tempDir("graft_semdedup")
-    Similarity.writeIvfIndex(corpus, cents, dir)
+    VectorStore.write(VectorCodec.Float, corpus, cents, dir)
     val direct = Similarity.semanticDuplicates(corpus, cents, 0.999)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val indexed = Similarity.semanticDuplicatesFromIndex(
@@ -623,12 +632,12 @@ class SimilaritySpec extends SparkSpec {
   test("quantized IVF index: pruned probe ≡ in-plan quantized ranking") {
     val dir = tempDir("graft-qivf") + "/idx"
     val cents = Similarity.seedCentroids(emb, 8)
-    Similarity.writeQuantizedIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Int8, emb, cents, dir)
     val idx = spark.read.parquet(dir)
     val qv = emb.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>"))
       .head().getSeq[Double](0).toVector
-    val out = Similarity.quantizedTopKFromIndex(idx, cents, qv, 10, 2)
+    val out = VectorStore.topKFromIndex(VectorCodec.Int8, idx, cents, qv, 10, 2)
     // probe cells land inside PartitionFilters (directory pruning)
     val p = out.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined, p)
@@ -648,7 +657,7 @@ class SimilaritySpec extends SparkSpec {
     // degenerate queries degrade to empty, never throw: zero, NaN, Inf
     Seq(Seq(0.0, 0.0), Seq(Double.NaN, 1.0), Seq(Double.PositiveInfinity))
       .foreach { q =>
-        assert(Similarity.quantizedTopKFromIndex(idx, cents, q, 10, 2)
+        assert(VectorStore.topKFromIndex(VectorCodec.Int8, idx, cents, q, 10, 2)
           .count() === 0L, q)
         assert(Similarity.probeCells(cents, q, 2) === Seq.empty, q)
       }
@@ -709,20 +718,22 @@ class SimilaritySpec extends SparkSpec {
     val dir = tempDir("graft_pq_ivf") + "/idx"
     val cents = Similarity.seedCentroids(emb, 16)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
-    Similarity.writePqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     val q = emb.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>"))
       .head().getSeq[Double](0).toVector
     // probing ALL cells ≡ the plain ADC scan (modulo unindexable rows)
-    val all = Similarity.pqTopKFromIndex(index, cents, cb, q, 10, nProbe = 16)
+    val all = VectorStore.topKFromIndex(VectorCodec.Pq(cb),
+      index, cents, q, 10, nProbe = 16)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val plain = Similarity.pqTopK(Similarity.pqEncode(emb, cb), cb, q, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(all.toSeq === plain.toSeq)
     // the probe scan prunes partitions: literal cells INSIDE the
     // PartitionFilters bracket (an empty bracket must not satisfy)
-    val pruned = Similarity.pqTopKFromIndex(index, cents, cb, q, 10, nProbe = 2)
+    val pruned = VectorStore.topKFromIndex(VectorCodec.Pq(cb),
+      index, cents, q, 10, nProbe = 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined, plan)
     val ids = pruned.collect().map(_.getLong(0))
@@ -746,13 +757,14 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val full = tempDir("graft_pqm_f")
     val inc = tempDir("graft_pqm_i")
-    Similarity.writePqIndex(emb, cents, cb, full)
-    Similarity.writePqIndex(emb.filter(col("vec_id") % 4 =!= 1), cents, cb, inc)
-    Similarity.appendToPqIndex(
-      emb.filter(col("vec_id") % 4 === 1), cents, cb, inc, "b1")
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, full)
+    VectorStore.write(VectorCodec.Pq(cb),
+      emb.filter(col("vec_id") % 4 =!= 1), cents, inc)
+    VectorStore.append(VectorCodec.Pq(cb),
+      emb.filter(col("vec_id") % 4 === 1), cents, inc, "b1")
     // retry replay: same key, own partitions overwritten, no dupes
-    Similarity.appendToPqIndex(
-      emb.filter(col("vec_id") % 4 === 1), cents, cb, inc, "b1")
+    VectorStore.append(VectorCodec.Pq(cb),
+      emb.filter(col("vec_id") % 4 === 1), cents, inc, "b1")
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("codes"), col("cell").cast("long"))
       .collect()
@@ -761,7 +773,8 @@ class SimilaritySpec extends SparkSpec {
     assert(spark.read.parquet(inc).count() === spark.read.parquet(full).count())
     // as-of "build" ≡ the base split's rebuild
     val rebBase = tempDir("graft_pqm_b")
-    Similarity.writePqIndex(emb.filter(col("vec_id") % 4 =!= 1), cents, cb,
+    VectorStore.write(VectorCodec.Pq(cb),
+      emb.filter(col("vec_id") % 4 =!= 1), cents,
       rebBase)
     assert(Similarity.readIvfIndexAsOf(spark, inc, Seq("build"))
       .select(col("vec_id"), col("codes"), col("cell").cast("long"))
@@ -867,7 +880,7 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
     val dir = tempDir("graft_rpq") + "/idx"
-    Similarity.writeResidualPqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.ResidualPq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     val q = emb.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>"))
@@ -875,7 +888,8 @@ class SimilaritySpec extends SparkSpec {
 
     // all-cell probe ≡ an independent per-row Scala scoring of the
     // residual-encoded corpus: score6 = cellLut6(cell) + Σ lut6(code)
-    val all = Similarity.residualPqTopKFromIndex(index, cents, cb, q,
+    val all = VectorStore.topKFromIndex(VectorCodec.ResidualPq(cb),
+      index, cents, q,
       10, nProbe = 8).collect().map(r => (r.getLong(0), r.getDouble(1)))
     val cl = Similarity.cellLut6(cents, q)
     val lut = Similarity.pqLut6(cb, q)
@@ -892,7 +906,8 @@ class SimilaritySpec extends SparkSpec {
 
     // the pruned probe is a PartitionFilter (directory pruning), and
     // its ranking ≡ the all-cell ranking restricted to probed members
-    val pruned = Similarity.residualPqTopKFromIndex(index, cents, cb, q,
+    val pruned = VectorStore.topKFromIndex(VectorCodec.ResidualPq(cb),
+      index, cents, q,
       10, nProbe = 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined, plan)
@@ -913,12 +928,12 @@ class SimilaritySpec extends SparkSpec {
     // maintenance composes: append ≡ rebuild entry for entry, and the
     // retry replay never duplicates (dynamic partition self-overwrite)
     val inc = tempDir("graft_rpq_i")
-    Similarity.writeResidualPqIndex(
-      emb.filter(col("vec_id") % 4 =!= 1), cents, cb, inc)
-    Similarity.appendToResidualPqIndex(
-      emb.filter(col("vec_id") % 4 === 1), cents, cb, inc, "b1")
-    Similarity.appendToResidualPqIndex(
-      emb.filter(col("vec_id") % 4 === 1), cents, cb, inc, "b1")
+    VectorStore.write(VectorCodec.ResidualPq(cb),
+      emb.filter(col("vec_id") % 4 =!= 1), cents, inc)
+    VectorStore.append(VectorCodec.ResidualPq(cb),
+      emb.filter(col("vec_id") % 4 === 1), cents, inc, "b1")
+    VectorStore.append(VectorCodec.ResidualPq(cb),
+      emb.filter(col("vec_id") % 4 === 1), cents, inc, "b1")
     def entries(d: String) = spark.read.parquet(d)
       .select(col("vec_id"), col("codes"), col("cell").cast("long"))
       .collect()
@@ -931,13 +946,14 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val dir = tempDir("graft_pq2s") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     val q = emb.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>"))
       .head().getSeq[Double](0).toVector
 
-    val refined = Similarity.pqTopKRefined(index, emb, cents, cb, q,
+    val refined = VectorStore.topKRefined(VectorCodec.Pq(cb),
+      index, emb, cents, q,
       10, nProbe = 2, shortlist = 40)
     // the candidate re-fetch is bounded-id point lookups: the In
     // filter reaches the parquet scan
@@ -946,7 +962,8 @@ class SimilaritySpec extends SparkSpec {
       plan)
     // expected: the exact cosine ranking RESTRICTED to the ADC
     // shortlist, computed independently in Scala
-    val short = Similarity.pqTopKFromIndex(index, cents, cb, q, 40, 2)
+    val short = VectorStore.topKFromIndex(VectorCodec.Pq(cb),
+      index, cents, q, 40, 2)
       .collect().map(_.getLong(0)).toSet
     def dot(a: Seq[Double], b: Seq[Double]) =
       a.zip(b).map { case (x, y) => x * y }.sum
@@ -966,7 +983,7 @@ class SimilaritySpec extends SparkSpec {
     // a deep-enough shortlist makes the two-stage recall the routing
     // recall: refined recall@k ≡ |exact top-k ∩ shortlist| / k when
     // the shortlist covers the probed cells
-    val rec = Similarity.pqRefinedRecall(index, emb, cents, cb,
+    val rec = VectorStore.refinedRecall(VectorCodec.Pq(cb), index, emb, cents,
       Seq(0L, 2L), 5, nProbe = 8, shortlist = 40).collect()
     assert(rec.map(_.getLong(0)).toSeq === Seq(0L, 2L))
     rec.foreach { r =>
@@ -974,7 +991,8 @@ class SimilaritySpec extends SparkSpec {
       val qv = emb.filter($"vec_id" === qid)
         .select($"embedding".cast("array<double>"))
         .head().getSeq[Double](0).toVector
-      val sh = Similarity.pqTopKFromIndex(index, cents, cb, qv, 40, 8)
+      val sh = VectorStore.topKFromIndex(VectorCodec.Pq(cb),
+        index, cents, qv, 40, 8)
         .collect().map(_.getLong(0)).toSet
       val exact = Similarity.bruteForceTopK(emb, qid, 5)
         .collect().map(_.getLong(0)).toSet
@@ -989,7 +1007,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val dir = tempDir("graft_pqcv") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     // 999999L: a query id with no embedding row (absent from both
     // forms); depths deliberately include one past the probed-cell
@@ -997,11 +1015,12 @@ class SimilaritySpec extends SparkSpec {
     val qids = Seq(0L, 1L, 2L, 999999L)
     val depths = Seq(5, 10, 40, 100000)
     val composed = depths.map { r =>
-      Similarity.pqRefinedRecall(index, emb, cents, cb, qids, 5,
+      VectorStore.refinedRecall(VectorCodec.Pq(cb), index, emb, cents, qids, 5,
         nProbe = 2, shortlist = r).withColumn("shortlist", lit(r))
     }.reduce(_.unionByName(_))
       .orderBy(col("shortlist"), col("query_id"))
-    val curve = Similarity.pqRefinedRecallCurve(index, emb, cents, cb,
+    val curve = VectorStore.refinedRecallCurve(VectorCodec.Pq(cb),
+      index, emb, cents,
       qids, 5, nProbe = 2, depths)
     assert(curve.schema === composed.schema)
     assert(curve.collect().toSeq === composed.collect().toSeq)
@@ -1012,7 +1031,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val dir = tempDir("graft_pqm") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
     val qs = qids.map { id =>
@@ -1020,7 +1039,7 @@ class SimilaritySpec extends SparkSpec {
         .select($"embedding".cast("array<double>"))
         .head().getSeq[Double](0).toVector
     }
-    val multi = Similarity.pqMultiTopKFromIndex(index, cents, cb, qs,
+    val multi = VectorStore.multiTopK(VectorCodec.Pq(cb), index, cents, qs,
       5, nProbe = 2)
     // exactly one scan feeds the whole batch
     val plan = multi.queryExecution.executedPlan.toString
@@ -1029,7 +1048,8 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     qs.foreach { case (id, qv) =>
-      val single = Similarity.pqTopKFromIndex(index, cents, cb, qv, 5,
+      val single = VectorStore.topKFromIndex(VectorCodec.Pq(cb),
+        index, cents, qv, 5,
         nProbe = 2).collect()
         .map(r => (id, r.getLong(0), r.getDouble(1))).toSeq
       assert(got(id).toSeq === single, s"query $id")
@@ -1042,17 +1062,19 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
     val dir = tempDir("graft_rpq2s") + "/idx"
-    Similarity.writeResidualPqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.ResidualPq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     val q = emb.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>"))
       .head().getSeq[Double](0).toVector
-    val refined = Similarity.residualPqTopKRefined(index, emb, cents,
-      cb, q, 10, nProbe = 2, shortlist = 40)
+    val refined = VectorStore.topKRefined(VectorCodec.ResidualPq(cb),
+      index, emb, cents,
+      q, 10, nProbe = 2, shortlist = 40)
     val plan = refined.queryExecution.executedPlan.toString
     assert("PushedFilters: \\[[^\\]]*In\\(vec_id".r.findFirstIn(plan).isDefined,
       plan)
-    val short = Similarity.residualPqTopKFromIndex(index, cents, cb, q,
+    val short = VectorStore.topKFromIndex(VectorCodec.ResidualPq(cb),
+      index, cents, q,
       40, 2).collect().map(_.getLong(0)).toSet
     def dot(a: Seq[Double], b: Seq[Double]) =
       a.zip(b).map { case (x, y) => x * y }.sum
@@ -1075,7 +1097,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val dir = tempDir("graft_pqm2s") + "/idx"
-    Similarity.writePqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
     val qs = qids.map { id =>
@@ -1083,7 +1105,8 @@ class SimilaritySpec extends SparkSpec {
         .select($"embedding".cast("array<double>"))
         .head().getSeq[Double](0).toVector: Seq[Double])
     }
-    val multi = Similarity.pqMultiTopKRefined(index, emb, cents, cb,
+    val multi = VectorStore.multiTopKRefined(VectorCodec.Pq(cb),
+      index, emb, cents,
       qs, 5, nProbe = 2, shortlist = 20)
     // the re-rank pass is ONE scan with the union-In pushed down
     val plan = multi.queryExecution.executedPlan.toString
@@ -1094,7 +1117,8 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     qs.foreach { case (id, qv) =>
-      val single = Similarity.pqTopKRefined(index, emb, cents, cb, qv,
+      val single = VectorStore.topKRefined(VectorCodec.Pq(cb),
+        index, emb, cents, qv,
         5, nProbe = 2, shortlist = 20).collect()
         .map(r => (id, r.getLong(0), r.getDouble(1))).toSeq
       assert(got(id).toSeq === single, s"query $id")
@@ -1107,7 +1131,7 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
     val dir = tempDir("graft_rpqm") + "/idx"
-    Similarity.writeResidualPqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.ResidualPq(cb), emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
     val qs = qids.map { id =>
@@ -1115,15 +1139,16 @@ class SimilaritySpec extends SparkSpec {
         .select($"embedding".cast("array<double>"))
         .head().getSeq[Double](0).toVector: Seq[Double])
     }
-    val multi = Similarity.residualPqMultiTopKFromIndex(index, cents,
-      cb, qs, 5, nProbe = 2)
+    val multi = VectorStore.multiTopK(VectorCodec.ResidualPq(cb), index, cents,
+      qs, 5, nProbe = 2)
     val plan = multi.queryExecution.executedPlan.toString
     assert("Scan parquet".r.findAllIn(plan).size === 1, plan)
     val got = multi.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     qs.foreach { case (id, qv) =>
-      val single = Similarity.residualPqTopKFromIndex(index, cents, cb,
+      val single = VectorStore.topKFromIndex(VectorCodec.ResidualPq(cb),
+        index, cents,
         qv, 5, nProbe = 2).collect()
         .map(r => (id, r.getLong(0), r.getDouble(1))).toSeq
       assert(got(id).toSeq === single, s"query $id")
@@ -1134,7 +1159,7 @@ class SimilaritySpec extends SparkSpec {
       "serves, from ONE scan of the union of probed cells") {
     val cents = Similarity.seedCentroids(emb, 8)
     val dir = tempDir("graft_fm") + "/idx"
-    Similarity.writeIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Float, emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 1L, 2L)
     val qs = qids.map { id =>
@@ -1142,7 +1167,7 @@ class SimilaritySpec extends SparkSpec {
         .select($"embedding".cast("array<double>"))
         .head().getSeq[Double](0).toVector: Seq[Double])
     }
-    val multi = Similarity.ivfMultiTopKFromIndex(index, cents, qs,
+    val multi = VectorStore.multiTopK(VectorCodec.Float, index, cents, qs,
       5, nProbe = 2)
     val plan = multi.queryExecution.executedPlan.toString
     assert("Scan parquet".r.findAllIn(plan).size === 1, plan)
@@ -1150,13 +1175,14 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     qs.foreach { case (id, qv) =>
-      val single = Similarity.ivfTopKFromIndex(index, cents, qv, 5,
+      val single = VectorStore.topKFromIndex(VectorCodec.Float,
+        index, cents, qv, 5,
         nProbe = 2).collect()
         .map(r => (id, r.getLong(0), r.getDouble(1))).toSeq
       assert(got(id).toSeq === single, s"query $id")
     }
     // a zero-norm query has no probes and is simply absent
-    val withZero = Similarity.ivfMultiTopKFromIndex(index, cents,
+    val withZero = VectorStore.multiTopK(VectorCodec.Float, index, cents,
       qs :+ (99L -> (Vector.fill(64)(0.0): Seq[Double])), 5, nProbe = 2)
     assert(withZero.filter($"query_id" === 99L).count() === 0L)
   }
@@ -1165,7 +1191,7 @@ class SimilaritySpec extends SparkSpec {
       "serves, one scan, exact integer dots") {
     val cents = Similarity.seedCentroids(emb, 8)
     val dir = tempDir("graft_qm") + "/idx"
-    Similarity.writeQuantizedIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Int8, emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qids = Seq(0L, 3L, 5L)
     val qs = qids.map { id =>
@@ -1173,7 +1199,7 @@ class SimilaritySpec extends SparkSpec {
         .select($"embedding".cast("array<double>"))
         .head().getSeq[Double](0).toVector: Seq[Double])
     }
-    val multi = Similarity.quantizedMultiTopKFromIndex(index, cents, qs,
+    val multi = VectorStore.multiTopK(VectorCodec.Int8, index, cents, qs,
       5, nProbe = 2)
     val plan = multi.queryExecution.executedPlan.toString
     assert("Scan parquet".r.findAllIn(plan).size === 1, plan)
@@ -1181,14 +1207,15 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1)
     qs.foreach { case (id, qv) =>
-      val single = Similarity.quantizedTopKFromIndex(index, cents, qv, 5,
+      val single = VectorStore.topKFromIndex(VectorCodec.Int8,
+        index, cents, qv, 5,
         nProbe = 2).collect()
         .map(r => (id, r.getLong(0), r.getDouble(1))).toSeq
       assert(got(id).toSeq === single, s"query $id")
     }
     // degenerate (zero-norm) queries are absent, matching the
     // single-query path's empty result
-    val withZero = Similarity.quantizedMultiTopKFromIndex(index, cents,
+    val withZero = VectorStore.multiTopK(VectorCodec.Int8, index, cents,
       qs :+ (99L -> (Vector.fill(64)(0.0): Seq[Double])), 5, nProbe = 2)
     assert(withZero.filter($"query_id" === 99L).count() === 0L)
   }
@@ -1291,19 +1318,19 @@ class SimilaritySpec extends SparkSpec {
     val sub = emb.limit(120).select("vec_id", "embedding").cache()
     val cents = Similarity.seedCentroids(sub, 8)
     val p = tempDir("graft_ret") + "/idx"
-    Similarity.writeIvfIndex(
+    VectorStore.write(VectorCodec.Float,
       sub.filter(col("vec_id") % 8 =!= 1 && col("vec_id") % 8 =!= 6),
       cents, p)
-    Similarity.appendToIvfIndex(
+    VectorStore.append(VectorCodec.Float,
       sub.filter(col("vec_id") % 8 === 1), cents, p, "w1")
-    Similarity.appendToIvfIndex(
+    VectorStore.append(VectorCodec.Float,
       sub.filter(col("vec_id") % 8 === 6), cents, p, "w2")
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 7 === 3).select(col("vec_id")), p, "d1")
     val q = sub.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>"))
       .head().getSeq[Double](0).toVector
-    def serve() = Similarity.ivfTopKFromIndex(
+    def serve() = VectorStore.topKFromIndex(VectorCodec.Float,
       Similarity.readIvfIndex(spark, p), cents, q, 10, nProbe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val before = serve()
@@ -1345,7 +1372,7 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] { asOfIds(Seq("w1")) }
 
     // maintenance keeps composing on the retained layout
-    Similarity.appendToIvfIndex(
+    VectorStore.append(VectorCodec.Float,
       sub.filter(col("vec_id") % 8 === 1), cents, p, "w3")
     assert(Similarity.readIvfIndex(spark, p).select("vec_id")
       .collect().map(_.getLong(0)).toSet
@@ -1358,9 +1385,9 @@ class SimilaritySpec extends SparkSpec {
     val sub = emb.limit(40).select("vec_id", "embedding")
     val cents = Similarity.seedCentroids(sub, 4)
     val p = tempDir("graft_resv") + "/idx"
-    Similarity.writeIvfIndex(sub, cents, p)
+    VectorStore.write(VectorCodec.Float, sub, cents, p)
     intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(sub.limit(1), cents, p, "retained")
+      VectorStore.append(VectorCodec.Float, sub.limit(1), cents, p, "retained")
     }
     intercept[IllegalArgumentException] {
       Similarity.deleteFromIvfIndex(
@@ -1374,13 +1401,13 @@ class SimilaritySpec extends SparkSpec {
     val sub = emb.limit(100).select("vec_id", "embedding").cache()
     val cents = Similarity.seedCentroids(sub, 8)
     val p = tempDir("graft_tbud") + "/idx"
-    Similarity.writeIvfIndex(sub, cents, p)
+    VectorStore.write(VectorCodec.Float, sub, cents, p)
     Similarity.deleteFromIvfIndex(
       sub.filter(col("vec_id") % 5 === 0).select(col("vec_id")), p, "d1")
     val q = sub.filter($"vec_id" === 1L)
       .select($"embedding".cast("array<double>"))
       .head().getSeq[Double](0).toVector
-    def serve() = Similarity.ivfTopKFromIndex(
+    def serve() = VectorStore.topKFromIndex(VectorCodec.Float,
       Similarity.readIvfIndex(spark, p), cents, q, 10, nProbe = 8)
     // under the default budget the tiny tombstone side still plans
     // the broadcast anti-join (the hint survives the guard)
@@ -1404,12 +1431,12 @@ class SimilaritySpec extends SparkSpec {
       "exact ranking") {
     val cents = Similarity.seedCentroids(emb, 8)
     val dir = tempDir("graft_qr") + "/idx"
-    Similarity.writeQuantizedIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Int8, emb, cents, dir)
     val index = spark.read.parquet(dir)
     // all cells probed isolates the pure quantization loss: per query
     // the recall must equal an independent overlap count between the
     // full int8 ranking and the exact float ranking
-    val rec = Similarity.quantizedRecall(index, emb, cents,
+    val rec = VectorStore.recall(VectorCodec.Int8, index, emb, cents,
       Seq(0L, 3L), 5, nProbe = 8).collect()
     assert(rec.map(_.getLong(0)).toSeq === Seq(0L, 3L))
     rec.foreach { r =>
@@ -1433,10 +1460,10 @@ class SimilaritySpec extends SparkSpec {
     val rcb = Similarity.pqBuildResidual(emb, cents, m = 8, ksub = 16,
       iterations = 1)
     val base = tempDir("graft_qt")
-    Similarity.writeIvfIndex(emb, cents, base + "/f")
-    Similarity.writeQuantizedIvfIndex(emb, cents, base + "/q")
-    Similarity.writePqIndex(emb, cents, cb, base + "/p")
-    Similarity.writeResidualPqIndex(emb, cents, rcb, base + "/r")
+    VectorStore.write(VectorCodec.Float, emb, cents, base + "/f")
+    VectorStore.write(VectorCodec.Int8, emb, cents, base + "/q")
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, base + "/p")
+    VectorStore.write(VectorCodec.ResidualPq(rcb), emb, cents, base + "/r")
     val fIdx = spark.read.parquet(base + "/f")
     val qIdx = spark.read.parquet(base + "/q")
     val pIdx = spark.read.parquet(base + "/p")
@@ -1451,21 +1478,29 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(rows(Similarity.ivfMultiTopKFromIndexQT(fIdx, cents, qframe,
-      5, 2)) === rows(Similarity.ivfMultiTopKFromIndex(fIdx, cents, qs,
-      5, 2)))
-    assert(rows(Similarity.quantizedMultiTopKFromIndexQT(qIdx, cents,
-      qframe, 5, 2)) === rows(Similarity.quantizedMultiTopKFromIndex(
-      qIdx, cents, qs, 5, 2)))
-    assert(rows(Similarity.pqMultiTopKFromIndexQT(pIdx, cents, cb,
-      qframe, 5, 2)) === rows(Similarity.pqMultiTopKFromIndex(pIdx,
-      cents, cb, qs, 5, 2)))
-    assert(rows(Similarity.residualPqMultiTopKFromIndexQT(rIdx, cents,
-      rcb, qframe, 5, 2)) === rows(Similarity.residualPqMultiTopKFromIndex(
-      rIdx, cents, rcb, qs, 5, 2)))
-    assert(rows(Similarity.pqMultiTopKRefinedQT(pIdx, emb, cents, cb,
-      qframe, 5, 2, 20)) === rows(Similarity.pqMultiTopKRefined(pIdx,
-      emb, cents, cb, qs, 5, 2, 20)))
+    // per codec: the query-table serve ≡ the literal serve ≡ Q single
+    // serves, row for row
+    def singles(serve: Seq[Double] => org.apache.spark.sql.DataFrame) =
+      qs.flatMap { case (id, v) =>
+        serve(v).collect().map(r => (id, r.getLong(0), r.getDouble(1)))
+      }
+    Seq(VectorCodec.Float -> fIdx, VectorCodec.Int8 -> qIdx,
+        VectorCodec.Pq(cb) -> pIdx, VectorCodec.ResidualPq(rcb) -> rIdx)
+      .foreach { case (codec, idx) =>
+        val viaTable = rows(VectorStore.multiTopK(codec, idx, cents, qframe,
+          5, 2))
+        val store = codec.getClass.getSimpleName
+        assert(viaTable === rows(VectorStore.multiTopK(codec, idx, cents, qs,
+          5, 2)), store)
+        assert(viaTable === singles(VectorStore.topKFromIndex(codec, idx,
+          cents, _, 5, 2)), store)
+      }
+    val refined = rows(VectorStore.multiTopKRefined(VectorCodec.Pq(cb),
+      pIdx, emb, cents, qframe, 5, 2, 20))
+    assert(refined === rows(VectorStore.multiTopKRefined(VectorCodec.Pq(cb),
+      pIdx, emb, cents, qs, 5, 2, 20)))
+    assert(refined === singles(VectorStore.topKRefined(VectorCodec.Pq(cb),
+      pIdx, emb, cents, _, 5, 2, 20)))
     // a degenerate (zero-norm) query is ABSENT, the single-serve
     // contract — and never reaches a cosine (ANSI-safe)
     val dim = qs.head._2.length
@@ -1473,14 +1508,14 @@ class SimilaritySpec extends SparkSpec {
         $"embedding".cast("array<double>").as("embedding"))
       .unionByName(Seq((99L, Seq.fill(dim)(0.0)))
         .toDF("query_id", "embedding"))
-    val gotZ = Similarity.ivfMultiTopKFromIndexQT(fIdx, cents, withZero,
+    val gotZ = VectorStore.multiTopK(VectorCodec.Float, fIdx, cents, withZero,
       5, 2)
     assert(!gotZ.collect().map(_.getLong(0)).contains(99L))
     // duplicate ids in the frame are refused loudly — IN-PLAN since
     // round 16 (the guard rides the serve's own action; constructing
     // the plan runs zero jobs), so the error surfaces at collect
     val dupErr = intercept[Exception] {
-      Similarity.ivfMultiTopKFromIndexQT(fIdx, cents,
+      VectorStore.multiTopK(VectorCodec.Float, fIdx, cents,
         qframe.unionByName(qframe), 5, 2).collect()
     }
     assert(exceptionChain(dupErr).exists(
@@ -1495,7 +1530,7 @@ class SimilaritySpec extends SparkSpec {
       "loudly, and artifacts are one row per query") {
     val cents = Similarity.seedCentroids(emb, 8)
     val dir = tempDir("graft_qtg") + "/f"
-    Similarity.writeIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Float, emb, cents, dir)
     val index = spark.read.parquet(dir)
     val qframe = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"embedding")
@@ -1510,7 +1545,7 @@ class SimilaritySpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val served = Similarity.ivfMultiTopKFromIndexQT(index, cents,
+      val served = VectorStore.multiTopK(VectorCodec.Float, index, cents,
         qframe, 5, 2)
       // listener delivery is async; give the bus a beat to drain any
       // job-start event a construction-time action would have fired
@@ -1525,7 +1560,7 @@ class SimilaritySpec extends SparkSpec {
     spark.conf.set("spark.graft.qtBroadcastBudget", "64")
     try {
       val budErr = intercept[Exception] {
-        Similarity.ivfMultiTopKFromIndexQT(index, cents, qframe, 5, 2)
+        VectorStore.multiTopK(VectorCodec.Float, index, cents, qframe, 5, 2)
           .collect()
       }
       assert(exceptionChain(budErr).exists(_.getMessage
@@ -1534,12 +1569,12 @@ class SimilaritySpec extends SparkSpec {
     // the artifact side is ONE row per servable query (round-16
     // verdict #2: the LUT/vector used to be a column of the exploded
     // (query, cell) table — computed and broadcast nProbe times)
-    val sv = Similarity.guardedServable(qframe, 4,
+    val sv = VectorStore.guardedServable(qframe, 4,
       org.apache.spark.sql.functions.lit(16L))
     assert(sv.count() === 5L)
     assert(sv.select($"query_id").distinct().count() === 5L)
     // while the pair side is Q·nProbe rows of (query_id, cell) only
-    val pairs = Similarity.probePairs(sv, cents, 4)
+    val pairs = VectorStore.probePairs(sv, cents, 4)
     assert(pairs.columns.toSeq === Seq("query_id", "cell"))
     assert(pairs.count() === 20L)
   }
@@ -1590,11 +1625,11 @@ class SimilaritySpec extends SparkSpec {
       "literal-Q threshold") {
     val cents = Similarity.seedCentroids(emb, 8)
     val dir = tempDir("graft_qtp") + "/f"
-    Similarity.writeIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Float, emb, cents, dir)
     val index = spark.read.parquet(dir)
     def qframe(n: Int) = emb.filter($"vec_id" < n)
       .select($"vec_id".as("query_id"), $"embedding")
-    def served(n: Int) = Similarity.ivfMultiTopKFromIndexQT(index,
+    def served(n: Int) = VectorStore.multiTopK(VectorCodec.Float, index,
       cents, qframe(n), 5, 2)
     val plan8 = served(8).queryExecution.executedPlan.toString
     val plan40 = served(40).queryExecution.executedPlan.toString
@@ -1609,23 +1644,24 @@ class SimilaritySpec extends SparkSpec {
     // the Seq entry point re-routes to the query-table plan past the
     // threshold: same rows, broadcast-join shape instead of the
     // literal path's join-free explode-over-plan-literals
-    val qsBig: Seq[(Long, Seq[Double])] = (0L until 20L).map { id =>
+    val past = VectorStore.LiteralMaxQ + 1
+    val qsBig: Seq[(Long, Seq[Double])] = (0L until past.toLong).map { id =>
       id -> emb.filter($"vec_id" === id)
         .select($"embedding".cast("array<double>"))
         .head().getSeq[Double](0).toVector
     }
-    val routed = Similarity.ivfMultiTopKFromIndex(index, cents, qsBig,
-      5, 2)
+    val routed = VectorStore.multiTopK(VectorCodec.Float, index, cents,
+      qsBig, 5, 2)
     assert(routed.queryExecution.executedPlan.toString
       .contains("BroadcastHashJoin"))
-    val viaQt = Similarity.ivfMultiTopKFromIndexQT(index, cents,
-      qframe(20), 5, 2)
+    val viaQt = VectorStore.multiTopK(VectorCodec.Float, index, cents,
+      qframe(past), 5, 2)
     assert(routed.collect().toSeq === viaQt.collect().toSeq)
-    // under the threshold the literal plan stays (measured faster
+    // up to the threshold the literal plan stays (measured faster
     // at small Q): no join anywhere in that plan
-    val lit5 = Similarity.ivfMultiTopKFromIndex(index, cents,
-      qsBig.take(5), 5, 2)
-    assert(!lit5.queryExecution.executedPlan.toString
+    val atMax = VectorStore.multiTopK(VectorCodec.Float, index, cents,
+      qsBig.take(VectorStore.LiteralMaxQ), 5, 2)
+    assert(!atMax.queryExecution.executedPlan.toString
       .contains("BroadcastHashJoin"))
   }
 
@@ -1634,11 +1670,12 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val dir = tempDir("graft_qtrr") + "/p"
-    Similarity.writePqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, dir)
     val qframe = emb.filter($"vec_id".isin(0L, 1L, 2L, 3L, 4L))
       .select($"vec_id".as("query_id"), $"embedding")
-    val plan = Similarity.pqMultiTopKRefinedQT(spark.read.parquet(dir),
-      emb, cents, cb, qframe, 5, 2, 20)
+    val plan = VectorStore.multiTopKRefined(VectorCodec.Pq(cb),
+      spark.read.parquet(dir),
+      emb, cents, qframe, 5, 2, 20)
       .queryExecution.executedPlan.toString
     // the probe join prunes code-cell directories at RUNTIME
     assert(plan.contains("dynamicpruningexpression"), plan.take(2000))
@@ -1657,16 +1694,18 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val dir = tempDir("graft_qtbkt") + "/p"
-    Similarity.writePqIndex(emb, cents, cb, dir)
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, dir)
     val pIdx = spark.read.parquet(dir)
     graft.ops.BucketedTables.writeBucketed(
       emb.select($"vec_id", $"embedding"), "qtbkt_emb", "vec_id", 16)
     val bktEmb = graft.ops.BucketedTables.readTable(spark, "qtbkt_emb")
     val qframe = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"embedding")
-    val bucketed = Similarity.pqMultiTopKRefinedQTBucketed(pIdx, bktEmb,
-      cents, cb, qframe, 5, 2, 20)
-    val streamed = Similarity.pqMultiTopKRefinedQT(pIdx, emb, cents, cb,
+    val bucketed = VectorStore.multiTopKRefinedBucketed(VectorCodec.Pq(cb),
+      pIdx, bktEmb,
+      cents, qframe, 5, 2, 20)
+    val streamed = VectorStore.multiTopKRefined(VectorCodec.Pq(cb),
+      pIdx, emb, cents,
       qframe, 5, 2, 20)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -1677,8 +1716,9 @@ class SimilaritySpec extends SparkSpec {
     // (The 5×20 batch above legitimately hits all 16 buckets on this
     // corpus — assert strict pruning on a 1-query, 5-id shortlist,
     // whose ≤5 distinct ids can cover at most 5 buckets.)
-    val one = Similarity.pqMultiTopKRefinedQTBucketed(pIdx, bktEmb,
-      cents, cb, qframe.filter($"query_id" === 0L), 5, 2, 5)
+    val one = VectorStore.multiTopKRefinedBucketed(VectorCodec.Pq(cb),
+      pIdx, bktEmb,
+      cents, qframe.filter($"query_id" === 0L), 5, 2, 5)
     val plan = one.queryExecution.executedPlan.toString
     val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
       .findFirstMatchIn(plan)
@@ -1692,12 +1732,12 @@ class SimilaritySpec extends SparkSpec {
       "over-budget batch the one-shot serve loudly refuses") {
     val cents = Similarity.seedCentroids(emb, 8)
     val dir = tempDir("graft_qtchunk") + "/p"
-    Similarity.writeIvfIndex(emb, cents, dir)
+    VectorStore.write(VectorCodec.Float, emb, cents, dir)
     val idx = spark.read.parquet(dir)
     val qframe = emb.filter($"vec_id" < 8)
       .select($"vec_id".as("query_id"), $"embedding")
     def serve(q: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfMultiTopKFromIndexQT(idx, cents, q, 5, 2)
+      VectorStore.multiTopK(VectorCodec.Float, idx, cents, q, 5, 2)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val oneShot = rows(serve(qframe))
@@ -1736,19 +1776,20 @@ class SimilaritySpec extends SparkSpec {
       .head().getSeq[Double](0).toVector
     val dup: Seq[(Long, Seq[Double])] = Seq(0L -> qv, 0L -> qv)
     intercept[IllegalArgumentException] {
-      Similarity.pqMultiTopKFromIndex(emb, cents, cb, dup, 5, 2)
+      VectorStore.multiTopK(VectorCodec.Pq(cb), emb, cents, dup, 5, 2)
     }
     intercept[IllegalArgumentException] {
-      Similarity.ivfMultiTopKFromIndex(emb, cents, dup, 5, 2)
+      VectorStore.multiTopK(VectorCodec.Float, emb, cents, dup, 5, 2)
     }
     intercept[IllegalArgumentException] {
-      Similarity.quantizedMultiTopKFromIndex(emb, cents, dup, 5, 2)
+      VectorStore.multiTopK(VectorCodec.Int8, emb, cents, dup, 5, 2)
     }
     intercept[IllegalArgumentException] {
-      Similarity.residualPqMultiTopKFromIndex(emb, cents, cb, dup, 5, 2)
+      VectorStore.multiTopK(VectorCodec.ResidualPq(cb), emb, cents, dup, 5, 2)
     }
     intercept[IllegalArgumentException] {
-      Similarity.pqMultiTopKRefined(emb, emb, cents, cb, dup, 5, 2, 20)
+      VectorStore.multiTopKRefined(VectorCodec.Pq(cb),
+        emb, emb, cents, dup, 5, 2, 20)
     }
   }
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import graft.{SparkSpec, Tables}
 import graft.cdc.Cdc
+import graft.similarity.{VectorCodec, VectorStore}
 
 class PipelinesSpec extends SparkSpec {
   import spark.implicits._
@@ -978,7 +979,7 @@ class PipelinesSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir).limit(40)
       .select("vec_id", "embedding").cache()
     val cents = Similarity.seedCentroids(emb, 4)
-    Similarity.writeIvfIndex(emb, cents, s"$tmp/ivf")
+    VectorStore.write(VectorCodec.Float, emb, cents, s"$tmp/ivf")
     val mem2 = MemoryStream[Long]
     val q2 = Pipelines.ivfDeleteSink(mem2.toDF().toDF("vec_id"),
       s"$tmp/ivf", s"$tmp/ckpt2")
@@ -986,15 +987,16 @@ class PipelinesSpec extends SparkSpec {
     mem2.addData(delIds.toSeq)
     q2.processAllAvailable(); q2.stop()
     val rebIvf = tempDir("graft_ivfrb")
-    Similarity.writeIvfIndex(
+    VectorStore.write(VectorCodec.Float,
       emb.filter(!org.apache.spark.sql.functions.col("vec_id")
         .isin(delIds.map(Long.box).toSeq: _*)), cents, rebIvf)
     val qv = emb.orderBy(org.apache.spark.sql.functions.col("vec_id").desc)
       .head.getSeq[Float](1).map(_.toDouble).toVector
-    assert(Similarity.ivfTopKFromIndex(
+    assert(VectorStore.topKFromIndex(VectorCodec.Float,
       Similarity.readIvfIndex(spark, s"$tmp/ivf"), cents, qv, 10, 2)
         .collect().toSeq ===
-      Similarity.ivfTopKFromIndex(spark.read.parquet(rebIvf), cents,
+      VectorStore.topKFromIndex(VectorCodec.Float,
+        spark.read.parquet(rebIvf), cents,
         qv, 10, 2).collect().toSeq)
     // the sink registered prefix "stream": a MANUAL delete under a
     // sink-shaped key would be resurrected by a checkpoint replay —
@@ -1224,7 +1226,7 @@ class PipelinesSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir).limit(30)
       .select("vec_id", "embedding")
     val cents = Similarity.seedCentroids(emb, 4)
-    Similarity.writeIvfIndex(emb, cents, s"$tmp/ivf")
+    VectorStore.write(VectorCodec.Float, emb, cents, s"$tmp/ivf")
     Similarity.registerIvfDeleteStreamPrefix(spark, s"$tmp/ivf", "sweeper")
     Similarity.deleteFromIvfIndex(emb.limit(3).select(col("vec_id")),
       s"$tmp/ivf", "d1")
@@ -1290,7 +1292,7 @@ class PipelinesSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir).limit(20)
       .select("vec_id", "embedding")
     val cents = Similarity.seedCentroids(emb, 4)
-    Similarity.writeIvfIndex(emb, cents, s"$tmp/ivf")
+    VectorStore.write(VectorCodec.Float, emb, cents, s"$tmp/ivf")
     val mem2 = MemoryStream[Long]
     val q2 = Pipelines.ivfDeleteSink(mem2.toDF().toDF("vec_id"),
       s"$tmp/ivf", s"$tmp/ckpt2", keyPrefix = "sweeper")
@@ -1306,15 +1308,15 @@ class PipelinesSpec extends SparkSpec {
       SearchOps.appendToBm25Index(docs, s"$tmp/idx", "5")
     }
     intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(emb, cents, s"$tmp/ivf", "7")
+      VectorStore.append(VectorCodec.Float, emb, cents, s"$tmp/ivf", "7")
     }
     intercept[IllegalArgumentException] {
-      Similarity.appendToQuantizedIvfIndex(emb, cents, s"$tmp/qivf", "7")
+      VectorStore.append(VectorCodec.Int8, emb, cents, s"$tmp/qivf", "7")
     }
     intercept[IllegalArgumentException] {
-      Similarity.appendToPqIndex(emb, cents,
-        Similarity.pqBuild(emb, m = 8, ksub = 4, iterations = 1),
-        s"$tmp/pq", "7")
+      VectorStore.append(VectorCodec.Pq(
+          Similarity.pqBuild(emb, m = 8, ksub = 4, iterations = 1)),
+        emb, cents, s"$tmp/pq", "7")
     }
   }
 
@@ -1327,8 +1329,8 @@ class PipelinesSpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 4)
     val ids = emb.collect().map(_.getLong(0)).sorted
     val mem = MemoryStream[Long]
-    val q = Pipelines.ivfIndexSink(
-      mem.toDS().toDF("vec_id").join(emb, "vec_id"), cents,
+    val q = Pipelines.vectorIndexSink(
+      mem.toDS().toDF("vec_id").join(emb, "vec_id"), VectorCodec.Float, cents,
       s"$tmp/idx", s"$tmp/ckpt")
     try {
       (0L until 2L).foreach { b =>
@@ -1337,14 +1339,15 @@ class PipelinesSpec extends SparkSpec {
       }
     } finally q.stop()
     val full = tempDir("graft_ivffull")
-    Similarity.writeIvfIndex(emb, cents, full)
+    VectorStore.write(VectorCodec.Float, emb, cents, full)
     def entries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("cell").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(entries(s"$tmp/idx") === entries(full))
     // crash-replay of batch 0 overwrites exactly its own partitions
-    Pipelines.processIvfIngestBatch(
-      emb.filter(col("vec_id") % 2 === 0), cents, s"$tmp/idx", 0L)
+    Pipelines.processVectorIngestBatch(
+      emb.filter(col("vec_id") % 2 === 0), VectorCodec.Float,
+        cents, s"$tmp/idx", 0L)
     assert(entries(s"$tmp/idx") === entries(full))
     assert(spark.read.parquet(s"$tmp/idx").count() === emb.count())
     // as-of batch 0: the snapshot is exactly batch 0's vectors, and
@@ -1374,8 +1377,8 @@ class PipelinesSpec extends SparkSpec {
     // sink into the same (cell, batch_id) layout, stream-built ≡
     // rebuild entry for entry, replay a no-op
     val mem2 = MemoryStream[Long]
-    val q2 = Pipelines.quantizedIvfIndexSink(
-      mem2.toDS().toDF("vec_id").join(emb, "vec_id"), cents,
+    val q2 = Pipelines.vectorIndexSink(
+      mem2.toDS().toDF("vec_id").join(emb, "vec_id"), VectorCodec.Int8, cents,
       s"$tmp/qidx", s"$tmp/qckpt")
     try {
       (0L until 2L).foreach { b =>
@@ -1384,15 +1387,16 @@ class PipelinesSpec extends SparkSpec {
       }
     } finally q2.stop()
     val qFull = tempDir("graft_qivffull")
-    Similarity.writeQuantizedIvfIndex(emb, cents, qFull)
+    VectorStore.write(VectorCodec.Int8, emb, cents, qFull)
     def qEntries(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("scale"), col("qvec"), col("cell").cast("long"))
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Int](2), r.getLong(3)))
       .toSet
     assert(qEntries(s"$tmp/qidx") === qEntries(qFull))
-    Pipelines.processQuantizedIvfIngestBatch(
-      emb.filter(col("vec_id") % 2 === 0), cents, s"$tmp/qidx", 0L)
+    Pipelines.processVectorIngestBatch(
+      emb.filter(col("vec_id") % 2 === 0), VectorCodec.Int8,
+        cents, s"$tmp/qidx", 0L)
     assert(qEntries(s"$tmp/qidx") === qEntries(qFull))
     assert(spark.read.parquet(s"$tmp/qidx").count() === emb.count())
     emb.unpersist()
@@ -1708,11 +1712,12 @@ class PipelinesSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sfDir)
     val cents = Similarity.seedCentroids(emb, 8)
     val base = tempDir("graft_knnsink")
-    Similarity.writeIvfIndex(emb, cents, base + "/idx")
+    VectorStore.write(VectorCodec.Float, emb, cents, base + "/idx")
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Seq[Double])]
-    val q = Pipelines.knnServingSink(
-      mem.toDS().toDF("query_id", "embedding"), cents, base + "/idx",
+    val q = Pipelines.vectorServingSink(
+      mem.toDS().toDF("query_id", "embedding"), VectorCodec.Float,
+        cents, base + "/idx",
       base + "/out", base + "/ckpt", k = 5, nProbe = 2)
     def qvec(id: Long): Seq[Double] = emb.filter(col("vec_id") === id)
       .select(col("embedding").cast("array<double>"))
@@ -1728,7 +1733,7 @@ class PipelinesSpec extends SparkSpec {
     // each micro-batch's partition ≡ the one-shot query-table serve
     // over exactly that batch
     val idx = spark.read.parquet(base + "/idx")
-    def oneShot(ids: Seq[Long]) = rows(Similarity.ivfMultiTopKFromIndexQT(
+    def oneShot(ids: Seq[Long]) = rows(VectorStore.multiTopK(VectorCodec.Float,
       idx, cents, emb.filter(col("vec_id").isin(ids: _*))
         .select(col("vec_id").as("query_id"), col("embedding")), 5, 2))
     assert(rows(out.filter(col("batch_id") === 0)) === oneShot(Seq(0L, 1L)))
@@ -1736,8 +1741,9 @@ class PipelinesSpec extends SparkSpec {
     // checkpoint REPLAY of batch 1 rewrites exactly its own
     // partition — identical rankings, no duplicates
     val before = rows(out)
-    Pipelines.processKnnServeBatch(
-      Seq(2L -> qvec(2L)).toDF("query_id", "embedding"), cents,
+    Pipelines.processVectorServeBatch(
+      Seq(2L -> qvec(2L)).toDF("query_id", "embedding"), VectorCodec.Float,
+        cents,
       base + "/idx", base + "/out", 1L, 5, 2)
     assert(rows(spark.read.parquet(base + "/out")) === before)
     assert(spark.read.parquet(base + "/out").count() === 15)
@@ -1838,8 +1844,8 @@ class PipelinesSpec extends SparkSpec {
     val cents = Similarity.seedCentroids(emb, 8)
     val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
     val base = tempDir("graft_srvsinks")
-    Similarity.writeQuantizedIvfIndex(emb, cents, base + "/qidx")
-    Similarity.writePqIndex(emb, cents, cb, base + "/pidx")
+    VectorStore.write(VectorCodec.Int8, emb, cents, base + "/qidx")
+    VectorStore.write(VectorCodec.Pq(cb), emb, cents, base + "/pidx")
     emb.write.parquet(base + "/emb")
     implicit val sqlCtx = spark.sqlContext
     def qframe(ids: Seq[Long]) = emb.filter(col("vec_id").isin(ids: _*))
@@ -1848,10 +1854,11 @@ class PipelinesSpec extends SparkSpec {
       (emb.filter(col("vec_id") === id)
         .select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0).toVector: Seq[Double]))
-    // HOT tier: int8 store through quantizedServingSink
+    // HOT tier: int8 store through vectorServingSink
     val memQ = MemoryStream[(Long, Seq[Double])]
-    val sq = Pipelines.quantizedServingSink(
-      memQ.toDS().toDF("query_id", "embedding"), cents, base + "/qidx",
+    val sq = Pipelines.vectorServingSink(
+      memQ.toDS().toDF("query_id", "embedding"), VectorCodec.Int8,
+        cents, base + "/qidx",
       base + "/qout", base + "/qckpt", k = 5, nProbe = 2)
     memQ.addData(qrows(Seq(0L, 1L))); sq.processAllAvailable()
     memQ.addData(qrows(Seq(2L))); sq.processAllAvailable(); sq.stop()
@@ -1861,34 +1868,79 @@ class PipelinesSpec extends SparkSpec {
     val qidx = Similarity.readIvfIndex(spark, base + "/qidx")
     val qout = spark.read.parquet(base + "/qout")
     assert(rs(qout.filter(col("batch_id") === 0), "q_sim") ===
-      rs(Similarity.quantizedMultiTopKFromIndexQT(qidx, cents,
+      rs(VectorStore.multiTopK(VectorCodec.Int8, qidx, cents,
         qframe(Seq(0L, 1L)), 5, 2), "q_sim"))
     assert(rs(qout.filter(col("batch_id") === 1), "q_sim") ===
-      rs(Similarity.quantizedMultiTopKFromIndexQT(qidx, cents,
+      rs(VectorStore.multiTopK(VectorCodec.Int8, qidx, cents,
         qframe(Seq(2L)), 5, 2), "q_sim"))
     // crash replay of batch 1: identical catalog, no duplicates
     val beforeQ = rs(qout, "q_sim")
-    Pipelines.processQuantizedServeBatch(qframe(Seq(2L)), cents,
+    Pipelines.processVectorServeBatch(qframe(Seq(2L)), VectorCodec.Int8, cents,
       base + "/qidx", base + "/qout", 1L, 5, 2)
     assert(rs(spark.read.parquet(base + "/qout"), "q_sim") === beforeQ)
     assert(spark.read.parquet(base + "/qout").count() === 15)
-    // COLD tier: two-stage refined store through pqRefinedServingSink
+    // COLD tier: two-stage refined store through vectorServingSink
     val memP = MemoryStream[(Long, Seq[Double])]
-    val sp = Pipelines.pqRefinedServingSink(
-      memP.toDS().toDF("query_id", "embedding"), cents, cb,
-      base + "/pidx", base + "/emb", base + "/pout", base + "/pckpt",
-      k = 5, nProbe = 2, shortlist = 20)
+    val sp = Pipelines.vectorServingSink(
+      memP.toDS().toDF("query_id", "embedding"), VectorCodec.Pq(cb), cents,
+      base + "/pidx", base + "/pout", base + "/pckpt",
+      k = 5, nProbe = 2, rerank = Some((base + "/emb", 20)))
     memP.addData(qrows(Seq(0L, 1L))); sp.processAllAvailable()
     memP.addData(qrows(Seq(2L))); sp.processAllAvailable(); sp.stop()
     val pidx = spark.read.parquet(base + "/pidx")
     val pout = spark.read.parquet(base + "/pout")
     assert(rs(pout.filter(col("batch_id") === 0), "cos_sim") ===
-      rs(Similarity.pqMultiTopKRefinedQT(pidx, emb, cents, cb,
+      rs(VectorStore.multiTopKRefined(VectorCodec.Pq(cb), pidx, emb, cents,
         qframe(Seq(0L, 1L)), 5, 2, 20), "cos_sim"))
     val beforeP = rs(pout, "cos_sim")
-    Pipelines.processPqRefinedServeBatch(qframe(Seq(2L)), cents, cb,
-      base + "/pidx", base + "/emb", base + "/pout", 1L, 5, 2, 20)
+    Pipelines.processVectorServeBatch(qframe(Seq(2L)), VectorCodec.Pq(cb),
+      cents,
+      base + "/pidx", base + "/pout", 1L, 5, 2, Some((base + "/emb", 20)))
     assert(rs(spark.read.parquet(base + "/pout"), "cos_sim") === beforeP)
+  }
+
+  test("serving sink skips tombstoned ids: one micro-batch over a float " +
+      "and a PQ index with deletions ≡ the one-shot serve over " +
+      "readIvfIndex") {
+    import graft.similarity.Similarity
+    val emb = Tables.embeddings(spark, sfDir)
+    val cents = Similarity.seedCentroids(emb, 8)
+    val cb = Similarity.pqBuild(emb, m = 8, ksub = 16, iterations = 1)
+    val base = tempDir("graft_srvtomb")
+    emb.write.parquet(base + "/emb")
+    implicit val sqlCtx = spark.sqlContext
+    val qframe = emb.filter(col("vec_id").isin(0L, 1L, 2L))
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val qrows = qframe.select(col("query_id"),
+        col("embedding").cast("array<double>")).collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Double](1).toVector: Seq[Double]))
+    type Frame = org.apache.spark.sql.DataFrame
+    def rs(df: Frame) = df
+      .select(col("query_id"), col("vec_id"), col("cos_sim")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def check(name: String, codec: VectorCodec,
+        rerank: Option[(String, Int)])(oneShot: Frame => Frame): Unit = {
+      val dir = s"$base/$name"
+      VectorStore.write(codec, emb, cents, dir)
+      // erase every id the intact index would serve
+      val erased = rs(oneShot(Similarity.readIvfIndex(spark, dir))).map(_._2)
+      Similarity.deleteFromIvfIndex(erased.toSeq.toDF("vec_id"), dir, "erase")
+      val mem = MemoryStream[(Long, Seq[Double])]
+      val q = Pipelines.vectorServingSink(
+        mem.toDS().toDF("query_id", "embedding"), codec, cents, dir,
+        s"$base/$name-out", s"$base/$name-ckpt", k = 5, nProbe = 2,
+        rerank = rerank)
+      mem.addData(qrows.toSeq); q.processAllAvailable(); q.stop()
+      val served = rs(spark.read.parquet(s"$base/$name-out"))
+      assert(served.nonEmpty, name)
+      assert(served.map(_._2).intersect(erased).isEmpty, name)
+      assert(served === rs(oneShot(Similarity.readIvfIndex(spark, dir))), name)
+    }
+    check("float", VectorCodec.Float, None)(
+      VectorStore.multiTopK(VectorCodec.Float, _, cents, qframe, 5, 2))
+    check("pq", VectorCodec.Pq(cb), Some((base + "/emb", 20)))(
+      VectorStore.multiTopKRefined(VectorCodec.Pq(cb), _, emb, cents, qframe,
+        5, 2, 20))
   }
 
   test("fold-in-progress marker: a mid-fold sink write or as-of read " +
@@ -1917,8 +1969,9 @@ class PipelinesSpec extends SparkSpec {
     assert(e2.getMessage.contains("fold is in progress"))
     // the serve sink checks its catalog the same way
     val e3 = intercept[IllegalArgumentException] {
-      Pipelines.processKnnServeBatch(
+      Pipelines.processVectorServeBatch(
         Seq((0L, Seq(1.0, 0.0))).toDF("query_id", "embedding"),
+        VectorCodec.Float,
         Seq(Seq(1.0, 0.0)), idx, out, 3L, 5, 1)
     }
     assert(e3.getMessage.contains("fold is in progress"))
