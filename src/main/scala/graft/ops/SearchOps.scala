@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.words
+import graft.plans.GraftFunctions
 import graft.similarity.{VectorCodec, VectorStore}
 
 /** Deterministic search — the engine's replacement for the
@@ -18,12 +19,13 @@ import graft.similarity.{VectorCodec, VectorStore}
   * (the reference's `title^2` boost, search/main.py:94), body hits
   * count once, ties broken by doc_id for stable pages.
   *
-  * Scale: filters + scoring are narrow and codegen'd; ranking is
-  * `orderBy(...).limit(k)` = TakeOrdered (per-partition heaps + one
-  * merge of k·partitions rows — no global sort, no full shuffle).
-  * The reference caps pages at 100 (search/main.py:80), so k stays
-  * tiny no matter the corpus size; a 100 TB corpus ranks with one
-  * pass and O(k) driver memory.
+  * Scale: filters + scoring are narrow and codegen'd. [[search]] and
+  * [[searchEnriched]] read the corpus once: one aggregate counts the
+  * matches (hits.total) and keeps their top `from + size` rows in a
+  * bounded priority queue per partition, merged once; no cache, no
+  * second pass, no join. The reference caps pages at 100
+  * (search/main.py:80), so k stays tiny no matter the corpus size; a
+  * 100 TB corpus ranks with one pass and O(k) memory per partition.
   */
 object SearchOps {
 
@@ -59,22 +61,12 @@ object SearchOps {
   }
 
   /** Full search: filters (P5/P6) → must-match scoring → total (A5)
-    * → top-k page (W1/W2). `title` = source, `body` = text on the
-    * driver documents table.
+    * and top-k page (W1/W2) in one pass. `title` = source, `body` =
+    * text on the driver documents table.
     */
   def search(documents: DataFrame, q: String,
       lang: Option[String] = None, minChars: Option[Long] = None,
-      fuzzy: Boolean = false, from: Int = 0, size: Int = 10): DataFrame =
-    searchManaged(documents, q, lang, minChars, fuzzy, from, size).df
-
-  /** Managed-lifecycle variant: the persisted match set feeding both
-    * the count pass and the page pass is released via the returned
-    * handle (see [[graft.Managed]]); the plain variant leaves it to
-    * session-level cleanup, which suits one-shot jobs only.
-    */
-  def searchManaged(documents: DataFrame, q: String,
-      lang: Option[String] = None, minChars: Option[Long] = None,
-      fuzzy: Boolean = false, from: Int = 0, size: Int = 10): graft.Managed = {
+      fuzzy: Boolean = false, from: Int = 0, size: Int = 10): DataFrame = {
     // an empty query would divide by q.length=0 in occurrences():
     // NULL scores non-ANSI, DIVIDE_BY_ZERO under ANSI — reject early
     require(q.nonEmpty, "search query must be non-empty")
@@ -85,28 +77,18 @@ object SearchOps {
     val scoreCol =
       if (fuzzy) fuzzyScore(col("source"), col("text"), q)
       else score(col("source"), col("text"), q)
-    val matches = filtered
-      .withColumn("score", scoreCol)
-      .filter(col("score") > 0)
-      .persist() // feeds both the count pass and the page pass
-    val result = matches
-      .crossJoin(broadcast(totalHits(matches)))
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("score"),
-        col("total_hits"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .offset(from)
-      .limit(size)
-    new graft.Managed(result, Seq(matches))
+    page(filtered.withColumn("score", scoreCol),
+      Seq("doc_id", "lang", "n_chars", "score"), from, size)
   }
 
-  /** A5: hits.total as a broadcast 1-row aggregate. An empty-window
-    * count (`count().over(Window.partitionBy())`) would funnel every
-    * matching row through one partition; a parallel count + broadcast
-    * cross join costs a second (parallel) pass instead and keeps the
-    * per-row path shuffle-free.
+  /** [[search]] as a [[graft.Managed]] handle. The search holds no
+    * cache, so `release()` frees nothing; the form stays for callers
+    * that scope every query through a handle.
     */
-  private def totalHits(matches: DataFrame): DataFrame =
-    matches.groupBy().agg(count(lit(1)).as("total_hits"))
+  def searchManaged(documents: DataFrame, q: String,
+      lang: Option[String] = None, minChars: Option[Long] = None,
+      fuzzy: Boolean = false, from: Int = 0, size: Int = 10): graft.Managed =
+    new graft.Managed(search(documents, q, lang, minChars, fuzzy, from, size), Nil)
 
   /** The reference's full GET /search semantics over the ENRICHED
     * corpus (search/app/main.py:100-109): text match + quality-score
@@ -116,30 +98,62 @@ object SearchOps {
     */
   def searchEnriched(enriched: DataFrame, q: String,
       minQualityScore: Double, excludePii: Boolean,
-      from: Int = 0, size: Int = 10): DataFrame =
-    searchEnrichedManaged(enriched, q, minQualityScore, excludePii,
-      from, size).df
-
-  /** Managed-lifecycle variant — see `searchManaged`. */
-  def searchEnrichedManaged(enriched: DataFrame, q: String,
-      minQualityScore: Double, excludePii: Boolean,
-      from: Int = 0, size: Int = 10): graft.Managed = {
+      from: Int = 0, size: Int = 10): DataFrame = {
     require(q.nonEmpty, "search query must be non-empty")
     val base = enriched
       .filter(col("quality_score") >= minQualityScore)
     val piiFiltered = if (excludePii) base.filter(!col("has_pii")) else base
-    val matches = piiFiltered
-      .withColumn("score", score(col("source"), col("text"), q))
-      .filter(col("score") > 0)
-      .persist() // the enrichment upstream is expensive — compute once
-    val result = matches
-      .crossJoin(broadcast(totalHits(matches)))
-      .select(col("doc_id"), col("quality_score"), col("score"),
-        col("total_hits"))
+    page(piiFiltered.withColumn("score", score(col("source"), col("text"), q)),
+      Seq("doc_id", "quality_score", "score"), from, size)
+  }
+
+  /** [[searchEnriched]] as a [[graft.Managed]] handle — see
+    * [[searchManaged]].
+    */
+  def searchEnrichedManaged(enriched: DataFrame, q: String,
+      minQualityScore: Double, excludePii: Boolean,
+      from: Int = 0, size: Int = 10): graft.Managed =
+    new graft.Managed(searchEnriched(enriched, q, minQualityScore,
+      excludePii, from, size), Nil)
+
+  /** ES's `index.max_result_window`: the deepest page end, `from +
+    * size`, a search serves. The bounded top-k allocates `from + size`
+    * queue slots per partition up front, so this bound is what keeps a
+    * deep page from sizing executor memory.
+    */
+  val MaxResultWindow = 10000
+
+  /** The matches (`score > 0`) of `scored`, as the page `[from, from +
+    * size)` by (score desc, doc_id) with `cols` and the hit total.
+    * One aggregate computes both: `count` (A5) and a bounded top-k of
+    * the first `from + size` rows share one partial aggregation (a
+    * bounded priority queue per partition) and one merge. The kept
+    * rows explode back and TakeOrdered cuts the page. `size = 0` is
+    * ES's count-only request and gives an empty page.
+    */
+  private def page(scored: DataFrame, cols: Seq[String], from: Int,
+      size: Int): DataFrame = {
+    require(from >= 0 && size >= 0,
+      s"from and size must be non-negative, got from=$from size=$size")
+    require(from.toLong + size <= MaxResultWindow,
+      s"from + size must be at most $MaxResultWindow, got ${from.toLong + size}")
+    val matches = scored.filter(col("score") > 0)
+    // reverse = true keeps the k smallest structs: ascending
+    // (-score, doc_id) is the page order (score desc, doc_id asc)
+    val ranked = struct((-col("score")).as("__neg_score") +: cols.map(col): _*)
+    // the queue needs at least one slot; a count-only request keeps one
+    // row that limit(0) then drops
+    val k = math.max(from + size, 1)
+    matches
+      .groupBy()
+      .agg(count(lit(1)).as("total_hits"),
+        GraftFunctions.call(matches)(GraftFunctions.CollectTopKName,
+          ranked, lit(k), lit(true)).as("__top"))
+      .select(col("total_hits"), inline(col("__top")))
+      .select((cols :+ "total_hits").map(col): _*)
       .orderBy(col("score").desc, col("doc_id"))
       .offset(from)
       .limit(size)
-    new graft.Managed(result, Seq(matches))
   }
 
   /** BM25 ranked search (Robertson–Spärck Jones; the scoring function

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -200,6 +201,7 @@ object RewriteCosine
 
 object GraftFunctions {
   val CosineName = "graft_cosine"
+  val CollectTopKName = "graft_collect_top_k"
 
   private def arity(name: String, n: Int)(
       b: Seq[Expression] => Expression): Seq[Expression] => Expression =
@@ -297,7 +299,12 @@ object GraftFunctions {
       "BPE-tokenize a word array: (words, merge-table literal) -> " +
         "array<string>",
       arity(TextHashFunctions.BpeEncodeName, 2)(e =>
-        BpeEncodeWords(e(0), e(1)))))
+        BpeEncodeWords(e(0), e(1)))),
+    (CollectTopKName,
+      "bounded top-k aggregate: (value, k, reverse) -> array of the k " +
+        "largest values (the k smallest when reverse), one bounded " +
+        "priority queue per partition",
+      arity(CollectTopKName, 3)(e => new CollectTopK(e(0), e(1), e(2)))))
 
   /** Register graft's native expressions in a session (idempotent).
     * Library code never needs this: [[call]] registers on first use.

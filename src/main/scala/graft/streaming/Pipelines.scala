@@ -190,6 +190,17 @@ object Pipelines {
     * (none if it does not exist) — the reason the index is bucketed at
     * all. The bucket predicate stays in the plan as a PartitionFilter.
     * `keyCol` must be the key the index is bucketed on.
+    *
+    * The key predicate is `array_contains(array(probe), key)`: the
+    * folded `array(probe)` is an array literal, which generated code
+    * reaches by reference, so every lookup reuses one set of compiled
+    * classes (`key === probe` writes the probe into the Java source
+    * and compiles anew per key). The trade-off: the key is no longer
+    * pushed down to Parquet row-group statistics. A bucket holds a few
+    * dozen rows in one row group here (about 23 at 740 rows over 32
+    * buckets), so nothing is lost; at cluster scale the sink target
+    * is Delta or Iceberg (see [[startIndexSink]]), whose own key
+    * skipping replaces it.
     */
   def indexPointLookup(spark: SparkSession, indexDir: String, keyCol: String,
       value: Column): DataFrame = {
@@ -204,7 +215,7 @@ object Pipelines {
     require(bucket.foldable, s"the probe must be a constant, got $value")
     val b = bucket.eval().asInstanceOf[Int]
     readBuckets(spark, indexDir, layout.schema, Seq(b))
-      .filter(col(bucketCol) === b && col(keyCol) === probe)
+      .filter(col(bucketCol) === b && array_contains(array(probe), col(keyCol)))
       .drop(bucketCol)
   }
 

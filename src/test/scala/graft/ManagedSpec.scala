@@ -19,9 +19,9 @@ class ManagedSpec extends SparkSpec {
     out
   }
 
-  test("managed search releases the match-set cache after the action") {
+  test("managed search leaves no cache behind after the action") {
     val docs = Tables.documents(spark, sfDir)
-    val rows = assertNoLeak {
+    val rows = assertNoCacheLeft {
       SearchOps.searchManaged(docs, "merge", size = 5)(_.collect())
     }
     assert(rows.nonEmpty)
@@ -43,19 +43,20 @@ class ManagedSpec extends SparkSpec {
 
   test("release is idempotent and fires even when the action throws") {
     val docs = Tables.documents(spark, sfDir)
-    assertNoLeak {
-      val m = SearchOps.searchManaged(docs, "merge", size = 5)
+    assertNoCacheLeft {
+      // the signature cache is registered when the handle is built
+      val m = Dedup.minhashNearDuplicatesManaged(docs, "doc_id", "text")
       intercept[RuntimeException] { m(_ => throw new RuntimeException("boom")) }
+      assert(spark.sharedState.cacheManager.isEmpty, "no release on throw")
       m.release() // second release is a no-op
     }
   }
 
   test("unmanaged variants still return the same rows as managed") {
     val docs = Tables.documents(spark, sfDir)
-    val plain = SearchOps.search(docs, "merge", size = 5).collect()
+    val plain = assertNoCacheLeft(SearchOps.search(docs, "merge", size = 5).collect())
     val managed = SearchOps.searchManaged(docs, "merge", size = 5)(_.collect())
     assert(plain.map(_.toString).toSeq === managed.map(_.toString).toSeq)
-    spark.catalog.clearCache() // the plain variant's cache is session-scoped
   }
 
   test("autoReleased frees the pipeline caches after the first action") {

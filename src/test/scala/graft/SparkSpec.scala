@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +26,45 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       r
     }
     Files.createTempDirectory(root, prefix).toString
+  }
+
+  /** Jobs started, and the task count of each stage that ran, while
+    * `body` runs.
+    */
+  final class JobLog extends SparkListener {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stageTasks.add(e.stageInfo.numTasks)
+  }
+
+  def logJobs[T](body: => T): (T, JobLog) = {
+    val sc = spark.sparkContext
+    GraftListenerBus.drain(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      val r = body
+      GraftListenerBus.drain(sc)
+      (r, log)
+    } finally sc.removeSparkListener(log)
+  }
+
+  /** Runs `body` from an empty CacheManager and asserts it left no
+    * CacheManager entry and no new persisted RDD behind (RDDs persisted
+    * outside the CacheManager are counted relative to before).
+    */
+  def assertNoCacheLeft[T](body: => T): T = {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val out = body
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "left a CacheManager entry behind")
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- persisted
+    assert(leaked.isEmpty, s"left persisted RDDs behind: $leaked")
+    out
   }
 
   override def afterAll(): Unit =

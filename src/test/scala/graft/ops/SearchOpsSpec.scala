@@ -23,11 +23,10 @@ class SearchOpsSpec extends SparkSpec {
       (1L, "merge proposal", Option("merge details inside"), "en", 100L),
       (2L, "merge proposal", Option.empty[String], "en", 100L) // null body
     ).toDF("doc_id", "source", "text", "lang", "n_chars")
-    val hits = SearchOps.search(docs, "merge")
-      .collect().map(_.getLong(0)).toSet
+    val hits = assertNoCacheLeft(SearchOps.search(docs, "merge").collect())
+      .map(_.getLong(0)).toSet
     assert(hits === Set(1L, 2L)) // title-only match survives null body
     intercept[IllegalArgumentException] { SearchOps.search(docs, "") }
-    spark.catalog.clearCache()
   }
 
   test("fuzziness AUTO thresholds") {
@@ -49,6 +48,62 @@ class SearchOpsSpec extends SparkSpec {
     assert(p1.map(_.getLong(0)).toSet.intersect(p2.map(_.getLong(0)).toSet).isEmpty)
     val totals = (p1 ++ p2).map(_.getAs[Long]("total_hits")).toSet
     assert(totals.size === 1)
+  }
+
+  test("pages from = 0, 5, 10 … end to end equal one large page, ties " +
+      "included; every row carries the same total_hits") {
+    // a one-letter word: most documents match, many with equal scores
+    val q = "e"
+    val big = SearchOps.search(docs, q, size = 60).collect()
+    val pages = (0 until 60 by 5).flatMap(f =>
+      SearchOps.search(docs, q, from = f, size = 5).collect())
+    assert(big.length === 60)
+    assert(pages.map(_.toSeq) === big.map(_.toSeq).toSeq)
+    val scores = big.map(_.getAs[Long]("score"))
+    assert(scores.distinct.length < scores.length) // ties cross page ends
+    // the page order is the full sort of the match set
+    val matches = docs.withColumn("score",
+        SearchOps.score($"source", $"text", q)).filter($"score" > 0)
+    val sorted = matches.orderBy($"score".desc, $"doc_id").limit(60)
+      .select("doc_id", "lang", "n_chars", "score").collect()
+    assert(big.map(r => r.toSeq.dropRight(1)).toSeq === sorted.map(_.toSeq).toSeq)
+    val totals = (big ++ pages).map(_.getAs[Long]("total_hits")).toSet
+    assert(totals === Set(matches.count()))
+  }
+
+  test("paging arguments: size 0 is an empty page, negative from or size " +
+      "and pages past MaxResultWindow are refused") {
+    val enriched = graft.streaming.Pipelines.qualityEnrich(
+      graft.cdc.Cdc.syntheticEnvelopes(docs))
+    def enrichedPage(from: Int, size: Int) =
+      SearchOps.searchEnriched(enriched, "e", 0.0, excludePii = false,
+        from = from, size = size)
+    assert(SearchOps.search(docs, "e", size = 0).collect().isEmpty)
+    assert(SearchOps.search(docs, "e", from = 7, size = 0).collect().isEmpty)
+    assert(enrichedPage(0, 0).collect().isEmpty)
+    for ((from, size) <- Seq((-1, 10), (0, -1),
+        (SearchOps.MaxResultWindow, 1), (Int.MaxValue, Int.MaxValue))) {
+      intercept[IllegalArgumentException] {
+        SearchOps.search(docs, "e", from = from, size = size)
+      }
+      intercept[IllegalArgumentException] { enrichedPage(from, size) }
+    }
+  }
+
+  test("plain search and searchEnriched: at most 2 jobs each, no cache " +
+      "left behind") {
+    val dir = tempDir("graft-search-jobs")
+    // the enriched corpus as a parquet read, like the live index
+    graft.streaming.Pipelines.qualityEnrich(graft.cdc.Cdc.syntheticEnvelopes(docs))
+      .write.parquet(s"$dir/enriched")
+    val enriched = spark.read.parquet(s"$dir/enriched")
+    for (page <- Seq(SearchOps.search(docs, "merge", size = 5),
+        SearchOps.searchEnriched(enriched, "merge", 50.0, excludePii = true,
+          size = 5))) {
+      val (rows, log) = assertNoCacheLeft(logJobs(page.collect()))
+      assert(rows.nonEmpty)
+      assert(log.jobs.get <= 2, s"${log.jobs.get} jobs")
+    }
   }
 
   test("filters restrict the match set") {

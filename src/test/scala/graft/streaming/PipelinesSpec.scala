@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -69,17 +68,18 @@ class PipelinesSpec extends SparkSpec {
     mem.addData(rows.drop(rows.length / 2))
     q.processAllAvailable(); q.stop()
     val index = Pipelines.readIndex(spark, s"$dir/index")
-    val viaIndex = graft.ops.SearchOps.searchEnriched(
-      index, "merge", minQualityScore = 50.0, excludePii = true, size = 20)
-      .collect().map(_.toSeq)
-    val viaBatch = graft.ops.SearchOps.searchEnriched(
-      Pipelines.qualityEnrich(
-        Cdc.syntheticEnvelopes(Tables.documents(spark, sfDir))),
-      "merge", minQualityScore = 50.0, excludePii = true, size = 20)
-      .collect().map(_.toSeq)
+    val (viaIndex, viaBatch) = assertNoCacheLeft {
+      (graft.ops.SearchOps.searchEnriched(
+        index, "merge", minQualityScore = 50.0, excludePii = true, size = 20)
+        .collect().map(_.toSeq),
+      graft.ops.SearchOps.searchEnriched(
+        Pipelines.qualityEnrich(
+          Cdc.syntheticEnvelopes(Tables.documents(spark, sfDir))),
+        "merge", minQualityScore = 50.0, excludePii = true, size = 20)
+        .collect().map(_.toSeq))
+    }
     assert(viaIndex.nonEmpty)
     assert(viaIndex.toSeq === viaBatch.toSeq)
-    spark.catalog.clearCache() // searchEnriched plain variant persists
   }
 
   test("staged enrichment ≡ one-shot content join; s3_key merge join " +
@@ -337,29 +337,6 @@ class PipelinesSpec extends SparkSpec {
     (mem, q)
   }
 
-  /** Jobs started, and the task count of each stage that ran, while
-    * `body` runs.
-    */
-  private final class JobLog extends SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stageTasks.add(e.stageInfo.numTasks)
-  }
-
-  private def logJobs[T](body: => T): (T, JobLog) = {
-    val sc = spark.sparkContext
-    GraftListenerBus.drain(sc)
-    val log = new JobLog
-    sc.addSparkListener(log)
-    try {
-      val r = body
-      GraftListenerBus.drain(sc)
-      (r, log)
-    } finally sc.removeSparkListener(log)
-  }
-
   private def bucketOf(key: Column): Int =
     spark.range(1).select(Pipelines.indexBucket(key, 32)).head.getInt(0)
 
@@ -390,6 +367,25 @@ class PipelinesSpec extends SparkSpec {
       case s: FileSourceScanExec => s.relation.location.rootPaths
     }.flatten
     assert(roots.map(_.getName) === Seq(s"__bucket=${bucketOf(lit(id))}"))
+  }
+
+  test("index point lookup: after one warm lookup, a lookup of another " +
+      "key in another bucket compiles no class") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tempDir("graft-probe-codegen")
+    val (_, q) = preloadedSink(dir, 200)
+    q.stop()
+    val ids = Pipelines.readIndex(spark, s"$dir/index")
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+    val warm = ids.head
+    val other = ids.find(i => bucketOf(lit(i)) != bucketOf(lit(warm))).get
+    def lookup(id: Long): Seq[Long] =
+      Pipelines.indexPointLookup(spark, s"$dir/index", "doc_id", lit(id))
+        .collect().map(_.getAs[Long]("doc_id")).toSeq
+    assert(lookup(warm) === Seq(warm))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(lookup(other) === Seq(other))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled)
   }
 
   test("index point lookup casts the probe to the key type: an Int " +
