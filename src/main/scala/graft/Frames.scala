@@ -2,62 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Frame-lifecycle helpers shared by the iterative operators and the
-  * streaming batch cores.
-  */
+/** Shared frame helpers for the index-maintenance paths. */
 private[graft] object Frames {
-
-  /** Free an eager localCheckpoint's storage blocks. `Dataset.unpersist`
-    * only uncaches CacheManager entries — the checkpointed RDD's
-    * MEMORY_AND_DISK blocks are invisible to it and otherwise linger
-    * until the ContextCleaner happens to GC the RDD, which on a long
-    * iterative peel (k-core, PageRank rounds) or a long-running
-    * streaming sink means per-round/per-batch storage accumulates.
-    * The checkpointed RDD sits behind the plan's LogicalRDD leaf;
-    * unpersist THAT.
-    *
-    * ONLY call on a frame whose data is no longer reachable from any
-    * live plan: a localCheckpoint is non-reliable, so freeing its
-    * blocks while a dependent frame still needs them loses the data
-    * (there is no lineage left to recompute from).
-    */
-  def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-  /** Release an operator-internal materialized artifact whichever way
-    * it was materialized: the CacheManager entry if persisted, the
-    * checkpoint's own storage blocks if the frame IS an eager
-    * localCheckpoint (Dataset.unpersist is a no-op on those). Only a
-    * ROOT LogicalRDD is freed — a derived frame whose plan merely
-    * CONTAINS someone else's live checkpoint is left alone, so this
-    * is safe as the blanket release call for a mixed cached-frame
-    * list (graft.Managed, the curation token artifact).
-    */
-  def releaseArtifact(df: DataFrame): Unit = {
-    df.unpersist(false)
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  }
-
-  /** Eager localCheckpoint that KEEPS a proven hash layout (round-17):
-    * the checkpoint cuts lineage (flat plans however many rounds run —
-    * a persisted chain's plan text grows 2^rounds and OOMs), and the
-    * rebuilt LogicalRDD re-declares the `hash(keys, width)` layout the
-    * producing plan laid the blocks out in, so the next round's joins
-    * plan co-partitioned instead of broadcasting or exchanging the
-    * frame. ONLY call when the frame's plan provably ends in (or
-    * partition-locally preserves) `repartition(width, keys)` — see
-    * [[org.apache.spark.sql.execution.GraftLayout]].
-    */
-  def checkpointWithHashLayout(df: DataFrame, keys: Seq[String],
-      width: Int): DataFrame =
-    org.apache.spark.sql.execution.GraftLayout.withHashLayout(
-      df.localCheckpoint(true), keys, width)
 
   /** Broadcast hint for a tombstone-id join side, gated by the
     * tombstone DIRECTORY's on-disk size — one recursive listing call,

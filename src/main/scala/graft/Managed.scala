@@ -1,26 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.execution.QueryExecution
 
-/** A lazily-computed result whose plan reads internally persisted
-  * state (e.g. the signature cache inside the near-duplicate
-  * pipelines). The cache makes the multi-branch plan single-pass but
-  * outlives the query unless released — long-lived sessions must call
-  * `release()` (idempotent) after the final action over `df`, or use
-  * `apply` to scope an action with release-in-finally.
+/** A lazily-computed result together with the [[Artifacts]] owner of
+  * the state its plan reads (e.g. the signature cache inside the
+  * near-duplicate pipelines). Call `release()` (idempotent) after the
+  * final action over `df`, use `apply` to scope an action with
+  * release-in-finally, or hand out a one-shot frame with
+  * [[autoReleased]]; the lifecycle contract is the [[Artifacts]] one.
   */
-final class Managed(val df: DataFrame, cached: Seq[DataFrame]) {
-  @volatile private var released = false
+final class Managed(val df: DataFrame, owner: Artifacts) {
 
-  def release(): Unit = synchronized {
-    if (!released) {
-      // releaseArtifact frees persisted entries AND root-checkpoint
-      // blocks (unpersist alone is a no-op on an eager localCheckpoint
-      // — the curation token artifact's round-17 materialization)
-      cached.foreach(graft.Frames.releaseArtifact)
-      released = true
-    }
-  }
+  def release(): Unit = owner.release()
 
   /** `managed { d => d.collect() }` — runs the action, then releases
     * the internal cache even if the action throws.
@@ -28,44 +20,44 @@ final class Managed(val df: DataFrame, cached: Seq[DataFrame]) {
   def apply[T](f: DataFrame => T): T =
     try f(df) finally release()
 
-  /** A Managed over a frame derived from this one, sharing its
-    * caches — for wrappers that post-process the pipeline's result
-    * (e.g. an anti-join against the pair list) before handing it to
-    * the caller's lifecycle.
+  /** A Managed over a frame derived from this one, sharing its owner —
+    * for wrappers that post-process the pipeline's result (e.g. an
+    * anti-join against the pair list) before handing it on.
     */
   def mapDf(f: DataFrame => DataFrame): Managed =
-    new Managed(f(df), cached)
+    new Managed(f(df), owner)
 
-  /** One-shot convenience lifecycle for the plain (non-Managed)
-    * wrappers: returns `df` with an `observe()` marker attached and a
-    * listener that calls [[release]] as soon as the first action over
-    * the returned frame completes — the same pattern as
-    * `Curation.curateObserved`'s token-artifact lifecycle. The
-    * observation NAME identifies the execution in
-    * `qe.observedMetrics` (public, plan-shape-independent; the
-    * metrics node does not change rows). One-shot semantics: a second
-    * action over the frame re-derives the pipeline uncached —
-    * multi-action callers use the `...Managed` variant instead.
+  /** `df` as a one-shot frame: the owner releases as soon as the first
+    * action over it completes (success or failure). The release is
+    * keyed on an `observe()` marker: the observation name identifies
+    * the execution in `qe.observedMetrics` (public and independent of
+    * plan shape; the metrics node does not change rows).
     */
   def autoReleased(): DataFrame = {
-    val spark = df.sparkSession
     val name = "graft_release_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val out = df.observe(name,
+    releaseAfter(name, df.observe(name,
       org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)))
+        org.apache.spark.sql.functions.lit(1))))
+  }
+
+  /** [[autoReleased]] keyed on an observation `df` already carries. */
+  def autoReleased(obs: Observation): DataFrame = releaseAfter(obs.name, df)
+
+  private def releaseAfter(name: String, out: DataFrame): DataFrame = {
+    if (owner.cutUnder(df)) throw new IllegalStateException(
+      "a one-shot frame may own only recomputable artifacts: this one " +
+        "reads a lineage-cut checkpoint its owner would free")
+    val spark = df.sparkSession
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def maybeRelease(
-          qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+      private def maybeRelease(qe: QueryExecution): Unit =
         if (qe.observedMetrics.contains(name)) {
           release()
           spark.listenerManager.unregister(this)
         }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
+      override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit = maybeRelease(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
+      override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = maybeRelease(qe)
     }
     spark.listenerManager.register(listener)

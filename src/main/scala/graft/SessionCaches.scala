@@ -3,10 +3,10 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** Session-scoped cache registry: per-(session, key) caches register
-  * here and get their entries evicted when the owning session's
+/** Session-scoped cache registry: per-(session, key) caches are made
+  * here ([[memo]]) and get their entries evicted when the owning session's
   * SparkContext ends, so a long-lived JVM (a serving process cycling
   * sessions) never pins resolved relations or checkpoint blocks for
   * stopped sessions. Eviction is listener-driven (application end),
@@ -17,15 +17,30 @@ object SessionCaches {
     new java.util.concurrent.CopyOnWriteArrayList[ConcurrentHashMap[(SparkSession, String), _]]()
   private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
 
-  /** Register a (session, key)-keyed cache for end-of-session eviction. */
-  def register(map: ConcurrentHashMap[(SparkSession, String), _]): Unit =
-    maps.add(map)
+  /** A (session, key)-keyed cache, evicted with its session. */
+  final class Memo[V] private[SessionCaches] {
+    private[SessionCaches] val map =
+      new ConcurrentHashMap[(SparkSession, String), V]()
 
-  /** Idempotently attach the eviction listener for `s`. Call on every
-    * cache insert — first call per session wins, the rest are a
-    * set-membership check.
+    /** The value for (s, key), built by `build` on first use; every
+      * lookup hooks `s` for eviction first.
+      */
+    def apply(s: SparkSession, key: String)(build: => V): V = {
+      ensureHook(s)
+      map.computeIfAbsent((s, key), _ => build)
+    }
+  }
+
+  def memo[V](): Memo[V] = {
+    val m = new Memo[V]
+    maps.add(m.map)
+    m
+  }
+
+  /** Idempotently attach the eviction listener for `s`: first call per
+    * session wins, the rest are a set-membership check.
     */
-  def ensureHook(s: SparkSession): Unit =
+  private[graft] def ensureHook(s: SparkSession): Unit =
     if (hooked.add(s)) {
       s.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
@@ -51,5 +66,19 @@ object SessionCaches {
       m.keySet.forEach { k => if (k._1 eq s) n += 1 }
     }
     n
+  }
+
+  /** Test hook: the frames cached for `s` across all registered caches. */
+  private[graft] def liveFramesFor(s: SparkSession): Seq[DataFrame] = {
+    val out = Seq.newBuilder[DataFrame]
+    maps.forEach { m =>
+      m.forEach { (k, v) =>
+        v match {
+          case df: Dataset[_] if k._1 eq s => out += df.toDF()
+          case _ => ()
+        }
+      }
+    }
+    out.result()
   }
 }

@@ -24,16 +24,12 @@ object Tables {
   private val standardNames = Set("region", "nation", "customer",
     "supplier", "part", "orders", "lineitem", "events", "documents",
     "embeddings")
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  SessionCaches.register(relationCache)
+  private val relationCache = SessionCaches.memo[DataFrame]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    if (standardNames(name)) {
-      SessionCaches.ensureHook(spark)
-      relationCache.computeIfAbsent((spark, path), kv => kv._1.read.parquet(kv._2))
-    } else spark.read.parquet(path)
+    if (standardNames(name)) relationCache(spark, path)(spark.read.parquet(path))
+    else spark.read.parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")

@@ -26,8 +26,8 @@ import graft.textanalysis.TextAnalysis
   * is THE tokenization pass: bigrams explode once and pre-aggregate
   * to one row per (doc_id, gram) — (doc_id, gram, cnt, n_words,
   * n_trigrams, n_distinct_tg, tail), the per-doc scalars riding each
-  * row — materialized via persist() (columnar, compressed, size
-  * stats for the planner); model training, the vocabulary scalar,
+  * row — materialized once as a row cache (size stats kept for the
+  * planner); model training, the vocabulary scalar,
   * contamination hits, and per-document scoring all read that
   * artifact instead of re-exploding text. The final exact dedup is a
   * group-winner aggregation on the 16-byte text digest (the min
@@ -45,18 +45,12 @@ object Curation {
     * curriculum use. Gate thresholds are the operators' documented
     * defaults.
     *
-    * Cache lifecycle: the internally materialized token artifact is
-    * AUTO-RELEASED when the first action over the returned frame
-    * completes (success or failure) — a one-shot listener keyed on
-    * the frame's observation, so a long-lived session calling this
-    * convenience form doesn't accumulate a corpus-sized cache per
-    * invocation. STRICT one-shot semantics (round-17): the artifact
-    * is a lineage-truncated eager checkpoint, so a SECOND action over
-    * the same frame FAILS once released — callers run exactly one
-    * action per returned frame (the Bench/Verify contract) or use
-    * [[curateManaged]] and release() themselves after the final
-    * action. If no action ever runs, the (already materialized)
-    * artifact stays held until session cleanup.
+    * The internally cached token artifact releases when the first
+    * action over the returned frame completes (success or failure),
+    * so a long-lived session calling this convenience form doesn't
+    * accumulate a corpus-sized cache per invocation; a later action
+    * re-derives it ([[graft.Managed.autoReleased]]). Callers that run
+    * several actions use [[curateManaged]].
     */
   def curate(documents: DataFrame, benchmark: DataFrame,
       nllThreshold: Double = 10.0,
@@ -71,49 +65,18 @@ object Curation {
     * counts are per-gate, not disjoint). This is the operational
     * readout a 100 TB curation run needs — "the LM gate suddenly
     * drops 40%" is a data incident, and it should cost zero extra
-    * cluster time to see.
+    * cluster time to see. The release is keyed on that observation.
     */
   def curateObserved(documents: DataFrame, benchmark: DataFrame,
       nllThreshold: Double = 10.0,
       contaminationThreshold: Double = 0.4)
       : (DataFrame, org.apache.spark.sql.Observation) = {
-    val (out, obs, tokens) = curateInternal(documents, benchmark,
-      nllThreshold, contaminationThreshold)
-    releaseOnFirstAction(out, obs, Seq(tokens))
-    (out, obs)
+    val (managed, obs) = curateManaged(documents, benchmark, nllThreshold,
+      contaminationThreshold)
+    (managed.autoReleased(obs), obs)
   }
 
-  /** Release `tokens` when the first query execution carrying `obs`
-    * completes (the convenience forms' cache lifecycle — see
-    * [[curate]]). The observation NAME identifies the execution: any
-    * action over the returned frame runs the observe() node, which
-    * surfaces in `qe.observedMetrics` under that name — a public,
-    * plan-shape-independent match. The listener unregisters itself
-    * after firing (one-shot), and unpersist is idempotent/async-safe
-    * (the ExecutionListenerBus invokes it off the action thread).
-    */
-  private def releaseOnFirstAction(out: DataFrame,
-      obs: org.apache.spark.sql.Observation,
-      cached: Seq[DataFrame]): Unit = {
-    val spark = out.sparkSession
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def maybeRelease(
-          qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        if (qe.observedMetrics.contains(obs.name)) {
-          cached.foreach(graft.Frames.releaseArtifact)
-          spark.listenerManager.unregister(this)
-        }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = maybeRelease(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = maybeRelease(qe)
-    }
-    spark.listenerManager.register(listener)
-  }
-
-  /** [[curateObserved]] with the internally persisted token artifact
+  /** [[curateObserved]] with the internally cached token artifact
     * under a [[graft.Managed]] lifecycle: long-lived sessions call
     * `release()` (or scope the action with `managed { ... }`) after
     * the final action instead of a blanket `clearCache()` — the same
@@ -123,9 +86,10 @@ object Curation {
       nllThreshold: Double = 10.0,
       contaminationThreshold: Double = 0.4)
       : (graft.Managed, org.apache.spark.sql.Observation) = {
-    val (out, obs, tokens) = curateInternal(documents, benchmark,
+    val a = new graft.Artifacts
+    val (out, obs) = curateInternal(a, documents, benchmark,
       nllThreshold, contaminationThreshold)
-    (new graft.Managed(out, Seq(tokens)), obs)
+    (new graft.Managed(out, a), obs)
   }
 
   /** Per-source curation gate report — the dataset-card readout of a
@@ -145,7 +109,8 @@ object Curation {
   def curationReport(documents: DataFrame, benchmark: DataFrame,
       nllThreshold: Double = 10.0,
       contaminationThreshold: Double = 0.4): DataFrame = {
-    val (flagged, tokens) = flaggedInternal(documents, benchmark,
+    val a = new graft.Artifacts
+    val flagged = flaggedInternal(a, documents, benchmark,
       nllThreshold, contaminationThreshold)
     val passes = !col("repetitive") && !col("contaminated") && !col("unusual")
     // the gate rollup and the kept-count read the SAME flagged frame
@@ -154,9 +119,8 @@ object Curation {
     // the honest-mode bench measured the double evaluation at +2.9 s
     // over count-mode at sf0.1) instead of running the corpus scan +
     // gate-metric join tree once per branch
-    val slim = flagged.select(col("doc_id"), col("source"), col("__dk"),
-        col("repetitive"), col("contaminated"), col("unusual"))
-      .persist()
+    val slim = a.persist(flagged.select(col("doc_id"), col("source"),
+      col("__dk"), col("repetitive"), col("contaminated"), col("unusual")))
     val gates = slim.groupBy(col("source")).agg(
       count(lit(1)).as("docs_in"),
       count(when(col("repetitive"), 1)).as("n_repetitive"),
@@ -177,18 +141,16 @@ object Curation {
       .agg(min(struct(col("doc_id"), col("source"))).as("__w"))
       .groupBy(col("__w.source").as("source"))
       .agg(count(lit(1)).as("n_kept"))
-    val obs = org.apache.spark.sql.Observation()
-    val out = gates.join(survivors, Seq("source"), "left")
-      .withColumn("n_kept", coalesce(col("n_kept"), lit(0L)))
-      .observe(obs, count(lit(1)).as("sources_out"))
-    releaseOnFirstAction(out, obs, Seq(tokens, slim))
-    out
+    new graft.Managed(gates.join(survivors, Seq("source"), "left")
+      .withColumn("n_kept", coalesce(col("n_kept"), lit(0L))), a)
+      .autoReleased()
   }
 
-  private def curateInternal(documents: DataFrame, benchmark: DataFrame,
-      nllThreshold: Double, contaminationThreshold: Double)
-      : (DataFrame, org.apache.spark.sql.Observation, DataFrame) = {
-    val (flagged, tokens) = flaggedInternal(documents, benchmark,
+  private def curateInternal(a: graft.Artifacts, documents: DataFrame,
+      benchmark: DataFrame, nllThreshold: Double,
+      contaminationThreshold: Double)
+      : (DataFrame, org.apache.spark.sql.Observation) = {
+    val flagged = flaggedInternal(a, documents, benchmark,
       nllThreshold, contaminationThreshold)
     val obs = org.apache.spark.sql.Observation()
     val gated = flagged
@@ -207,16 +169,15 @@ object Curation {
       .agg(min(struct(col("doc_id"), col("source"), col("lm_nll"))).as("__w"))
       .select(col("__w.doc_id").as("doc_id"), col("__w.source").as("source"),
         col("__w.lm_nll").as("lm_nll"))
-    (out, obs, tokens)
+    (out, obs)
   }
 
   /** The shared gate-evaluation prefix: every doc with its per-gate
-    * boolean flags (pre-filter), plus the persisted token artifact
-    * the caller must release after its terminal action.
+    * boolean flags (pre-filter); the token artifact is cached in `a`.
     */
-  private def flaggedInternal(documents: DataFrame, benchmark: DataFrame,
-      nllThreshold: Double, contaminationThreshold: Double)
-      : (DataFrame, DataFrame) = {
+  private def flaggedInternal(a: graft.Artifacts, documents: DataFrame,
+      benchmark: DataFrame, nllThreshold: Double,
+      contaminationThreshold: Double): DataFrame = {
     // benchmark gram set — tiny vs the corpus, explicitly broadcast
     // (identical to contaminationStats's bench side)
     val benchGrams = benchmark
@@ -243,15 +204,14 @@ object Curation {
       col("text").isNull.as("__text_null"))
 
     // corpus scan 2 of 2: the one tokenization pass, materialized as
-    // an EAGER ROW CHECKPOINT (round-17): the columnar persist this
-    // replaces spent ~1 s/capstone at sf0.1 ENCODING the gram-string
-    // batches (compression codegen over text columns), which the
-    // three single-read consumers never amortized — the paired A/B
-    // subset measured the capstone family 1.25–1.45× vs 1.07–1.15×
-    // untouched controls on the swap. The checkpoint materializes
-    // UnsafeRows as-is, keeps the planner stats via originStats, and
-    // is freed by the caller's release path (releaseArtifact — plain
-    // unpersist is a no-op on checkpoint blocks). One row per
+    // an EAGER ROW CACHE (Artifacts.rows): a columnar persist spent
+    // ~1 s/capstone at sf0.1 ENCODING the gram-string batches
+    // (compression codegen over text columns), which the three
+    // single-read consumers never amortized — the paired A/B subset
+    // measured the capstone family 1.25–1.45× vs 1.07–1.15× untouched
+    // controls on the swap. The row cache keeps UnsafeRows as-is and
+    // the planner stats, and keeps its lineage, so the frames reading
+    // it re-derive after the release. One row per
     // distinct bigram per doc (`cnt` = multiplicity); per-doc scalars
     // that DON'T need the relational form — word count, trigram
     // totals for the duplicate-trigram fraction, the tail word — ride
@@ -265,7 +225,7 @@ object Curation {
     // ~190 s at sf0.1 for the array_distinct alone) — the
     // segmentWinners layering, where the explode's select carries
     // only plain attributes
-    val tokens = documents
+    val tokens = a.rows(documents
       .select(col("doc_id"), words(col("text")).as("__ws"))
       .select(col("doc_id"), col("__ws"),
         TextAnalysis.ngramsFor(documents)(col("__ws"), 3).as("__tg"))
@@ -296,8 +256,7 @@ object Curation {
         max(col("n_words")).as("n_words"),
         max(col("n_trigrams")).as("n_trigrams"),
         max(col("n_distinct_tg")).as("n_distinct_tg"),
-        max(col("tail")).as("tail"))
-      .localCheckpoint(true)
+        max(col("tail")).as("tail")))
 
     val hasGram = col("gram").isNotNull
     // the corpus-trained bigram LM, derived from the token artifact —
@@ -360,7 +319,7 @@ object Curation {
         when(col("n_grams") > 0,
           round(col("n_hits") / col("n_grams"), 4)).as("contamination"))
 
-    val flagged = base
+    base
       .join(gateMetrics, Seq("doc_id"), "left")
       // docs with <2 words have no bigram rows: lm_nll/contamination
       // default to 0.0 exactly as the standalone operators'
@@ -373,7 +332,6 @@ object Curation {
       .withColumn("contaminated",
         coalesce(col("contamination"), lit(0.0)) >= contaminationThreshold)
       .withColumn("unusual", col("lm_nll") >= nllThreshold)
-    (flagged, tokens)
   }
 
   /** Snapshot diff between two corpus versions keyed on `idCol`: one

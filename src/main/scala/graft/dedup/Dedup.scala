@@ -657,8 +657,8 @@ object Dedup {
     // corpus pass carries only (id, text, sig): string shingle SETS
     // are needed solely to verify candidates, so they're derived
     // later for just the candidate rows — not for the whole corpus
-    val base = minhashSignatures(df, idCol, textCol, n, k, hashMode)
-      .persist()
+    val a = new graft.Artifacts
+    val base = a.persist(minhashSignatures(df, idCol, textCol, n, k, hashMode))
     val candidates = lshCandidates(base, hashMode, k, bands, maxBucketSize)
     // join candidate ids to texts FIRST, shingle after: expressions
     // above a join run only on joined rows, so the expensive shingle
@@ -676,7 +676,7 @@ object Dedup {
       // range shuffle charged to every caller — callers who need
       // presentation order sort at the query edge
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    new graft.Managed(result, Seq(base))
+    new graft.Managed(result, a)
   }
 
   /** Directional-containment near-duplicates: pairs whose shingle
@@ -725,8 +725,8 @@ object Dedup {
     val thr10k = math.round(threshold * 10000)
     require(thr10k >= 0 && thr10k <= 10000,
       s"containment threshold must be in [0, 1]: $threshold")
-    val base = minhashSignatures(df, idCol, textCol, n, k, hashMode)
-      .persist()
+    val a = new graft.Artifacts
+    val base = a.persist(minhashSignatures(df, idCol, textCol, n, k, hashMode))
     val candidates = lshCandidates(base, hashMode, k, bands, maxBucketSize)
     // r=1 banding surfaces ~k× more candidates than the Jaccard
     // pipeline's banded buckets (any single-permutation agreement is
@@ -741,10 +741,9 @@ object Dedup {
     // Sorted once per DOC so the per-PAIR intersection can run as a
     // zero-allocation linear merge (see SortedIntersectSize) instead
     // of a hash-set build per candidate pair.
-    val grams = base.select(col("id"),
+    val grams = a.persist(base.select(col("id"),
         array_sort(shinglesFor(base)(col("text"), n)).as("g"))
-      .withColumn("ng", size(col("g")))
-      .persist()
+      .withColumn("ng", size(col("g"))))
     val aKeeps = col("__na") > col("__nb") ||
       (col("__na") === col("__nb") && col("id_a") < col("id_b"))
     val result = candidates
@@ -762,7 +761,7 @@ object Dedup {
         when(aKeeps, col("id_b")).otherwise(col("id_a")).as("id_dropped"),
         round(col("__inter") / least(col("__na"), col("__nb")), 4)
           .as("containment"))
-    new graft.Managed(result, Seq(base, grams))
+    new graft.Managed(result, a)
   }
 
   // ---------------------------------------------------------------
@@ -803,7 +802,8 @@ object Dedup {
       if (hashMode == "md5") TextHashFunctions.Md5SimHashName
       else TextHashFunctions.SimHashName,
       words(col("text")))
-    val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
+    val a = new graft.Artifacts
+    val base = a.persist(df.select(col(idCol).as("id"), col(textCol).as("text"))
       // null text has no fingerprint and no content to match on, so
       // it is never a candidate: a semantic filter, not a path guard
       .filter(col("text").isNotNull)
@@ -811,8 +811,7 @@ object Dedup {
       .select(col("id"), bandsExpr.as("sh"))
       // empty-token docs have a null fingerprint — they carry no
       // content to match on
-      .filter(col("sh").isNotNull)
-      .persist()
+      .filter(col("sh").isNotNull))
     val buckets = base.select(col("id"),
         posexplode(col("sh")).as(Seq("band", "value")))
       .withColumn("bsz", count(lit(1))
@@ -835,7 +834,7 @@ object Dedup {
       .filter(col("hamming") <= maxDist)
       // UNORDERED (pair lists are unbounded) — sort at the query edge
       .select(col("id_a"), col("id_b"), col("hamming"))
-    new graft.Managed(result, Seq(base))
+    new graft.Managed(result, a)
   }
 
   /** Near-duplicate pairs over ANY 64-bit fingerprint column —
@@ -869,10 +868,10 @@ object Dedup {
       maxBucketSize: Int = 4096): graft.Managed = {
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist must be in [0, 3] for 4-band pigeonhole losslessness, got $maxDist")
-    val base = df
+    val a = new graft.Artifacts
+    val base = a.persist(df
       .select(col(idCol).cast("long").as("id"), col(fpCol).cast("long").as("fp"))
-      .filter(col("fp").isNotNull)
-      .persist()
+      .filter(col("fp").isNotNull))
     // the 8-byte fingerprint rides the bucket rows (unlike simhash's
     // band ARRAYS, carrying it is free), so verification happens
     // INLINE on the band join — no join-back, and the pair `distinct`
@@ -898,7 +897,7 @@ object Dedup {
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"), col("hamming"))
       .distinct()
     // UNORDERED (pair lists are unbounded) — sort at the query edge
-    new graft.Managed(result, Seq(base))
+    new graft.Managed(result, a)
   }
 
   /** Written 64-bit fingerprint index — the media-dedup serving
@@ -1071,34 +1070,32 @@ object Dedup {
     // symmetrize in ONE pass over the input (explode, not union —
     // union's two branches would each re-evaluate an expensive pairs
     // pipeline feeding this)
-    val sym = pairs
-      .select(explode(array(
-        struct(col(aCol).as("a"), col(bCol).as("b")),
-        struct(col(bCol).as("a"), col(aCol).as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist()
-    // fast path: a verified near-dup pair list is typically orders of
-    // magnitude smaller than its corpus — when it fits one task (and
-    // ids are longs), union-find solves it exactly in ONE job instead
-    // of diameter-many shuffle rounds. The gate is BOTH an edge cap
-    // and a byte budget (edges × UnionFindBytesPerEdge), so a
-    // small-heap executor declines the fast path instead of OOMing.
-    // Past either limit, or for non-long ids, the distributed
-    // propagation below is the scale path.
-    val longIds = sym.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    val maxFastEdges =
-      math.min(smallGraphEdges, unionFindByteBudget / UnionFindBytesPerEdge)
-    if (longIds && smallGraphEdges > 0 && sym.count() <= maxFastEdges) {
-      val out = unionFindComponents(sym).localCheckpoint(true)
-      sym.unpersist()
-      return (out, 0)
+    graft.Artifacts.scoped { a =>
+      val sym = a.persist(pairs
+        .select(explode(array(
+          struct(col(aCol).as("a"), col(bCol).as("b")),
+          struct(col(bCol).as("a"), col(aCol).as("b")))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct())
+      // fast path: a verified near-dup pair list is typically orders of
+      // magnitude smaller than its corpus — when it fits one task (and
+      // ids are longs), union-find solves it exactly in ONE job instead
+      // of diameter-many shuffle rounds. The gate is BOTH an edge cap
+      // and a byte budget (edges × UnionFindBytesPerEdge), so a
+      // small-heap executor declines the fast path instead of OOMing.
+      // Past either limit, or for non-long ids, the distributed
+      // propagation below is the scale path.
+      val longIds = sym.schema.fields
+        .forall(_.dataType == org.apache.spark.sql.types.LongType)
+      val maxFastEdges =
+        math.min(smallGraphEdges, unionFindByteBudget / UnionFindBytesPerEdge)
+      if (longIds && smallGraphEdges > 0 && sym.count() <= maxFastEdges)
+        (graft.Artifacts.checkpoint(unionFindComponents(sym)), 0)
+      else if (algorithm == "star")
+        starComponents(a, sym, maxIter, longIds, finishInTaskBytes)
+      else minLabelComponents(a, sym, maxIter, jump = algorithm == "jump")
     }
-    if (algorithm == "star")
-      starComponents(sym, maxIter, longIds, finishInTaskBytes)
-    else minLabelComponents(sym, maxIter, jump = algorithm == "jump")
   }
 
   /** Iterative min-label propagation — one join + one aggregation per
@@ -1120,7 +1117,7 @@ object Dedup {
     * the sum certificate and the min-reachable-id fixed point carry
     * over unchanged.
     */
-  private def minLabelComponents(sym: DataFrame, maxIter: Int,
+  private def minLabelComponents(a: graft.Artifacts, sym: DataFrame, maxIter: Int,
       jump: Boolean = false): (DataFrame, Int) = {
     // labels only ever DECREASE, so the (exact, decimal) label sum is
     // a convergence certificate: unchanged sum ⟺ no label moved. The
@@ -1131,11 +1128,9 @@ object Dedup {
       lit(0).cast("decimal(38,0)")).as("label_sum")
     val nodes = sym.select(col("a").as("node")).distinct()
     val obs0 = org.apache.spark.sql.Observation()
-    var checkpointed = nodes
+    var labels = a.checkpoint(nodes
       .withColumn("component", col("node"))
-      .observe(obs0, count(lit(1)).as("n_nodes"), sumExpr)
-      .localCheckpoint(true)
-    var labels = checkpointed
+      .observe(obs0, count(lit(1)).as("n_nodes"), sumExpr))
     // label frames are (node, component) pairs — 16 bytes of data per
     // node. While the node count is broadcastable, hint it: each round
     // becomes ONE scan of the persisted edges plus a tiny partial-agg
@@ -1145,7 +1140,7 @@ object Dedup {
     val nNodes = obs0.get("n_nodes").asInstanceOf[Long]
     // no edges ⇒ no pair-connected nodes: done before any round (a
     // sum-based certificate over zero rows would otherwise be null)
-    if (nNodes == 0) { sym.unpersist(); return (labels, 0) }
+    if (nNodes == 0) return (a.keep(labels), 0)
     val broadcastLabels = nNodes <= 2000000L
     val hintSmall: DataFrame => DataFrame =
       if (broadcastLabels) broadcast(_) else identity
@@ -1161,12 +1156,11 @@ object Dedup {
     // full-edge exchange — the PageRank adaptive-layout rationale.
     val symSelf0 = sym
       .union(nodes.select(col("node").as("a"), col("node").as("b")))
-    val symSelf = (if (broadcastLabels)
+    val symSelf = a.persist((if (broadcastLabels)
         symSelf0.repartition(
           sym.sparkSession.sessionState.conf.numShufflePartitions,
           col("a"))
-      else symSelf0)
-      .persist()
+      else symSelf0))
     var prevSum = obs0.get("label_sum").asInstanceOf[java.math.BigDecimal]
     var changed = true
     var it = 0
@@ -1176,10 +1170,10 @@ object Dedup {
         .groupBy(col("a"))
         .agg(min(col("component")).as("component"))
         .withColumnRenamed("a", "node")
-      val next = (if (!jump) propagated else {
-        // the jump step reads `propagated` on BOTH join sides —
-        // checkpoint first or the propagation join runs twice
-        val p = propagated.localCheckpoint(true)
+      // the jump step reads `propagated` on BOTH join sides —
+      // checkpoint first or the propagation join runs twice
+      val p = if (jump) a.checkpoint(propagated) else propagated
+      val next = a.checkpoint((if (!jump) p else {
         // left join: every label IS a node id present in the frame
         // (labels are minima over node-id sets that contain them),
         // but coalesce keeps the step total rather than trusting that
@@ -1192,27 +1186,23 @@ object Dedup {
               coalesce(col("y.component"), col("x.component")))
               .as("component"))
       })
-        .observe(obs, sumExpr)
-        .localCheckpoint(true)
+        .observe(obs, sumExpr))
+      if (jump) a.free(p)
       val newSum = obs.get("label_sum").asInstanceOf[java.math.BigDecimal]
       changed = newSum.compareTo(prevSum) != 0
       prevSum = newSum
-      // free the superseded round's checkpoint blocks NOW —
-      // Dataset.unpersist is a no-op on localCheckpoint blocks
-      graft.Frames.freeLocalCheckpoint(checkpointed)
-      checkpointed = next
+      // free the superseded round's checkpoint blocks NOW
+      a.free(labels)
       labels = next
       it += 1
     }
-    symSelf.unpersist()
-    sym.unpersist()
     if (changed) throw new IllegalStateException(
       s"connectedComponents(${if (jump) "jump" else "minlabel"}) did not " +
         s"converge in $maxIter rounds (graph diameter exceeds maxIter) — " +
         "rerun with algorithm=\"star\" (O(log n) rounds) or " +
         "algorithm=\"jump\" (O(log diameter)) or a larger maxIter; " +
         "returning partial labels would be silently wrong")
-    (labels, it)
+    (a.keep(labels), it)
   }
 
   /** Large-star step (Kiveris et al., "Connected Components in
@@ -1292,14 +1282,14 @@ object Dedup {
     * per-round-certificate implementation exactly, whether or not
     * the early count-repeat certificate fired.
     */
-  private def starComponents(sym: DataFrame, maxIter: Int,
+  private def starComponents(a: graft.Artifacts, sym: DataFrame, maxIter: Int,
       longIds: Boolean = true,
       finishInTaskBytes: Long = UnionFindByteBudget): (DataFrame, Int) = {
-    val nodes = sym.select(col("a").as("node")).distinct().localCheckpoint(true)
-    if (nodes.isEmpty) {
-      sym.unpersist()
+    // nodes and the final d are the result's own frames
+    val nodes = graft.Artifacts.checkpoint(
+      sym.select(col("a").as("node")).distinct())
+    if (nodes.isEmpty)
       return (nodes.withColumn("component", col("node")), 0)
-    }
     // the observed edge-set signature: row count + commutative
     // xxhash64 sum (decimal — a long sum can overflow and ANSI throws)
     val setSig = Seq(
@@ -1311,11 +1301,10 @@ object Dedup {
         o.get("edge_hash").asInstanceOf[java.math.BigDecimal])
     // sym is self-loop-free; keep one orientation
     val obs0 = org.apache.spark.sql.Observation()
-    var d = sym.filter(col("a") > col("b"))
+    var d = a.checkpoint(sym.filter(col("a") > col("b"))
       .select(col("a").as("hi"), col("b").as("lo"))
-      .observe(obs0, setSig.head, setSig.tail: _*)
-      .localCheckpoint(true)
-    sym.unpersist()
+      .observe(obs0, setSig.head, setSig.tail: _*))
+    a.free(sym)
     def isStarForest(e: DataFrame): Boolean =
       e.select(col("hi").as("x"), lit(1L).as("ishi"), lit(0L).as("islo"))
         .union(e.select(col("lo").as("x"), lit(0L).as("ishi"), lit(1L).as("islo")))
@@ -1335,7 +1324,7 @@ object Dedup {
     // switch-over rationale below)
     def finishInTask(rounds: Int): (DataFrame, Int) = {
       val uf = unionFindComponents(
-        d.select(col("hi").as("a"), col("lo").as("b")))
+        a.keep(d).select(col("hi").as("a"), col("lo").as("b")))
       val out = nodes.join(uf, nodes("node") === uf("node"), "left")
         .select(nodes("node"),
           coalesce(uf("component"), nodes("node")).as("component"))
@@ -1353,9 +1342,8 @@ object Dedup {
       return finishInTask(0)
     while (!converged && apps <= maxIter) {
       val obs = org.apache.spark.sql.Observation()
-      val next = smallStar(largeStar(d))
-        .observe(obs, setSig.head, setSig.tail: _*)
-        .localCheckpoint(true)
+      val next = a.checkpoint(smallStar(largeStar(d))
+        .observe(obs, setSig.head, setSig.tail: _*))
       apps += 1
       val curSig = sig(obs)
       val setChanged = curSig._1 != prevSig._1 ||
@@ -1365,7 +1353,7 @@ object Dedup {
       // REACHED the fixed point, saving the confirm-by-repeat round
       if (curSig._1 == prevSig._1) converged = isStarForest(next)
       prevSig = curSig
-      d.unpersist()
+      a.free(d)
       d = next
       // geometric-shrink switch-over (the union-find byte-budget
       // heuristic applied MID-contraction): star rounds shrink the
@@ -1389,6 +1377,7 @@ object Dedup {
         "raise maxIter; returning partial labels would be silently wrong")
     // at the fixed point d maps every non-root child to its component
     // minimum; roots (and only roots) are absent from the hi side
+    a.keep(d)
     val out = nodes.join(d, nodes("node") === d("hi"), "left")
       .select(nodes("node"),
         coalesce(d("lo"), nodes("node")).as("component"))
@@ -1660,9 +1649,9 @@ object Dedup {
           threshold, maxBucketSize, hashMode, smallBatchRows,
           IncrementalFastByteBudget)
       else None
-    if (fast.isDefined) return new graft.Managed(fast.get, Seq.empty)
-    val newSigs = minhashSignatures(newDocs, idCol, textCol, n, k, hashMode)
-      .persist()
+    if (fast.isDefined) return new graft.Managed(fast.get, new graft.Artifacts)
+    val a = new graft.Artifacts
+    val newSigs = a.persist(minhashSignatures(newDocs, idCol, textCol, n, k, hashMode))
     def explodeBuckets(sigs: DataFrame, isNew: Boolean) = sigs
       .select(col("id"), lit(isNew).as("is_new"),
         posexplode(bandExprFor(hashMode, k, bands)))
@@ -1722,7 +1711,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       // UNORDERED (pair lists are unbounded) — sort at the query edge
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    new graft.Managed(result, Seq(newSigs))
+    new graft.Managed(result, a)
   }
 
   /** The increment deliverable: the new batch minus near-copies of

@@ -633,11 +633,11 @@ private[graft] trait CurationEntries extends TextEntries with GraphEntries {
   protected def sharedCorpus(s: SparkSession, d: String)(
       build: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val docs = Tables.documents(s, d)
-    val corpus = docs.filter(col("doc_id") % 101 =!= 7)
-      .select(col("doc_id"), col("source"), col("text"))
-      .persist()
+    val a = new graft.Artifacts
+    val corpus = a.persist(docs.filter(col("doc_id") % 101 =!= 7)
+      .select(col("doc_id"), col("source"), col("text")))
     val bench = docs.filter(col("doc_id") % 101 === 7)
-    new graft.Managed(build(corpus, bench), Seq(corpus)).autoReleased()
+    new graft.Managed(build(corpus, bench), a).autoReleased()
   }
 
   protected def docKcoreEdges(corpus: DataFrame): DataFrame = {

@@ -227,11 +227,7 @@ private[graft] trait DedupEntries extends EntryInfra {
       // the signature index is a build-once corpus artifact (same
       // serving model as the written IVF index): built on first use,
       // probed thereafter
-      SessionCaches.ensureHook(s)
-      val index = sigIndexCache.computeIfAbsent((s, d), kv =>
-        Dedup.minhashSignatures(Tables.documents(kv._1, kv._2)
-            .select("doc_id", "text"), "doc_id", "text", hashMode = "md5")
-          .localCheckpoint(true))
+      val index = sigIndex(s, d)
       // smallBatchRows = 0 forces the DISTRIBUTED probe through the
       // oracle (the q_components precedent — the 100 TB path stays
       // hash-gated); the bounded-increment fast path serves the twin
@@ -254,11 +250,7 @@ private[graft] trait DedupEntries extends EntryInfra {
       val newBatch = docs.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           plantedPerturbedText(ws).as("text"))
-      SessionCaches.ensureHook(s)
-      val index = sigIndexCache.computeIfAbsent((s, d), kv =>
-        Dedup.minhashSignatures(Tables.documents(kv._1, kv._2)
-            .select("doc_id", "text"), "doc_id", "text", hashMode = "md5")
-          .localCheckpoint(true))
+      val index = sigIndex(s, d)
       Dedup.dedupIncrement(newBatch, index, "doc_id", "text",
         hashMode = "md5")
         .select(col("doc_id")).orderBy(col("doc_id"))
@@ -806,29 +798,26 @@ private[graft] trait DedupEntries extends EntryInfra {
     * eagerly checkpointed frame, so the cached value is materialized
     * data, not a lazy plan into released caches.
     */
-  protected val dedupClustersCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  SessionCaches.register(dedupClustersCache)
+  protected val dedupClustersCache = SessionCaches.memo[DataFrame]()
 
   // materialized md5 signature index per corpus (see q_dedup_incremental)
-  protected val sigIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  SessionCaches.register(sigIndexCache)
+  protected val sigIndexCache = SessionCaches.memo[DataFrame]()
 
-  protected def dedupClusters(s: SparkSession, d: String): DataFrame = {
-    SessionCaches.ensureHook(s)
-    dedupClustersCache.computeIfAbsent((s, d), kv =>
-      Dedup.minhashClusters(plantedCorpus(kv._1, kv._2), "doc_id", "text"))
-  }
+  protected def sigIndex(s: SparkSession, d: String): DataFrame =
+    sigIndexCache(s, d)(graft.Artifacts.checkpoint(
+      Dedup.minhashSignatures(Tables.documents(s, d).select("doc_id", "text"),
+        "doc_id", "text", hashMode = "md5")))
+
+  protected def dedupClusters(s: SparkSession, d: String): DataFrame =
+    dedupClustersCache(s, d)(
+      Dedup.minhashClusters(plantedCorpus(s, d), "doc_id", "text"))
 
   // same artifact under the md5 signature mode (oracled pipeline);
   // the "::md5" key suffix can't collide with a real dir path
-  protected def dedupClustersMd5(s: SparkSession, d: String): DataFrame = {
-    SessionCaches.ensureHook(s)
-    dedupClustersCache.computeIfAbsent((s, d + "::md5"), _ =>
+  protected def dedupClustersMd5(s: SparkSession, d: String): DataFrame =
+    dedupClustersCache(s, d + "::md5")(
       Dedup.minhashClusters(plantedCorpus(s, d), "doc_id", "text",
         hashMode = "md5"))
-  }
 
   /** Stage-once 8-word window-occurrence table, bucketed by window
     * digest (the substring-dedup family's ingest staging —

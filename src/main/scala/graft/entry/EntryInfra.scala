@@ -101,7 +101,7 @@ private[graft] trait EntryInfra {
       val key = "spark.sql.adaptive.enabled"
       val prev = s.conf.get(key)
       s.conf.set(key, "false")
-      try build.localCheckpoint(true)
+      try graft.Artifacts.checkpoint(build)
       finally {
         // restore BEFORE decrementing: a concurrentBranch admitted the
         // instant aqeOffWindows hits 0 must see AQE already back on —
@@ -126,26 +126,17 @@ private[graft] trait EntryInfra {
     * changes: the collects just run once per (session, corpus) and
     * evict with the session like the resolved-relation cache.
     */
-  private val seedCentCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[Double]]]()
-  private val queryVecCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Vector[Double]]()
-  SessionCaches.register(seedCentCache)
-  SessionCaches.register(queryVecCache)
+  private val seedCentCache = SessionCaches.memo[Seq[Seq[Double]]]()
+  private val queryVecCache = SessionCaches.memo[Vector[Double]]()
 
-  protected def seedCents16(s: SparkSession, d: String): Seq[Seq[Double]] = {
-    SessionCaches.ensureHook(s)
-    seedCentCache.computeIfAbsent((s, d), kv =>
-      graft.similarity.Similarity.seedCentroids(
-        Tables.embeddings(kv._1, kv._2), 16))
-  }
-  protected def queryVec0(s: SparkSession, d: String): Vector[Double] = {
-    SessionCaches.ensureHook(s)
-    queryVecCache.computeIfAbsent((s, d), kv =>
-      Tables.embeddings(kv._1, kv._2).filter(col("vec_id") === 0L)
+  protected def seedCents16(s: SparkSession, d: String): Seq[Seq[Double]] =
+    seedCentCache(s, d)(
+      graft.similarity.Similarity.seedCentroids(Tables.embeddings(s, d), 16))
+  protected def queryVec0(s: SparkSession, d: String): Vector[Double] =
+    queryVecCache(s, d)(
+      Tables.embeddings(s, d).filter(col("vec_id") === 0L)
         .select(col("embedding").cast("array<double>"))
         .head().getSeq[Double](0).toVector)
-  }
 
   /** The shared 5-query batch every batched-serving entry uses —
     * bounded driver collect (5 rows), sorted by id for determinism.

@@ -1101,16 +1101,12 @@ private[graft] trait TextEntries extends EntryInfra {
     * selection model is a serving artifact like the PQ codebook and
     * IVF centroids: train once, score every batch against it.
     */
-  protected val dsirModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.selection.Dsir.DsirModel]()
-  SessionCaches.register(dsirModelCache)
+  protected val dsirModelCache = SessionCaches.memo[graft.selection.Dsir.DsirModel]()
 
-  protected def dsirModelFor(s: SparkSession, d: String): graft.selection.Dsir.DsirModel = {
-    SessionCaches.ensureHook(s)
-    dsirModelCache.computeIfAbsent((s, d), kv =>
-      graft.selection.Dsir.dsirTrainWith(Tables.documents(kv._1, kv._2),
+  protected def dsirModelFor(s: SparkSession, d: String): graft.selection.Dsir.DsirModel =
+    dsirModelCache(s, d)(
+      graft.selection.Dsir.dsirTrainWith(Tables.documents(s, d),
         col("lang") === "en", 1024))
-  }
 
   /** Build-once NB quality classifier per (session, corpus): trained
     * on the ¾ split (doc_id % 4 ≠ 0) with substantial-document
@@ -1118,17 +1114,13 @@ private[graft] trait TextEntries extends EntryInfra {
     * gate queries so the model fits exactly once per Verify/Bench
     * session.
     */
-  protected val nbModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.quality.NbClassifier.NbModel]()
-  SessionCaches.register(nbModelCache)
+  protected val nbModelCache = SessionCaches.memo[graft.quality.NbClassifier.NbModel]()
 
-  protected def nbModelFor(s: SparkSession, d: String): graft.quality.NbClassifier.NbModel = {
-    SessionCaches.ensureHook(s)
-    nbModelCache.computeIfAbsent((s, d), kv =>
+  protected def nbModelFor(s: SparkSession, d: String): graft.quality.NbClassifier.NbModel =
+    nbModelCache(s, d)(
       graft.quality.NbClassifier.nbTrain(
-        Tables.documents(kv._1, kv._2).filter(col("doc_id") % 4 =!= 0),
+        Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0),
         col("n_chars") >= 300, 1024))
-  }
 
   /** Build-once WRITTEN DSIR model per corpus — the full artifact
     * lifecycle under the gate: train → parquet → read back → score
@@ -1466,16 +1458,11 @@ private[graft] trait TextEntries extends EntryInfra {
     * (bpeVocabTokens localCheckpoints; caching prevents per-call
     * re-builds from pinning fresh checkpoint blocks each invocation).
     */
-  protected val bpeVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  SessionCaches.register(bpeVocabCache)
+  protected val bpeVocabCache = SessionCaches.memo[DataFrame]()
 
-  protected def bpeVocabTable(s: SparkSession, d: String): DataFrame = {
-    SessionCaches.ensureHook(s)
-    bpeVocabCache.computeIfAbsent((s, d), kv =>
-      TextAnalysis.bpeVocabTokens(Tables.documents(kv._1, kv._2),
-        bpeFullMerges(kv._1, kv._2)))
-  }
+  protected def bpeVocabTable(s: SparkSession, d: String): DataFrame =
+    bpeVocabCache(s, d)(
+      TextAnalysis.bpeVocabTokens(Tables.documents(s, d), bpeFullMerges(s, d)))
 
   /** Merge table trained on the TRAIN SPLIT ONLY (doc_id % 4 ≠ 0) —
     * the held-out family (coverage / fallback / pack) must measure a
@@ -1501,17 +1488,13 @@ private[graft] trait TextEntries extends EntryInfra {
     * under measurement, and held-out text must not have shaped the
     * merge rules either.
     */
-  protected val bpeTrainVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  SessionCaches.register(bpeTrainVocabCache)
+  protected val bpeTrainVocabCache = SessionCaches.memo[DataFrame]()
 
-  protected def bpeTrainVocabTable(s: SparkSession, d: String): DataFrame = {
-    SessionCaches.ensureHook(s)
-    bpeTrainVocabCache.computeIfAbsent((s, d), kv =>
+  protected def bpeTrainVocabTable(s: SparkSession, d: String): DataFrame =
+    bpeTrainVocabCache(s, d)(
       TextAnalysis.bpeVocabTokens(
-        Tables.documents(kv._1, kv._2).filter(col("doc_id") % 4 =!= 0),
-        bpeTrainMerges(kv._1, kv._2)))
-  }
+        Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0),
+        bpeTrainMerges(s, d)))
 
   /** Shared DuckDB merge-replay construction: the bracket-encoded
     * symbol string of word variable `v` with the merge table applied

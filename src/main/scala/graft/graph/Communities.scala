@@ -61,7 +61,7 @@ object Communities {
   def modularityOfLpa(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 4, smallGraphEdges: Long = PageRank.DefaultSmallGraphEdges,
       fastPathByteBudget: Long = PageRank.FastPathByteBudget): DataFrame = {
-    val und = canonicalUnd(edges, srcCol, dstCol).localCheckpoint(true)
+    val und = graft.Artifacts.checkpoint(canonicalUnd(edges, srcCol, dstCol))
     val labels =
       lpaFromUnd(und, rounds, smallGraphEdges, fastPathByteBudget,
         rawEdges = Some(edges))
@@ -116,29 +116,28 @@ object Communities {
     // exchanges. Released after the last round; the returned frame
     // reads only the final checkpointed label frame.
     val width = und.sparkSession.sessionState.conf.numShufflePartitions
-    val sym = und.unionByName(
-      und.select(col("v").as("u"), col("u").as("v")))
-      .repartition(width, col("u"))
-      .persist()
-    var labels = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      // max(struct(count, -label)) = most frequent label, ties to the
-      // smallest — one aggregate, no window sort
-      val next = sym
-        .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
-        .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
-        .groupBy(col("u"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("u").as("node"), (-col("m.nl")).as("label"))
-        .localCheckpoint(true)
-      graft.Frames.freeLocalCheckpoint(labels)
-      labels = next
+    val labels = graft.Artifacts.scoped { a =>
+      val sym = a.persist(und.unionByName(
+        und.select(col("v").as("u"), col("u").as("v")))
+        .repartition(width, col("u")))
+      var labels = a.checkpoint(sym.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("label")))
+      for (_ <- 1 to rounds) {
+        // max(struct(count, -label)) = most frequent label, ties to the
+        // smallest — one aggregate, no window sort
+        val next = a.checkpoint(sym
+          .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
+          .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
+          .groupBy(col("u"))
+          .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+          .select(col("u").as("node"), (-col("m.nl")).as("label")))
+        a.free(labels)
+        labels = next
+      }
+      // the final label frame is checkpointed (self-contained) — the
+      // edge cache has no consumer left
+      a.keep(labels)
     }
-    // the final label frame is checkpointed (self-contained) — the
-    // edge cache has no consumer left
-    sym.unpersist()
     val canon = labels.groupBy(col("label"))
       .agg(min(col("node")).as("community"))
     labels.join(canon, Seq("label"))
@@ -398,21 +397,20 @@ object Communities {
     */
   def modularity(edges: DataFrame, labels: DataFrame,
       srcCol: String, dstCol: String): DataFrame =
-    modularityFromUnd(edges
+    modularityFromUnd(graft.Artifacts.checkpoint(edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-      .localCheckpoint(true), labels)
+      .distinct()), labels)
 
   /** [[modularity]] over an ALREADY-CANONICAL (and materialized)
     * undirected edge frame — the shared-build path.
     */
   private def modularityFromUnd(und: DataFrame,
       labels: DataFrame): DataFrame = {
-    val lab = labels.select(col("node"), col("community"))
-      .localCheckpoint(true)
+    val lab = graft.Artifacts.checkpoint(
+      labels.select(col("node"), col("community")))
     val deg = und.select(col("u").as("node"))
       .unionByName(und.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))

@@ -74,7 +74,8 @@ object KCore {
     // next re-reads the canonicalization — persist across the gate
     // (the personalizedPageRank gating shape) and release once the
     // chosen path has materialized its own frame
-    val und = if (smallGraphEdges > 0) und0.persist() else und0
+    val a = new graft.Artifacts
+    val und = if (smallGraphEdges > 0) a.persist(und0) else und0
     val longIds = und.schema.fields
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
     val maxFastEdges =
@@ -86,7 +87,7 @@ object KCore {
       // fully consumed by the time it returns (unpersist also on the
       // loud budget-exhaustion throw)
       try return fastKCore(und, k, maxRounds)
-      finally und.unpersist()
+      finally a.free(und)
     // both directions, so degree is one groupBy on the first column.
     // ONE layout exchange for the whole peel (round-16, guide §2.4):
     // sym hash-partitions on the degree key u here; each round's two
@@ -102,61 +103,56 @@ object KCore {
     // hash(u) layout (the lpaFromUnd rationale). Released by the
     // returned members frame's first action (Managed.autoReleased).
     val width = und.sparkSession.sessionState.conf.numShufflePartitions
-    val sym = und.unionByName(
+    val sym = a.persist(und.unionByName(
       und.select(col("v").as("u"), col("u").as("v")))
-      .repartition(width, col("u"))
-      .persist()
+      .repartition(width, col("u")))
     // alive count rides the checkpoint materialization as an
     // observation — no standalone count() job per frame (round-16;
     // the minLabelComponents certificate pattern)
     val obs0 = org.apache.spark.sql.Observation()
-    var alive = sym.select(col("u").as("node")).distinct()
-      .observe(obs0, count(lit(1)).as("n_alive"))
-      .localCheckpoint(true)
+    var alive = a.checkpoint(sym.select(col("u").as("node")).distinct()
+      .observe(obs0, count(lit(1)).as("n_alive")))
     var aliveCount = obs0.get("n_alive").asInstanceOf[Long]
     // release und only AFTER the init frame above has materialized
     // sym (round-17, advice: sym is lazily persisted — an earlier
     // unpersist made sym's first fill re-derive the canonical edge
     // frame uncached)
-    if (smallGraphEdges > 0) und.unpersist()
+    if (smallGraphEdges > 0) a.free(und)
     var rounds = 0
     var done = aliveCount == 0
     while (!done) {
       val obs = org.apache.spark.sql.Observation()
-      val next = sym
+      val next = a.checkpoint(sym
         .join(alive.select(col("node").as("u")), Seq("u"))
         .join(alive.select(col("node").as("v")), Seq("v"))
         .groupBy(col("u")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("u").as("node"))
-        .observe(obs, count(lit(1)).as("n_alive"))
-        .localCheckpoint(true)
+        .observe(obs, count(lit(1)).as("n_alive")))
       val nextCount = obs.get("n_alive").asInstanceOf[Long]
       if (nextCount == aliveCount) {
         // fixpoint confirmed — the budget only limits SHRINK rounds,
         // so reaching it on the confirming pass is success
-        graft.Frames.freeLocalCheckpoint(next)
+        a.free(next)
         done = true
       } else if (rounds >= maxRounds) {
         // a silent early stop would return a SUPERSET of the k-core;
         // fail loudly instead — the caller raises the budget
-        graft.Frames.freeLocalCheckpoint(next)
-        sym.unpersist()
+        a.release()
         throw new IllegalStateException(
           s"k-core did not reach a fixpoint in $maxRounds rounds " +
             s"($aliveCount nodes still alive) — raise maxRounds")
       } else {
         // the superseded round's checkpoint blocks free NOW, not at
-        // GC time — Dataset.unpersist is a no-op on localCheckpoint
-        // blocks (CacheManager never tracked them), so free the
-        // underlying checkpointed RDD itself
-        graft.Frames.freeLocalCheckpoint(alive)
+        // GC time
+        a.free(alive)
         alive = next
         aliveCount = nextCount
         rounds += 1
         if (aliveCount == 0) done = true
       }
     }
+    a.keep(alive)
     val members = sym
       .join(alive.select(col("node").as("u")), Seq("u"))
       .join(alive.select(col("node").as("v")), Seq("v"))
@@ -164,9 +160,8 @@ object KCore {
       .select(col("u").as("node"), col("core_degree"))
       .orderBy(col("node"))
     // the readout still scans the edge cache — release it after the
-    // caller's first action (one-shot; a second action re-derives the
-    // canonical edges from lineage, the repo's autoReleased contract)
-    KCoreResult(new graft.Managed(members, Seq(sym)).autoReleased(), rounds)
+    // caller's first action; the final alive frame is the result's own
+    KCoreResult(new graft.Managed(members, a).autoReleased(), rounds)
   }
 
   /** In-task synchronous peel over the canonical edge array — the
@@ -252,7 +247,7 @@ object KCore {
             }
           }
           .toDF("node", "core_degree", "rounds", "alive")
-        df.localCheckpoint(true)
+        graft.Artifacts.checkpoint(df)
       } catch {
         // surface the budget-exhaustion failure as the documented
         // IllegalStateException, not a wrapped SparkException

@@ -85,8 +85,8 @@ object Triangles {
     // not the aggregates above it) — the triangleStats rationale,
     // released after the caller's first action (round-16)
     val (und0, deg) = undAndDeg(edges, srcCol, dstCol)
-    val und = und0.persist()
-    new graft.Managed(assortativityFrom(und, deg), Seq(und)).autoReleased()
+    val a = new graft.Artifacts
+    new graft.Managed(assortativityFrom(a.persist(und0), deg), a).autoReleased()
   }
 
   /** [[assortativity]] over an already-built (und, deg) pair — the
@@ -125,57 +125,55 @@ object Triangles {
           .as("assortativity"))
   }
 
-  /** Per-node degrees plus the closed-triangle frame (s, a, b) —
-    * shared by the per-node rollup and the global count. The
-    * canonical edge frame and the degree frame are PERSISTED (both
-    * are read by multiple branches of every consumer: deg reads und
-    * twice, the orientation joins read deg twice, the final readout
-    * joins deg again) and returned for the caller's Managed
-    * lifecycle — without the cache the honest full-output cost
-    * re-derives the orders-scan→union→distinct chain once per
-    * branch (measured +1.5 s at sf0.1, tools.ProfileTriangles).
+  /** The canonical edges, per-node degrees and the closed-triangle
+    * frame (s, a, b) — shared by the per-node rollup and the global
+    * count. The canonical edge frame and the degree frame are
+    * PERSISTED in `owner` (both are read by multiple branches of every
+    * consumer: deg reads und twice, the orientation joins read deg
+    * twice, the final readout joins deg again) — without the cache
+    * the honest full-output cost re-derives the
+    * orders-scan→union→distinct chain once per branch (measured
+    * +1.5 s at sf0.1, tools.ProfileTriangles).
     */
-  private def degreesAndTriangles(edges: DataFrame, srcCol: String,
-      dstCol: String): (DataFrame, DataFrame, Seq[DataFrame]) = {
+  private def degreesAndTriangles(owner: graft.Artifacts, edges: DataFrame,
+      srcCol: String, dstCol: String): (DataFrame, DataFrame, DataFrame) = {
     val (und0, deg0) = undAndDeg(edges, srcCol, dstCol)
-    val und = und0.persist()
-    val deg = deg0.persist()
-    val (tri, oriented) = trianglesFromUndDeg(und, deg)
-    (deg, tri, Seq(und, deg, oriented))
+    val und = owner.persist(und0)
+    val deg = owner.persist(deg0)
+    (und, deg, trianglesFromUndDeg(owner, und, deg))
   }
 
   /** The oriented 2-path enumeration over an (und, deg) pair the
     * caller already owns (and has persisted). Returns the closed
-    * triangles AND the persisted oriented-edge cache the caller must
-    * release (round-16): `oriented` is read by THREE consumers (both
+    * triangles; the oriented-edge cache is persisted in `owner`
+    * (round-16): `oriented` is read by THREE consumers (both
     * 2-path legs and the closure probe), each of which re-derived
     * the two degree joins; caching it hash-partitioned on `src`
     * additionally makes the 2-path self-join exchange-free (both
     * legs arrive clustered on the join key — guide §2.4).
     */
-  private def trianglesFromUndDeg(und: DataFrame, deg: DataFrame)
-      : (DataFrame, DataFrame) = {
+  private def trianglesFromUndDeg(owner: graft.Artifacts, und: DataFrame,
+      deg: DataFrame): DataFrame = {
     val withDeg = und
       .join(deg.select(col("node").as("u"), col("degree").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("degree").as("dv")), "v")
     val uLower = rankLt(col("du"), col("u"), col("dv"), col("v"))
     // oriented edge (src → dst) with the DST's rank carried along so
     // the 2-path join can order its two legs without a re-join
-    val oriented = withDeg.select(
+    val oriented = owner.persist(withDeg.select(
       when(uLower, col("u")).otherwise(col("v")).as("src"),
       when(uLower, col("v")).otherwise(col("u")).as("dst"),
       when(uLower, col("dv")).otherwise(col("du")).as("dd"))
       .repartition(und.sparkSession.sessionState.conf.numShufflePartitions,
-        col("src"))
-      .persist()
+        col("src")))
     val o1 = oriented.select(col("src"), col("dst").as("a"), col("dd").as("da"))
     val o2 = oriented.select(col("src"), col("dst").as("b"), col("dd").as("db"))
     val paths = o1.join(o2, Seq("src"))
       .filter(rankLt(col("da"), col("a"), col("db"), col("b")))
       .select(col("src").as("s"), col("a"), col("b"))
-    (paths.join(oriented,
+    paths.join(oriented,
       paths("a") === oriented("src") && paths("b") === oriented("dst"))
-      .select(col("s"), col("a"), col("b")), oriented)
+      .select(col("s"), col("a"), col("b"))
   }
 
   /** The shared (node, degree, triangles) → clustering readout: the
@@ -196,7 +194,8 @@ object Triangles {
     */
   def triangleStatsManaged(edges: DataFrame, srcCol: String,
       dstCol: String): graft.Managed = {
-    val (deg, triangles, cached) = degreesAndTriangles(edges, srcCol, dstCol)
+    val a = new graft.Artifacts
+    val (_, deg, triangles) = degreesAndTriangles(a, edges, srcCol, dstCol)
     // ONE pass over the closed-triangle frame: explode the three
     // corners in place. The union-of-three-projections form re-ran
     // the whole 2-path join subtree once per corner (exchange reuse
@@ -210,7 +209,7 @@ object Triangles {
       deg.join(triPerNode, Seq("node"), "left")
         .select(col("node"), col("degree"),
           coalesce(col("triangles"), lit(0L)).as("triangles")))
-    new graft.Managed(stats, cached)
+    new graft.Managed(stats, a)
   }
 
   /** Per-node triangle/clustering readout; the internal edge/degree
@@ -230,7 +229,8 @@ object Triangles {
       fastPathByteBudget: Long = PageRank.FastPathByteBudget): DataFrame = {
     if (smallGraphEdges > 0) {
       val (und0, deg0) = undAndDeg(edges, srcCol, dstCol)
-      val und = und0.persist()
+      val a = new graft.Artifacts
+      val und = a.persist(und0)
       val longIds = und.schema.fields
         .forall(_.dataType == org.apache.spark.sql.types.LongType)
       val maxFastEdges =
@@ -239,10 +239,10 @@ object Triangles {
           und.count() <= maxFastEdges)
         // fastTriangleStats localCheckpoints eagerly — und is fully
         // consumed by the time it returns
-        try return fastTriangleStats(und) finally und.unpersist()
+        try return fastTriangleStats(und) finally a.release()
       // distributed fallback reusing the already-persisted und
-      val deg = deg0.persist()
-      val (tri, oriented) = trianglesFromUndDeg(und, deg)
+      val deg = a.persist(deg0)
+      val tri = trianglesFromUndDeg(a, und, deg)
       val triPerNode = tri
         .select(explode(array(col("s"), col("a"), col("b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
@@ -250,7 +250,7 @@ object Triangles {
         deg.join(triPerNode, Seq("node"), "left")
           .select(col("node"), col("degree"),
             coalesce(col("triangles"), lit(0L)).as("triangles")))
-      new graft.Managed(stats, Seq(und, deg, oriented)).autoReleased()
+      new graft.Managed(stats, a).autoReleased()
     } else triangleStatsManaged(edges, srcCol, dstCol).autoReleased()
   }
 
@@ -328,8 +328,7 @@ object Triangles {
         }
       }
       .toDF("node", "degree", "triangles")
-      .localCheckpoint(true)
-    clusteringReadout(base)
+    clusteringReadout(graft.Artifacts.checkpoint(base))
   }
 
   /** Global triangle count — one row, counted straight off the
@@ -338,9 +337,10 @@ object Triangles {
     */
   def triangleCount(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val (_, triangles, cached) = degreesAndTriangles(edges, srcCol, dstCol)
-    new graft.Managed(
-      triangles.agg(count(lit(1)).as("n_triangles")), cached).autoReleased()
+    val a = new graft.Artifacts
+    val (_, _, triangles) = degreesAndTriangles(a, edges, srcCol, dstCol)
+    new graft.Managed(triangles.agg(count(lit(1)).as("n_triangles")), a)
+      .autoReleased()
   }
 
   /** One-row whole-graph readout: node/edge counts, global triangle
@@ -353,16 +353,17 @@ object Triangles {
     */
   def graphSummary(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val (deg, triangles, cached) = degreesAndTriangles(edges, srcCol, dstCol)
+    val a = new graft.Artifacts
+    val (und, deg, triangles) = degreesAndTriangles(a, edges, srcCol, dstCol)
     // coalesce: an edgeless graph has sum(degree) = NULL, but the
     // readout (and the count(*)-form oracle) should say 0 edges
     val nodes = deg.agg(count(lit(1)).as("n_nodes"),
       (coalesce(sum(col("degree")), lit(0L)) / 2).cast("long").as("n_edges"))
     val tri = triangles.agg(count(lit(1)).as("n_triangles"))
-    val asrt = assortativityFrom(cached.head, deg)
+    val asrt = assortativityFrom(und, deg)
       .select(col("assortativity"))
     new graft.Managed(
-      nodes.crossJoin(broadcast(tri)).crossJoin(broadcast(asrt)), cached)
+      nodes.crossJoin(broadcast(tri)).crossJoin(broadcast(asrt)), a)
       .autoReleased()
   }
 }

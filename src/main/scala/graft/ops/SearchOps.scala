@@ -88,7 +88,8 @@ object SearchOps {
   def searchManaged(documents: DataFrame, q: String,
       lang: Option[String] = None, minChars: Option[Long] = None,
       fuzzy: Boolean = false, from: Int = 0, size: Int = 10): graft.Managed =
-    new graft.Managed(search(documents, q, lang, minChars, fuzzy, from, size), Nil)
+    new graft.Managed(search(documents, q, lang, minChars, fuzzy, from, size),
+      new graft.Artifacts)
 
   /** The reference's full GET /search semantics over the ENRICHED
     * corpus (search/app/main.py:100-109): text match + quality-score
@@ -114,7 +115,7 @@ object SearchOps {
       minQualityScore: Double, excludePii: Boolean,
       from: Int = 0, size: Int = 10): graft.Managed =
     new graft.Managed(searchEnriched(enriched, q, minQualityScore,
-      excludePii, from, size), Nil)
+      excludePii, from, size), new graft.Artifacts)
 
   /** ES's `index.max_result_window`: the deepest page end, `from +
     * size`, a search serves. The bounded top-k allocates `from + size`
@@ -448,13 +449,14 @@ object SearchOps {
         "(no doclens sidecar) — rebuild it with writeBm25Index first")
     val tombDir = path + "/tombstones"
     val ids = deleteIds.select(col("doc_id")).distinct()
-    val newIds = (if (fsFor(spark, path).exists(hadoopPath(tombDir))) {
-      val prior = spark.read.parquet(tombDir)
-        .filter(col("batch_id") =!= batchKey) // retry self-exclusion
-        .select(col("doc_id"))
-      ids.join(prior, Seq("doc_id"), "left_anti")
-    } else ids).localCheckpoint(true)
-    try {
+    graft.Artifacts.scoped { a =>
+      val newIds = a.checkpoint(
+        if (fsFor(spark, path).exists(hadoopPath(tombDir))) {
+          val prior = spark.read.parquet(tombDir)
+            .filter(col("batch_id") =!= batchKey) // retry self-exclusion
+            .select(col("doc_id"))
+          ids.join(prior, Seq("doc_id"), "left_anti")
+        } else ids)
       // tombstones first: exclusion (ranking correctness) lands
       // before the stats adjustment — a failure in between leaves a
       // stale-but-consistent average, and the same-key retry
@@ -483,7 +485,7 @@ object SearchOps {
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
         .parquet(path + "/stats")
-    } finally graft.Frames.freeLocalCheckpoint(newIds)
+    }
   }
 
   /** Make the logical deletions physical: rewrite postings and
@@ -506,34 +508,29 @@ object SearchOps {
     val fs = fsFor(spark, path)
     val tombDir = hadoopPath(path + "/tombstones")
     if (!fs.exists(tombDir)) return
-    val tomb = spark.read.parquet(path + "/tombstones")
-      .select(col("doc_id")).distinct().localCheckpoint(true)
-    val kept = Seq(
-      (path + "/postings", Seq("bucket", "batch_id")),
-      (path + "/doclens", Seq("dbucket", "batch_id"))).map {
-      case (dir, parts) =>
-        // materialize BEFORE overwriting the directory being read
-        (dir, parts,
-          spark.read.parquet(dir)
-            .join(graft.Frames.hintTombstones(tomb, path + "/tombstones"),
-              Seq("doc_id"), "left_anti")
-            .withColumn("batch_id", lit("build"))
-            .localCheckpoint(true))
-    }
-    val stats = spark.read.parquet(path + "/stats")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-      .withColumn("batch_id", lit("build"))
-      .localCheckpoint(true)
-    try {
+    graft.Artifacts.scoped { a =>
+      val tomb = a.checkpoint(spark.read.parquet(path + "/tombstones")
+        .select(col("doc_id")).distinct())
+      val kept = Seq(
+        (path + "/postings", Seq("bucket", "batch_id")),
+        (path + "/doclens", Seq("dbucket", "batch_id"))).map {
+        case (dir, parts) =>
+          // materialize BEFORE overwriting the directory being read
+          (dir, parts,
+            a.checkpoint(spark.read.parquet(dir)
+              .join(graft.Frames.hintTombstones(tomb, path + "/tombstones"),
+                Seq("doc_id"), "left_anti")
+              .withColumn("batch_id", lit("build"))))
+      }
+      val stats = a.checkpoint(spark.read.parquet(path + "/stats")
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+        .withColumn("batch_id", lit("build")))
       kept.foreach { case (dir, parts, live) =>
         live.write.mode("overwrite").partitionBy(parts: _*).parquet(dir)
       }
       stats.write.mode("overwrite").partitionBy("batch_id")
         .parquet(path + "/stats")
       fs.delete(tombDir, true)
-    } finally {
-      (stats +: kept.map(_._3)).foreach(graft.Frames.freeLocalCheckpoint)
-      graft.Frames.freeLocalCheckpoint(tomb)
     }
   }
 
@@ -611,49 +608,45 @@ object SearchOps {
     val keptDels = delNames & keepSet
     def inSet(s: Set[String])(c: Column): Column =
       if (s.isEmpty) lit(false) else c.cast("string").isin(s.toSeq: _*)
-    val foldedTombIds = (
-      if (foldDels.nonEmpty)
-        spark.read.parquet(path + "/tombstones")
-          .filter(inSet(foldDels)(col("batch_id")))
-          .select(col("doc_id")).distinct()
-      else spark.read.parquet(path + "/doclens")
-        .select(col("doc_id")).filter(lit(false))
-      ).localCheckpoint(true)
-    // the kept-part of the folded corrections, re-derived exactly
-    // from the kept batches' doclens (the deleteFromBm25Index rule:
-    // corrections always come from stored lengths, never recomputed
-    // text)
-    val retained = foldedTombIds.join(
-        spark.read.parquet(path + "/doclens")
-          .filter(inSet(keptApps)(col("batch_id")))
-          .select(col("doc_id"), col("dl")),
-        Seq("doc_id"))
-      .localCheckpoint(true)
-    val retAgg = retained
-      .agg(count(lit(1)).as("cnt"),
-        coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
-    val (retCnt, retSdl) = (retAgg.getLong(0), retAgg.getLong(1))
-    // folded "build" ledger row = folded appends + folded delete
-    // corrections, with the kept-part pulled back out (it
-    // re-materializes as "del-retained")
-    val foldLedgerNames = foldApps ++ foldDels.map("del-" + _)
-    val foldCnt = ledgerRows.filter(r => foldLedgerNames(r._1))
-      .map(_._2).sum + retCnt
-    val foldSdl = ledgerRows.filter(r => foldLedgerNames(r._1))
-      .map(_._3).sum + retSdl
-    val postFolded = spark.read.parquet(path + "/postings")
-      .filter(inSet(foldApps)(col("batch_id")))
-      .join(graft.Frames.hintTombstones(foldedTombIds,
-        path + "/tombstones"), Seq("doc_id"), "left_anti")
-      .withColumn("batch_id", lit("build"))
-      .localCheckpoint(true)
-    val dlFolded = spark.read.parquet(path + "/doclens")
-      .filter(inSet(foldApps)(col("batch_id")))
-      .join(graft.Frames.hintTombstones(foldedTombIds,
-        path + "/tombstones"), Seq("doc_id"), "left_anti")
-      .withColumn("batch_id", lit("build"))
-      .localCheckpoint(true)
-    try {
+    graft.Artifacts.scoped { a =>
+      val foldedTombIds = a.checkpoint(
+        if (foldDels.nonEmpty)
+          spark.read.parquet(path + "/tombstones")
+            .filter(inSet(foldDels)(col("batch_id")))
+            .select(col("doc_id")).distinct()
+        else spark.read.parquet(path + "/doclens")
+          .select(col("doc_id")).filter(lit(false)))
+      // the kept-part of the folded corrections, re-derived exactly
+      // from the kept batches' doclens (the deleteFromBm25Index rule:
+      // corrections always come from stored lengths, never recomputed
+      // text)
+      val retained = a.checkpoint(foldedTombIds.join(
+          spark.read.parquet(path + "/doclens")
+            .filter(inSet(keptApps)(col("batch_id")))
+            .select(col("doc_id"), col("dl")),
+          Seq("doc_id")))
+      val retAgg = retained
+        .agg(count(lit(1)).as("cnt"),
+          coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
+      val (retCnt, retSdl) = (retAgg.getLong(0), retAgg.getLong(1))
+      // folded "build" ledger row = folded appends + folded delete
+      // corrections, with the kept-part pulled back out (it
+      // re-materializes as "del-retained")
+      val foldLedgerNames = foldApps ++ foldDels.map("del-" + _)
+      val foldCnt = ledgerRows.filter(r => foldLedgerNames(r._1))
+        .map(_._2).sum + retCnt
+      val foldSdl = ledgerRows.filter(r => foldLedgerNames(r._1))
+        .map(_._3).sum + retSdl
+      val postFolded = a.checkpoint(spark.read.parquet(path + "/postings")
+        .filter(inSet(foldApps)(col("batch_id")))
+        .join(graft.Frames.hintTombstones(foldedTombIds,
+          path + "/tombstones"), Seq("doc_id"), "left_anti")
+        .withColumn("batch_id", lit("build")))
+      val dlFolded = a.checkpoint(spark.read.parquet(path + "/doclens")
+        .filter(inSet(foldApps)(col("batch_id")))
+        .join(graft.Frames.hintTombstones(foldedTombIds,
+          path + "/tombstones"), Seq("doc_id"), "left_anti")
+        .withColumn("batch_id", lit("build")))
       // drop every folded batch directory FIRST — including the old
       // "build" partitions: a bucket whose folded rows were all
       // tombstoned writes nothing below, and a stale base directory
@@ -700,9 +693,6 @@ object SearchOps {
           .option("partitionOverwriteMode", "dynamic")
           .mode("overwrite").parquet(path + "/stats")
       }
-    } finally {
-      Seq(foldedTombIds, retained, postFolded, dlFolded)
-        .foreach(graft.Frames.freeLocalCheckpoint)
     }
   }
 

@@ -99,9 +99,9 @@ object Similarity {
         posexplode(asDouble(col("embedding"))).as(Seq("dim", "x")))
       .select(col("label"), col("dim"),
         floor(col("x") * lit(scale.toDouble)).cast("long").as("xi"))
-    val byLabelDim = comp.groupBy(col("label"), col("dim"))
-      .agg(sum(col("xi")).as("s"), count(lit(1)).as("nv"))
-      .localCheckpoint(true)
+    val byLabelDim = graft.Artifacts.checkpoint(
+      comp.groupBy(col("label"), col("dim"))
+        .agg(sum(col("xi")).as("s"), count(lit(1)).as("nv")))
     val lv = byLabelDim.groupBy(col("label"))
       .agg(max(col("nv")).as("n_vecs"),
         transform(array_sort(collect_list(struct(col("dim"),
@@ -805,12 +805,12 @@ object Similarity {
           else live0.withColumn("batch_id", lit("build"))
         (collapsed, Seq("cell", "batch_id"))
       } else (live0, Seq("cell"))
-    val mat = live.localCheckpoint(true)
-    try {
-      mat.write.mode("overwrite").partitionBy(parts: _*).parquet(path)
+    graft.Artifacts.scoped { a =>
+      a.checkpoint(live).write.mode("overwrite").partitionBy(parts: _*)
+        .parquet(path)
       fs.delete(tombDir, true)
       prefixes.foreach(p => registerIvfDeleteStreamPrefix(spark, path, p))
-    } finally graft.Frames.freeLocalCheckpoint(mat)
+    }
   }
 
   /** The maintained index's batch INVENTORY as a table — the
@@ -925,9 +925,9 @@ object Similarity {
       .join(kept.select(col("vec_id")).distinct(), Seq("vec_id"),
         "left_semi")
       .withColumn("batch_id", lit("retained"))
-    val matLive = foldedLive.localCheckpoint(true)
-    val matTombs = retained.localCheckpoint(true)
-    try {
+    graft.Artifacts.scoped { a =>
+      val matLive = a.checkpoint(foldedLive)
+      val matTombs = a.checkpoint(retained)
       // drop every non-kept batch directory FIRST — including stale
       // collapse-target partitions: a cell whose folded rows were all
       // tombstoned writes nothing below, and its old base directory
@@ -948,9 +948,6 @@ object Similarity {
       if (!matTombs.isEmpty)
         matTombs.write.partitionBy("batch_id").mode("overwrite")
           .parquet(path + "/_tombstones")
-    } finally {
-      graft.Frames.freeLocalCheckpoint(matLive)
-      graft.Frames.freeLocalCheckpoint(matTombs)
     }
   }
 
@@ -1600,12 +1597,12 @@ object Similarity {
     */
   def embeddingNearDuplicatesManaged(embeddings: DataFrame, threshold: Double,
       nPlanes: Int = 8, hashMode: String = "xx"): graft.Managed = {
-    val b = embeddings
+    val a = new graft.Artifacts
+    val b = a.persist(embeddings
       .repartition(embeddings.sparkSession.sparkContext.defaultParallelism)
       .select(col("vec_id"), col("embedding"),
         bucketExprFor(embeddings, hashMode)(col("embedding"), nPlanes)
-          .as("bucket"))
-      .persist()
+          .as("bucket")))
     val result = b.as("l").join(b.as("r"),
         col("l.bucket") === col("r.bucket") &&
         col("l.vec_id") < col("r.vec_id"))
@@ -1613,7 +1610,7 @@ object Similarity {
         round(cosineFor(embeddings)(col("l.embedding"), col("r.embedding")), 4).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
       // UNORDERED (pair lists are unbounded) — sort at the query edge
-    new graft.Managed(result, Seq(b))
+    new graft.Managed(result, a)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -1651,10 +1648,11 @@ object Similarity {
     // divide would throw (matching composed Divide), under non-ANSI it
     // nulls — filtering first gives the documented exclusion in both
     // modes, still narrow
-    val assigned = cellAssigned(embeddings.filter(aggregate(
+    val a = new graft.Artifacts
+    val assigned = a.persist(cellAssigned(embeddings.filter(aggregate(
       asDouble(col("embedding")), lit(0.0), (acc, x) => acc + x * x) > 0),
-      cents).persist()
-    new graft.Managed(semanticSurvivors(assigned)(threshold), Seq(assigned))
+      cents))
+    new graft.Managed(semanticSurvivors(assigned)(threshold), a)
   }
 
   /** SemDeDup served from a written IVF index (see [[VectorStore.write]]):

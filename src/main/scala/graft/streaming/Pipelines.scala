@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
-import graft.Frames.freeLocalCheckpoint
+import graft.Artifacts
 import graft.cdc.Cdc
 import graft.quality.RuleBasedScorer
 import graft.similarity.{Similarity, VectorCodec, VectorStore}
@@ -297,8 +297,8 @@ object Pipelines {
         fs.delete(bakRoot, true)
       }
       fs.delete(tmp, true)
-      withBucket.persist()
-      try {
+      Artifacts.scoped { a =>
+        a.persist(withBucket)
         // ≤ nBuckets ints per partition — driver-safe
         val dirty = withBucket.select(bucketCol).rdd
           .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
@@ -328,7 +328,7 @@ object Pipelines {
           fs.delete(bakRoot, true)
           fs.delete(tmp, true)
         }
-      } finally withBucket.unpersist()
+      }
     }
 
   /** J2: enrichment lookup — the stream joins the static blob/content
@@ -591,15 +591,15 @@ object Pipelines {
     // materialized BEFORE either write: both the doc rebuild and the
     // digest append derive from this cut, so neither write plan reads
     // the directory it is writing
-    val kept = Dedup.segmentDedupIncrement(batch, seen, "doc_id", "text",
-      segWords).localCheckpoint(true)
-    try {
+    Artifacts.scoped { a =>
+      val kept = a.checkpoint(Dedup.segmentDedupIncrement(batch, seen,
+        "doc_id", "text", segWords))
       val nonEmpty = !kept.isEmpty
       writeBatchPartition(Dedup.rebuildSegmentedDocs(kept, "doc_id", "text"),
         outDir, batchId, nonEmpty)
       writeBatchPartition(kept.select(col("digest")), indexDir, batchId,
         nonEmpty)
-    } finally freeLocalCheckpoint(kept)
+    }
   }
 
   /** Attach a micro-batch sink: the one place every stream in this
@@ -616,30 +616,33 @@ object Pipelines {
     *  - a batch refuses to write while a retention fold holds its target
     *    dir ([[requireNoFoldInProgress]]).
     *
-    * `release` runs once the query terminates: a cache scoped to one
-    * stream must not outlive it. The isActive re-check closes the
-    * window where the query died before the listener registered (a
-    * double release is harmless).
+    * `owner` holds what the stream materializes for its whole life
+    * and releases once the query terminates (or fails to start): a
+    * cache scoped to one stream must not outlive it. The isActive
+    * re-check closes the window where the query died before the
+    * listener registered (a double release is harmless).
     */
   private def startSink(stream: DataFrame, checkpointDir: String,
-      release: () => Unit = () => ())(core: (DataFrame, Long) => Unit)
+      owner: Artifacts = new Artifacts)(core: (DataFrame, Long) => Unit)
       : StreamingQuery = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import StreamingQueryListener._
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch(core)
-      .start()
+    val q =
+      try stream.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .outputMode("append")
+        .foreachBatch(core)
+        .start()
+      catch { case e: Throwable => owner.release(); throw e }
     val streams = q.sparkSession.streams
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) { release(); streams.removeListener(this) }
+        if (e.id == q.id) { owner.release(); streams.removeListener(this) }
     }
     streams.addListener(listener)
-    if (!q.isActive) { release(); streams.removeListener(listener) }
+    if (!q.isActive) { owner.release(); streams.removeListener(listener) }
     q
   }
 
@@ -675,9 +678,10 @@ object Pipelines {
   private def writeBatchOutput(df: DataFrame, dir: String,
       batchId: Long): Unit = {
     requireNoFoldInProgress(df.sparkSession, dir)
-    val cp = df.localCheckpoint(true)
-    try writeBatchPartition(cp, dir, batchId, !cp.isEmpty)
-    finally freeLocalCheckpoint(cp)
+    Artifacts.scoped { a =>
+      val cp = a.checkpoint(df)
+      writeBatchPartition(cp, dir, batchId, !cp.isEmpty)
+    }
   }
 
   /** BOUNDED-HISTORY retention for the batch-stamped CATALOG/OUTPUT
@@ -812,13 +816,12 @@ object Pipelines {
       else ((known -- keepSet - "-1").map(_.toLong).toSeq ++
         readFoldWatermark(fs, root).toSeq)
         .reduceOption((a, b) => math.max(a, b))
-    val folded = base0
-      .filter(!col("batch_id").cast("string").isin(keep: _*))
-      .withColumn("batch_id",
-        if (collapse == "-1") lit(-1L).cast(base0.schema("batch_id").dataType)
-        else lit(collapse))
-      .localCheckpoint(true)
-    try {
+    Artifacts.scoped { a =>
+      val folded = a.checkpoint(base0
+        .filter(!col("batch_id").cast("string").isin(keep: _*))
+        .withColumn("batch_id",
+          if (collapse == "-1") lit(-1L).cast(base0.schema("batch_id").dataType)
+          else lit(collapse)))
       newWatermark.foreach(writeFoldWatermark(fs, root, _))
       // fold-in-progress marker: the destructive window (partition
       // deletes → collapse overwrite) is now bracketed so a LIVE sink
@@ -835,7 +838,7 @@ object Pipelines {
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(dir)
       clearFoldMarker(fs, root)
-    } finally freeLocalCheckpoint(folded)
+    }
   }
 
   /** SNAPSHOT read of a numeric batch-stamped catalog table — the
@@ -1039,15 +1042,15 @@ object Pipelines {
       case Some(v) => StatsOps.mergeTrendingStates(
         spark.read.parquet(s"$stateDir/v=$v"), cur, halfLifeUs)
     }
-    val out = merged.localCheckpoint(true)
-    try {
+    Artifacts.scoped { a =>
+      val out = a.checkpoint(merged)
       out.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
       // versions ABOVE this batch can only belong to a dead stream
       // incarnation (a live run's batch ids are monotone) — left in
       // place they'd shadow the live state in newest-version reads
       versions.filter(_ > batchId).foreach(v =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$v"), true))
-    } finally freeLocalCheckpoint(out)
+    }
   }
 
   /** The streaming entry: events → versioned trending state at
@@ -1217,16 +1220,15 @@ object Pipelines {
       n: Int = 5, minDocs: Long = 1L): Unit = {
     import graft.curation.Serving
     val ws = col("__ws")
-    val scored = batch
-      .select(col("doc_id"), col("text"),
-        graft.functions.TextFunctions.words(col("text")).as("__ws"))
-      .select(col("doc_id"), col("text"),
-        Serving.lmNllLocal(lm)(ws).as("lm_nll"),
-        graft.quality.NbClassifier.decision6Local(nb)(ws).as("nb_d6"),
-        Serving.dsirLogwLocal(dsir)(ws).as("dsir_logw"),
-        col("__ws"))
-      .localCheckpoint(true)
-    try {
+    Artifacts.scoped { a =>
+      val scored = a.checkpoint(batch
+        .select(col("doc_id"), col("text"),
+          graft.functions.TextFunctions.words(col("text")).as("__ws"))
+        .select(col("doc_id"), col("text"),
+          Serving.lmNllLocal(lm)(ws).as("lm_nll"),
+          graft.quality.NbClassifier.decision6Local(nb)(ws).as("nb_d6"),
+          Serving.dsirLogwLocal(dsir)(ws).as("dsir_logw"),
+          col("__ws")))
       val dg = scored
         .select(col("doc_id"),
           explode(graft.textanalysis.TextAnalysis
@@ -1249,7 +1251,7 @@ object Pipelines {
           col("dsir_logw") >= minLogw &&
           (col("dup_frac").isNull || col("dup_frac") <= maxDupFrac)),
         outDir, batchId)
-    } finally freeLocalCheckpoint(scored)
+    }
   }
 
   /** The COMPLETE fused admission stream: the three row-local frozen
@@ -1270,10 +1272,10 @@ object Pipelines {
       graft.textanalysis.TextAnalysis.readLmModel(spark, lmModelDir))
     val nb = graft.quality.NbClassifier.readNbModel(spark, nbModelDir)
     val dsir = graft.selection.Dsir.readDsirModel(spark, dsirModelDir)
-    val index = graft.textanalysis.TextAnalysis
-      .readMemorizationIndexMerged(spark, gramIndexDir)
-      .persist()
-    startSink(docs, checkpointDir, () => index.unpersist(false)) {
+    val sink = new Artifacts
+    val index = sink.persist(graft.textanalysis.TextAnalysis
+      .readMemorizationIndexMerged(spark, gramIndexDir))
+    startSink(docs, checkpointDir, sink) {
       (batch, batchId) =>
         processFullAdmissionBatch(batch, lm, nb, dsir, index, outDir,
           batchId, nllThreshold, nbThreshold6, minLogw, maxDupFrac, n,
@@ -1542,13 +1544,13 @@ object Pipelines {
   def memorizationGateSink(docs: DataFrame, indexDir: String,
       outDir: String, checkpointDir: String, maxDupFrac: Double = 0.5,
       n: Int = 5): StreamingQuery = {
-    val index = graft.textanalysis.TextAnalysis
-      .readMemorizationIndex(docs.sparkSession, indexDir)
-      .persist()
+    val sink = new Artifacts
+    val index = sink.persist(graft.textanalysis.TextAnalysis
+      .readMemorizationIndex(docs.sparkSession, indexDir))
     // the cached corpus-scale index must not outlive its stream
     // (unlike the lm/dsir/nb sinks, whose models are driver-side
     // literals)
-    startSink(docs, checkpointDir, () => index.unpersist(false)) {
+    startSink(docs, checkpointDir, sink) {
       (batch, batchId) =>
         processMemorizationGateBatch(batch, index, outDir, batchId,
           maxDupFrac, n)
@@ -1589,10 +1591,10 @@ object Pipelines {
   def communityAssignSink(docs: DataFrame, labelsDir: String,
       edgesOf: DataFrame => DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val labels = graft.graph.Communities
-      .readCommunityLabels(docs.sparkSession, labelsDir)
-      .persist()
-    startSink(docs, checkpointDir, () => labels.unpersist(false)) {
+    val sink = new Artifacts
+    val labels = sink.persist(graft.graph.Communities
+      .readCommunityLabels(docs.sparkSession, labelsDir))
+    startSink(docs, checkpointDir, sink) {
       (batch, batchId) =>
         processCommunityAssignBatch(batch, labels, edgesOf, outDir, batchId)
     }
@@ -1635,11 +1637,11 @@ object Pipelines {
       checkpointDir: String, maxDist: Int = 1,
       fingerprintsOf: DataFrame => DataFrame =
         graft.multimodal.Multimodal.videoHashes): StreamingQuery = {
-    val index = graft.dedup.Dedup
+    val sink = new Artifacts
+    val index = sink.persist(graft.dedup.Dedup
       .readFingerprintIndex(docs.sparkSession, indexDir)
-      .select(col("id").as("doc_id"), col("fp"))
-      .persist()
-    startSink(docs, checkpointDir, () => index.unpersist(false)) {
+      .select(col("id").as("doc_id"), col("fp")))
+    startSink(docs, checkpointDir, sink) {
       (batch, batchId) =>
         processMediaDedupBatch(batch, index, fingerprintsOf, outDir,
           batchId, maxDist)
@@ -1659,8 +1661,8 @@ object Pipelines {
   def processBm25IngestBatch(batch: DataFrame, indexDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    val base = graft.ops.SearchOps.bm25Base(batch).localCheckpoint(true)
-    try {
+    Artifacts.scoped { a =>
+      val base = a.checkpoint(graft.ops.SearchOps.bm25Base(batch))
       writeBatchPartition(graft.ops.SearchOps.bm25Postings(base),
         indexDir + "/postings", batchId, nonEmpty = true, "bucket")
       writeBatchPartition(graft.ops.SearchOps.bm25StatsRow(base),
@@ -1674,7 +1676,7 @@ object Pipelines {
       // index that already keeps the sidecar gets one
       writeBatchPartition(graft.ops.SearchOps.bm25Doclens(base),
         indexDir + "/doclens", batchId, nonEmpty = false, "dbucket")
-    } finally freeLocalCheckpoint(base)
+    }
   }
 
   /** The streaming entry: docs (doc_id, text) continuously ingest
@@ -1848,14 +1850,13 @@ object Pipelines {
     // batch-internal min-id winner per digest (the one-shot operator's
     // group-winner form), then first-arrival anti-join vs the index;
     // materialized BEFORE any write so no write plan reads its target
-    val kept = gated
-      .groupBy(Dedup.rowDigest(Seq("text")).as("digest"))
-      .agg(min(struct(col("doc_id"), col("source"), col("lm_nll"))).as("__w"))
-      .select(col("digest"), col("__w.doc_id").as("doc_id"),
-        col("__w.source").as("source"), col("__w.lm_nll").as("lm_nll"))
-      .join(seen, Seq("digest"), "left_anti")
-      .localCheckpoint(true)
-    try {
+    Artifacts.scoped { a =>
+      val kept = a.checkpoint(gated
+        .groupBy(Dedup.rowDigest(Seq("text")).as("digest"))
+        .agg(min(struct(col("doc_id"), col("source"), col("lm_nll"))).as("__w"))
+        .select(col("digest"), col("__w.doc_id").as("doc_id"),
+          col("__w.source").as("source"), col("__w.lm_nll").as("lm_nll"))
+        .join(seen, Seq("digest"), "left_anti"))
       val nonEmpty = !kept.isEmpty
       writeBatchPartition(kept.select(col("doc_id"), col("source"),
         col("lm_nll")), outDir, batchId, nonEmpty)
@@ -1877,7 +1878,7 @@ object Pipelines {
         .toDF("docs_in", "dropped_repetitive", "dropped_contaminated",
           "dropped_unusual", "kept")
       writeBatchPartition(telemetry, telemetryDir, batchId, nonEmpty = true)
-    } finally freeLocalCheckpoint(kept)
+    }
   }
 
   /** The streaming entry: docs (doc_id, text, source) → curated

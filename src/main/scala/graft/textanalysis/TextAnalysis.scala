@@ -824,13 +824,13 @@ object TextAnalysis {
     val markers = memStreamMarkers(spark, dir)
     // materialize BEFORE the overwrite truncates the directory being
     // read (the compactBm25Index ordering)
-    val merged = readMemorizationIndexMerged(spark, dir).localCheckpoint(true)
-    try {
-      writeMemorizationIndex(merged, dir)
+    graft.Artifacts.scoped { a =>
+      writeMemorizationIndex(a.checkpoint(readMemorizationIndexMerged(spark, dir)),
+        dir)
       markers.foreach { case (sub, k) =>
         registerMemStreamPrefix(spark, dir, k, sub)
       }
-    } finally graft.Frames.freeLocalCheckpoint(merged)
+    }
   }
 
   /** Stream-prefix reservation markers registered on a gram index —
@@ -891,21 +891,20 @@ object TextAnalysis {
     val foldVisible = "build" +: (known -- keepSet).toSeq.sorted
     // materialize everything BEFORE the root overwrite truncates the
     // directories being read (the compactMemorizationIndex ordering)
-    val folded = readMemorizationIndexAsOf(spark, dir, foldVisible)
-      .localCheckpoint(true)
-    def keptSide(sub: String, names: Set[String]): Option[DataFrame] = {
-      val present = (names & keepSet).toSeq
-      if (present.isEmpty) None
-      else Some(spark.read.parquet(dir + sub)
-        .filter(col("batch_id").cast("string").isin(present: _*))
-        .select(col("g"), col("nd"),
-          col("batch_id").cast("string").as("batch_id"))
-        .localCheckpoint(true))
-    }
-    val keptA = keptSide("/_appends", appendB)
-    val keptD = keptSide("/_deletes", deleteB)
-    val markers = memStreamMarkers(spark, dir)
-    try {
+    graft.Artifacts.scoped { a =>
+      val folded = a.checkpoint(
+        readMemorizationIndexAsOf(spark, dir, foldVisible))
+      def keptSide(sub: String, names: Set[String]): Option[DataFrame] = {
+        val present = (names & keepSet).toSeq
+        if (present.isEmpty) None
+        else Some(a.checkpoint(spark.read.parquet(dir + sub)
+          .filter(col("batch_id").cast("string").isin(present: _*))
+          .select(col("g"), col("nd"),
+            col("batch_id").cast("string").as("batch_id"))))
+      }
+      val keptA = keptSide("/_appends", appendB)
+      val keptD = keptSide("/_deletes", deleteB)
+      val markers = memStreamMarkers(spark, dir)
       writeMemorizationIndex(folded, dir)
       keptA.foreach(_.write.partitionBy("batch_id").mode("overwrite")
         .parquet(dir + "/_appends"))
@@ -914,10 +913,6 @@ object TextAnalysis {
       markers.foreach { case (sub, k) =>
         registerMemStreamPrefix(spark, dir, k, sub)
       }
-    } finally {
-      graft.Frames.freeLocalCheckpoint(folded)
-      keptA.foreach(graft.Frames.freeLocalCheckpoint)
-      keptD.foreach(graft.Frames.freeLocalCheckpoint)
     }
   }
 
@@ -1312,41 +1307,41 @@ object TextAnalysis {
     // plan by one replace per rank (512 ranks → a 512-deep analysis
     // chain); the checkpoint keeps every round's plan flat — the
     // graph-loop lineage convention
-    var vocab = wordCounts.select(
+    val merges = graft.Artifacts.scoped { a =>
+      var vocab = a.checkpoint(wordCounts.select(
         concat(lit("<"), array_join(split(col("word"), ""), "><"),
           lit("><_>")).as("s"),
-        col("wc"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (!exhausted && rank <= nMerges) {
-      val syms = split(expr("substring(s, 2, length(s) - 2)"), "><")
-      val best = vocab
-        .select(syms.as("syms"), col("wc"))
-        .select(col("syms"), col("wc"),
-          explode(when(size(col("syms")) >= 2,
-              sequence(lit(1), size(col("syms")) - 1))
-            .otherwise(array().cast("array<int>"))).as("i"))
-        .select(element_at(col("syms"), col("i")).as("a"),
-          element_at(col("syms"), col("i") + 1).as("b"), col("wc"))
-        .groupBy(col("a"), col("b")).agg(sum(col("wc")).as("f"))
-        .orderBy(col("f").desc, col("a"), col("b")).limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, f) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((rank.toLong, a, b, f))
-        val next = vocab
-          .select(replace(col("s"), lit(s"<$a><$b>"), lit(s"<$a$b>")).as("s"),
-            col("wc"))
-          .localCheckpoint(true)
-        graft.Frames.freeLocalCheckpoint(vocab)
-        vocab = next
-        rank += 1
+        col("wc")))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+      var rank = 1
+      var exhausted = false
+      while (!exhausted && rank <= nMerges) {
+        val syms = split(expr("substring(s, 2, length(s) - 2)"), "><")
+        val best = vocab
+          .select(syms.as("syms"), col("wc"))
+          .select(col("syms"), col("wc"),
+            explode(when(size(col("syms")) >= 2,
+                sequence(lit(1), size(col("syms")) - 1))
+              .otherwise(array().cast("array<int>"))).as("i"))
+          .select(element_at(col("syms"), col("i")).as("a"),
+            element_at(col("syms"), col("i") + 1).as("b"), col("wc"))
+          .groupBy(col("a"), col("b")).agg(sum(col("wc")).as("f"))
+          .orderBy(col("f").desc, col("a"), col("b")).limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val (sa, sb, f) =
+            (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((rank.toLong, sa, sb, f))
+          val next = a.checkpoint(vocab
+            .select(replace(col("s"), lit(s"<$sa><$sb>"), lit(s"<$sa$sb>")).as("s"),
+              col("wc")))
+          a.free(vocab)
+          vocab = next
+          rank += 1
+        }
       }
+      merges
     }
-    graft.Frames.freeLocalCheckpoint(vocab)
     import spark.implicits._
     merges.toSeq.toDF("rank", "sym_a", "sym_b", "freq")
   }
@@ -1436,13 +1431,12 @@ object TextAnalysis {
   def collectWordCounts(documents: DataFrame, textCol: String = "text",
       maxVocab: Long = 2000000L, minCount: Long = 1L): Seq[(String, Long)] = {
     require(minCount >= 1, s"minCount must be >= 1: $minCount")
-    val wc = documents
-      .select(explode(words(col(textCol))).as("word"))
-      .filter(bpeLegalWord(col("word")))
-      .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-      .filter(col("wc") >= minCount)
-      .persist()
-    try {
+    graft.Artifacts.scoped { a =>
+      val wc = a.persist(documents
+        .select(explode(words(col(textCol))).as("word"))
+        .filter(bpeLegalWord(col("word")))
+        .groupBy(col("word")).agg(count(lit(1)).as("wc"))
+        .filter(col("wc") >= minCount))
       val n = wc.count()
       require(n <= maxVocab,
         s"corpus has $n distinct words > maxVocab=$maxVocab" +
@@ -1451,7 +1445,7 @@ object TextAnalysis {
           "raise the minCount frequency floor or train with the " +
           "distributed bpeMerges instead")
       wc.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    } finally wc.unpersist(false)
+    }
   }
 
   /** Greedy leftmost non-overlapping single-pass merge over a symbol
@@ -1545,38 +1539,45 @@ object TextAnalysis {
     * parquet like the other serving indexes).
     */
   def bpeVocabTokens(documents: DataFrame, merges: Seq[(String, String)],
-      textCol: String = "text", chunkSize: Int = 64): DataFrame = {
+      textCol: String = "text", chunkSize: Int = 64): DataFrame =
+    graft.Artifacts.scoped(a =>
+      a.keep(vocabTokensIn(a, documents, merges, textCol, chunkSize)))
+
+  /** [[bpeVocabTokens]] with every frame it materializes, its result
+    * included, held in `a`.
+    */
+  private def vocabTokensIn(a: graft.Artifacts, documents: DataFrame,
+      merges: Seq[(String, String)], textCol: String,
+      chunkSize: Int): DataFrame = {
     require(merges.nonEmpty, "merge table must be non-empty")
     require(chunkSize >= 1 && chunkSize <= 64,
       s"chunkSize must be in [1, 64]: $chunkSize")
-    require(merges.forall { case (a, b) =>
-      a.nonEmpty && b.nonEmpty && !(a + b).exists("<>".contains(_)) },
+    require(merges.forall { case (sa, sb) =>
+      sa.nonEmpty && sb.nonEmpty && !(sa + sb).exists("<>".contains(_)) },
       "merge symbols must be non-empty and delimiter-free")
-    var cur = documents
+    var cur = a.persist(documents
       .select(explode(words(col(textCol))).as("word"))
       .filter(bpeLegalWord(col("word")))
       .distinct()
       .select(col("word"),
         concat(lit("<"), array_join(split(col("word"), ""), "><"),
-          lit("><_>")).as("s"))
-      .persist()
+          lit("><_>")).as("s")))
     cur.count()
     merges.grouped(chunkSize).foreach { chunk =>
-      val applied = chunk.foldLeft(col("s")) { case (c, (a, b)) =>
-        replace(c, lit(s"<$a><$b>"), lit(s"<$a$b>"))
+      val applied = chunk.foldLeft(col("s")) { case (c, (sa, sb)) =>
+        replace(c, lit(s"<$sa><$sb>"), lit(s"<$sa$sb>"))
       }
-      val next = cur.select(col("word"), applied.as("s")).persist()
+      val next = a.persist(cur.select(col("word"), applied.as("s")))
       next.count()
-      cur.unpersist(false)
+      a.free(cur)
       cur = next
     }
     val t = replace(col("s"), lit("><"), lit(" "))
-    val out = cur
+    val out = a.checkpoint(cur
       .select(col("word"), t.substr(lit(2), length(t) - 2).as("tokens"))
       .select(col("word"), col("tokens"),
-        size(split(col("tokens"), " ", -1)).cast("long").as("n_tokens"))
-      .localCheckpoint(true)
-    cur.unpersist(false)
+        size(split(col("tokens"), " ", -1)).cast("long").as("n_tokens")))
+    a.free(cur)
     out
   }
 
@@ -1713,8 +1714,9 @@ object TextAnalysis {
     */
   def writeVocabTokens(documents: DataFrame, merges: Seq[(String, String)],
       dir: String, textCol: String = "text"): Unit =
-    bpeVocabTokens(documents, merges, textCol)
-      .write.mode("overwrite").parquet(dir)
+    graft.Artifacts.scoped(a =>
+      vocabTokensIn(a, documents, merges, textCol, chunkSize = 64)
+        .write.mode("overwrite").parquet(dir))
 
   /** [[bpeEncodeWithVocab]] against a written artifact: corpus words
     * absent from the stored vocabulary drop (they were never seen by

@@ -49,19 +49,19 @@ object ScaleUpMedia {
         lit("organic media fixture").as("text"))
 
     def build(family: String, cycle: Long,
-        hashes: DataFrame => DataFrame, fpCol: String): Unit = {
+        hashes: DataFrame => DataFrame,
+        fpCol: String): Unit = graft.Artifacts.scoped { a =>
       val poolN = n1 * k * 8
       val pool = docsOf(spark.range(poolN).select(col("id").as("doc_id")))
-      val hashed = hashes(pool).localCheckpoint(true)
-      val reps = hashed.groupBy(col(fpCol))
-        .agg(min(col("doc_id")).as("doc_id")).localCheckpoint(true)
+      val hashed = a.checkpoint(hashes(pool))
+      val reps = a.checkpoint(hashed.groupBy(col(fpCol))
+        .agg(min(col("doc_id")).as("doc_id")))
       val near = Dedup.hammingNearDuplicates(reps, "doc_id", fpCol,
         maxDist = 1)
-      val survivors = reps
+      val survivors = a.checkpoint(reps
         .join(near.select(col("id_b").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")
-        .select(col("doc_id"))
-        .localCheckpoint(true)
+        .select(col("doc_id")))
       val nSurv = survivors.count()
       println(s"[scaleupmedia] $family: $nSurv pairwise-distinguishable " +
         s"fingerprints in a $poolN-id pool" +
@@ -95,9 +95,6 @@ object ScaleUpMedia {
         println(s"[scaleupmedia] $family x$scale: ${want} docs " +
           s"(${want - bg} planted twins) -> $dst/${family}_x$scale")
       }
-      graft.Frames.freeLocalCheckpoint(hashed)
-      graft.Frames.freeLocalCheckpoint(reps)
-      graft.Frames.freeLocalCheckpoint(survivors)
     }
 
     build("audio", 65536L, Multimodal.audioHashes, "ahash")

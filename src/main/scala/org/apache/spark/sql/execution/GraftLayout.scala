@@ -3,10 +3,12 @@ package org.apache.spark.sql.execution
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 
-/** graft shim: re-declare the physical layout of an eagerly
-  * localCheckpointed frame.
+/** graft shim: frames over a materialized RDD that the public Dataset
+  * API cannot build — an eager checkpoint re-declaring its physical
+  * layout, and an eager row cache that keeps its lineage. Both back
+  * [[graft.Artifacts]].
   *
-  * Under AQE, `Dataset.localCheckpoint(true)` captures
+  * Under AQE, an eager local checkpoint captures
   * `UnknownPartitioning(0)` in its LogicalRDD leaf even when the plan
   * that produced the blocks laid them out `hash(keys, width)` —
   * AdaptiveSparkPlanExec is opaque to the partitioning capture (the
@@ -53,5 +55,22 @@ object GraftLayout {
       outputPartitioning = HashPartitioning(attrs, width))(
       spark, Some(lr.stats), Some(lr.constraints))
     org.apache.spark.sql.classic.Dataset.ofRows(spark, relaid)
+  }
+
+  /** `df`'s rows, computed once now and persisted (MEMORY_AND_DISK)
+    * as they are: no columnar encoding, unlike a CacheManager entry.
+    * The leaf is built the way the built-in checkpoint builds its own
+    * (same statistics, constraints and captured layout), but the RDD
+    * keeps its lineage: once its blocks are freed, a later action
+    * recomputes them instead of failing. The count job runs outside
+    * a SQL execution.
+    */
+  def rows(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val rdd = ds.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    rdd.count()
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
   }
 }

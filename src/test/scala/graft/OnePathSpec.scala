@@ -117,4 +117,36 @@ class OnePathSpec extends AnyFunSuite {
     val cellWrites = "writeBatchPartition\\((?:[^()]|\\([^()]*\\))*\"cell\"".r
     assert(cellWrites.findAllIn(pipelines).size === 1)
   }
+
+  // one owner for every materialized frame
+  test("unpersist( appears in main only in Artifacts.scala") {
+    assert(filesMentioning("unpersist(") === Seq("graft/Artifacts.scala"))
+  }
+
+  test("the replaced release helpers are gone") {
+    Seq("def freeLocalCheckpoint", "def releaseArtifact",
+        "def releaseOnFirstAction").foreach { d =>
+      assert(filesMentioning(d).isEmpty, d)
+    }
+  }
+
+  test("main implements QueryExecutionListener once") {
+    val impls = mainSources.map { case (_, text) =>
+      "QueryExecutionListener\\s*\\{".r.findAllIn(text).size
+    }.sum
+    assert(impls === 1)
+  }
+
+  // the product cache: CacheOps.snapshot is the reference's TTL cache
+  private val materializeAllowed = Map("graft/ops/CacheOps.scala" -> 1)
+
+  test("localCheckpoint( and .persist() appear outside Artifacts.scala " +
+      "only at the allow-list") {
+    val found = mainSources.collect {
+      case (f, text) if f != "graft/Artifacts.scala" &&
+          count(text, "localCheckpoint(") + count(text, ".persist()") > 0 =>
+        f -> (count(text, "localCheckpoint(") + count(text, ".persist()"))
+    }.toMap
+    assert(found === materializeAllowed)
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,16 +56,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * outside the CacheManager are counted relative to before).
     */
   def assertNoCacheLeft[T](body: => T): T = {
-    val sc = spark.sparkContext
     spark.catalog.clearCache()
-    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val persisted = persistedRddIds
     val out = body
     assert(spark.sharedState.cacheManager.isEmpty,
       "left a CacheManager entry behind")
-    val leaked = sc.getPersistentRDDs.keySet.toSet -- persisted
+    val leaked = persistedRddIds -- persisted
     assert(leaked.isEmpty, s"left persisted RDDs behind: $leaked")
     out
   }
+
+  /** Ids of the RDDs Spark currently holds persisted. */
+  def persistedRddIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Ids of the RDDs behind `df`'s materialized (LogicalRDD) leaves:
+    * the checkpoints and row caches its plan reads.
+    */
+  def leafRddIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
 
   override def afterAll(): Unit =
     try tempRoot.foreach { root =>

@@ -387,6 +387,20 @@ class DedupSpec extends SparkSpec {
     assert(rounds <= 12, s"pointer jumping took $rounds rounds")
   }
 
+  test("jump-mode components leave no persisted RDD but the result's own") {
+    // each round's jump step materializes the propagated labels; the
+    // round must free it once the next label frame is built
+    val chain = spark.range(64)
+      .select($"id".as("id_a"), ($"id" + 1).as("id_b"))
+    val before = persistedRddIds
+    val (comps, _) = Dedup.connectedComponentsWithRounds(
+      chain.toDF(), "id_a", "id_b", maxIter = 15,
+      smallGraphEdges = 0L, algorithm = "jump")
+    val left = persistedRddIds -- before -- leafRddIds(comps)
+    assert(left.isEmpty, s"left persisted RDDs $left")
+    assert(comps.collect().forall(_.getLong(1) === 0L))
+  }
+
   test("star contraction: bridged stars merge into one component") {
     // r1<r2<c<v1<v2<h1<h2 wired so intermediate star rounds produce a
     // child (c) reachable from two tentative roots — the state a

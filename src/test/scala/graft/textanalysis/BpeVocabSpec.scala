@@ -133,7 +133,10 @@ class BpeVocabSpec extends SparkSpec {
     val merges = TextAnalysis.bpeMergesLocal(wordCounts, 256)
       .map(m => (m._2, m._3))
     val dir = tempDir("graft-bpevocab") + "/vt"
+    val before = persistedRddIds
     TextAnalysis.writeVocabTokens(docs, merges, dir)
+    // the written artifact is the result: nothing stays materialized
+    assert((persistedRddIds -- before).isEmpty)
     val fromIndex = TextAnalysis.bpeEncodeFromVocabIndex(docs, dir)
       .orderBy("doc_id").collect().toSeq
     val direct = TextAnalysis.bpeEncodeVocab(docs, merges)
